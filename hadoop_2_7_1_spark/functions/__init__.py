@@ -39,10 +39,6 @@ def tokenize(col: Column | str) -> Column:
     return F.split(F.trim(c), WS)
 
 
-def explode_tokens(col: Column | str) -> Column:
-    return F.explode(tokenize(col))
-
-
 def hex_hash32(col: Column | str, salt: str | None = None) -> Column:
     """Deterministic 32-bit integer hash shared with the DuckDB oracle:
     first 8 hex chars of md5 → bigint. Used for minhash/simhash/sampling."""
@@ -57,21 +53,6 @@ def oracle_hash32(expr: str, salt: str | None = None) -> str:
     """DuckDB SQL fragment equivalent of :func:`hex_hash32`."""
     e = f"('{salt}' || '|' || {expr})" if salt is not None else expr
     return f"CAST(('0x' || substr(md5({e}), 1, 8)) AS BIGINT)"
-
-
-def char_ngrams(col_name: str, n: int) -> Column:
-    """Array of character n-grams (shingles) of a string column, JVM-side.
-
-    sequence(1, len-n+1) + transform keeps this in codegen; no UDF.
-    Takes a column *name* because the expression is built as SQL text.
-    """
-    # NB: Spark's sequence(1, 0) is DESCENDING [1, 0]; guard short strings.
-    return F.expr(
-        f"CASE WHEN length({col_name}) >= {n} THEN "
-        f"transform(sequence(1, length({col_name}) - {n - 1}), "
-        f"i -> substring({col_name}, i, {n})) "
-        f"ELSE array() END"
-    )
 
 
 def word_shingles(col_name: str, n: int) -> Column:

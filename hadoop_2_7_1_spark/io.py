@@ -70,10 +70,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def read_text(spark: SparkSession, path: str) -> DataFrame:
     """TextInputFormat: one row per line, column ``value``."""
     return spark.read.text(path)
@@ -114,11 +110,6 @@ def write_partitioned(df: DataFrame, path: str, *cols: str, fmt: str = "parquet"
     """MultipleOutputFormat.generateFileNameForKeyValue analogue: route each
     record to a directory derived from its own columns."""
     df.write.mode("overwrite").partitionBy(*cols).format(fmt).save(path)
-
-
-def write_tsv(df: DataFrame, path: str) -> None:
-    """TextOutputFormat: ``key \\t value`` lines."""
-    df.write.mode("overwrite").option("sep", "\t").csv(path)
 
 
 def write_by_filename(df: DataFrame, path: str, filename_expr, sep: str = "\t") -> int:

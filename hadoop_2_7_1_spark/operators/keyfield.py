@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 _FIELD_RE = re.compile(r"^(\d+)([nr]*)$")
@@ -44,12 +44,3 @@ def sort_exprs(line_col: str, spec: str, sep: str = "\t") -> list[Column]:
         exprs.append(f.desc() if reverse else f.asc())
     return exprs
 
-
-def keyfield_sort(df: DataFrame, line_col: str, spec: str, sep: str = "\t") -> DataFrame:
-    return df.orderBy(*sort_exprs(line_col, spec, sep))
-
-
-def keyfield_partition(df: DataFrame, line_col: str, field: int, num_partitions: int, sep: str = "\t") -> DataFrame:
-    """KeyFieldBasedPartitioner: co-locate rows sharing a key field."""
-    f = F.split(F.col(line_col), re.escape(sep)).getItem(field - 1)
-    return df.repartition(num_partitions, f)

@@ -28,14 +28,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def total_order_sort(df: DataFrame, cols: Sequence[Column | str], num_partitions: int | None = None) -> DataFrame:
-    """Globally sorted output across files (Sort example, examples/Sort.java:92)."""
-    exprs = [F.col(c) if isinstance(c, str) else c for c in cols]
-    if num_partitions:
-        return df.repartitionByRange(num_partitions, *exprs).sortWithinPartitions(*exprs)
-    return df.orderBy(*exprs)
-
-
 def two_phase_prefix(
     df: DataFrame,
     sort_exprs: Sequence[Column],

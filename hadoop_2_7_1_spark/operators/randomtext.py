@@ -240,32 +240,6 @@ def sentences_for_map(
         yield key, value
 
 
-def random_text_writer(
-    spark: SparkSession,
-    n_maps: int = 10,
-    bytes_per_map: int = 1 << 20,
-    base_seed: int = 12345,
-) -> DataFrame:
-    """Distributed fixture generator: (map_id, key, value) rows, one
-    generation task per map index, deterministic given ``base_seed``."""
-    import pandas as pd
-
-    def gen(batches):
-        for pdf in batches:
-            for map_id in pdf["id"]:
-                m = int(map_id)
-                keys, values = [], []
-                for k, v in sentences_for_map(base_seed + m, bytes_per_map):
-                    keys.append(k)
-                    values.append(v)
-                yield pd.DataFrame(
-                    {"map_id": m, "key": keys, "value": values}
-                )
-
-    parts = spark.range(n_maps).repartition(n_maps)
-    return parts.mapInPandas(gen, "map_id bigint, key string, value string")
-
-
 def random_text_summary(
     spark: SparkSession,
     n_maps: int = 2,

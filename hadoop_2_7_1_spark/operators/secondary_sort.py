@@ -3,14 +3,13 @@
 Reference pattern (examples/SecondarySort.java:103-160): compound key
 (k1,k2), partition by k1 (FirstPartitioner:133), sort by (k1,k2), group by k1
 only (FirstGroupingComparator:145) — the reducer sees k1's values ordered by
-k2. The grouping-comparator ≠ sort-comparator asymmetry maps to either a
-window partitioned by k1 ordered by k2, or a sorted collect per group. Both
-avoid reifying per-group iterators on the driver.
+k2. The grouping-comparator ≠ sort-comparator asymmetry maps to a sorted
+collect per group, which avoids reifying per-group iterators on the driver.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -34,9 +33,3 @@ def grouped_sorted_values(
     ).alias("values")
     return df.groupBy(group_key).agg(sorted_vals, *(extra_aggs or []))
 
-
-def with_group_rank(df: DataFrame, group_key: str, sort_key: str, rank_col: str = "rnk") -> DataFrame:
-    """Window form: each row tagged with its 1-based position within its
-    group ordered by sort_key — spills via windowExec at scale."""
-    w = Window.partitionBy(group_key).orderBy(sort_key)
-    return df.withColumn(rank_col, F.row_number().over(w))

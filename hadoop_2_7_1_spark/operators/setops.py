@@ -25,9 +25,5 @@ def intersect(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.intersect(b)
 
 
-def except_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.exceptAll(b)
-
-
 def except_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
     return a.subtract(b)

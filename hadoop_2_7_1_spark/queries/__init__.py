@@ -2,12 +2,11 @@
 
 Every operator claimed done in SURVEY.md §2 registers here as a
 (name → QuerySpec) entry: a PySpark callable ``(spark, sf_dir) -> DataFrame``
-plus, when SQL-expressible, the equivalent DuckDB oracle SQL. The driver's
-correctness gate runs both sides at sf0.01 and hash-compares; our pytest
-parity suite runs the identical comparison at sf0.001.
+plus, when SQL-expressible, the equivalent DuckDB oracle SQL. The pytest
+parity suite runs both sides at sf0.001 and hash-compares them.
 
 Column-name contract: every computed column is aliased identically in the
-Spark plan and the oracle SQL (the driver sorts columns by name before
+Spark plan and the oracle SQL (the comparison sorts columns by name before
 hashing).
 """
 
@@ -42,109 +41,12 @@ def register(name: str, oracle: str | None, doc: str = "") -> Callable[[QueryFn]
     return deco
 
 
-# The external driver samples the FIRST 50 registry entries for its oracle
-# gate, so ordering is part of the contract. The window ROTATES each round so
-# that every registered query earns a driver-verified CORRECTNESS row at
-# least once (r1+r2 covered the reference example suite, TPC-H, and the
-# flagship dedup/similarity/text/event operators — 72 distinct names).
-#
-# Since round 6 the rotation is MECHANICAL: run
-#   python scripts/rotate_window.py [--touch name ...] [--prioritize name ...]
-# which computes never-driver-sampled names from CORRECTNESS_r*.json against
-# the registry (--prioritize moves matching never-sampled names to the front
-# of that group when the pool exceeds the window), appends --touch re-checks
-# (operators modified this round), fills with least-recently-sampled queries,
-# and rewrites the list below.
-#
-# Round-9 window (the first post-debt LRU rotation — COVERAGE.md window
-# math, g + t = 4 of the <= 15 budget): the one new registration
-# (sim_rerank_linear, the retrieve->rerank->select capstone), the three
-# queries re-registered on the size-derived knob path this round
-# (dd_semdedup, sim_hubness, sim_threshold_join — --touch re-checks), then
-# 46 least-recently-sampled re-checks. Those 46 are the r1/r2 rows (the
-# q01-q23 / tq suite) whose code has since seen four perf reworks — the
-# oldest driver evidence in the system, exactly what the rotation exists
-# to refresh.
-_DRIVER_WINDOW = [
-    # generated by scripts/rotate_window.py — never-driver-sampled first, then
-    # this round's touched re-checks, then least-recently-sampled re-checks.
-    "sim_simhash_topk",  # never sampled
-    "sim_simhash_retrieval",  # never sampled
-    "dd_incremental_lsh",  # never sampled
-    "sim_retrieval_quality",
-    "src_parquet_stats",
-    "agg_salted_skew",
-    "dd_keeplist",
-    "smp_epoch_mixture",
-    "cur_domain_quota",
-    "smp_train_test_split",
-    "src_bucketed_join",
-    "txt_bm25",
-    "cur_scd2_history",
-    "agg_hll_distinct",
-    "bench_gridmix_load",
-    "txt_vocab",
-    "txt_bpe_merges",
-    "txt_html_extract",
-    "txt_unigram_logprob",
-    "dd_incremental_ingest",
-    "grf_pagerank",
-    "grf_bfs_hops",
-    "evt_retention",
-    "grf_kcore",
-    "dd_sorted_neighborhood",
-    "txt_linear_score",
-    "txt_bigram_logprob",
-    "txt_gopher_rules",
-    "txt_pii_luhn",
-    "src_csv_json_roundtrip",
-    "src_orc_roundtrip",
-    "dd_span_dedup",
-    "dd_fuzzy_name_pairs",
-    "dd_span_removal",
-    "dd_minhash_accuracy",
-    "mm_frame_sample",
-    "dd_url_dedup",
-    "mm_augment_chain",
-    "mm_audio_features",
-    "cur_zorder_key",
-    "cur_split_long_docs",
-    "q08_join_outer",
-    "tq4_order_priority",
-    "tq7_volume_shipping",
-    "tq8_market_share",
-    "tq9_product_profit",
-    "tq10_returned_items",
-    "tq14_promo_effect",
-    "tq15_top_supplier",
-    "tq16_supplier_cnt",
-]
-# Round-8 window: the final 49 never-driver-sampled names + the
-# tmp_changepoint re-check (gain_num re-emitted as an exact digit string —
-# the r7 red was the DECIMAL(38,0) hash surface). A green CORRECTNESS_r08
-# leaves ZERO registered queries without a driver-green row. Round-9
-# rotation: rerun scripts/rotate_window.py (it falls through to
-# least-recently-sampled re-checks once the never-sampled pool is empty);
-# pass --touch for operators modified in round 9.
-
-
-def _ordered_names() -> list[str]:
-    window = {n: i for i, n in enumerate(_DRIVER_WINDOW)}
-    names = list(REGISTRY)
-    reg_index = {n: i for i, n in enumerate(names)}
-    return sorted(names, key=lambda n: (0, window[n]) if n in window else (1, reg_index[n]))
-
-
 def queries() -> dict[str, QueryFn]:
-    return {name: REGISTRY[name].fn for name in _ordered_names()}
+    return {name: spec.fn for name, spec in REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: REGISTRY[name].oracle
-        for name in _ordered_names()
-        if REGISTRY[name].oracle is not None
-    }
+    return {name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle is not None}
 
 
 # Import query modules for their registration side effects.

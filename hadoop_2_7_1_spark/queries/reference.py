@@ -926,11 +926,9 @@ def _terasort_validate(spark: SparkSession, n: int) -> DataFrame:
     )
 
 
-# 2M rows (~85 MB sort payload) by default: safe headroom in a PLAIN
-# 1g-heap SparkSession (the external driver's environment — a 10M-row sort
-# through the validation window can OOM there and take every later query
-# down with the JVM). bench.py raises this to 10M via SPARK_GRAFT_TERA_BIG,
-# running under our 8g session factory. The oracle SQL is built from the
+# 2M rows (~85 MB sort payload) by default, which leaves headroom in a
+# plain 1g-heap SparkSession. perfbench sets SPARK_GRAFT_TERA_BIG to 500k
+# for its sort_shuffle_write workload. The oracle SQL is built from the
 # same value at import, so Spark and DuckDB always agree.
 import os as _os
 

@@ -51,12 +51,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )
-    # ANSI sweep hook (round 9): SPARK_GRAFT_ANSI=1 runs the whole engine
-    # under spark.sql.ansi.enabled=true (strict overflow/cast/div-by-zero)
-    # so the test suite + registry can be audited for silent-wraparound
-    # assumptions. COVERAGE.md "ANSI posture" records the findings.
-    if os.environ.get("SPARK_GRAFT_ANSI"):
-        builder = builder.config("spark.sql.ansi.enabled", "true")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

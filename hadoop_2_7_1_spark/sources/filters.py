@@ -14,7 +14,7 @@ in :mod:`..functions` (``hex_hash32``).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import hex_hash32
@@ -37,11 +37,3 @@ def percent_filter(df: DataFrame, col: str, frequency: int) -> DataFrame:
 def md5_filter(df: DataFrame, col: str, frequency: int) -> DataFrame:
     """MD5Filter: same contract as the reference (MD5(key) mod f == 0)."""
     return df.filter(hex_hash32(col) % frequency == 0)
-
-
-def oracle_percent_filter_expr(col: str, frequency: int) -> str:
-    """DuckDB predicate equivalent of percent_filter/md5_filter."""
-    return (
-        f"CAST(('0x' || substr(md5(CAST({col} AS VARCHAR)), 1, 8)) AS BIGINT) "
-        f"% {frequency} = 0"
-    )

@@ -442,16 +442,3 @@ def test_streaming_cli_xml_inputformat_alias(spark, tmp_path):
     rows = _read_kv_output(out)
     assert sorted(r[0] for r in rows) == ["<record>one</record>", "<record>two</record>"]
 
-
-def test_driver_window_contract():
-    """The rotation contract the external driver depends on: exactly 50
-    unique, registered, oracle-backed names, served first by queries()."""
-    from hadoop_2_7_1_spark.queries import REGISTRY, _DRIVER_WINDOW, queries
-
-    assert len(_DRIVER_WINDOW) == 50
-    assert len(set(_DRIVER_WINDOW)) == 50
-    missing = [n for n in _DRIVER_WINDOW if n not in REGISTRY]
-    assert not missing, f"window names not registered: {missing}"
-    no_oracle = [n for n in _DRIVER_WINDOW if REGISTRY[n].oracle is None]
-    assert not no_oracle, f"window names without oracle: {no_oracle}"
-    assert list(queries())[:50] == _DRIVER_WINDOW

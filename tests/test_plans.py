@@ -177,8 +177,8 @@ def test_registry_wide_plan_audit(spark):
         # decimals may appear INSIDE a computation but never in the OUTPUT
         # schema: pandas round-trips high-precision decimals as object-dtype
         # Decimals whose stringification varies across library versions —
-        # the r7 tmp_changepoint driver red. scripts/decimal_sweep.py runs
-        # the same check over the build_time_actions set.
+        # the r7 tmp_changepoint red. The build_time_actions set is not
+        # audited here.
         for f in df.schema.fields:
             assert not isinstance(f.dataType, DecimalType), (
                 f"{name}.{f.name} emits {f.dataType.simpleString()} — not "

@@ -10,7 +10,6 @@ exactly those properties at N=2 over sf0.001.
 
 from __future__ import annotations
 
-import importlib.util
 import os
 import subprocess
 import sys
@@ -163,112 +162,3 @@ def test_cross_copy_device_keys_disjoint(scaled):
     ).fetchone()[0]
     assert d1 == d0
 
-
-def _write_bench(path, sf, queries, extras=None):
-    import json
-
-    with open(path, "w") as fh:
-        json.dump(
-            {"metric": "m", "value": sum(queries.values()), "unit": "sec",
-             "sf": sf, "queries": queries, "extras": extras or {}},
-            fh,
-        )
-
-
-def test_scaling_guard_flags_superlinear_and_passes_linear(tmp_path):
-    """The standing scale gate (scripts/scaling_guard.py): linear growth
-    passes, superlinear (beyond sf_ratio * tolerance) fails, sub-floor and
-    self-scaled queries are exempt."""
-    import subprocess
-    import sys as _sys
-
-    lo = tmp_path / "lo.json"
-    hi = tmp_path / "hi.json"
-    _write_bench(lo, 0.1, {"good": 1.0, "tiny": 0.1, "bench_terasort_big": 5.0},
-                 {"bad": 2.0})
-    # sf x5: good x4.8 (linear), tiny x9 but below the 0.5s floor (exempt),
-    # terasort x9 but self-scaled (exempt), bad x8 -> must fail
-    _write_bench(hi, 0.5, {"good": 4.8, "tiny": 0.9, "bench_terasort_big": 45.0},
-                 {"bad": 16.0})
-    proc = subprocess.run(
-        [_sys.executable, os.path.join(REPO, "scripts", "scaling_guard.py"),
-         str(lo), str(hi)],
-        capture_output=True, text=True,
-    )
-    assert proc.returncode == 1, proc.stdout + proc.stderr
-    assert "bad" in proc.stdout and "SUPERLINEAR" in proc.stdout
-    assert "tiny" not in proc.stdout and "terasort" not in proc.stdout
-
-    _write_bench(hi, 0.5, {"good": 4.8, "tiny": 0.9, "bench_terasort_big": 45.0},
-                 {"bad": 11.0})
-    proc = subprocess.run(
-        [_sys.executable, os.path.join(REPO, "scripts", "scaling_guard.py"),
-         str(lo), str(hi)],
-        capture_output=True, text=True,
-    )
-    assert proc.returncode == 0, proc.stdout + proc.stderr
-
-
-def test_scaling_guard_three_point_slope(tmp_path):
-    """3+ bench points engage the fitted-slope layer, which binds exactly
-    where the pairwise rule is leakiest: a pair-bill query riding BOTH
-    generous quantized pair allowances (x9.8 of 9.9 allowed, x3.88 of 3.96)
-    compounds to a fitted slope ~1.55 > 1.45 and fails — honest
-    quantization wobble is bounded and cannot compound like that (measured
-    ~1.11 on a quantized-linear series). A plain linear-with-floor curve
-    fits ~0.73 and passes."""
-    import subprocess
-    import sys as _sys
-
-    p1, p2, p3 = (tmp_path / f"p{i}.json" for i in (1, 2, 3))
-    _write_bench(p1, 0.1, {"fine": 1.0}, {"sim_hubness": 1.0})
-    _write_bench(p2, 0.5, {"fine": 3.0}, {"sim_hubness": 9.8})
-    _write_bench(p3, 1.0, {"fine": 5.5}, {"sim_hubness": 38.0})
-    proc = subprocess.run(
-        [_sys.executable, os.path.join(REPO, "scripts", "scaling_guard.py"),
-         str(p1), str(p2), str(p3)],
-        capture_output=True, text=True,
-    )
-    assert proc.returncode == 1, proc.stdout + proc.stderr
-    assert "sim_hubness" in proc.stdout and "slope" in proc.stdout
-    fine_lines = [l for l in proc.stdout.splitlines() if l.startswith("fine:")]
-    assert fine_lines and "SUPERLINEAR" not in fine_lines[0]
-
-
-def test_checked_in_bench_receipts_pass_the_scaling_guard():
-    """The round's committed bench receipts must clear the superlinear
-    gate — this is what makes the guard STANDING: a future round that
-    regresses a query to superlinear cannot commit fresh receipts without
-    this test going red. Three points since r10 (sf0.1 / sf0.5 / sf1.0),
-    which engages the fitted-slope layer."""
-    import subprocess
-    import sys as _sys
-
-    import glob as _glob
-    import re as _re
-
-    # gate the LATEST round owning a complete 3-point series, so a new
-    # round's receipts are gated the moment they land (no test edit) and
-    # a round that commits only a partial series keeps being judged on
-    # the last complete one
-    rounds = {}
-    for p in _glob.glob(os.path.join(REPO, "BENCH_r*_sf*.json")):
-        m = _re.search(r"BENCH_r(\d+)_sf(01|05|10)\.json$", p)
-        if m:
-            rounds.setdefault(int(m.group(1)), set()).add(m.group(2))
-    complete = [n for n, sfs in rounds.items() if sfs >= {"01", "05", "10"}]
-    assert complete, (
-        "no complete 3-point bench series committed — run bench.py at "
-        "sf0.1, .scratch/sf0.5 and .scratch/sf1.0 per the freeze checklist"
-    )
-    latest = max(complete)
-    receipts = [
-        os.path.join(REPO, f"BENCH_r{latest}_sf{sf}.json")
-        for sf in ("01", "05", "10")
-    ]
-    proc = subprocess.run(
-        [_sys.executable, os.path.join(REPO, "scripts", "scaling_guard.py"),
-         *receipts],
-        capture_output=True, text=True,
-    )
-    assert proc.returncode == 0, proc.stdout + proc.stderr

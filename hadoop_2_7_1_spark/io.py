@@ -21,6 +21,8 @@ coalescing (CombineFileInputFormat ≈ openCostInBytes) and commit protocol
 from __future__ import annotations
 
 import os
+import re
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,19 +45,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one of the driver's parquet tables.
 
     ``events.parquet`` stores its ``ts`` column as parquet TIMESTAMP(NANOS),
-    which Spark only reads via the nanosAsLong legacy conf; we truncate to
+    which Spark only reads via the nanosAsLong legacy conf (one of
+    ``session.RESULT_CONF``, which the session carries); we truncate to
     microseconds exactly like DuckDB's TIMESTAMP_NS → TIMESTAMP cast so both
     engines see identical values.
     """
-    # Driver-owned sessions don't come through our factory: pin the runtime
-    # confs result-parity depends on (UTC timestamps, nanos-typed parquet).
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    except Exception:
-        pass
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
@@ -68,6 +62,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if ntz_cols:
         df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
     return df
+
+
+def scratch_dir(spark: SparkSession, tag: str, sf_dir: str) -> str:
+    """Session-unique scratch path for round-trip queries. Keyed by the
+    Spark applicationId as well as the sf tag so two concurrent drivers on
+    the same scale factor can never interleave an overwrite-and-read."""
+    sf_tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
+    app = re.sub(r"\W", "_", spark.sparkContext.applicationId)
+    return os.path.join(tempfile.gettempdir(), f"h271_{tag}_{sf_tag}_{app}")
 
 
 def read_text(spark: SparkSession, path: str) -> DataFrame:

@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import load_table
+from ..io import load_table, scratch_dir
 from ..operators import dedup, multimodal, similarity, textops
 from ..operators.aggregates import (
     oracle_mad_outliers,
@@ -67,20 +67,6 @@ from ..operators.sampling import (
     oracle_temperature_counts,
 )
 from . import register
-
-
-def _scratch_dir(spark: SparkSession, tag: str, sf_dir: str) -> str:
-    """Session-unique scratch path for round-trip queries. Keyed by the
-    Spark applicationId as well as the sf tag so two concurrent drivers on
-    the same scale factor can never interleave an overwrite-and-read
-    (round-4 advisor finding)."""
-    import os
-    import re
-    import tempfile
-
-    sf_tag = re.sub(r"\W", "_", os.path.basename(sf_dir.rstrip("/")))
-    app = re.sub(r"\W", "_", spark.sparkContext.applicationId)
-    return os.path.join(tempfile.gettempdir(), f"h271_{tag}_{sf_tag}_{app}")
 
 
 # ---------------------------------------------------------------------------
@@ -2121,7 +2107,7 @@ def src_mapfile_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources import mapfile
 
-    out = _scratch_dir(spark, "mapfile", sf_dir)
+    out = scratch_dir(spark, "mapfile", sf_dir)
     shutil.rmtree(out, ignore_errors=True)
     supp = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").cast("bigint").alias("k"), F.col("s_name").alias("v")
@@ -2779,6 +2765,17 @@ _PR_EDGES_SQL = """
 """
 
 
+def _pr_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Undirected supplier-part edges ``s<suppkey>``/``p<partkey>``: the
+    Spark twin of ``_PR_EDGES_SQL``."""
+    li = load_table(spark, sf_dir, "lineitem")
+    fwd = li.select(
+        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
+        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
+    )
+    return fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+
+
 @register(
     "grf_pagerank",
     oracle_pagerank(_PR_EDGES_SQL),
@@ -2789,12 +2786,7 @@ _PR_EDGES_SQL = """
 def grf_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank
 
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = _pr_edges(spark, sf_dir)
     return pagerank(edges, iterations=3, damping=0.85)
 
 
@@ -2837,12 +2829,7 @@ def grf_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 def grf_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import bfs_hops
 
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = _pr_edges(spark, sf_dir)
     return bfs_hops(edges, "s1", max_hops=4)
 
 
@@ -2899,12 +2886,7 @@ def grf_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
 def grf_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import label_propagation
 
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = _pr_edges(spark, sf_dir)
     return (
         label_propagation(edges, rounds=3)
         .groupBy(F.col("label").alias("community"))
@@ -2924,12 +2906,7 @@ def grf_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
 def grf_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import label_propagation, modularity
 
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = _pr_edges(spark, sf_dir)
     labels = label_propagation(edges, rounds=3)
     return modularity(edges, labels)
 
@@ -3008,14 +2985,7 @@ def grf_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
         "first look at any 100 TB graph before choosing join strategies",
 )
 def grf_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
-    )
-    edges = fwd.union(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
+    edges = _pr_edges(spark, sf_dir).distinct()
     deg = edges.groupBy("src").agg(F.count("*").alias("d"))
     return deg.groupBy(F.col("d").cast("bigint").alias("degree")).agg(
         F.count("*").cast("bigint").alias("n_nodes")
@@ -3579,7 +3549,7 @@ def txt_pii_luhn(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def src_csv_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
-    base = _scratch_dir(spark, "txtfmt", sf_dir)
+    base = scratch_dir(spark, "txtfmt", sf_dir)
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderdate"
     )
@@ -3620,7 +3590,7 @@ def src_pyds_seqfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import dsv2
 
     dsv2.register(spark)
-    path = _scratch_dir(spark, "pyseq", sf_dir) + "/part_names"
+    path = scratch_dir(spark, "pyseq", sf_dir) + "/part_names"
     part = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").cast("string").alias("key"),
         F.col("p_name").alias("value"),
@@ -3657,7 +3627,7 @@ def src_kv_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..io import read_kv_text
 
-    d = _scratch_dir(spark, "kvtext", sf_dir)
+    d = scratch_dir(spark, "kvtext", sf_dir)
     os.makedirs(d, exist_ok=True)
     path = os.path.join(d, "kv.txt")
     if not os.path.exists(path):
@@ -3697,7 +3667,7 @@ def src_webdataset(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import multimodal as mm
     from ..sources.webdataset import read_webdataset, write_webdataset_shard
 
-    d = _scratch_dir(spark, "wds", sf_dir)
+    d = scratch_dir(spark, "wds", sf_dir)
     os.makedirs(d, exist_ok=True)
     for sh in range(_WDS_SHARDS):
         path = os.path.join(d, f"shard_{sh:04d}.tar")
@@ -3755,7 +3725,7 @@ def src_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators import multimodal as mm
 
-    d = _scratch_dir(spark, "binfiles", sf_dir)
+    d = scratch_dir(spark, "binfiles", sf_dir)
     os.makedirs(d, exist_ok=True)
     for i in range(_BINFILE_N):
         w, h = _binfile_dims(i)
@@ -3803,7 +3773,7 @@ def src_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def src_corrupt_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 
-    path = _scratch_dir(spark, "corruptjson", sf_dir) + "/orders"
+    path = scratch_dir(spark, "corruptjson", sf_dir) + "/orders"
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     lines = orders.select(
         F.when(
@@ -3853,7 +3823,7 @@ def src_corrupt_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
-    base = _scratch_dir(spark, "schemaevo", sf_dir) + "/orders"
+    base = scratch_dir(spark, "schemaevo", sf_dir) + "/orders"
     orders = load_table(spark, sf_dir, "orders")
     orders.select("o_orderkey", "o_totalprice").write.mode("overwrite").parquet(
         f"{base}/batch=1"
@@ -3897,13 +3867,12 @@ def src_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "level); oracle derives each version's rows straight from orders",
 )
 def src_snapshot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
     import shutil
 
     from ..sources import snaptable
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    root = f"/tmp/h271_snaptable_{os.path.basename(os.path.normpath(sf_dir))}"
+    root = scratch_dir(spark, "snaptable", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     snaptable.snap_commit(orders.filter(F.col("o_orderkey") % 3 == 0), root, "append")
     snaptable.snap_commit(orders.filter(F.col("o_orderkey") % 3 == 1), root, "append")
@@ -3938,7 +3907,7 @@ def src_snapshot_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def src_zstd_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 
-    path = _scratch_dir(spark, "zstd", sf_dir) + "/lineitem"
+    path = scratch_dir(spark, "zstd", sf_dir) + "/lineitem"
     li = load_table(spark, sf_dir, "lineitem").select("l_returnflag", "l_quantity")
     li.write.mode("overwrite").option("compression", "zstd").parquet(path)
     back = spark.read.parquet(path)
@@ -3964,7 +3933,7 @@ def src_zstd_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def src_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
-    path = _scratch_dir(spark, "orc", sf_dir) + "/lineitem"
+    path = scratch_dir(spark, "orc", sf_dir) + "/lineitem"
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_returnflag", "l_quantity", "l_extendedprice", "l_discount"
     )
@@ -4004,7 +3973,7 @@ _SETFILE_PROBES = [1, 2, 3, 5, 8, 13, 100, 101, 2500, 999_999]
 def src_setfile_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import mapfile
 
-    out = _scratch_dir(spark, "setfile", sf_dir)
+    out = scratch_dir(spark, "setfile", sf_dir)
     import shutil
 
     shutil.rmtree(out, ignore_errors=True)
@@ -4038,7 +4007,7 @@ _BLOOMMAP_PROBES = [1, 4, 7, 10, 40, 400, 4000, 777_777]
 def src_bloom_mapfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import mapfile
 
-    out = _scratch_dir(spark, "bloommap", sf_dir)
+    out = scratch_dir(spark, "bloommap", sf_dir)
     import shutil
 
     shutil.rmtree(out, ignore_errors=True)
@@ -4077,7 +4046,7 @@ _ARRAYFILE_GETS = [0, 1, 127, 128, 129, 500]
 def src_arrayfile_get(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import mapfile
 
-    out = _scratch_dir(spark, "arrayfile", sf_dir)
+    out = scratch_dir(spark, "arrayfile", sf_dir)
     import shutil
 
     shutil.rmtree(out, ignore_errors=True)
@@ -4729,7 +4698,7 @@ def src_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.avrofile import read_avro, write_avro
 
-    path = _scratch_dir(spark, "avro", sf_dir) + "/lineitem"
+    path = scratch_dir(spark, "avro", sf_dir) + "/lineitem"
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_returnflag",
@@ -4842,12 +4811,7 @@ from ..operators.profile import oracle_snapshot_diff
 def grf_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import personalized_pagerank
 
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = _pr_edges(spark, sf_dir)
     return personalized_pagerank(
         edges, "node IN ('s1', 's2', 's3')", iterations=3, damping=0.85
     )
@@ -5141,12 +5105,7 @@ from ..operators.funnel import oracle_pareto_tiers
 def grf_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import random_walks
 
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = _pr_edges(spark, sf_dir)
     return random_walks(edges, walk_len=6)
 
 
@@ -5305,12 +5264,7 @@ def txt_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 def grf_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import assortativity
 
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = _pr_edges(spark, sf_dir)
     return assortativity(edges)
 
 
@@ -6216,7 +6170,7 @@ def src_parquet_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.pqstats import parquet_rowgroup_stats, write_fixture_distributed
 
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber")
-    root = f"/tmp/h271_rgstats_{os.path.basename(os.path.normpath(sf_dir))}"
+    root = scratch_dir(spark, "rgstats", sf_dir)
     shutil.rmtree(root, ignore_errors=True)
     os.makedirs(root, exist_ok=True)
     path = os.path.join(root, "h271_rgstats.parquet")
@@ -6511,7 +6465,7 @@ def src_copybook(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     layout = [("flag", "X", 1), ("cents", "P", 6)]
-    root = f"/tmp/h271_copybook_{os.path.basename(os.path.normpath(sf_dir))}"
+    root = scratch_dir(spark, "copybook", sf_dir)
     path = os.path.join(root, "extract")
     # fixture writer = test scaffolding (like pqstats.write_fixture), but
     # distributed: rows encode JVM-side and each partition writes its own
@@ -6542,12 +6496,7 @@ from ..operators.graph import oracle_betweenness_sampled
 def grf_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import betweenness_sampled
 
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = _pr_edges(spark, sf_dir)
     return betweenness_sampled(edges, ["s1", "s2", "s3", "s4"], depth=4)
 
 
@@ -6747,12 +6696,7 @@ from ..operators.sampling import oracle_time_split_purged
 def grf_edge_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import edge_betweenness_sampled
 
-    li = load_table(spark, sf_dir, "lineitem")
-    fwd = li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey").cast("string")).alias("dst"),
-    )
-    edges = fwd.union(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = _pr_edges(spark, sf_dir)
     return edge_betweenness_sampled(edges, ["s1", "s2", "s3", "s4"], depth=4)
 
 

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions import tokenize
-from ..io import load_table
+from ..io import load_table, scratch_dir
 from ..operators import aggregates, fieldsel, joins, keyfield, partitioning, pipes, secondary_sort, setops
 from . import register
 
@@ -290,15 +290,10 @@ def q08b_join_override(spark: SparkSession, sf_dir: str) -> DataFrame:
         "same oracle as q08b, proving the parser lowers onto the same join",
 )
 def q24_compose_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-
     from ..operators.compose import compose
 
     cust, orders = _outer_sides(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(), "spark_graft_compose", os.path.basename(sf_dir.rstrip("/"))
-    )
+    base = scratch_dir(spark, "compose", sf_dir)
     pa, pb = os.path.join(base, "a"), os.path.join(base, "b")
     cust.select("k", F.col("c_acctbal").alias("v")).write.mode("overwrite").parquet(pa)
     orders.select("k", F.col("tot").alias("v")).write.mode("overwrite").parquet(pb)
@@ -1090,16 +1085,10 @@ def q23_bbp_pi_digits(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sudoku.java. Distributed exact-cover via search-tree prefix fan-out.
 # ---------------------------------------------------------------------------
 
-# Board is env-tunable for quick loops (20x3 is ~4s of search; 15x4 ~105s
-# single-threaded, prefix-parallelized here). Solution counts are famous
-# public constants, independently confirmed for both supported boards.
-_PENT_W, _PENT_H = (
-    int(v) for v in _os.environ.get("SPARK_GRAFT_PENT", "15x4").split("x")
-)
-_PENT_COUNTS = {(20, 3): (8, 2), (15, 4): (1472, 368)}
-if (_PENT_W, _PENT_H) not in _PENT_COUNTS:
-    raise ValueError("SPARK_GRAFT_PENT must be 15x4 or 20x3")
-_PENT_RAW, _PENT_DISTINCT = _PENT_COUNTS[(_PENT_W, _PENT_H)]
+# 15x4 board (~105s single-threaded, prefix-parallelized here). The solution
+# counts are famous public constants.
+_PENT_W, _PENT_H = 15, 4
+_PENT_RAW, _PENT_DISTINCT = 1472, 368
 
 
 @register(
@@ -1110,7 +1099,7 @@ _PENT_RAW, _PENT_DISTINCT = _PENT_COUNTS[(_PENT_W, _PENT_H)]
     """,
     doc=f"DistributedPentomino on {_PENT_W}x{_PENT_H}: Algorithm X subtrees "
         "fanned out one prefix per task; counts pinned to the public "
-        "pentomino solution constants (368 distinct on 4x15, 2 on 3x20)",
+        "pentomino solution constants (368 distinct on 4x15)",
 )
 def q26_pentomino(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dancing import solve_pentomino

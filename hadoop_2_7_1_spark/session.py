@@ -12,7 +12,8 @@ and memory sizing change:
 - Arrow enabled: every Python-side operator (pipe UDFs, multimodal decode)
   moves data in Arrow record batches, never row-at-a-time pickling.
 - UTC session timezone so parquet timestamps compare bit-exact against the
-  DuckDB oracle.
+  DuckDB oracle; it and the other settings results depend on are
+  ``RESULT_CONF``, the one place they are spelled.
 """
 
 from __future__ import annotations
@@ -22,31 +23,39 @@ import os
 from pyspark.sql import SparkSession
 
 
+# Runtime SQL settings that query results depend on. ``get_spark`` applies
+# them through its builder; ``__spark_entry__`` applies them to a session it
+# is handed that did not come from here.
+RESULT_CONF = {
+    "spark.sql.session.timeZone": "UTC",
+    # events.parquet stores TIMESTAMP(NANOS); read as long + convert in io
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # never surface TIMESTAMP_NTZ from parquet: the reference models time
+    # as zone-less long millis, and with the session pinned to UTC plain
+    # TIMESTAMP has identical instants while staying compatible with
+    # unix_micros()/window() etc. (io.load_table also casts defensively)
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # decode()/encode() with non-builtin JVM charsets (IBM037, the copybook
+    # source) needs the legacy switch in Spark 4
+    "spark.sql.legacy.javaCharsets": "true",
+}
+
+
 def get_spark(
     app_name: str = "hadoop_2_7_1_spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        shuffle_partitions = 32
     builder = (
         SparkSession.builder.appName(app_name)
         .master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", "32")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        # events.parquet stores TIMESTAMP(NANOS); read as long + convert in io
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # never surface TIMESTAMP_NTZ from parquet: the reference models time
-        # as zone-less long millis, and with the session pinned to UTC plain
-        # TIMESTAMP has identical instants while staying compatible with
-        # unix_micros()/window() etc. (io.load_table also casts defensively)
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        .config(map=RESULT_CONF)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))

@@ -7,7 +7,8 @@ records whose text fields are EBCDIC (IBM037) and whose numerics are packed
 decimal (two digits per byte, sign in the final nibble: C/F positive, D
 negative). This module decodes BOTH inside JVM expressions — the record
 split is substring-on-binary over an exploded index, the charset decode is
-Spark's `decode(bin, 'IBM037')` (a JDK charset), and the packed-decimal
+Spark's `decode(bin, 'IBM037')` (a JDK charset, which Spark 4 allows only
+under a legacy switch in `session.RESULT_CONF`), and the packed-decimal
 parse is hex() + string slicing — so ingest stays in whole-stage codegen
 with zero Python in the per-record path.
 
@@ -53,10 +54,6 @@ def read_copybook_records(
     rtrim the EBCDIC space padding, 'P' fields parse as packed decimal.
     """
     rec_len = record_length(layout)
-    # decode() with non-builtin JVM charsets (IBM037) needs the legacy
-    # switch in Spark 4; runtime-settable, same move as io.load_table's
-    # session pins
-    spark.conf.set("spark.sql.legacy.javaCharsets", "true")
     files = spark.read.format("binaryFile").load(path)
     # slice inside ONE transform expression so the file bytes are never
     # duplicated per record row; sequence(1, 0) is DESCENDING in Spark —
@@ -124,7 +121,6 @@ def write_copybook_distributed(df: DataFrame, path: str, layout: Layout) -> None
     import os
     import shutil
 
-    df.sparkSession.conf.set("spark.sql.legacy.javaCharsets", "true")
     recs = df.select(F.expr(copybook_record_expr(layout)).alias("rec"))
     # stale part files from a prior run would duplicate records on read-back
     shutil.rmtree(path, ignore_errors=True)

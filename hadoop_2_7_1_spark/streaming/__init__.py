@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import scratch_dir
+
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as an unbounded stream (schema from the batch read).
@@ -32,10 +34,8 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Raw schema (ts stays INT64-nanos -> bigint under nanosAsLong); the
     # converted schema from load_table would mismatch the parquet file.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    stage = f"/tmp/h271_stream_{os.path.basename(os.path.normpath(sf_dir))}_events"
+    stage = scratch_dir(spark, "stream_events", sf_dir)
     os.makedirs(stage, exist_ok=True)
     link = os.path.join(stage, "events.parquet")
     if not os.path.exists(link):

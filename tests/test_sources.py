@@ -1335,7 +1335,6 @@ def test_copybook_jvm_encoder_matches_python(spark, tmp_path):
     write_copybook_fixture(rows, path, layout)
     with open(path, "rb") as fh:
         py_bytes = fh.read()
-    spark.conf.set("spark.sql.legacy.javaCharsets", "true")
     df = spark.createDataFrame(rows, "flag string, amount long, qty long")
     jvm = [
         bytes(r.rec)
@@ -1373,7 +1372,6 @@ def test_copybook_jvm_encoder_boundary_values(spark, tmp_path):
     write_copybook_fixture(rows, path, layout)
     with open(path, "rb") as fh:
         py = fh.read()
-    spark.conf.set("spark.sql.legacy.javaCharsets", "true")
     df = spark.createDataFrame(rows, "tag string, p2 long, p6 long")
     jvm = sorted(
         bytes(r.rec)

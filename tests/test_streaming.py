@@ -65,8 +65,6 @@ def test_curate_sessions_stream_matches_batch(spark, tmp_path):
     stage.mkdir()
     os.symlink(src, stage / "a.parquet")
     os.symlink(src, stage / "b.parquet")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(src).schema
     sdf = spark.readStream.schema(schema).format("parquet").load(str(stage))
     if dict(sdf.dtypes).get("ts") == "bigint":

@@ -3,9 +3,9 @@ complementing dedup.connected_components).
 
 PageRank with a fixed iteration count: per iteration, every node ships
 rank/out_degree along its out-edges and the destination sums arrivals —
-two keyed shuffles per round, the textbook distributed shape. Lineage is
-truncated each round with localCheckpoint (same guard as
-connected_components) so plan depth stays constant at any iteration count.
+two keyed shuffles per round, the textbook distributed shape. The rounds
+are chained with persist() in a private session and materialized once
+(see _rounds_session), so the caller's session conf is never touched.
 
 A fixed iteration count (rather than convergence detection) keeps the
 result deterministic and lets an external engine replay the exact same
@@ -14,47 +14,53 @@ computation as unrolled CTEs — which is how the oracle checks it.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
-from pyspark.sql import DataFrame, Window
+from pyspark import RDD
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-@contextmanager
-def _compiled_rounds(anchor: DataFrame):
-    """Scope for compiling a FIXED-round iterative chain into one job.
+def _rounds_session(e: DataFrame) -> SparkSession:
+    """Private session for compiling a FIXED-round iterative chain into one
+    job.
 
-    Inside the scope the caller chains rounds with ``persist()`` (cache
-    substitution keeps the logical plan linear in rounds even when a round
-    references its predecessor several times) and materializes the final
-    frame once — instead of an eager ``localCheckpoint`` per round, which
-    under AQE runs every stage driver-synchronously and re-computes
-    non-materialized subtrees at runtime broadcast conversions.
+    The caller chains rounds with ``persist()`` (cache substitution keeps
+    the logical plan linear in rounds even when a round references its
+    predecessor several times) and materializes the final frame once —
+    instead of an eager ``localCheckpoint`` per round, which under AQE
+    runs every stage driver-synchronously and re-computes non-materialized
+    subtrees at runtime broadcast conversions.
 
-    AQE is disabled for the scope because a persisted frame pins its
-    pre-AQE shuffle layout (the r11 experiment measured persist-chained
-    rounds 2.2x WORSE under a 200-partition plain session for exactly that
-    reason). The fixed partition count is DERIVED, not constant: the
-    anchor frame is an eagerly localCheckpoint-ed input whose layout AQE
-    already coalesced by byte size, so its partition count scales with the
-    data (1-2 locally at sf0.1, thousands at 100 TB) — the same
+    AQE is off here because a persisted frame pins its pre-AQE shuffle
+    layout (the r11 experiment measured persist-chained rounds 2.2x WORSE
+    under a 200-partition plain session for exactly that reason). The
+    fixed partition count is DERIVED, not constant: ``e`` is an eagerly
+    localCheckpoint-ed input whose layout AQE already coalesced by byte
+    size, so its partition count scales with the data (1-2 locally at
+    sf0.1, thousands at 100 TB) and reading it runs no job — the same
     size-adaptive discipline as the registry's derive_k/derive_bucket_dims
-    knobs. Restores both settings on exit; callers must materialize
-    (eager localCheckpoint) before the scope closes so the returned frame
-    never executes under the temporary settings.
+    knobs.
+
+    Both settings go on a clone of ``e``'s session, never on the caller's,
+    so queries sharing that session keep their conf while the rounds run.
+    ``cloneSession`` (unlike ``newSession``) keeps conf set at runtime,
+    such as the ``RESULT_CONF`` pins ``__spark_entry__`` applies to a
+    foreign session; the clone shares the SparkContext and the cache.
     """
-    spark = anchor.sparkSession
-    npart = max(1, anchor.rdd.getNumPartitions())
-    conf = spark.conf
-    old_aqe = conf.get("spark.sql.adaptive.enabled", "true")
-    old_sp = conf.get("spark.sql.shuffle.partitions", "200")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", str(npart))
-    try:
-        yield
-    finally:
-        conf.set("spark.sql.adaptive.enabled", old_aqe)
-        conf.set("spark.sql.shuffle.partitions", old_sp)
+    parent = e.sparkSession
+    to_df = RDD.toDF  # the SparkSession constructor re-points rdd.toDF() at itself
+    clone = SparkSession(parent.sparkContext, parent._jsparkSession.cloneSession())
+    RDD.toDF = to_df
+    clone.conf.set("spark.sql.adaptive.enabled", "false")
+    clone.conf.set("spark.sql.shuffle.partitions", str(max(1, e.rdd.getNumPartitions())))
+    return clone
+
+
+def _rebind(session: SparkSession, df: DataFrame) -> DataFrame:
+    # No public API moves a frame between sessions: re-wrap its analyzed
+    # plan in a JVM Dataset of ``session`` so it plans under that conf.
+    jvm_dataset = session._jvm.org.apache.spark.sql.classic.Dataset
+    plan = df._jdf.queryExecution().analyzed()
+    return DataFrame(jvm_dataset.ofRows(session._jsparkSession, plan), session)
 
 
 def pagerank(
@@ -69,64 +75,13 @@ def pagerank(
     ``edges`` is a directed edge list; every node must have at least one
     out-edge (undirect the graph first if it may have sinks — dangling-mass
     redistribution is deliberately out of scope to keep the computation
-    engine-replayable). Output: (node, rank_pr).
+    engine-replayable). Classic PageRank is :func:`personalized_pagerank`
+    with every node a seed: start mass 1/n and teleport (1-d)/n are the
+    same doubles. Output: (node, rank_pr).
     """
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
-    nodes = e.select(F.col("src").alias("node")).union(
-        e.select(F.col("dst").alias("node"))
-    ).distinct().localCheckpoint()
-    n = nodes.count()  # one metadata-scale scalar, like MLlib's initialization
-    base = (1.0 - damping) / n
-    # Fixed-round chain compiled into ONE job (r12): rounds link through
-    # persist() under the AQE-off/derived-partition scope instead of an
-    # eager localCheckpoint per round — see _compiled_rounds.
-    with _compiled_rounds(e):
-        outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg")).persist()
-        cached = [outdeg]
-        ranks = nodes.withColumn("rank_pr", F.lit(1.0 / n))
-        for _ in range(iterations):
-            # Contributions accumulate as SCALED BIGINT (x1e15): round(c*1e15)
-            # is the same IEEE double product and the same half-up rounding on
-            # both engines (positive values), the integer sum is exact under
-            # any partial-sum grouping, and per-dst mass <= 1 keeps the scaled
-            # sum under 2^53 so the cast back to double is lossless. (A
-            # decimal(38,24) cast is NOT portable: DuckDB scales through
-            # double*10^24, which can't be correctly rounded past 2^53.)
-            contribs = (
-                e.join(ranks, e["src"] == ranks["node"])
-                .join(outdeg, "src")
-                .select(
-                    "dst",
-                    F.round((F.col("rank_pr") / F.col("outdeg")) * F.lit(1e15))
-                    .cast("bigint")
-                    .alias("c"),
-                )
-                .groupBy("dst")
-                .agg(F.sum("c").alias("in_sum"))
-            )
-            ranks = (
-                nodes.join(contribs, nodes["node"] == contribs["dst"], "left")
-                .select(
-                    "node",
-                    (
-                        F.lit(base)
-                        + damping
-                        * F.coalesce(
-                            F.col("in_sum").cast("double") / F.lit(1e15), F.lit(0.0)
-                        )
-                    )
-                    .cast("double")
-                    .alias("rank_pr"),
-                )
-                .persist()
-            )
-            cached.append(ranks)
-        # One eager materialization runs the whole chain; intermediates are
-        # then dropped (checkpoint blocks outlive the cache entries).
-        final = ranks.localCheckpoint()
-        for c in cached:
-            c.unpersist()
-    return final
+    return personalized_pagerank(
+        edges, "true", iterations, damping, src_col, dst_col
+    ).withColumnRenamed("rank_ppr", "rank_pr")
 
 
 def triangle_count(
@@ -853,12 +808,13 @@ def personalized_pagerank(
     ``seed_pred`` is a boolean SQL expression over the column ``node``
     (shared verbatim with the oracle). Init mass 1/|S| on seeds, 0
     elsewhere; each round redistributes damped mass along out-edges and
-    teleports (1-d)/|S| back into the seeds only. Determinism recipe
-    identical to :func:`pagerank`: scaled-bigint (x1e15) contribution
-    sums, Python-evaluated double constants, fixed iteration count
+    teleports (1-d)/|S| back into the seeds only (every node a seed is
+    classic :func:`pagerank`). Determinism recipe: scaled-bigint (x1e15)
+    contribution sums, Python-evaluated double constants, fixed iteration count
     (oracle = unrolled CTE chain). |S| is one metadata-scale driver
-    scalar, like pagerank's node count. Output: (node, rank_ppr).
+    scalar. Output: (node, rank_ppr).
     """
+    parent = edges.sparkSession
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
     e = e.localCheckpoint()
     nodes = (
@@ -870,12 +826,15 @@ def personalized_pagerank(
     )
     s = nodes.filter("is_seed").count()  # metadata-scale scalar, |seed set|
     if s == 0:
-        raise ValueError("seed_pred selects no node")
+        raise ValueError("no seed node: the edge list is empty or seed_pred selects no node")
     base = (1.0 - damping) / s
-    # Fixed-round chain compiled into ONE job (r12) — see _compiled_rounds.
-    with _compiled_rounds(e):
-        outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg")).persist()
-        cached = [outdeg]
+    # Fixed-round chain compiled into ONE job (r12) in a private session —
+    # see _rounds_session.
+    session = _rounds_session(e)
+    e, nodes = _rebind(session, e), _rebind(session, nodes)
+    outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg")).persist()
+    cached = [outdeg]
+    try:
         ranks = nodes.select(
             "node",
             "is_seed",
@@ -884,6 +843,13 @@ def personalized_pagerank(
             .alias("rank_ppr"),
         )
         for _ in range(iterations):
+            # Contributions accumulate as SCALED BIGINT (x1e15): round(c*1e15)
+            # is the same IEEE double product and the same half-up rounding on
+            # both engines (positive values), the integer sum is exact under
+            # any partial-sum grouping, and per-dst mass <= 1 keeps the scaled
+            # sum under 2^53 so the cast back to double is lossless. (A
+            # decimal(38,24) cast is NOT portable: DuckDB scales through
+            # double*10^24, which can't be correctly rounded past 2^53.)
             contribs = (
                 e.join(ranks, e["src"] == ranks["node"])
                 .join(outdeg, "src")
@@ -914,10 +880,14 @@ def personalized_pagerank(
                 .persist()
             )
             cached.append(ranks)
+        # One eager materialization runs the whole chain; the persisted
+        # intermediates are released even if it raises (checkpoint blocks
+        # outlive the cache entries).
         final = ranks.localCheckpoint()
+    finally:
         for c in cached:
             c.unpersist()
-    return final.select("node", "rank_ppr")
+    return _rebind(parent, final).select("node", "rank_ppr")
 
 
 def oracle_personalized_pagerank(

@@ -956,6 +956,10 @@ def test_pagerank_invariants(spark):
     ranks = {r.node: r.rank_pr for r in pagerank(sdf, iterations=3).collect()}
     assert ranks[0] > max(ranks[i] for i in range(1, 6))
 
+    # no node at all: a clear error, not a division by zero
+    with pytest.raises(ValueError, match="edge list is empty"):
+        pagerank(edges.limit(0))
+
 
 def test_encode_ids_order_and_oov(spark):
     from hadoop_2_7_1_spark.operators.textops import encode_ids
@@ -2178,6 +2182,48 @@ def test_personalized_pagerank_mass_confined_to_seed_component(spark):
     # the split between a and b per round, so only the sum is stable)
     assert out["a"] > 0.0 and out["b"] > 0.0
     assert abs(out["a"] + out["b"] - 1.0) < 1e-9
+
+
+def test_personalized_pagerank_releases_rounds_when_materialization_raises(
+    spark, monkeypatch
+):
+    """The persisted outdeg and round frames are released in a finally: a
+    call whose final materialization raises leaves no more persistent RDDs
+    behind than a successful call (the checkpoints of e, nodes and the
+    result)."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from hadoop_2_7_1_spark.operators.graph import personalized_pagerank
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "b")], "src string, dst string"
+    )
+    jsc = spark.sparkContext._jsc
+
+    def persisted_by(call):
+        before = set(jsc.getPersistentRDDs().keys())
+        call()
+        return set(jsc.getPersistentRDDs().keys()) - before
+
+    kept = []
+    ok = persisted_by(lambda: kept.append(personalized_pagerank(edges, "node = 'a'")))
+
+    real = DataFrame.localCheckpoint
+
+    def final_raises(self, *args, **kwargs):
+        out = real(self, *args, **kwargs)  # runs the whole round chain
+        if "rank_ppr" in self.columns:
+            raise RuntimeError("injected failure")
+        return out
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", final_raises)
+
+    def failing():
+        with pytest.raises(RuntimeError, match="injected failure"):
+            personalized_pagerank(edges, "node = 'a'")
+
+    failed = persisted_by(failing)
+    assert len(failed) <= len(ok), (len(failed), len(ok))
 
 
 def test_inverted_index_hand(spark):

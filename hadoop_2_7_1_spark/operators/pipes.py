@@ -15,9 +15,12 @@ thread consumes stdout, mirroring the reference's pump threads
 
 from __future__ import annotations
 
+import os
 import subprocess
 import threading
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from contextlib import suppress
+from typing import IO, Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -27,6 +30,65 @@ from pyspark.sql.types import StringType, StructField, StructType
 PIPE_OUTPUT_SCHEMA = StructType(
     [StructField("key", StringType()), StructField("value", StringType())]
 )
+
+
+def pump(
+    cmd: list[str],
+    chunks: Iterator,
+    records: Callable[[IO], Iterator[tuple[Any, Any]]],
+    env: dict[str, str] | None = None,
+    cwd: str | None = None,
+    text: bool = False,
+) -> Iterator[pd.DataFrame]:
+    """One partition's streaming child (PipeMapRed.java's pump threads): a
+    feeder thread writes ``chunks`` to its stdin while ``records`` parses
+    its stdout into (key, value) frames. A feeder error is re-raised once
+    the feeder ends, a reader error kills the child, and a non-zero exit
+    raises. A ``BrokenPipeError`` on stdin alone means the child stopped
+    reading; its exit code decides."""
+    proc = subprocess.Popen(
+        cmd,
+        stdin=subprocess.PIPE,
+        stdout=subprocess.PIPE,
+        text=text,
+        bufsize=1 << 20 if text else -1,
+        env={**os.environ, **env} if env else None,
+        cwd=cwd,
+    )
+    failed: list[BaseException] = []
+
+    def feed() -> None:
+        try:
+            with suppress(BrokenPipeError), proc.stdin:
+                for chunk in chunks:
+                    proc.stdin.write(chunk)
+        except BaseException as e:  # re-raised on the task thread below
+            failed.append(e)
+
+    writer = threading.Thread(target=feed, daemon=True)
+    writer.start()
+
+    keys: list[Any] = []
+    vals: list[Any] = []
+    try:
+        for k, v in records(proc.stdout):
+            keys.append(k)
+            vals.append(v)
+            if len(keys) >= 10_000:
+                yield pd.DataFrame({"key": keys, "value": vals})
+                keys, vals = [], []
+    except BaseException:
+        proc.kill()
+        proc.wait()
+        raise
+    writer.join()
+    rc = proc.wait()
+    if failed:
+        raise failed[0]
+    if rc != 0:
+        raise RuntimeError(f"pipe command {cmd!r} exited with {rc}")
+    if keys:
+        yield pd.DataFrame({"key": keys, "value": vals})
 
 
 def pipe_transform(
@@ -53,57 +115,25 @@ def pipe_transform(
     ``-cmdenv``); ``cwd`` sets its working directory (where ``-files``
     shipped artifacts land, StreamJob.java's file-packaging contract).
     """
-    import os
-
     cols = input_cols or df.columns
     osep = sep if out_sep is None else out_sep
     lines_df = df.select(
         F.concat_ws(sep, *[F.col(c).cast("string") for c in cols]).alias("line")
     )
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        proc = subprocess.Popen(
-            cmd,
-            stdin=subprocess.PIPE,
-            stdout=subprocess.PIPE,
-            text=True,
-            bufsize=1 << 20,
-            env={**os.environ, **env} if env else None,
-            cwd=cwd,
-        )
-
-        def feed() -> None:
-            try:
-                for pdf in batches:
-                    for line in pdf["line"]:
-                        proc.stdin.write(line + "\n")
-            finally:
-                proc.stdin.close()
-
-        writer = threading.Thread(target=feed, daemon=True)
-        writer.start()
-
-        keys: list[str] = []
-        vals: list[str] = []
-        for out_line in proc.stdout:
+    def records(stdout) -> Iterator[tuple[str, str]]:
+        for out_line in stdout:
             out_line = out_line.rstrip("\n")
             if num_key_fields == 1:
                 k, s, v = out_line.partition(osep)
-                keys.append(k)
-                vals.append(v if s else "")
+                yield k, (v if s else "")
             else:
                 parts = out_line.split(osep)
-                keys.append(osep.join(parts[:num_key_fields]))
-                vals.append(osep.join(parts[num_key_fields:]))
-            if len(keys) >= 10_000:
-                yield pd.DataFrame({"key": keys, "value": vals})
-                keys, vals = [], []
-        writer.join()
-        rc = proc.wait()
-        if rc != 0:
-            raise RuntimeError(f"pipe command {cmd!r} exited with {rc}")
-        if keys:
-            yield pd.DataFrame({"key": keys, "value": vals})
+                yield osep.join(parts[:num_key_fields]), osep.join(parts[num_key_fields:])
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        lines = (line + "\n" for pdf in batches for line in pdf["line"])
+        return pump(cmd, lines, records, env, cwd, text=True)
 
     return lines_df.mapInPandas(run, PIPE_OUTPUT_SCHEMA)
 

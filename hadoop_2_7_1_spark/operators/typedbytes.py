@@ -20,8 +20,6 @@ subprocess per partition via ``mapInPandas`` — same process model as
 from __future__ import annotations
 
 import struct
-import subprocess
-import threading
 from collections.abc import Iterator
 from io import BufferedReader
 from typing import Any, BinaryIO
@@ -29,6 +27,8 @@ from typing import Any, BinaryIO
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .pipes import pump
 
 # type codes
 BYTES, BYTE, BOOL, INT, LONG, FLOAT, DOUBLE, STRING, VECTOR, LIST, MAP = range(11)
@@ -132,58 +132,31 @@ def pipe_transform_typed(
     ``pipe_transform`` (streaming ``-cmdenv`` and the ``-files`` working
     directory).
     """
-    import os
-
     key_col = key_col or df.columns[0]
     val_cols = [c for c in df.columns if c != key_col]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        proc = subprocess.Popen(
-            cmd,
-            stdin=subprocess.PIPE,
-            stdout=subprocess.PIPE,
-            env={**os.environ, **env} if env else None,
-            cwd=cwd,
-        )
+    def chunks(batches: Iterator[pd.DataFrame]) -> Iterator[bytes]:
+        for pdf in batches:
+            buf = bytearray()
+            for row in pdf.itertuples(index=False):
+                d = row._asdict()
+                buf += encode(_py(d[key_col]))
+                vals = [_py(d[c]) for c in val_cols]
+                buf += encode(vals[0] if len(vals) == 1 else vals)
+            yield bytes(buf)
 
-        def feed() -> None:
-            try:
-                for pdf in batches:
-                    buf = bytearray()
-                    for row in pdf.itertuples(index=False):
-                        d = row._asdict()
-                        buf += encode(_py(d[key_col]))
-                        vals = [_py(d[c]) for c in val_cols]
-                        buf += encode(vals[0] if len(vals) == 1 else vals)
-                    proc.stdin.write(bytes(buf))
-            finally:
-                proc.stdin.close()
-
-        writer = threading.Thread(target=feed, daemon=True)
-        writer.start()
-
-        out = BufferedReader(proc.stdout)
-        keys: list[Any] = []
-        vals: list[Any] = []
+    def records(stdout) -> Iterator[tuple[Any, Any]]:
+        out = BufferedReader(stdout)
         while True:
             try:
                 k = decode(out)
             except EOFError:
-                break
-            v = decode(out)
-            keys.append(k)
-            vals.append(v)
-            if len(keys) >= 10_000:
-                yield pd.DataFrame({"key": keys, "value": vals})
-                keys, vals = [], []
-        writer.join()
-        rc = proc.wait()
-        if rc != 0:
-            raise RuntimeError(f"pipe command {cmd!r} exited with {rc}")
-        if keys:
-            yield pd.DataFrame({"key": keys, "value": vals})
+                return
+            yield k, decode(out)
 
-    return df.mapInPandas(run, output_schema)
+    return df.mapInPandas(
+        lambda b: pump(cmd, chunks(b), records, env, cwd), output_schema
+    )
 
 
 def _py(v: Any) -> Any:
@@ -208,7 +181,6 @@ def pipe_transform_raw(
     (vint length + utf8) inside the frame — that's what
     ``writable.write(bufferDataOut)`` produces for Text.
     """
-    import os
     import struct as _struct
 
     from ..sources.seqfile import _enc_text
@@ -224,32 +196,18 @@ def pipe_transform_raw(
             b = _enc_text(str(value))
         return _struct.pack(">i", len(b)) + b
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        proc = subprocess.Popen(
-            cmd,
-            stdin=subprocess.PIPE,
-            stdout=subprocess.PIPE,
-            env={**os.environ, **env} if env else None,
-            cwd=cwd,
-        )
+    def chunks(batches: Iterator[pd.DataFrame]) -> Iterator[bytes]:
+        for pdf in batches:
+            buf = bytearray()
+            for row in pdf.itertuples(index=False):
+                d = row._asdict()
+                buf += frame(d[key_col], dtypes[key_col])
+                for c in val_cols:
+                    buf += frame(d[c], dtypes[c])
+            yield bytes(buf)
 
-        def feed() -> None:
-            try:
-                for pdf in batches:
-                    buf = bytearray()
-                    for row in pdf.itertuples(index=False):
-                        d = row._asdict()
-                        buf += frame(d[key_col], dtypes[key_col])
-                        for c in val_cols:
-                            buf += frame(d[c], dtypes[c])
-                    proc.stdin.write(bytes(buf))
-            finally:
-                proc.stdin.close()
-
-        writer = threading.Thread(target=feed, daemon=True)
-        writer.start()
-
-        out = BufferedReader(proc.stdout)
+    def records(stdout) -> Iterator[tuple[bytes, bytes]]:
+        out = BufferedReader(stdout)
 
         def read_framed() -> bytes | None:
             hdr = out.read(4)
@@ -263,25 +221,15 @@ def pipe_transform_raw(
                 raise EOFError("truncated rawbytes frame")
             return b
 
-        keys: list[bytes] = []
-        vals: list[bytes] = []
         while True:
             k = read_framed()
             if k is None:
-                break
+                return
             v = read_framed()
             if v is None:
                 raise EOFError("rawbytes stream ended after a key")
-            keys.append(k)
-            vals.append(v)
-            if len(keys) >= 10_000:
-                yield pd.DataFrame({"key": keys, "value": vals})
-                keys, vals = [], []
-        writer.join()
-        rc = proc.wait()
-        if rc != 0:
-            raise RuntimeError(f"pipe command {cmd!r} exited with {rc}")
-        if keys:
-            yield pd.DataFrame({"key": keys, "value": vals})
+            yield k, v
 
-    return df.mapInPandas(run, "key binary, value binary")
+    return df.mapInPandas(
+        lambda b: pump(cmd, chunks(b), records, env, cwd), "key binary, value binary"
+    )

@@ -2103,12 +2103,9 @@ def src_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "round-trip in tests/test_sources.py",
 )
 def src_mapfile_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from ..sources import mapfile
 
     out = scratch_dir(spark, "mapfile", sf_dir)
-    shutil.rmtree(out, ignore_errors=True)
     supp = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").cast("bigint").alias("k"), F.col("s_name").alias("v")
     )
@@ -3974,9 +3971,6 @@ def src_setfile_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import mapfile
 
     out = scratch_dir(spark, "setfile", sf_dir)
-    import shutil
-
-    shutil.rmtree(out, ignore_errors=True)
     cust = load_table(spark, sf_dir, "customer").filter(
         F.col("c_mktsegment") == "BUILDING"
     ).select(F.col("c_custkey").cast("bigint").alias("k"))
@@ -4008,9 +4002,6 @@ def src_bloom_mapfile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import mapfile
 
     out = scratch_dir(spark, "bloommap", sf_dir)
-    import shutil
-
-    shutil.rmtree(out, ignore_errors=True)
     orders = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderkey") % 4 == 0
     ).select(
@@ -4047,9 +4038,6 @@ def src_arrayfile_get(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import mapfile
 
     out = scratch_dir(spark, "arrayfile", sf_dir)
-    import shutil
-
-    shutil.rmtree(out, ignore_errors=True)
     supp = load_table(spark, sf_dir, "supplier").select(
         F.col("s_suppkey").cast("bigint").alias("ord"), "s_name"
     )
@@ -6468,8 +6456,9 @@ def src_copybook(spark: SparkSession, sf_dir: str) -> DataFrame:
     root = scratch_dir(spark, "copybook", sf_dir)
     path = os.path.join(root, "extract")
     # fixture writer = test scaffolding (like pqstats.write_fixture), but
-    # distributed: rows encode JVM-side and each partition writes its own
-    # part file; the operator under audit is the JVM reader
+    # distributed: rows encode JVM-side and each partition stages its own
+    # part file, published by sources.commit; the operator under audit is
+    # the JVM reader
     write_copybook_distributed(li, path, layout)
     recs = read_copybook_records(spark, path, layout)
     return recs.groupBy(F.col("flag")).agg(

@@ -18,10 +18,11 @@ records whose fields are ``long int double float boolean string bytes``,
 nullable unions ``["null", T]``, and arrays of those primitives.
 
 100 TB design: OCF is splittable on its sync marker — the writer emits one
-data block per Arrow batch so any Hadoop reader can split our output. Our
+data block per 4096 records so any Hadoop reader can split our output. Our
 own reader parallelizes at file granularity (one task per part file via
 ``mapInPandas`` over the listing, blobs never touch the driver) — the
 shard-sized-files layout contract shared with ``sources/webdataset.py``.
+Writes stage each task's part and publish through :mod:`.commit`.
 """
 
 from __future__ import annotations
@@ -36,6 +37,8 @@ from collections.abc import Iterator
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+
+from . import commit
 
 MAGIC = b"Obj\x01"
 
@@ -321,49 +324,22 @@ def _norm_null(v: Any) -> Any:
 
 
 def write_avro(df: DataFrame, path: str, codec: str = "null") -> None:
-    """Avro sink: each partition streams its Arrow batches into
-    ``path/part-NNNNN.avro`` (one OCF data block per batch -> splittable by
-    any stock reader). No rdd/Pyrolite hop; blobs never touch the driver."""
+    """Avro sink: each partition streams its Arrow batches through
+    :func:`write_avro_file` into ``path/part-NNNNN.avro`` (one OCF data block
+    per 4096 records -> splittable by any stock reader), published by
+    :func:`.commit.write_parts` in place of the target's previous parts. No
+    rdd/Pyrolite hop; blobs never touch the driver."""
     schema = schema_for_df(df)
-    schema_json = json.dumps(schema)
-    os.makedirs(path, exist_ok=True)
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import hashlib
+    def encode(batches: Iterator["pd.DataFrame"], part: str, pid: int) -> int:
+        rows = (
+            tuple(_norm_null(v) for v in row)
+            for pdf in batches
+            for row in pdf.itertuples(index=False, name=None)
+        )
+        return write_avro_file(rows, schema, part, codec, f"hadoop_2_7_1_spark:{pid}")
 
-        import pandas as pd
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        sync = hashlib.md5(f"hadoop_2_7_1_spark:{pid}".encode()).digest()
-        ftypes = [f["type"] for f in schema["fields"]]
-        fh, n = None, 0
-        for pdf in batches:
-            if fh is None:
-                fh = open(os.path.join(path, f"part-{pid:05d}.avro"), "wb")
-                _write_header(fh, schema_json, codec, sync)
-            recs = []
-            for row in pdf.itertuples(index=False, name=None):
-                clean = tuple(_norm_null(v) for v in row)
-                recs.append(
-                    b"".join(_enc_value(t, v) for t, v in zip(ftypes, clean))
-                )
-                n += 1
-            if recs:
-                _write_block(fh, recs, codec, sync)
-        if fh is not None:
-            fh.close()
-        yield pd.DataFrame({"part": [pid], "n_records": [n]})
-
-    counts = df.mapInPandas(run, "part int, n_records long").collect()
-    if not any(r.n_records for r in counts):
-        # header-only part for empty outputs, like SequenceFileOutputFormat
-        import hashlib
-
-        with open(os.path.join(path, "part-00000.avro"), "wb") as fh:
-            _write_header(
-                fh, schema_json, codec, hashlib.md5(b"hadoop_2_7_1_spark:empty").digest()
-            )
+    commit.write_parts(df, path, encode, ext=".avro")
 
 
 def read_avro(spark: SparkSession, path: str) -> DataFrame:

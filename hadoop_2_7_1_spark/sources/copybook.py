@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import commit
+
 # field spec: (name, kind, byte_len) — kind 'X' = EBCDIC text, 'P' = COMP-3
 Layout = list[tuple[str, str, int]]
 
@@ -111,31 +113,21 @@ def copybook_record_expr(layout: Layout) -> str:
 def write_copybook_distributed(df: DataFrame, path: str, layout: Layout) -> None:
     """Distributed fixture write: rows encode to fixed-length binary records
     entirely in JVM expressions (:func:`copybook_record_expr`), then each
-    partition appends its records to one part file under ``path`` (a
-    directory) — record data never reaches the driver, unlike the r1-r7
-    collect-based scaffolding. Executor-side Python only joins whole record
-    byte strings (no per-field work). Local-mode scaffolding: part files
-    land on the executor-local filesystem, which local[*] shares with the
-    reader; a cluster deployment would target a shared filesystem and a
-    committer, which is what the parquet/sequencefile sinks are for."""
-    import os
-    import shutil
-
+    partition writes its records to one part file under ``path`` (a
+    directory), published by :func:`.commit.write_parts` in place of the
+    previous parts — record data never reaches the driver. Executor-side
+    Python only joins whole record byte strings (no per-field work)."""
     recs = df.select(F.expr(copybook_record_expr(layout)).alias("rec"))
-    # stale part files from a prior run would duplicate records on read-back
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
 
-    def _write(it) -> None:
-        from pyspark import TaskContext
+    def encode(batches, part: str, pid: int) -> int:
+        n = 0
+        with open(part, "wb") as fh:
+            for pdf in batches:
+                fh.write(b"".join(pdf["rec"]))
+                n += len(pdf)
+        return n
 
-        data = b"".join(r.rec for r in it)
-        if data:
-            pid = TaskContext.get().partitionId()
-            with open(os.path.join(path, f"part-{pid:05d}.bin"), "wb") as fh:
-                fh.write(data)
-
-    recs.foreachPartition(_write)
+    commit.write_parts(recs, path, encode, ext=".bin")
 
 
 def pack_comp3(value: int, byte_len: int) -> bytes:

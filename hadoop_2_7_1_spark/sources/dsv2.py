@@ -20,14 +20,14 @@ the framing never has to resynchronize mid-task.
 
 The decode path is the pure-Python parser from :mod:`.seqfile` (all three
 compression layouts); the write path emits standard v6 streams that stock
-Hadoop readers accept (JVM round-trip pinned in tests/test_sources.py).
+Hadoop readers accept (JVM round-trip pinned in tests/test_sources.py) and
+commits them through :mod:`.commit`, the protocol the function sinks share.
 """
 
 from __future__ import annotations
 
 import glob
 import os
-import shutil
 import uuid
 
 from pyspark.sql.datasource import (
@@ -38,6 +38,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from . import commit
 from .seqfile import _decode_writable, _enc_text, _parse_seq_stream, _SeqWriter
 
 
@@ -78,16 +79,16 @@ class _SeqFileReader(DataSourceReader):
 
 
 class _SeqFileCommit(WriterCommitMessage):
-    def __init__(self, partition_id: int, staged: str):
-        self.partition_id = partition_id
+    def __init__(self, staged: str):
         self.staged = staged
 
 
 class _SeqFileWriter(DataSourceWriter):
     """FileOutputCommitter-shaped write protocol (reference:
-    ``MRC/lib/output/FileOutputCommitter.java:1``): every task writes to a
-    job-unique staging directory under the target, the driver's ``commit``
-    promotes exactly the attempt files named in the commit messages (so a
+    ``MRC/lib/output/FileOutputCommitter.java:1``), shared with the function
+    sinks in :mod:`.commit`: every task attempt writes under a job-unique
+    staging directory in the target, the driver's ``commit`` promotes
+    exactly the attempt files named in the commit messages (so a
     speculative or retried attempt can never leave a duplicate part), and
     ``mode("overwrite")`` clears pre-existing part files at commit time —
     never before, so a failed job leaves the old data intact. ``abort``
@@ -99,15 +100,15 @@ class _SeqFileWriter(DataSourceWriter):
             raise ValueError("pyseqfile: path option/save(path) required")
         self.overwrite = overwrite
         self.job_id = uuid.uuid4().hex[:8]
-        self.staging = os.path.join(self.path, f"_temporary-{self.job_id}")
+        self.staging = commit.new_staging(self.path, self.job_id)
 
     def write(self, iterator):
         from pyspark import TaskContext
 
-        ctx = TaskContext.get()
-        pid = ctx.partitionId()
-        os.makedirs(self.staging, exist_ok=True)
-        staged = os.path.join(self.staging, f"part-{pid:05d}-{ctx.taskAttemptId()}")
+        pid = TaskContext.get().partitionId()
+        # final names carry the job id so append-mode jobs never clobber a
+        # prior job's parts (Hadoop: per-job task attempt ids in filenames)
+        staged = commit.attempt_part(self.staging, f"part-{pid:05d}-{self.job_id}")
         with open(staged, "wb") as fh:
             w = _SeqWriter(
                 fh,
@@ -117,23 +118,13 @@ class _SeqFileWriter(DataSourceWriter):
             )
             for row in iterator:
                 w.append(_enc_text(str(row[0])), _enc_text(str(row[1])))
-        return _SeqFileCommit(pid, staged)
+        return _SeqFileCommit(staged)
 
     def commit(self, messages):
-        if self.overwrite:
-            for f in glob.glob(os.path.join(self.path, "part-*")):
-                os.remove(f)
-        # final names carry the job id so append-mode jobs never clobber a
-        # prior job's parts (Hadoop: per-job task attempt ids in filenames)
-        for m in messages:
-            os.replace(
-                m.staged,
-                os.path.join(self.path, f"part-{m.partition_id:05d}-{self.job_id}"),
-            )
-        shutil.rmtree(self.staging, ignore_errors=True)
+        commit.promote(self.staging, [m.staged for m in messages], self.overwrite)
 
     def abort(self, messages):
-        shutil.rmtree(self.staging, ignore_errors=True)
+        commit.abort(self.staging)
 
 
 class SequenceFileDataSource(DataSource):

@@ -11,10 +11,11 @@ MapFileOutputFormat.java) writes ONE MapFile per reducer partition.
 Spark-first shape: the write is a range-repartition + within-partition sort
 (one shuffle — the same sort the reference's reduce phase performs), then an
 Arrow-batched ``mapInPandas`` writer emits ``part-NNNNN/{data,index}`` per
-partition. At 100 TB the data files stay distributed and block-splittable;
-only index entries (1 per 128 records) and the returned part manifest are
-small. Point lookup reads ONE index file and ONE bounded slice of one data
-file — never a scan.
+partition, staged and published by :mod:`.commit` (a failed rewrite leaves
+the old MapFile as it was). At 100 TB the data files stay distributed and
+block-splittable; only index entries (1 per 128 records) and the returned
+part manifest are small. Point lookup reads ONE index file and ONE bounded
+slice of one data file — never a scan.
 
 Format compatibility is pinned by a stock ``org.apache.hadoop.io.MapFile
 .Reader`` round-trip in tests/test_sources.py.
@@ -29,6 +30,7 @@ from collections.abc import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import commit
 from .seqfile import (
     _SeqWriter,
     _WRITABLE_FOR_DTYPE,
@@ -73,23 +75,16 @@ def write_map_file(
     else:
         value_class, enc_value = _WRITABLE_FOR_DTYPE[dtypes[value_col]]
 
-    os.makedirs(path, exist_ok=True)
     sel = (
         df.select(key_col, value_col)
         .repartitionByRange(num_parts, F.col(key_col))
         .sortWithinPartitions(key_col)
     )
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-        from pyspark import TaskContext
-
+    def encode(batches: Iterator["pd.DataFrame"], part: str, pid: int) -> int:
         from .bloomfilter import DynamicBloom, vector_size_for
 
-        pid = TaskContext.get().partitionId()
-        part_dir = os.path.join(path, f"part-{pid:05d}")
-        data_fh = index_fh = None
-        data = index = None
+        os.mkdir(part)
         bf = (
             DynamicBloom(
                 vector_size_for(bloom_num_keys, bloom_error_rate),
@@ -99,55 +94,30 @@ def write_map_file(
             else None
         )
         n = 0
-        for pdf in batches:
-            if data is None:
-                os.makedirs(part_dir, exist_ok=True)
-                data_fh = open(os.path.join(part_dir, "data"), "wb")
-                index_fh = open(os.path.join(part_dir, "index"), "wb")
-                data = _SeqWriter(
-                    data_fh, key_class, value_class, f"mapfile-data:{pid}"
-                )
-                index = _SeqWriter(
-                    index_fh, key_class, _LONG_WRITABLE, f"mapfile-index:{pid}"
-                )
-            for k, v in zip(pdf.iloc[:, 0], pdf.iloc[:, 1]):
-                kb = enc_key(k)
-                if n % index_interval == 0:
-                    # record position BEFORE this append (MapFile.Writer:
-                    # position.set(data.getLength()))
-                    index.append(kb, struct.pack(">q", data_fh.tell()))
-                data.append(kb, enc_value(v))
-                if bf is not None:
-                    bf.add(kb)  # raw serialized key bytes, like bloomKey.set
-                n += 1
-        if data_fh is not None:
-            data_fh.close()
-            index_fh.close()
-            if bf is not None:
-                with open(os.path.join(part_dir, "bloom"), "wb") as fh:
-                    fh.write(bf.to_bytes())
-        yield pd.DataFrame({"part": [pid], "n_records": [n]})
-
-    counts = sel.mapInPandas(run, "part int, n_records long").collect()
-    total = sum(r.n_records for r in counts)
-    if total == 0:
-        # header-only empty MapFile, like MapFile.Writer with no appends
-        part_dir = os.path.join(path, "part-00000")
-        os.makedirs(part_dir, exist_ok=True)
-        with open(os.path.join(part_dir, "data"), "wb") as fh:
-            _SeqWriter(fh, key_class, value_class, "mapfile-data:empty")
-        with open(os.path.join(part_dir, "index"), "wb") as fh:
-            _SeqWriter(fh, key_class, _LONG_WRITABLE, "mapfile-index:empty")
-        if bloom:
-            from .bloomfilter import DynamicBloom, vector_size_for
-
-            empty = DynamicBloom(
-                vector_size_for(bloom_num_keys, bloom_error_rate),
-                nr=bloom_num_keys,
+        with open(os.path.join(part, "data"), "wb") as data_fh, open(
+            os.path.join(part, "index"), "wb"
+        ) as index_fh:
+            data = _SeqWriter(data_fh, key_class, value_class, f"mapfile-data:{pid}")
+            index = _SeqWriter(
+                index_fh, key_class, _LONG_WRITABLE, f"mapfile-index:{pid}"
             )
-            with open(os.path.join(part_dir, "bloom"), "wb") as fh:
-                fh.write(empty.to_bytes())
-    return total
+            for pdf in batches:
+                for k, v in zip(pdf.iloc[:, 0], pdf.iloc[:, 1]):
+                    kb = enc_key(k)
+                    if n % index_interval == 0:
+                        # record position BEFORE this append (MapFile.Writer:
+                        # position.set(data.getLength()))
+                        index.append(kb, struct.pack(">q", data_fh.tell()))
+                    data.append(kb, enc_value(v))
+                    if bf is not None:
+                        bf.add(kb)  # raw serialized key bytes, like bloomKey.set
+                    n += 1
+        if bf is not None:
+            with open(os.path.join(part, "bloom"), "wb") as fh:
+                fh.write(bf.to_bytes())
+        return n
+
+    return commit.write_parts(sel, path, encode)
 
 
 def read_map_file(
@@ -393,7 +363,7 @@ def read_set_file(spark: SparkSession, path: str, key_name: str = "key") -> Data
     """Distributed scan of the member keys (data files are ordinary
     SequenceFiles; NullWritable values are dropped)."""
     rdd = spark.sparkContext.sequenceFile(os.path.join(path, "part-*", "data"))
-    return rdd.keys().map(lambda k: (k,)).toDF([key_name])
+    return spark.createDataFrame(rdd.keys().map(lambda k: (k,)), [key_name])
 
 
 def write_array_file(

@@ -22,11 +22,14 @@ markers every SYNC_INTERVAL bytes so files stay splittable) directly from
 pandas batches — no ``df.rdd`` Pyrolite row-at-a-time hop. Correctness is
 pinned by round-tripping through the JVM Hadoop reader in
 tests/test_sources.py. Compressed output still delegates to
-``saveAsSequenceFile`` (the JVM owns the codec implementations).
+``saveAsSequenceFile`` (the JVM owns the codec implementations). Both paths
+stage their parts and publish them through :mod:`.commit`, so a write
+replaces the target's parts only once the job has succeeded.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
 import struct
@@ -34,6 +37,8 @@ import zlib
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+from . import commit
 
 CODECS = {
     "gzip": "org.apache.hadoop.io.compress.GzipCodec",
@@ -237,9 +242,11 @@ def write_sequence_file(
     SequenceFile; Writable classes are inferred from the column types.
 
     Default path: Arrow-batched ``mapInPandas`` writer — each partition
-    serializes its batches straight to ``path/part-NNNNN`` in SequenceFile
-    v6 format (sync markers every SYNC_INTERVAL bytes keep the files
-    splittable for any Hadoop reader). No ``df.rdd``/Pyrolite hop.
+    serializes its batches to ``path/part-NNNNN`` in SequenceFile v6 format
+    (sync markers every SYNC_INTERVAL bytes keep the files splittable for
+    any Hadoop reader). No ``df.rdd``/Pyrolite hop. The write replaces the
+    target's parts through :func:`.commit.write_parts`; a failed job leaves
+    them as they were.
 
     ``value_kind``:
       - ``auto``: Writable from the column dtype (Text/LongWritable/...)
@@ -253,8 +260,11 @@ def write_sequence_file(
     codecs live JVM-side).
     """
     if codec:
-        pairs = df.select(key_col, value_col).rdd.map(tuple)
-        pairs.saveAsSequenceFile(path, compressionCodecClass=CODECS.get(codec, codec))
+        with commit.job(path) as staging:
+            out = os.path.join(staging, "jvm")
+            pairs = df.select(key_col, value_col).rdd.map(tuple)
+            pairs.saveAsSequenceFile(out, compressionCodecClass=CODECS.get(codec, codec))
+            commit.promote(staging, sorted(glob.glob(os.path.join(out, "part-*"))))
         return
 
     dtypes = dict(df.dtypes)
@@ -266,35 +276,17 @@ def write_sequence_file(
     else:
         value_class, enc_value = _WRITABLE_FOR_DTYPE[dtypes[value_col]]
 
-    os.makedirs(path, exist_ok=True)
-    sel = df.select(key_col, value_col)
+    def encode(batches: Iterator["pd.DataFrame"], part: str, pid: int) -> int:
+        n = 0
+        with open(part, "wb") as fh:
+            writer = _SeqWriter(fh, key_class, value_class, f"hadoop_2_7_1_spark:{pid}")
+            for pdf in batches:
+                for k, v in zip(pdf.iloc[:, 0], pdf.iloc[:, 1]):
+                    writer.append(enc_key(k), enc_value(v))
+                    n += 1
+        return n
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        writer, fh, n = None, None, 0
-        for pdf in batches:
-            if writer is None:
-                fh = open(os.path.join(path, f"part-{pid:05d}"), "wb")
-                writer = _SeqWriter(fh, key_class, value_class, f"hadoop_2_7_1_spark:{pid}")
-            keys = pdf.iloc[:, 0]
-            vals = pdf.iloc[:, 1]
-            for k, v in zip(keys, vals):
-                writer.append(enc_key(k), enc_value(v))
-                n += 1
-        if fh is not None:
-            fh.close()
-        yield pd.DataFrame({"part": [pid], "n_records": [n]})
-
-    counts = sel.mapInPandas(run, "part int, n_records long").collect()
-    if not any(r.n_records for r in counts):
-        # Hadoop's SequenceFileOutputFormat emits header-only part files for
-        # empty outputs; match that so readers see a valid (empty) file
-        # rather than an empty directory.
-        with open(os.path.join(path, "part-00000"), "wb") as fh:
-            _SeqWriter(fh, key_class, value_class, "hadoop_2_7_1_spark:empty")
+    commit.write_parts(df.select(key_col, value_col), path, encode)
 
 
 _SPARK_TYPE_FOR_WRITABLE = {
@@ -319,22 +311,21 @@ def read_sequence_file(
     """SequenceFileInputFormat analogue: (key, value) DataFrame with native
     types (Writables auto-converted; MapWritable → dict → MapType).
 
-    Empty files are handled: ``toDF`` cannot infer a schema from zero rows,
+    Empty files are handled: no schema can be inferred from zero rows,
     so the Writable class names are read from the file header and mapped to
     Spark types instead."""
     rdd = spark.sparkContext.sequenceFile(path, minSplits=min_splits)
     try:
-        return rdd.toDF([key_name, value_name])
+        # not rdd.toDF: pyspark binds that to the newest session
+        return spark.createDataFrame(rdd, [key_name, value_name])
     except ValueError:
-        # toDF raises ValueError both for empty RDDs and for undeterminable
-        # types (e.g. NullWritable values). Only the EMPTY case may fall
-        # back to a header-derived schema — anything else must surface.
+        # raised both for empty RDDs and for undeterminable types (e.g.
+        # NullWritable values). Only the EMPTY case may fall back to a
+        # header-derived schema — anything else must surface.
         if not rdd.isEmpty():
             raise
-        import glob as _glob
-
         local = path[5:] if path.startswith("file:") else path
-        parts = sorted(_glob.glob(os.path.join(local, "part-*"))) or [local]
+        parts = sorted(glob.glob(os.path.join(local, "part-*"))) or [local]
         with open(parts[0], "rb") as fh:
             head = fh.read(4096)
         key_class, value_class, _ = _read_seq_header(head)

@@ -5,11 +5,23 @@ TestFixedLengthInputFormat, TestCombineTextInputFormat, streaming XML)."""
 
 from __future__ import annotations
 
+import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
-from hadoop_2_7_1_spark.sources import filters, fixedlen, jdbc, tools, xml
+from hadoop_2_7_1_spark.sources import (
+    avrofile,
+    copybook,
+    filters,
+    fixedlen,
+    jdbc,
+    mapfile,
+    seqfile,
+    tools,
+    xml,
+)
 
 
 def test_fixed_length_binary(spark, tmp_path):
@@ -330,9 +342,10 @@ def test_sequence_file_sync_markers_and_no_rdd(spark, tmp_path):
     assert b"\xff\xff\xff\xff" in blob[100:]
 
     import inspect
-    # default (uncompressed) path starts at os.makedirs; no .rdd after it
+    # default (uncompressed) path starts at the dtype lookup after the codec
+    # branch returns; no .rdd after it
     src = inspect.getsource(seqfile.write_sequence_file)
-    assert ".rdd" not in src.split("os.makedirs", 1)[1]
+    assert ".rdd" not in src.split("dtypes = dict(df.dtypes)", 1)[1]
 
 
 def test_distcp_preserve_attributes(spark, tmp_path):
@@ -892,6 +905,29 @@ def test_python_datasource_seqfile_overwrite_commit(spark, tmp_path):
     assert spark.read.format("pyseqfile").load(out).count() == 10
 
 
+def test_sequence_file_readers_bind_the_callers_session(spark, tmp_path):
+    """read_sequence_file and read_set_file build their frames in the session
+    they are handed, not in the newest one: pyspark re-points RDD.toDF at
+    every SparkSession it constructs, here a newSession() child."""
+    from pyspark.rdd import RDD
+
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    seq, sset = str(tmp_path / "seq"), str(tmp_path / "set")
+    seqfile.write_sequence_file(df, seq, "k", "v")
+    mapfile.write_set_file(df, sset, "k", num_parts=1)
+    to_df = RDD.toDF
+    try:
+        spark.newSession()
+        for back in (
+            seqfile.read_sequence_file(spark, seq),
+            mapfile.read_set_file(spark, sset),
+        ):
+            assert back.sparkSession._jsparkSession.equals(spark._jsparkSession)
+            assert back.count() == 2
+    finally:
+        RDD.toDF = to_df
+
+
 def test_set_file_roundtrip_and_membership(spark, tmp_path):
     """SetFile (IO/SetFile.java:33): sorted keys with zero-byte NullWritable
     values. Stock org.apache.hadoop.io.SetFile.Reader must accept our dirs;
@@ -1402,6 +1438,80 @@ def test_copybook_distributed_write_roundtrip(spark, tmp_path):
         for r in read_copybook_records(spark, root, layout).collect()
     )
     assert got == sorted(rows)
+
+
+_COPYBOOK_KV = [("k", "P", 4), ("v", "X", 3)]
+
+#: function sink -> (write(df, path, parts), read(spark, path) as (k, v) rows)
+_SINKS = {
+    "seq": (
+        lambda df, p, n: seqfile.write_sequence_file(df, p, "k", "v"),
+        lambda spark, p: seqfile.read_sequence_file(spark, p, "k", "v"),
+    ),
+    "seq_deflate": (
+        lambda df, p, n: seqfile.write_sequence_file(df, p, "k", "v", codec="deflate"),
+        lambda spark, p: seqfile.read_sequence_file(spark, p, "k", "v"),
+    ),
+    "mapfile": (
+        lambda df, p, n: mapfile.write_map_file(df, p, "k", "v", num_parts=n),
+        lambda spark, p: mapfile.read_map_file(spark, p, "k", "v"),
+    ),
+    "avro": (
+        lambda df, p, n: avrofile.write_avro(df, p),
+        avrofile.read_avro,
+    ),
+    "copybook": (
+        lambda df, p, n: copybook.write_copybook_distributed(df, p, _COPYBOOK_KV),
+        lambda spark, p: copybook.read_copybook_records(spark, p, _COPYBOOK_KV),
+    ),
+}
+
+
+def _kv_rows(df):
+    return sorted((int(r.k), r.v) for r in df.select("k", "v").collect())
+
+
+def _old_output(spark, path, sink):
+    """100 rows with value 'old', written in 4 parts."""
+    write, _ = _SINKS[sink]
+    old = spark.range(100).repartition(4).selectExpr("id AS k", "'old' AS v")
+    write(old, path, 4)
+
+
+@pytest.mark.parametrize("sink", sorted(_SINKS))
+def test_sink_rewrite_publishes_only_the_new_parts(spark, tmp_path, sink):
+    """A rewrite in fewer parts reads back exactly its own rows: the commit
+    (sources/commit.py) deletes every previous part, so no stale part of the
+    first write survives next to the new one."""
+    write, read = _SINKS[sink]
+    path = str(tmp_path / sink)
+    _old_output(spark, path, sink)
+    new = spark.range(10).repartition(1).selectExpr("id AS k", "'new' AS v")
+    write(new, path, 1)
+    assert _kv_rows(read(spark, path)) == [(i, "new") for i in range(10)]
+    if sink == "mapfile":
+        assert mapfile.map_file_lookup(path, 5) == "new"
+        assert mapfile.map_file_lookup(path, 50) is None  # only the first write had it
+    assert glob.glob(os.path.join(path, "_temporary-*")) == []
+
+
+@pytest.mark.parametrize("sink", sorted(_SINKS))
+def test_sink_failed_rewrite_leaves_the_old_output(spark, tmp_path, sink):
+    """A rewrite whose job fails in one task publishes nothing: the first
+    output reads back unchanged and the failed job's staging dir is gone."""
+    write, read = _SINKS[sink]
+    path = str(tmp_path / sink)
+    _old_output(spark, path, sink)
+    bad = spark.range(100).repartition(4).select(
+        F.col("id").alias("k"),
+        F.when(F.col("id") == 57, F.raise_error(F.lit("row 57 fails")))
+        .otherwise(F.lit("new"))
+        .alias("v"),
+    )
+    with pytest.raises(Exception, match="row 57 fails"):
+        write(bad, path, 4)
+    assert _kv_rows(read(spark, path)) == [(i, "old") for i in range(100)]
+    assert glob.glob(os.path.join(path, "_temporary-*")) == []
 
 
 def test_copybook_encoder_rejects_overflow(spark):

@@ -135,3 +135,16 @@ def test_pipe_transform_raw_wire_format(spark, tmp_path):
         (b"\x02k1", b"\x05HELLO"),
         (b"\x02k2", b"\x06WORLDS"),
     ]
+
+
+def test_pipe_transform_typed_encoder_error_fails_the_job(spark):
+    """A value the typed-bytes encoder cannot write fails the job. The
+    encoder runs on the feeder thread; if its error ended only that thread,
+    the child would see end of input, exit 0, and the job would return 0 of
+    20 rows without an error."""
+    import pytest
+
+    df = spark.range(20).selectExpr("id AS k", "CAST(id AS DECIMAL(10,1)) AS v")
+    out = tb.pipe_transform_typed(df, ["cat"], output_schema="key bigint, value string")
+    with pytest.raises(Exception, match="typed bytes cannot encode Decimal"):
+        out.collect()

@@ -229,9 +229,11 @@ class MultiSink:
         return self
 
     def run(self) -> dict[str, str]:
-        out = {}
-        for name, part, path, fmt in self._sinks:
-            part.write.mode("overwrite").format(fmt).save(path)
-            out[name] = path
-        self._df.unpersist()
-        return out
+        """Write every sink, then release the cached source (also when a
+        write raises)."""
+        try:
+            for _, part, path, fmt in self._sinks:
+                part.write.mode("overwrite").format(fmt).save(path)
+        finally:
+            self._df.unpersist()
+        return {name: path for name, _, path, _ in self._sinks}

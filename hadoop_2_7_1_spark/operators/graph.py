@@ -1,6 +1,11 @@
 """Iterative graph analytics over DataFrames (beyond-reference addition,
 complementing dedup.connected_components).
 
+Edge contract: every operator here takes its graph as a DataFrame with
+columns ``src`` and ``dst`` (one row per directed edge; ``sssp`` also
+reads an integer weight column ``w``). Callers rename their columns into
+that shape before the call; other columns are ignored.
+
 PageRank with a fixed iteration count: per iteration, every node ships
 rank/out_degree along its out-edges and the destination sums arrivals —
 two keyed shuffles per round, the textbook distributed shape. The rounds
@@ -64,11 +69,7 @@ def _rebind(session: SparkSession, df: DataFrame) -> DataFrame:
 
 
 def pagerank(
-    edges: DataFrame,
-    iterations: int = 3,
-    damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
+    edges: DataFrame, iterations: int = 3, damping: float = 0.85
 ) -> DataFrame:
     """Ranks after ``iterations`` synchronous PageRank rounds.
 
@@ -79,16 +80,35 @@ def pagerank(
     with every node a seed: start mass 1/n and teleport (1-d)/n are the
     same doubles. Output: (node, rank_pr).
     """
-    return personalized_pagerank(
-        edges, "true", iterations, damping, src_col, dst_col
-    ).withColumnRenamed("rank_ppr", "rank_pr")
+    return personalized_pagerank(edges, "true", iterations, damping).withColumnRenamed(
+        "rank_ppr", "rank_pr"
+    )
 
 
-def triangle_count(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
-    """Global triangle count over an undirected graph, given as a directed
-    edge list (both directions or either; self-loops dropped).
+def _undirected(edges: DataFrame) -> DataFrame:
+    """Each edge of a directed edge list once as (a, b) with a < b
+    (self-loops dropped, either or both directions accepted): the
+    undirected view :func:`triangle_count`, :func:`clustering_coefficients`
+    and :func:`assortativity` share."""
+    return (
+        edges.filter(F.col("src") != F.col("dst"))
+        .select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
+        .distinct()
+    )
+
+
+def _degrees(und: DataFrame) -> DataFrame:
+    """(v, deg) over the undirected edges of :func:`_undirected`."""
+    return (
+        und.select(F.col("a").alias("v"))
+        .union(und.select(F.col("b").alias("v")))
+        .groupBy("v")
+        .agg(F.count("*").cast("bigint").alias("deg"))
+    )
+
+
+def _triangles(und: DataFrame, deg: DataFrame) -> DataFrame:
+    """Every triangle of ``und`` exactly once, as (x, y, pivot).
 
     Classic two-join shape with *degree orientation* (Cohen's MapReduce
     algorithm / Suri-Vassilvitskii): canonicalize each edge to point from
@@ -96,21 +116,10 @@ def triangle_count(
     enumerated exactly once at its lowest-degree vertex. This caps per-key
     wedge fan-out at O(sqrt(|E|)) even on power-law graphs — the skew
     guard that makes the self-join survive at scale; orienting by id alone
-    would square the hub degree. Output: one row
-    (n_nodes, n_edges, n_triangles).
+    would square the hub degree. The oriented frame feeds both wedge sides
+    and the closing-edge probe, so a lazy checkpoint stops each reference
+    from re-deriving it.
     """
-    und = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .union(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("deg"))
-    )
     # Orient a->b iff (deg(a), a) < (deg(b), b); total order, so exactly one
     # direction per edge survives.
     da = deg.select(F.col("v").alias("a"), F.col("deg").alias("deg_a"))
@@ -136,9 +145,18 @@ def triangle_count(
     closing = oriented.select(
         F.least("lo", "hi").alias("x"), F.greatest("lo", "hi").alias("y")
     )
-    n_tri = wedges.join(closing, ["x", "y"]).agg(
-        F.count("*").cast("bigint").alias("n_triangles")
-    )
+    return wedges.join(closing, ["x", "y"])
+
+
+def triangle_count(edges: DataFrame) -> DataFrame:
+    """Global triangle count over an undirected graph, given as a directed
+    edge list (both directions or either; self-loops dropped), by the
+    degree-oriented wedge enumeration of :func:`_triangles`. Output: one
+    row (n_nodes, n_edges, n_triangles).
+    """
+    und = _undirected(edges)
+    deg = _degrees(und)
+    n_tri = _triangles(und, deg).agg(F.count("*").cast("bigint").alias("n_triangles"))
     n_nodes = deg.agg(F.count("*").cast("bigint").alias("n_nodes"))
     n_edges = und.agg(F.count("*").cast("bigint").alias("n_edges"))
     # Three single-row aggregates; the cross joins are broadcast nested
@@ -204,13 +222,7 @@ def oracle_pagerank(
     return sql
 
 
-def kcore(
-    edges: DataFrame,
-    k: int = 2,
-    rounds: int = 5,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def kcore(edges: DataFrame, k: int = 2, rounds: int = 5) -> DataFrame:
     """Degrees of the subgraph left after ``rounds`` synchronous k-core
     peeling steps: each step drops every vertex whose current degree is
     below ``k`` (and its incident edges), simultaneously.
@@ -228,7 +240,7 @@ def kcore(
     Output: (node, deg) over the surviving subgraph.
     """
     alive = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
         .localCheckpoint()
@@ -271,10 +283,7 @@ def oracle_kcore(edges_sql: str, k: int = 2, rounds: int = 5) -> str:
     return sql
 
 
-def bfs_hops(
-    edges: DataFrame, source: str, max_hops: int = 4,
-    src_col: str = "src", dst_col: str = "dst",
-) -> DataFrame:
+def bfs_hops(edges: DataFrame, source: str, max_hops: int = 4) -> DataFrame:
     """Breadth-first hop distances from ``source``, fixed ``max_hops``
     synchronous rounds (engine-replayable like pagerank — no data-dependent
     convergence test).
@@ -285,9 +294,7 @@ def bfs_hops(
     nodes; at diameter <= max_hops they are equivalent), and lineage stays
     ``max_hops`` stages deep — short enough to skip checkpointing.
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
+    e = edges.select("src", "dst").distinct()
     dist = e.sparkSession.createDataFrame([(source, 0)], "node string, hop int")
     for k in range(max_hops):
         frontier = dist.filter(F.col("hop") == k).select(F.col("node").alias("src"))
@@ -323,14 +330,7 @@ def oracle_bfs_hops(edges_sql: str, source: str, max_hops: int = 4) -> str:
     return "\n".join(parts)
 
 
-def sssp(
-    edges: DataFrame,
-    source: str,
-    rounds: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str = "w",
-) -> DataFrame:
+def sssp(edges: DataFrame, source: str, rounds: int = 4) -> DataFrame:
     """Single-source shortest paths, ``rounds`` synchronous Bellman-Ford
     relaxations over a weighted edge list (weights kept as BIGINT so every
     min-fold is exact — no float tie ambiguity anywhere).
@@ -346,11 +346,7 @@ def sssp(
     Output: (node, dist) for nodes reachable within ``rounds`` hops.
     """
     e = (
-        edges.select(
-            F.col(src_col).alias("src"),
-            F.col(dst_col).alias("dst"),
-            F.col(weight_col).cast("bigint").alias("w"),
-        )
+        edges.select("src", "dst", F.col("w").cast("bigint").alias("w"))
         .groupBy("src", "dst")
         .agg(F.min("w").alias("w"))
     )
@@ -367,120 +363,7 @@ def sssp(
     return dist.select("node", F.col("dist").cast("bigint").alias("dist"))
 
 
-def bfs_hops_converged(
-    edges: DataFrame,
-    source: str,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    checkpoint_every: int = 3,
-    max_rounds: int = 10_000,
-) -> DataFrame:
-    """Frontier-delta BFS to convergence: loop until the frontier empties
-    instead of a fixed round count — the production form for graphs whose
-    diameter is unknown (:func:`bfs_hops` stays the engine-replayable
-    oracle query; the two agree whenever ``max_hops`` >= diameter).
-
-    Each round joins only the NEWLY discovered frontier against the edges
-    (settled nodes do no work), and every ``checkpoint_every`` rounds the
-    distance table is ``localCheckpoint``-ed so lineage stays shallow on
-    deep graphs. The per-round driver scalar is one count() of the frontier
-    — metadata-scale."""
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
-    e.persist()
-    try:
-        spark = edges.sparkSession
-        dist = spark.createDataFrame([(source, 0)], "node string, hop int")
-        frontier = dist.select(F.col("node").alias("src"))
-        hop = 0
-        while hop < max_rounds:
-            hop += 1
-            arrivals = frontier.join(e, "src").select(F.col("dst").alias("node")).distinct()
-            new_nodes = arrivals.join(dist, "node", "left_anti").withColumn(
-                "hop", F.lit(hop)
-            )
-            if hop % checkpoint_every == 0:
-                new_nodes = new_nodes.localCheckpoint(eager=True)
-            if new_nodes.isEmpty():
-                break
-            dist = dist.unionByName(new_nodes)
-            if hop % checkpoint_every == 0:
-                dist = dist.localCheckpoint(eager=True)
-            frontier = new_nodes.select(F.col("node").alias("src"))
-        return dist.select("node", F.col("hop").cast("bigint").alias("hop"))
-    finally:
-        e.unpersist()
-
-
-def sssp_converged(
-    edges: DataFrame,
-    source: str,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    weight_col: str = "w",
-    checkpoint_every: int = 3,
-    max_rounds: int = 10_000,
-) -> DataFrame:
-    """Delta-frontier Bellman-Ford to convergence: relax only nodes whose
-    distance improved last round, stop when no distance improves — the
-    production form whose fixed-round sibling :func:`sssp` is the oracle
-    query (they agree once the round count covers the shortest-path hop
-    depth; pytest pins that equality).
-
-    BIGINT distances keep every min-fold exact. Lineage is truncated with
-    ``localCheckpoint`` every ``checkpoint_every`` rounds; the only
-    driver-side scalar per round is ``isEmpty()`` on the improved set."""
-    e = (
-        edges.select(
-            F.col(src_col).alias("src"),
-            F.col(dst_col).alias("dst"),
-            F.col(weight_col).cast("bigint").alias("w"),
-        )
-        .groupBy("src", "dst")
-        .agg(F.min("w").alias("w"))
-    )
-    e.persist()
-    try:
-        spark = edges.sparkSession
-        dist = spark.createDataFrame([(source, 0)], "node string, dist bigint")
-        improved = dist
-        rnd = 0
-        while rnd < max_rounds:
-            rnd += 1
-            arrivals = (
-                improved.withColumnRenamed("node", "src")
-                .join(e, "src")
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.min(F.col("dist") + F.col("w")).alias("cand"))
-            )
-            joined = dist.join(arrivals, "node", "full")
-            improved = joined.filter(
-                F.col("dist").isNull() | (F.col("cand") < F.col("dist"))
-            ).select("node", F.col("cand").alias("dist"))
-            dist = joined.select(
-                "node",
-                F.least(
-                    F.coalesce("dist", F.col("cand")),
-                    F.coalesce("cand", F.col("dist")),
-                ).alias("dist"),
-            )
-            if rnd % checkpoint_every == 0:
-                improved = improved.localCheckpoint(eager=True)
-                dist = dist.localCheckpoint(eager=True)
-            if improved.isEmpty():
-                break
-        return dist.select("node", F.col("dist").cast("bigint").alias("dist"))
-    finally:
-        e.unpersist()
-
-
-def label_propagation(
-    edges: DataFrame,
-    rounds: int = 3,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et al.),
     made deterministic: every node starts labeled with its own id; each
     round it adopts the MOST FREQUENT label among its neighbors, ties
@@ -491,9 +374,7 @@ def label_propagation(
     (node, label) count + per-node top-1 — all keyed shuffles, never
     all-pairs; per-node fan-in is its degree. Returns (node, label).
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
+    e = edges.select("src", "dst").distinct()
     labels = (
         e.select(F.col("src").alias("node"))
         .distinct()
@@ -576,12 +457,7 @@ def oracle_sssp(edges_sql: str, source: str, rounds: int = 4) -> str:
     return "\n".join(parts)
 
 
-def modularity(
-    edges: DataFrame,
-    labels: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
     """Per-community Newman modularity contributions over a directed
     doubled edge list (every undirected edge present in both directions —
     the convention all grf_* queries use): with m = |directed edges|,
@@ -596,9 +472,7 @@ def modularity(
     double ops, rounded to 6 dp. Output:
     (community, n_members, in_edges, deg_sum, q_contrib).
     """
-    e = edges.select(
-        F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
-    ).distinct()
+    e = edges.select("src", "dst").distinct()
     m_row = e.agg(F.count("*").cast("bigint").alias("m"))
     lab = labels.select(F.col("node"), F.col("label"))
     within = (
@@ -667,12 +541,7 @@ def oracle_modularity(edges_sql: str, labels_sql: str) -> str:
     """
 
 
-def hits(
-    edges: DataFrame,
-    iterations: int = 2,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def hits(edges: DataFrame, iterations: int = 2) -> DataFrame:
     """HITS (Kleinberg hubs-and-authorities) after ``iterations``
     synchronous rounds over a directed edge list — the link-analysis
     sibling of :func:`pagerank`, natural on bipartite graphs where the
@@ -699,8 +568,7 @@ def hits(
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
-    e = e.localCheckpoint()
+    e = edges.select("src", "dst").distinct().localCheckpoint()
     nodes = e.select(F.col("src").alias("node")).distinct()
     n_row = nodes.agg(F.count("*").alias("__n"))
     hub = nodes.crossJoin(F.broadcast(n_row)).select(
@@ -797,8 +665,6 @@ def personalized_pagerank(
     seed_pred: str,
     iterations: int = 3,
     damping: float = 0.85,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
     """Personalized PageRank: random walk with restart into a SEED SET
     instead of the uniform vector — "importance as seen from these nodes",
@@ -815,8 +681,7 @@ def personalized_pagerank(
     scalar. Output: (node, rank_ppr).
     """
     parent = edges.sparkSession
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
-    e = e.localCheckpoint()
+    e = edges.select("src", "dst").distinct().localCheckpoint()
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -934,12 +799,7 @@ def oracle_personalized_pagerank(
     return sql
 
 
-def random_walks(
-    edges: DataFrame,
-    walk_len: int = 6,
-    src_col: str = "src",
-    dst_col: str = "dst",
-) -> DataFrame:
+def random_walks(edges: DataFrame, walk_len: int = 6) -> DataFrame:
     """Deterministic 'random' walks — the DeepWalk/node2vec corpus
     generator (Perozzi et al., KDD 2014), with the RNG replaced by the
     engine's content-stable hash so the SAME walks come out of any run,
@@ -954,7 +814,7 @@ def random_walks(
     the frontier row). Output: (walk_id, seq) where seq is the
     space-joined node sequence — feed straight to a skip-gram pipeline.
     """
-    e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst")).distinct()
+    e = edges.select("src", "dst").distinct()
     w = Window.partitionBy("src").orderBy("dst")
     adj = (
         e.withColumn("rnk", F.row_number().over(w) - 1)
@@ -1011,9 +871,7 @@ def oracle_random_walks(edges_sql: str, walk_len: int = 6) -> str:
     return sql
 
 
-def assortativity(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
+def assortativity(edges: DataFrame) -> DataFrame:
     """Degree assortativity coefficient (Newman 2002): the Pearson
     correlation of endpoint degrees over undirected edges — positive =
     hubs link hubs (social nets), negative = hub-and-spoke
@@ -1026,24 +884,11 @@ def assortativity(
     evt_trend_ols recipe. Two degree joins + one single-row aggregate.
     Output: (n_edges, n_nodes, r_assort).
     """
-    # und feeds the degree build AND the orientation join; deg feeds the
-    # orientation (twice) AND later folds; oriented feeds both wedge sides
-    # AND the closing-edge probe. Lazy checkpoints stop each from
-    # re-deriving its upstream once per reference.
-    und = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .union(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").cast("bigint").alias("deg"))
-        .localCheckpoint(eager=False)
-    )
+    # und feeds the degree build and several joins, deg several joins and
+    # the final fold; lazy checkpoints stop each reference from
+    # re-deriving its upstream.
+    und = _undirected(edges).localCheckpoint(eager=False)
+    deg = _degrees(und).localCheckpoint(eager=False)
     da = deg.select(F.col("v").alias("a"), F.col("deg").alias("dx"))
     db = deg.select(F.col("v").alias("b"), F.col("deg").alias("dy"))
     # both orientations so the correlation is symmetric (standard form)
@@ -1112,9 +957,7 @@ def oracle_assortativity(edges_sql: str) -> str:
     """
 
 
-def clustering_coefficients(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
+def clustering_coefficients(edges: DataFrame) -> DataFrame:
     """Local clustering coefficient histogram: per node with degree ≥ 2,
     cc(v) = triangles(v) / (deg(v)·(deg(v)−1)/2), bucketed by the EXACT
     integer floor(cc·10) — never a float-boundary bin. The community-
@@ -1126,48 +969,12 @@ def clustering_coefficients(
     count, and zero-triangle nodes survive via a left join against the
     degree frame. Output: (cc_bucket, n_nodes) — cc_bucket 0..10.
     """
-    # und feeds the degree build AND the orientation join; deg feeds the
-    # orientation (twice) AND later folds; oriented feeds both wedge sides
-    # AND the closing-edge probe. Lazy checkpoints stop each from
-    # re-deriving its upstream once per reference.
-    und = (
-        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        und.select(F.col("a").alias("v"))
-        .union(und.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").cast("bigint").alias("deg"))
-        .localCheckpoint(eager=False)
-    )
-    da = deg.select(F.col("v").alias("a"), F.col("deg").alias("deg_a"))
-    db = deg.select(F.col("v").alias("b"), F.col("deg").alias("deg_b"))
-    oriented = (
-        und.join(da, "a")
-        .join(db, "b")
-        .select(
-            F.when(
-                (F.col("deg_a") < F.col("deg_b"))
-                | ((F.col("deg_a") == F.col("deg_b")) & (F.col("a") < F.col("b"))),
-                F.struct(F.col("a").alias("lo"), F.col("b").alias("hi")),
-            )
-            .otherwise(F.struct(F.col("b").alias("lo"), F.col("a").alias("hi")))
-            .alias("e")
-        )
-        .select("e.lo", "e.hi")
-        .localCheckpoint(eager=False)
-    )
-    w1 = oriented.select(F.col("lo").alias("pivot"), F.col("hi").alias("x"))
-    w2 = oriented.select(F.col("lo").alias("pivot"), F.col("hi").alias("y"))
-    wedges = w1.join(w2, "pivot").filter(F.col("x") < F.col("y"))
-    closing = oriented.select(
-        F.least("lo", "hi").alias("x"), F.greatest("lo", "hi").alias("y")
-    )
-    tri = wedges.join(closing, ["x", "y"])
+    # und feeds the degree build and several joins, deg several joins and
+    # the final fold; lazy checkpoints stop each reference from
+    # re-deriving its upstream.
+    und = _undirected(edges).localCheckpoint(eager=False)
+    deg = _degrees(und).localCheckpoint(eager=False)
+    tri = _triangles(und, deg)
     tri_v = tri.select(
         F.explode(F.array(F.col("pivot"), F.col("x"), F.col("y"))).alias("v")
     )
@@ -1217,12 +1024,7 @@ def oracle_clustering_coefficients(edges_sql: str) -> str:
     """
 
 
-def identity_stitch(
-    events: DataFrame,
-    user_col: str = "user_id",
-    device_expr: str = "cast(get_json_object(props, '$.k') as int)",
-    min_support: int = 4,
-) -> DataFrame:
+def identity_stitch(events: DataFrame, min_support: int = 4) -> DataFrame:
     """Cross-device identity resolution: users sharing a device signal
     (here the ``props.k`` cookie stand-in) are stitched into one entity
     via connected components over the user<->device bipartite graph —
@@ -1233,11 +1035,11 @@ def identity_stitch(
     Edges are (user, device) pairs seen >= min_support times (rare
     co-occurrence thinning — below it, shared NATs/devices glue
     everything into one giant component). Events with no device signal
-    (NULL ``device_expr``) are dropped EXPLICITLY before edge building
-    — the no-device case must not rely on engine NULL-join behavior. Device nodes are encoded as
-    -(device+1), collision-free against nonnegative user ids, so the
-    min-label component id needs no node-type column through the
-    propagation. Reuses :func:`..dedup.connected_components`
+    (NULL ``props.k``) are dropped EXPLICITLY before edge building — the
+    no-device case must not rely on engine NULL-join behavior. Device
+    nodes are encoded as -(device+1), collision-free against nonnegative
+    user ids, so the min-label component id needs no node-type column
+    through the propagation. Reuses :func:`..dedup.connected_components`
     (min-label propagation, localCheckpoint-truncated rounds).
 
     Shape at 100 TB: ONE keyed aggregate for edge support, then
@@ -1250,8 +1052,8 @@ def identity_stitch(
 
     pairs = (
         events.select(
-            F.col(user_col).cast("bigint").alias("u"),
-            F.expr(device_expr).cast("bigint").alias("dev"),
+            F.col("user_id").cast("bigint").alias("u"),
+            F.expr("cast(get_json_object(props, '$.k') as int)").cast("bigint").alias("dev"),
         )
         .filter(F.col("dev").isNotNull())
         .groupBy("u", "dev")
@@ -1265,7 +1067,7 @@ def identity_stitch(
         F.count("*").cast("bigint").alias("n_users")
     )
     return users.join(sizes, "component").select(
-        F.col("node").cast("bigint").alias(user_col),
+        F.col("node").cast("bigint").alias("user_id"),
         F.col("component").cast("bigint").alias("entity_id"),
         "n_users",
     )
@@ -1300,11 +1102,7 @@ def oracle_identity_stitch(
 
 
 def betweenness_sampled(
-    edges: DataFrame,
-    sources: list[str],
-    depth: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
+    edges: DataFrame, sources: list[str], depth: int = 4
 ) -> DataFrame:
     """Sampled, depth-bounded betweenness centrality (Brandes 2001 with
     pivot sources): run the forward BFS/path-count pass and the backward
@@ -1349,7 +1147,7 @@ def betweenness_sampled(
     bc > 0, quantized to 1e-6 (scaled-bigint total / 1e6).
     """
     n = len(sources)
-    sig, e = _brandes_forward(edges, sources, depth, src_col, dst_col)
+    sig, e = _brandes_forward(edges, sources, depth)
     dag = _brandes_dag(sig, e, n)
     delta = {depth: None}  # sparse: None == all-zero
     for l in range(depth - 1, -1, -1):
@@ -1398,13 +1196,7 @@ def betweenness_sampled(
     )
 
 
-def _brandes_forward(
-    edges: DataFrame,
-    sources: list[str],
-    depth: int,
-    src_col: str,
-    dst_col: str,
-):
+def _brandes_forward(edges: DataFrame, sources: list[str], depth: int):
     """Shared forward pass of the sampled Brandes variants: per-length
     WALK counts from all pivots AT ONCE, with the pivot dimension held
     as COLUMNS (sig_0..sig_{n-1}) rather than rows — every join and
@@ -1436,7 +1228,7 @@ def _brandes_forward(
     # big side's exchange and sort entirely (the r6 profile's forward
     # cost was 4x re-exchange+re-sort of this frame)
     e = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+        edges.select("src", "dst")
         .distinct()
         .repartition("src")
         .sortWithinPartitions("src")
@@ -1644,11 +1436,7 @@ def oracle_betweenness_sampled(
 
 
 def edge_betweenness_sampled(
-    edges: DataFrame,
-    sources: list[str],
-    depth: int = 4,
-    src_col: str = "src",
-    dst_col: str = "dst",
+    edges: DataFrame, sources: list[str], depth: int = 4
 ) -> DataFrame:
     """Edge betweenness (the Girvan-Newman 2002 quantity — communities
     fall out by iteratively cutting the highest-betweenness edges), same
@@ -1670,7 +1458,7 @@ def edge_betweenness_sampled(
     and the final edge fold), same sparse deltas.
     """
     n = len(sources)
-    sig, e = _brandes_forward(edges, sources, depth, src_col, dst_col)
+    sig, e = _brandes_forward(edges, sources, depth)
     dag = _brandes_dag(sig, e, n)
     delta = {depth: None}
     edge_parts = []

@@ -280,98 +280,20 @@ def exactly_once_sink(stream_df: DataFrame, path: str, checkpoint: str):
     )
 
 
-def _dedup_schemas():
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
-    )
-
-    out_schema = StructType([
-        StructField("fp", StringType()),
-        StructField("keep_id", LongType()),
-        StructField("n_seen", LongType()),
-    ])
-    state_schema = StructType([
-        StructField("keep_id", LongType()),
-        StructField("n", LongType()),
-    ])
-    return out_schema, state_schema
-
-
-def make_dedup_counter():
-    """The v2 stateful processor behind :func:`dedup_count_stream`,
-    exposed at module level so its state-transition semantics are unit
-    testable WITHOUT the transformWithStateInPandas runtime (which needs
-    a protobuf-equipped Python worker — present on standard Spark
-    distributions, absent in this test container; the runtime-level
-    parity of the same semantics is covered end-to-end by the v1 twin
-    :func:`dedup_count_stream_v1`)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle,
-    )
-
-    out_schema, state_schema = _dedup_schemas()
-
-    class DedupCounter(StatefulProcessor):
-        def init(self, handle: "StatefulProcessorHandle") -> None:
-            self._state = handle.getValueState("seen", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            import pandas as pd
-
-            keep_id, n = (self._state.get() or (None, 0))
-            for pdf in rows:
-                ids = pdf["event_id"].astype("int64")
-                batch_min = int(ids.min())
-                keep_id = batch_min if keep_id is None else min(keep_id, batch_min)
-                n += len(pdf)
-            self._state.update((keep_id, n))
-            yield pd.DataFrame({"fp": [key[0]], "keep_id": [keep_id], "n_seen": [n]})
-
-        def close(self) -> None:
-            pass
-
-    return DedupCounter()
-
-
 def dedup_count_stream(events: DataFrame, key_col: str = "props") -> DataFrame:
-    """First-seen filter + duplicate counter on the arbitrary-stateful v2
-    API (transformWithStateInPandas): one ValueState cell per content hash
-    holding (first_event_id, n_seen); each update emits the key's current
-    standing, so downstream sees both the keeper and the live dup count.
+    """First-seen filter + duplicate counter on applyInPandasWithState:
+    one GroupState cell per content hash holding (first_event_id, n_seen);
+    each update emits the key's current standing, so downstream sees both
+    the keeper and the live dup count.
 
     This is the streaming twin of the batch exact-dedup groups
-    (operators/dedup.py exact_dup_groups). State is 16 bytes + two longs
-    per distinct content hash, partitioned by the state store; at
-    production scale a TTL config (state store cleanup) bounds it to the
-    dedup horizon. The content hash — not the blob — is the shuffle key.
-
-    Requires a protobuf-equipped Python environment (standard Spark
-    distributions ship one); in stripped containers use the semantically
-    identical :func:`dedup_count_stream_v1`.
-    """
-    out_schema, _ = _dedup_schemas()
-    hashed = events.select(
-        F.md5(F.col(key_col)).alias("fp"),
-        F.col("event_id").cast("bigint").alias("event_id"),
-    )
-    return hashed.groupBy("fp").transformWithStateInPandas(
-        make_dedup_counter(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def dedup_count_stream_v1(events: DataFrame, key_col: str = "props") -> DataFrame:
-    """v1 twin of :func:`dedup_count_stream` on applyInPandasWithState:
-    identical state transition (min event_id as keeper, running dup
-    count) and identical update-mode output, expressed through the
-    GroupState API that needs no separate protobuf worker. Same 100 TB
-    shape: state is two longs per distinct content hash, the hash is the
-    shuffle key, TTL/state-store cleanup bounds the horizon."""
+    (operators/dedup.py exact_dup_groups). State is two longs per
+    distinct content hash, partitioned by the state store; at production
+    scale a TTL config (state store cleanup) bounds it to the dedup
+    horizon. The content hash — not the blob — is the shuffle key. The
+    GroupState API needs no protobuf in the Python worker, unlike
+    transformWithStateInPandas."""
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema, state_schema = _dedup_schemas()
 
     def update(key, pdfs, state: "GroupState"):
         import pandas as pd
@@ -391,8 +313,8 @@ def dedup_count_stream_v1(events: DataFrame, key_col: str = "props") -> DataFram
     )
     return hashed.groupBy("fp").applyInPandasWithState(
         update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
+        outputStructType="fp string, keep_id bigint, n_seen bigint",
+        stateStructType="keep_id bigint, n bigint",
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -1601,8 +1601,11 @@ def test_train_linear_filter_deterministic(spark):
 
 def test_sssp_hand_checked(spark):
     """Bellman-Ford on a hand-built weighted graph: A->B=5, A->C=2,
-    C->B=1, B->D=1 — shortest A->B is 3 (via C), A->D is 4."""
-    from hadoop_2_7_1_spark.operators.graph import sssp
+    C->B=1, B->D=1 — shortest A->B is 3 (via C), A->D is 4. A second,
+    cyclic graph (chain A->B->...->G of weight 2 plus A->D=9, D->A=1,
+    C->F=1 and the self-loop G->G=5) checks sssp and bfs_hops against
+    hand-computed distances."""
+    from hadoop_2_7_1_spark.operators.graph import bfs_hops, sssp
 
     edges = spark.createDataFrame(
         [("A", "B", 5), ("A", "C", 2), ("C", "B", 1), ("B", "D", 1),
@@ -1612,39 +1615,16 @@ def test_sssp_hand_checked(spark):
     out = {r.node: r.dist for r in sssp(edges, "A", rounds=4).collect()}
     assert out == {"A": 0, "B": 3, "C": 2, "D": 4}
 
-
-def test_converged_graph_equals_unrolled(spark):
-    """The while-loop+localCheckpoint production forms converge to the same
-    result as the fixed-round oracle forms once the round count covers the
-    graph: sssp_converged == sssp(rounds>=depth), bfs_hops_converged ==
-    bfs_hops(max_hops>=diameter) — including on a graph with a cycle and a
-    long chain that forces several checkpoint rounds."""
-    from hadoop_2_7_1_spark.operators.graph import (
-        bfs_hops,
-        bfs_hops_converged,
-        sssp,
-        sssp_converged,
-    )
-
-    # chain A->B->C->D->E->F->G plus shortcuts and a cycle back to A
     chain = [(chr(65 + i), chr(66 + i), 2) for i in range(6)]
-    edges = spark.createDataFrame(
+    cyclic = spark.createDataFrame(
         chain + [("A", "D", 9), ("D", "A", 1), ("C", "F", 1), ("G", "G", 5)],
         "src string, dst string, w long",
     )
-    unrolled = {r.node: r.dist for r in sssp(edges, "A", rounds=8).collect()}
-    converged = {
-        r.node: r.dist
-        for r in sssp_converged(edges, "A", checkpoint_every=2).collect()
-    }
-    assert converged == unrolled
-    assert converged["G"] == 7  # A->B(2)->C(2)->F(1)->G(2)
-    bfs_fixed = {r.node: r.hop for r in bfs_hops(edges, "A", max_hops=8).collect()}
-    bfs_conv = {
-        r.node: r.hop
-        for r in bfs_hops_converged(edges, "A", checkpoint_every=2).collect()
-    }
-    assert bfs_conv == bfs_fixed
+    dist = {r.node: r.dist for r in sssp(cyclic, "A", rounds=8).collect()}
+    # D: A->B->C->D (6) beats A->D (9); F: A->B->C->F (5) beats the chain
+    assert dist == {"A": 0, "B": 2, "C": 4, "D": 6, "E": 8, "F": 5, "G": 7}
+    hops = {r.node: r.hop for r in bfs_hops(cyclic, "A", max_hops=8).collect()}
+    assert hops == {"A": 0, "B": 1, "D": 1, "C": 2, "E": 2, "F": 3, "G": 4}
 
 
 def test_gap_fill_interpolate_hand_checked(spark):

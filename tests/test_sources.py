@@ -1544,3 +1544,44 @@ def test_copybook_reader_stays_in_jvm(spark, tmp_path):
     )
     for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert node not in plan
+
+
+def test_multisink_writes_named_sinks_and_releases_the_source(spark, tmp_path):
+    """MultiSink fans one cached frame out to filtered named sinks; after
+    run() the cached source is released, also when one sink fails (here
+    the second sink names a format no data source provides, after the
+    first sink has materialized the cache)."""
+    from hadoop_2_7_1_spark.io import MultiSink
+
+    jsc = spark.sparkContext._jsc
+    df = spark.range(100)
+
+    def new_persistent(fn):
+        before = set(jsc.getPersistentRDDs().keys())
+        fn()
+        return set(jsc.getPersistentRDDs().keys()) - before
+
+    out = {}
+    sinks = (
+        MultiSink(df)
+        .add("even", str(tmp_path / "even"), where="id % 2 = 0")
+        .add("top", str(tmp_path / "top"), where="id >= 90", fmt="json")
+    )
+    assert new_persistent(lambda: out.update(sinks.run())) == set()
+    assert out == {"even": str(tmp_path / "even"), "top": str(tmp_path / "top")}
+    even = spark.read.parquet(out["even"])
+    assert sorted(r.id for r in even.collect()) == list(range(0, 100, 2))
+    top = spark.read.json(out["top"])
+    assert sorted(r.id for r in top.collect()) == list(range(90, 100))
+
+    failing = (
+        MultiSink(df)
+        .add("ok", str(tmp_path / "ok"), where="id < 10")
+        .add("bad", str(tmp_path / "bad"), fmt="no_such_format")
+    )
+
+    def run_failing():
+        with pytest.raises(Exception, match="no_such_format"):
+            failing.run()
+
+    assert new_persistent(run_failing) == set()

@@ -190,12 +190,11 @@ def test_stream_static_enrichment(spark):
 
 
 def test_stateful_dedup_v1_matches_batch(spark):
-    """Arbitrary-state streaming dedup (the applyInPandasWithState twin
-    of the v2 operator — identical state transition) must agree with the
-    batch exact-dup grouping on the same finite input."""
+    """Arbitrary-state streaming dedup (applyInPandasWithState) must
+    agree with the batch exact-dup grouping on the same finite input."""
     sdf = streaming.stream_events(spark, SF_DIR)
     out = streaming.run_to_memory(
-        streaming.dedup_count_stream_v1(sdf), "t_twstate", "update"
+        streaming.dedup_count_stream(sdf), "t_twstate", "update"
     ).toPandas()
     # update mode re-emits a key per batch; keep each fp's final standing
     out = (
@@ -213,54 +212,6 @@ def test_stateful_dedup_v1_matches_batch(spark):
         .toPandas()
     )
     assert_frames_match(out, batch, "twstate_dedup_vs_batch")
-
-
-def test_v2_dedup_processor_state_transitions():
-    """The v2 (transformWithStateInPandas) processor's state machine,
-    driven directly: first-seen keeper is the minimum event_id across
-    batches, the dup count accumulates, and each update emits the
-    current standing. The v2 RUNTIME needs a protobuf-equipped worker
-    (standard Spark distributions only); its semantics are pinned here
-    and its runtime behavior by the v1 twin above, so the suite carries
-    no environment skip."""
-    import pandas as pd
-
-    from hadoop_2_7_1_spark.streaming import make_dedup_counter
-
-    class FakeValueState:
-        def __init__(self):
-            self.v = None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-    class FakeHandle:
-        def __init__(self):
-            self.state = FakeValueState()
-
-        def getValueState(self, name, schema):
-            return self.state
-
-    proc = make_dedup_counter()
-    handle = FakeHandle()
-    proc.init(handle)
-
-    out1 = list(proc.handleInputRows(
-        ("abc",), iter([pd.DataFrame({"event_id": [7, 9]})]), None
-    ))[0]
-    assert (out1.fp[0], out1.keep_id[0], out1.n_seen[0]) == ("abc", 7, 2)
-
-    # second micro-batch: earlier id arrives late, count accumulates
-    out2 = list(proc.handleInputRows(
-        ("abc",), iter([pd.DataFrame({"event_id": [3]}),
-                        pd.DataFrame({"event_id": [8, 11]})]), None
-    ))[0]
-    assert (out2.keep_id[0], out2.n_seen[0]) == (3, 5)
-    assert handle.state.v == (3, 5)
-    proc.close()
 
 
 def test_snap_stream_sink_exactly_once(spark, tmp_path):

@@ -23,6 +23,7 @@ from __future__ import annotations
 import os
 import re
 import tempfile
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +42,30 @@ TABLES = (
 )
 
 
+# session -> {table path: (st_size, st_mtime_ns, Dataset.ofRows, analyzed
+# relation, dtypes)}: one live entry per path, so a rewritten file is resolved
+# again. Weak keys, so an entry dies with its session.
+_RESOLVED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _resolve(spark: SparkSession, path: str) -> tuple:
+    """The JVM ``Dataset.ofRows``, the resolved parquet relation at ``path``
+    and its dtypes, looked up once per session and file version: resolving
+    the relation runs a schema-inference job, which dominates building a
+    short query's frame, and the py4j lookup of the JVM class costs a round
+    trip per package name. Two threads that miss at once both resolve;
+    either entry is correct, so no lock."""
+    st = os.stat(path)
+    entries = _RESOLVED.setdefault(spark, {})
+    hit = entries.get(path)
+    if hit is None or hit[:2] != (st.st_size, st.st_mtime_ns):
+        df = spark.read.parquet(path)
+        of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
+        relation = df._jdf.queryExecution().analyzed()
+        hit = entries[path] = (st.st_size, st.st_mtime_ns, of_rows, relation, dict(df.dtypes))
+    return hit[2:]
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one of the driver's parquet tables.
 
@@ -49,16 +74,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``session.RESULT_CONF``, which the session carries); we truncate to
     microseconds exactly like DuckDB's TIMESTAMP_NS → TIMESTAMP cast so both
     engines see identical values.
+
+    The table's relation is resolved once per session (:func:`_resolve`);
+    every call wraps a ``newInstance()`` of it, so each returned frame has
+    fresh attribute ids, exactly like a new read (two loads of one table
+    self-join as two relations). No table contents are cached.
     """
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+    of_rows, relation, dtypes = _resolve(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    df = DataFrame(of_rows(spark._jsparkSession, relation.newInstance()), spark)
+    if name == "events" and dtypes.get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # Depending on environment confs, parquet TIMESTAMP columns may surface as
     # TIMESTAMP_NTZ, which functions like unix_micros() reject. The reference
     # models all times as zone-less long millis (SURVEY §1.2); with the session
     # pinned to UTC the instant semantics are identical, so normalize every
     # ntz column to plain TIMESTAMP at the source.
-    ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
+    ntz_cols = [c for c, t in dtypes.items() if t == "timestamp_ntz"]
     if ntz_cols:
         df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
     return df

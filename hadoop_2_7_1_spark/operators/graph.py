@@ -20,7 +20,7 @@ computation as unrolled CTEs — which is how the oracle checks it.
 from __future__ import annotations
 
 from pyspark import RDD
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
@@ -117,8 +117,9 @@ def _triangles(und: DataFrame, deg: DataFrame) -> DataFrame:
     wedge fan-out at O(sqrt(|E|)) even on power-law graphs — the skew
     guard that makes the self-join survive at scale; orienting by id alone
     would square the hub degree. The oriented frame feeds both wedge sides
-    and the closing-edge probe, so a lazy checkpoint stops each reference
-    from re-deriving it.
+    and the closing-edge probe, so a checkpoint stops each reference from
+    re-deriving it. ``eager=False`` does not make it lazy under AQE: the
+    call runs the frame's shuffle stages and pins a persistent RDD at once.
     """
     # Orient a->b iff (deg(a), a) < (deg(b), b); total order, so exactly one
     # direction per edge survives.
@@ -283,28 +284,44 @@ def oracle_kcore(edges_sql: str, k: int = 2, rounds: int = 5) -> str:
     return sql
 
 
+def _relax(dist: DataFrame, e: DataFrame, on: Column, key: str, arrival: Column) -> DataFrame:
+    """One synchronous min-fold round over ``dist`` (node, ``key``).
+
+    ``dist`` is left-joined to the edges ``e`` (src, dst, ...) on ``on``
+    and each joined row yields its kept (node, ``key``) plus, where an edge
+    matched, its candidate (dst, ``arrival``); the min per node wins. The
+    round reads ``dist`` once, so the plan of a fixed-round chain grows
+    linearly in rounds and needs no checkpoint.
+    """
+    kept = F.struct(F.col("node"), F.col(key))
+    cand = F.when(
+        F.col("src").isNotNull(), F.struct(F.col("dst").alias("node"), arrival.alias(key))
+    )
+    return (
+        dist.join(e, on, "left")
+        .select(F.explode(F.array(kept, cand)).alias("r"))
+        .filter(F.col("r").isNotNull())
+        .groupBy("r.node")
+        .agg(F.min(f"r.{key}").alias(key))
+    )
+
+
 def bfs_hops(edges: DataFrame, source: str, max_hops: int = 4) -> DataFrame:
     """Breadth-first hop distances from ``source``, fixed ``max_hops``
     synchronous rounds (engine-replayable like pagerank — no data-dependent
     convergence test).
 
-    Each round is frontier ⋈ edges → distinct → min-hop fold: all
-    equi-keyed shuffles on the node id, never a cartesian. At 100 TB the
-    round count bounds the work (frontier-delta form would skip settled
-    nodes; at diameter <= max_hops they are equivalent), and lineage stays
-    ``max_hops`` stages deep — short enough to skip checkpointing.
+    Round k joins the nodes at hop k to their out-edges and min-folds the
+    arrivals at hop k + 1 (:func:`_relax`): equi-keyed shuffles on the node
+    id, never a cartesian. At 100 TB the round count bounds the work
+    (frontier-delta form would skip settled nodes; at diameter <= max_hops
+    they are equivalent).
     """
     e = edges.select("src", "dst").distinct()
     dist = e.sparkSession.createDataFrame([(source, 0)], "node string, hop int")
     for k in range(max_hops):
-        frontier = dist.filter(F.col("hop") == k).select(F.col("node").alias("src"))
-        nxt = (
-            frontier.join(e, "src")
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .withColumn("hop", F.lit(k + 1))
-        )
-        dist = dist.unionByName(nxt).groupBy("node").agg(F.min("hop").alias("hop"))
+        on = (F.col("node") == F.col("src")) & (F.col("hop") == k)
+        dist = _relax(dist, e, on, "hop", F.lit(k + 1))
     return dist.select("node", F.col("hop").cast("bigint").alias("hop"))
 
 
@@ -351,15 +368,9 @@ def sssp(edges: DataFrame, source: str, rounds: int = 4) -> DataFrame:
         .agg(F.min("w").alias("w"))
     )
     dist = e.sparkSession.createDataFrame([(source, 0)], "node string, dist bigint")
+    on = F.col("node") == F.col("src")
     for _ in range(rounds):
-        relaxed = (
-            dist.withColumnRenamed("node", "src")
-            .join(e, "src")
-            .select(F.col("dst").alias("node"), (F.col("dist") + F.col("w")).alias("dist"))
-        )
-        dist = (
-            dist.unionByName(relaxed).groupBy("node").agg(F.min("dist").alias("dist"))
-        )
+        dist = _relax(dist, e, on, "dist", F.col("dist") + F.col("w"))
     return dist.select("node", F.col("dist").cast("bigint").alias("dist"))
 
 
@@ -885,8 +896,9 @@ def assortativity(edges: DataFrame) -> DataFrame:
     Output: (n_edges, n_nodes, r_assort).
     """
     # und feeds the degree build and several joins, deg several joins and
-    # the final fold; lazy checkpoints stop each reference from
-    # re-deriving its upstream.
+    # the final fold; checkpoints stop each reference from re-deriving its
+    # upstream. Under AQE each eager=False call still runs its frame's
+    # shuffle stages and pins a persistent RDD when it is made.
     und = _undirected(edges).localCheckpoint(eager=False)
     deg = _degrees(und).localCheckpoint(eager=False)
     da = deg.select(F.col("v").alias("a"), F.col("deg").alias("dx"))
@@ -970,8 +982,9 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
     degree frame. Output: (cc_bucket, n_nodes) — cc_bucket 0..10.
     """
     # und feeds the degree build and several joins, deg several joins and
-    # the final fold; lazy checkpoints stop each reference from
-    # re-deriving its upstream.
+    # the final fold; checkpoints stop each reference from re-deriving its
+    # upstream. Under AQE each eager=False call still runs its frame's
+    # shuffle stages and pins a persistent RDD when it is made.
     und = _undirected(edges).localCheckpoint(eager=False)
     deg = _degrees(und).localCheckpoint(eager=False)
     tri = _triangles(und, deg)
@@ -1140,9 +1153,10 @@ def betweenness_sampled(
     the shortest-path DAG (v→w with dist_w = dist_v + 1) is
     materialized ONCE and every backward round is then just (left-join
     delta, re-aggregate) — 2 exchanges instead of the 5 of a
-    per-round re-derivation. Per-round frames are lazily
-    localCheckpoint-ed (each is referenced by the next round AND a
-    final union). Deltas stay SPARSE (only nodes with a nonzero
+    per-round re-derivation. Per-round frames are localCheckpoint-ed
+    (each is referenced by the next round AND a final union); under AQE
+    ``eager=False`` still runs each one's shuffle stages as the round is
+    built. Deltas stay SPARSE (only nodes with a nonzero
     dependency); use sites coalesce to 0. Output: (node, bc) for
     bc > 0, quantized to 1e-6 (scaled-bigint total / 1e6).
     """
@@ -1215,7 +1229,7 @@ def _brandes_forward(edges: DataFrame, sources: list[str], depth: int):
     so lane dist_i(v)-1 of u is either u's exact lane or empty; a
     NULLed contribution is likewise dropped only from unread lanes).
 
-    Returns (sig, e): sig = one lazily checkpointed frame
+    Returns (sig, e): sig = one checkpointed frame
     (node, dist_0.., sigma_0..) with NULL dist/sigma where pivot i does
     not reach the node within depth; e = the distinct checkpointed edge
     frame."""
@@ -1223,7 +1237,7 @@ def _brandes_forward(edges: DataFrame, sources: list[str], depth: int):
     n = len(sources)
     sigs = [f"sig_{i}" for i in range(n)]
     # every forward round and the DAG build join e on src: partition AND
-    # sort it by src ONCE before the lazy checkpoint — LogicalRDD keeps
+    # sort it by src ONCE before the checkpoint — LogicalRDD keeps
     # the partitioning/ordering, so each round's merge join skips the
     # big side's exchange and sort entirely (the r6 profile's forward
     # cost was 4x re-exchange+re-sort of this frame)
@@ -1453,9 +1467,9 @@ def edge_betweenness_sampled(
     undirected edge appears once per direction that lies on a shortest
     path), quantized to 1e-6. Shares :func:`_brandes_forward` /
     :func:`_brandes_dag` / :func:`_brandes_contribs` with the node
-    variant — same one-shot DAG materialization, lazy per-round
-    checkpoints (each ``pairs`` frame feeds BOTH the next round's delta
-    and the final edge fold), same sparse deltas.
+    variant — same one-shot DAG materialization, per-round checkpoints
+    (each ``pairs`` frame feeds BOTH the next round's delta and the final
+    edge fold), same sparse deltas.
     """
     n = len(sources)
     sig, e = _brandes_forward(edges, sources, depth)

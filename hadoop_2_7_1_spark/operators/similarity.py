@@ -2577,13 +2577,14 @@ def knn_hubness(
         F.explode(F.array(*flips)).alias("bucket"),
     )
     dot = DOT.format(a="vec", b="q_vec")
-    # LAZY localCheckpoint (eager=False): the frame feeds BOTH union
+    # localCheckpoint(eager=False): the frame feeds BOTH union
     # orientations — without it each branch recomputes the bucket join
     # (lineage duplication), the exact pattern the betweenness rework
-    # documented. Lazy is deliberate: the checkpoint materializes once when
-    # the final job first touches it (no extra eager job), and the
-    # checkpointed RDD is then shared by both orientations; persist() would
-    # instead pin the pre-AQE shuffle layout under the driver's plain
+    # documented. eager=False is not lazy under AQE: the call runs the
+    # bucket join's shuffle stages and registers a persistent RDD at once;
+    # only the final stage's blocks wait for the first job that reads them.
+    # The checkpointed RDD is then shared by both orientations; persist()
+    # would instead pin the pre-AQE shuffle layout under the driver's plain
     # session.
     undirected = (
         q.join(c, "bucket")

@@ -931,12 +931,13 @@ def bpe_merges(
                      ELSE array_append(st.acc, st.carry) END
         )
         """
-        # r11: lazy checkpoint — the per-round word-table update is a NARROW
-        # map over the (checkpointed) vocab-scale base, so there is no
-        # exchange to materialize and the eager variant's per-round job only
-        # re-wrote vocab-scale blocks nobody needed yet. The blocks persist
-        # when the next round's top-1 collect first computes them; lineage
-        # still truncates per round.
+        # r11: eager=False checkpoint — the per-round word-table update is a
+        # NARROW map over the (checkpointed) vocab-scale base, so the call
+        # has no shuffle stage to run (under AQE it would run any it had)
+        # and the eager variant's per-round job only re-wrote vocab-scale
+        # blocks nobody needed yet. The persistent RDD is registered at once;
+        # its blocks fill when the next round's top-1 collect first computes
+        # them, and lineage still truncates per round.
         words = words.select(
             F.expr(merged).alias("syms"), "wc"
         ).localCheckpoint(eager=False)

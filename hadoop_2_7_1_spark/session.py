@@ -14,6 +14,16 @@ and memory sizing change:
 - UTC session timezone so parquet timestamps compare bit-exact against the
   DuckDB oracle; it and the other settings results depend on are
   ``RESULT_CONF``, the one place they are spelled.
+- PySpark's DataFrame call-site capture off: building a frame is driver
+  work dominated by py4j round trips, and the capture walks the Python
+  stack and sets and clears a JVM origin around every column function,
+  about 2/3 of a build's round trips. It changes no result, so it is a
+  builder line, not ``RESULT_CONF``; errors keep their class and message
+  and lose only the Python file:line.
+
+Frames over the input tables are built by ``io.load_table``, which resolves
+each table once per session and file version and hands every caller a fresh
+instance of that relation.
 """
 
 from __future__ import annotations
@@ -59,6 +69,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # call-site capture off: see the module docstring
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

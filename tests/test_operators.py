@@ -1627,6 +1627,28 @@ def test_sssp_hand_checked(spark):
     assert hops == {"A": 0, "B": 1, "D": 1, "C": 2, "E": 2, "F": 3, "G": 4}
 
 
+def test_sssp_and_bfs_plans_grow_linearly_in_rounds(spark):
+    """Each sssp / bfs_hops round reads the previous distance frame once, so
+    8 rounds plan at most 4x the size of 4 (a round that read it twice
+    doubled the plan every round: 27x)."""
+    from hadoop_2_7_1_spark.operators.graph import bfs_hops, sssp
+
+    edges = spark.createDataFrame(
+        [("A", "B", 2), ("B", "C", 2), ("C", "A", 1), ("C", "D", 3)],
+        "src string, dst string, w long",
+    )
+
+    def plan_chars(df):
+        return len(df._jdf.queryExecution().analyzed().toString())
+
+    for name, run in (
+        ("sssp", lambda n: sssp(edges, "A", rounds=n)),
+        ("bfs_hops", lambda n: bfs_hops(edges, "A", max_hops=n)),
+    ):
+        four, eight = plan_chars(run(4)), plan_chars(run(8))
+        assert eight <= 4 * four, f"{name}: {four} -> {eight} chars"
+
+
 def test_gap_fill_interpolate_hand_checked(spark):
     """Values 100 at hour 0 and 400 at hour 3 -> gaps at hours 1,2
     interpolate to 200, 300; observed buckets keep exact values."""

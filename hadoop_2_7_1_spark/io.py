@@ -42,27 +42,43 @@ TABLES = (
 )
 
 
-# session -> {table path: (st_size, st_mtime_ns, Dataset.ofRows, analyzed
-# relation, dtypes)}: one live entry per path, so a rewritten file is resolved
-# again. Weak keys, so an entry dies with its session.
+# JVM view -> its ``Dataset.ofRows`` method. Weak keys, so an entry dies
+# with its gateway.
+_OF_ROWS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+# session -> {table path: (st_size, st_mtime_ns, analyzed relation, dtypes)}:
+# one live entry per path, so a rewritten file is resolved again. Weak keys,
+# so an entry dies with its session.
 _RESOLVED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
+def of_rows(session: SparkSession, plan) -> DataFrame:
+    """A frame of ``session`` over the JVM logical ``plan``, through the
+    internal ``Dataset.ofRows`` (no public API builds a frame from a plan).
+    py4j resolves the JVM class name with one round trip per package
+    component, about as long as the call itself, so the method is looked
+    up once per JVM gateway and reused. Two threads that miss at once both
+    look it up; either result is correct, so no lock."""
+    jvm = session._jvm
+    fn = _OF_ROWS.get(jvm)
+    if fn is None:
+        fn = _OF_ROWS[jvm] = jvm.org.apache.spark.sql.classic.Dataset.ofRows
+    return DataFrame(fn(session._jsparkSession, plan), session)
+
+
 def _resolve(spark: SparkSession, path: str) -> tuple:
-    """The JVM ``Dataset.ofRows``, the resolved parquet relation at ``path``
-    and its dtypes, looked up once per session and file version: resolving
-    the relation runs a schema-inference job, which dominates building a
-    short query's frame, and the py4j lookup of the JVM class costs a round
-    trip per package name. Two threads that miss at once both resolve;
-    either entry is correct, so no lock."""
+    """The resolved parquet relation at ``path`` and its dtypes, looked up
+    once per session and file version: resolving the relation runs a
+    schema-inference job, which dominates building a short query's frame.
+    Two threads that miss at once both resolve; either entry is correct, so
+    no lock."""
     st = os.stat(path)
     entries = _RESOLVED.setdefault(spark, {})
     hit = entries.get(path)
     if hit is None or hit[:2] != (st.st_size, st.st_mtime_ns):
         df = spark.read.parquet(path)
-        of_rows = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows
         relation = df._jdf.queryExecution().analyzed()
-        hit = entries[path] = (st.st_size, st.st_mtime_ns, of_rows, relation, dict(df.dtypes))
+        hit = entries[path] = (st.st_size, st.st_mtime_ns, relation, dict(df.dtypes))
     return hit[2:]
 
 
@@ -80,8 +96,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     fresh attribute ids, exactly like a new read (two loads of one table
     self-join as two relations). No table contents are cached.
     """
-    of_rows, relation, dtypes = _resolve(spark, os.path.join(sf_dir, f"{name}.parquet"))
-    df = DataFrame(of_rows(spark._jsparkSession, relation.newInstance()), spark)
+    relation, dtypes = _resolve(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    df = of_rows(spark, relation.newInstance())
     if name == "events" and dtypes.get("ts") == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     # Depending on environment confs, parquet TIMESTAMP columns may surface as

@@ -449,11 +449,7 @@ def oracle_simhash(table: str, id_col: str, text_col: str, bits: int = 32) -> st
 # ---------------------------------------------------------------------------
 
 def embedding_neardup_pairs(
-    emb: DataFrame,
-    threshold: float = 0.9,
-    bucket_dims: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    emb: DataFrame, threshold: float = 0.9, bucket_dims: int = 4
 ) -> DataFrame:
     """Near-duplicate pairs by embedding cosine >= threshold.
 
@@ -461,37 +457,12 @@ def embedding_neardup_pairs(
     bucket (random-hyperplane LSH with axis-aligned planes), so the self-join
     is an equi-join on the bucket key — shuffle-partitioned by bucket, never
     an all-pairs cartesian. Recall can be raised by lowering ``bucket_dims``
-    or multi-probing; exactness inside a bucket is preserved.
+    or multi-probing (:func:`similarity.threshold_join`); exactness inside a
+    bucket is preserved. Output: (id_a, id_b, cos) with id_a < id_b.
     """
-    from .similarity import DOT, NORM, sign_bucket
+    from .similarity import _bucket_range_join
 
-    # norms ONCE per row, not per candidate pair (the knn_join/hubness
-    # move); the double norm is the identical fold either way, so cos is
-    # IEEE-identical to the oracle's per-pair formulation
-    c = emb.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("vec_a"),
-        F.expr(NORM.format(a=vec_col)).alias("nrm_a"),
-        sign_bucket(vec_col, bucket_dims).alias("bucket"),
-    )
-    d = emb.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("vec_b"),
-        F.expr(NORM.format(a=vec_col)).alias("nrm_b"),
-        sign_bucket(vec_col, bucket_dims).alias("bucket"),
-    )
-    dot = DOT.format(a="vec_a", b="vec_b")
-    return (
-        c.join(d, "bucket")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", F.expr(f"cast({dot} / (nrm_a * nrm_b) as double)"))
-        .filter(F.col("cos") >= threshold)
-        .select(
-            F.col("id_a").cast("bigint"),
-            F.col("id_b").cast("bigint"),
-            F.col("cos").cast("double"),
-        )
-    )
+    return _bucket_range_join(emb, threshold, bucket_dims, flips=False)
 
 
 def oracle_embedding_neardup(

@@ -23,6 +23,8 @@ from pyspark import RDD
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..io import of_rows
+
 
 def _rounds_session(e: DataFrame) -> SparkSession:
     """Private session for compiling a FIXED-round iterative chain into one
@@ -62,10 +64,8 @@ def _rounds_session(e: DataFrame) -> SparkSession:
 
 def _rebind(session: SparkSession, df: DataFrame) -> DataFrame:
     # No public API moves a frame between sessions: re-wrap its analyzed
-    # plan in a JVM Dataset of ``session`` so it plans under that conf.
-    jvm_dataset = session._jvm.org.apache.spark.sql.classic.Dataset
-    plan = df._jdf.queryExecution().analyzed()
-    return DataFrame(jvm_dataset.ofRows(session._jsparkSession, plan), session)
+    # plan in a frame of ``session`` so it plans under that conf.
+    return of_rows(session, df._jdf.queryExecution().analyzed())
 
 
 def pagerank(

@@ -15,15 +15,119 @@ over document embeddings.
 All arithmetic is JVM-side (zip_with/aggregate fold) in doc order, so the
 DuckDB oracle (list_zip/list_sum in the same order) matches to float
 round-off; comparisons use rtol 1e-9.
+
+Every operator reads an embedding table as ``(vec_id, embedding)`` and is
+composed from a few parts: a corpus side ``(vec_id, vec, c_nrm, …)`` and a
+query side ``(q_id, q_vec, q_nrm, …)`` (:func:`_corpus`, :func:`_queries`);
+a candidate generator (all pairs, sign bucket with or without its Hamming-1
+probes, trained IVF cells, PQ codes; SimHash in :func:`simhash_topk`); one
+score per metric (:data:`COS`, :data:`L2`, :func:`_adc`); and one per-query
+ranking (:func:`_rank`, :func:`_topk`, :func:`_nearest`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 DOT = "aggregate(zip_with({a}, {b}, (x, y) -> cast(x as double) * cast(y as double)), 0D, (acc, v) -> acc + v)"
 NORM = "sqrt(aggregate({a}, 0D, (acc, v) -> acc + cast(v as double) * cast(v as double)))"
+# Squared L2 distance, the same in-order fold as DOT.
+L2 = (
+    "aggregate(zip_with({a}, {b}, (x, y) -> (cast(x as double) - cast(y as double))"
+    " * (cast(x as double) - cast(y as double))), 0D, (acc, v) -> acc + v)"
+)
+# Cosine of a candidate pair from the norms each side computed once per row:
+# the per-pair cost is the dot fold only, and the value is IEEE-identical to
+# the oracle's per-pair formulation (the norm is the same fold either way).
+COS = f"cast({DOT.format(a='vec', b='q_vec')} / (c_nrm * q_nrm) as double)"
+
+
+def _vec_id() -> Column:
+    """``vec_id`` under a fresh attribute id, as a new read would give it. A
+    frame that keeps the table's own attribute, is checkpointed and is then
+    joined back with itself plans worse: kcenter_select's greedy rounds ran
+    81 jobs instead of 9."""
+    return F.col("vec_id").alias("vec_id")
+
+
+def _corpus(emb: DataFrame, *extra: Column) -> DataFrame:
+    """Corpus side of a search: ``(vec_id, vec, c_nrm, *extra)``; ``extra``
+    columns are computed from ``embedding``."""
+    return emb.select(
+        _vec_id(),
+        F.col("embedding").alias("vec"),
+        F.expr(NORM.format(a="embedding")).alias("c_nrm"),
+        *extra,
+    )
+
+
+def _queries(queries: DataFrame, *extra: Column) -> DataFrame:
+    """Query side of a search: ``(q_id, q_vec, q_nrm, *extra)``."""
+    return queries.select(
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_vec"),
+        F.expr(NORM.format(a="embedding")).alias("q_nrm"),
+        *extra,
+    )
+
+
+def _all_pairs(c: DataFrame, q: DataFrame) -> DataFrame:
+    """Every (corpus row, query) pair but a query with itself. The query
+    side is small and broadcast to every task."""
+    return c.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
+
+
+def _probe(c: DataFrame, q: DataFrame, key: str) -> DataFrame:
+    """Corpus rows in a cell (``key``: sign bucket or trained cluster) that
+    a query probes, the query itself excluded. The query side, one row per
+    probed cell, is broadcast."""
+    return c.join(F.broadcast(q), key).filter(F.col("vec_id") != F.col("q_id"))
+
+
+def _cell_pairs(q: DataFrame, c: DataFrame, key: str, keep: Column) -> DataFrame:
+    """Big-to-big candidates: a shuffled equi-join on the cell ``key``,
+    neither side broadcast. ``keep`` drops the self pair (``!=``) or, in a
+    self-join, keeps each unordered pair once (``<``)."""
+    return q.join(c, key).filter(keep)
+
+
+def _rank(*order: Column | str, by: str | tuple[str, ...] = "q_id") -> Column:
+    """``row_number()`` per ``by`` group in ``order``: the module's one
+    window. Each caller orders by its score or distance with ties broken by
+    the candidate id, or, for trained-cell probes, by ``(cdist, cluster)``."""
+    by = (by,) if isinstance(by, str) else by
+    return F.row_number().over(Window.partitionBy(*by).orderBy(*order))
+
+
+def _topk(
+    df: DataFrame,
+    k: int,
+    *order: Column | str,
+    by: str | tuple[str, ...] = "q_id",
+    rnk: str = "rnk",
+) -> DataFrame:
+    """The first ``k`` rows per ``by`` group in ``order``, ranked in column
+    ``rnk`` (a candidate budget, a shortlist pool or a probe count names its
+    own)."""
+    return df.withColumn(rnk, _rank(*order, by=by)).filter(F.col(rnk) <= k)
+
+
+def _nearest(
+    scored: DataFrame,
+    k: int,
+    order: Column,
+    *out: str,
+    ids: tuple[str, str] = ("q_id", "vec_id"),
+) -> DataFrame:
+    """Top-k neighbours per query: best first in ``order``, ties by
+    ascending candidate id. Output: both ids as bigint, ``out``, then
+    ``rnk`` as bigint."""
+    q, v = ids
+    return _topk(scored, k, order, F.asc(v), by=q).select(
+        F.col(q).cast("bigint"), F.col(v).cast("bigint"), *out, F.col("rnk").cast("bigint")
+    )
+
 
 # ---------------------------------------------------------------------------
 # Size-derived knob defaults (round 9).
@@ -35,12 +139,16 @@ NORM = "sqrt(aggregate({a}, 0D, (acc, v) -> acc + cast(v as double) * cast(v as 
 # reference applies to partition counts (InputSampler samples the input to
 # drive TotalOrderPartitioner: MRC/mapreduce/lib/partition/InputSampler.java:97).
 #
-# The rule was validated empirically at sf0.5 (SCALE.md knob-rule table):
-# k = ceil(N/250) and dims = ceil(log2(ceil(N/40))) reproduce the
-# measured-linear operating points (k: 8@N=2000 -> 40@N=10000; dims: 6 -> 8)
-# that turned the three superlinear rows back to ~linear. Integer arithmetic
-# only — DuckDB replays the identical derivation (_knob_k_sql/_knob_dims_sql),
-# so auto-knob queries stay exact-hash comparable at every SF.
+# The rule was validated at sf0.5 (min-of-2, warmed session) on the three
+# operators whose sf0.1 → sf0.5 wall-clock grew superlinearly at pinned knobs
+# (×11.9 dd_semdedup at k=8, ×15.7 sim_threshold_join and ×24.8 sim_hubness
+# at dims=6, for ×5 data). Growing the knob with the corpus brought them to
+# ×4.4 (k=40), ×4.9 and ×6.1 (dims=8). k = ceil(N/250) and
+# dims = ceil(log2(ceil(N/40))) reproduce those operating points
+# (k: 8@N=2000 -> 40@N=10000; dims: 6 -> 8); re-measured at the derived
+# defaults the three grew ×5.0/×5.8/×5.6. Integer arithmetic only — DuckDB
+# replays the identical derivation (_knob_k_sql/_knob_dims_sql), so auto-knob
+# queries stay exact-hash comparable at every SF.
 # ---------------------------------------------------------------------------
 SEMDEDUP_TARGET_CELL = 250  # rows per k-means cell at the derived k
 BUCKET_TARGET_ROWS = 40  # rows per sign-bucket at the derived dims
@@ -167,8 +275,6 @@ def simhash_topk(
     queries: DataFrame,
     k: int = 10,
     rerank_budget: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Production query-serving retriever: full-width SimHash prefilter +
     exact cosine re-rank of a size-derived candidate budget.
@@ -193,41 +299,19 @@ def simhash_topk(
     """
     if rerank_budget is None:
         rerank_budget = derive_rerank_budget(emb.count())
-    c = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        F.expr(NORM.format(a=vec_col)).alias("c_nrm"),
-        F.expr(SIG_HI.format(v=vec_col)).alias("c_hi"),
-        F.expr(SIG_LO.format(v=vec_col)).alias("c_lo"),
+    hi = F.expr(SIG_HI.format(v="embedding"))
+    lo = F.expr(SIG_LO.format(v="embedding"))
+    c = _corpus(emb, hi.alias("c_hi"), lo.alias("c_lo"))
+    q = _queries(queries, hi.alias("q_hi"), lo.alias("q_lo"))
+    ham = F.expr("bit_count(c_hi ^ q_hi) + bit_count(c_lo ^ q_lo)")
+    cand = _topk(
+        _all_pairs(c, q).withColumn("ham", ham),
+        rerank_budget,
+        F.asc("ham"),
+        F.asc("vec_id"),
+        rnk="rn",
     )
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.expr(NORM.format(a=vec_col)).alias("q_nrm"),
-        F.expr(SIG_HI.format(v=vec_col)).alias("q_hi"),
-        F.expr(SIG_LO.format(v=vec_col)).alias("q_lo"),
-    )
-    ham = "bit_count(c_hi ^ q_hi) + bit_count(c_lo ^ q_lo)"
-    wh = Window.partitionBy("q_id").orderBy(F.asc("ham"), F.asc("vec_id"))
-    cand = (
-        c.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
-        .withColumn("ham", F.expr(ham))
-        .withColumn("rn", F.row_number().over(wh))
-        .filter(F.col("rn") <= rerank_budget)
-    )
-    dot = DOT.format(a="vec", b="q_vec")
-    wk = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        cand.withColumn("cos", F.expr(f"cast({dot} / (c_nrm * q_nrm) as double)"))
-        .withColumn("rnk", F.row_number().over(wk))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("q_id").cast("bigint"),
-            F.col("vec_id").cast("bigint"),
-            "cos",
-            F.col("rnk").cast("bigint"),
-        )
-    )
+    return _nearest(cand.withColumn("cos", F.expr(COS)), k, F.desc("cos"), "cos")
 
 
 def oracle_simhash_topk(
@@ -288,50 +372,16 @@ def oracle_simhash_topk(
     """
 
 
-def cosine_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def cosine_topk(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k by cosine for each query vector (brute force).
 
-    Output: (q_id, vec_id, cos), k rows per query, ties broken by vec_id.
-    ``queries`` must be small (it is broadcast to every task).
-
-    Norms are precomputed ONCE per row on each side (the knn_join move),
-    so each of the |corpus|·|q| pairs costs only the dot fold; the double
-    norm is the identical fold either way, so cos stays IEEE-identical to
-    the oracle's per-pair formulation.
+    Output: (q_id, vec_id, cos, rnk), k rows per query, ties broken by
+    vec_id. ``queries`` must be small (it is broadcast to every task).
     """
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.expr(NORM.format(a=vec_col)).alias("q_nrm"),
+    scored = _all_pairs(_corpus(emb), _queries(queries)).select(
+        "q_id", "vec_id", F.expr(COS).alias("cos")
     )
-    c = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        F.expr(NORM.format(a=vec_col)).alias("c_nrm"),
-    )
-    dot = DOT.format(a="vec", b="q_vec")
-    scored = (
-        c.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", F.expr(f"cast({dot} / (c_nrm * q_nrm) as double)"))
-        .select("q_id", "vec_id", "cos")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("q_id").cast("bigint"),
-            F.col("vec_id").cast("bigint"),
-            "cos",
-            F.col("rnk").cast("bigint"),
-        )
-    )
+    return _nearest(scored, k, F.desc("cos"), "cos")
 
 
 ORACLE_DOT = (
@@ -359,57 +409,46 @@ def oracle_cosine_topk(table: str, query_filter: str, k: int = 5) -> str:
     """
 
 
-def sign_bucket(vec_col: str, dims: int = 8) -> F.Column:
-    """Coarse quantizer: '+-++-...' sign pattern of the leading dims."""
-    parts = [
-        F.when(F.expr(f"element_at({vec_col}, {i + 1})") >= 0, F.lit("+")).otherwise(F.lit("-"))
-        for i in range(dims)
-    ]
+def sign_bucket(dims: int = 8) -> Column:
+    """Coarse quantizer: '+-++-...' sign pattern of the leading dims of
+    ``embedding``."""
+    return _sign_pattern(dims)
+
+
+def _sign_pattern(dims: int, flip: int = 0) -> Column:
+    """The sign pattern with the sign test inverted at 1-based position
+    ``flip`` (0: none), i.e. the Hamming-1 neighbour bucket."""
+    parts = []
+    for i in range(dims):
+        pos, neg = ("-", "+") if i + 1 == flip else ("+", "-")
+        cond = F.expr(f"element_at(embedding, {i + 1})") >= 0
+        parts.append(F.when(cond, F.lit(pos)).otherwise(F.lit(neg)))
     return F.concat(*parts)
 
 
+def _bucket(dims: int, flips: bool = False) -> Column:
+    """The ``bucket`` key: a row's own sign bucket or, with ``flips``, one
+    row per probe: the own bucket, then each Hamming-1 neighbour. A
+    candidate sits in exactly one bucket, so a pair meets at most one
+    probe."""
+    if not flips:
+        return sign_bucket(dims).alias("bucket")
+    probes = [_sign_pattern(dims, flip) for flip in range(dims + 1)]
+    return F.explode(F.array(*probes)).alias("bucket")
+
+
 def ivf_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    bucket_dims: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    emb: DataFrame, queries: DataFrame, k: int = 3, bucket_dims: int = 8
 ) -> DataFrame:
     """ANN: probe only the query's sign-bucket, exact top-k inside it.
 
     The bucket join is an equi-join on the bucket key — co-partitionable and
     broadcastable; per-bucket candidate lists shrink the scan by ~2^dims.
     """
-    c = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        F.expr(NORM.format(a=vec_col)).alias("c_nrm"),
-        sign_bucket(vec_col, bucket_dims).alias("bucket"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.expr(NORM.format(a=vec_col)).alias("q_nrm"),
-        sign_bucket(vec_col, bucket_dims).alias("bucket"),
-    )
-    dot = DOT.format(a="vec", b="q_vec")
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", F.expr(f"cast({dot} / (c_nrm * q_nrm) as double)"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("q_id").cast("bigint"),
-            F.col("vec_id").cast("bigint"),
-            "cos",
-            F.col("rnk").cast("bigint"),
-        )
-    )
+    c = _corpus(emb, _bucket(bucket_dims))
+    q = _queries(queries, _bucket(bucket_dims))
+    scored = _probe(c, q, "bucket").withColumn("cos", F.expr(COS))
+    return _nearest(scored, k, F.desc("cos"), "cos")
 
 
 def knn_join(
@@ -417,8 +456,6 @@ def knn_join(
     emb_b: DataFrame,
     k: int = 2,
     bucket_dims: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Big-to-big ANN join: top-k neighbors in ``emb_b`` for EVERY row of
     ``emb_a``, with neither side broadcast.
@@ -432,65 +469,24 @@ def knn_join(
     count grows with the corpus: by default ``bucket_dims`` derives from the
     corpus side (``dims = ceil(log2(ceil(N/40)))``, :func:`derive_bucket_dims`)
     so per-bucket size stays constant; a pinned dims makes the pair bill
-    quadratic (measured ×24.8 at ×5 data, SCALE.md). Pass an explicit dims
+    quadratic (sim_hubness, which runs this join corpus-to-corpus, took
+    ×24.8 the time at ×5 data with dims pinned at 6, against ×6.1 with dims
+    grown to 8). Pass an explicit dims
     to pin. CONTRACT for ``bucket_dims=None``: ``emb_b`` must be the full
     registered table — Spark derives dims from ``emb_b.count()`` while the
     DuckDB oracle's auto mode derives from ``count(*)`` of the registered
     table, and the two only agree on that population. A caller passing a
     FILTERED candidate side must pass an explicit ``bucket_dims`` (and
     unroll it in the oracle) or the engines silently derive different dims. A (q, c) pair can match at most one probe (c has exactly one
-    bucket), so no dedup stage. Norms are precomputed ONCE per row on each
-    side (the cosine then costs only the dot per candidate pair — same IEEE
-    value, double multiply is commutative and the operand order is
-    preserved).
+    bucket), so no dedup stage.
     """
     if bucket_dims is None:
         bucket_dims = derive_bucket_dims(emb_b.count())
-    c = emb_b.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        F.expr(NORM.format(a=vec_col)).alias("c_nrm"),
-        sign_bucket(vec_col, bucket_dims).alias("bucket"),
-    )
-    base = F.concat(
-        *[
-            F.when(F.expr(f"element_at({vec_col}, {i + 1})") >= 0, F.lit("+")).otherwise(
-                F.lit("-")
-            )
-            for i in range(bucket_dims)
-        ]
-    )
-    flips = [base]
-    for i in range(bucket_dims):
-        flipped = F.concat(
-            F.substring(base, 1, i),
-            F.when(F.substring(base, i + 1, 1) == "+", F.lit("-")).otherwise(F.lit("+")),
-            F.substring(base, i + 2, bucket_dims - i - 1),
-        )
-        flips.append(flipped)
-    q = emb_a.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.expr(NORM.format(a=vec_col)).alias("q_nrm"),
-        F.explode(F.array(*flips)).alias("bucket"),
-    )
-    dot = DOT.format(a="vec", b="q_vec")
-    scored = (
-        q.join(c, "bucket")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", F.expr(f"cast({dot} / (c_nrm * q_nrm) as double)"))
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("q_id").cast("bigint"),
-            F.col("vec_id").cast("bigint"),
-            "cos",
-            F.col("rnk").cast("bigint"),
-        )
-    )
+    c = _corpus(emb_b, _bucket(bucket_dims))
+    q = _queries(emb_a, _bucket(bucket_dims, flips=True))
+    keep = F.col("vec_id") != F.col("q_id")
+    scored = _cell_pairs(q, c, "bucket", keep).withColumn("cos", F.expr(COS))
+    return _nearest(scored, k, F.desc("cos"), "cos")
 
 
 def _oracle_bucket_parts(
@@ -614,28 +610,28 @@ def _centroids_sql(cents: list[list[float]]) -> str:
     return f"array({inner})"
 
 
-def _dists_expr(vec_col: str, cents_sql: str) -> str:
-    """Squared-L2 distance from ``vec_col`` to every centroid (array<double>)."""
+def _dists_expr(vec: str, cents_sql: str) -> str:
+    """Squared-L2 distance from column ``vec`` to every centroid (array<double>)."""
     return (
-        f"transform({cents_sql}, c -> aggregate(zip_with({vec_col}, c, "
+        f"transform({cents_sql}, c -> aggregate(zip_with({vec}, c, "
         "(x, y) -> (cast(x as double) - y) * (cast(x as double) - y)), "
         "0D, (acc, v) -> acc + v))"
     )
 
 
-def assign_clusters(
-    emb: DataFrame, cents: list[list[float]], vec_col: str = "embedding"
-) -> DataFrame:
-    """Add an int ``cluster`` column = argmin squared-L2 over ``cents``.
+def _nearest_cell(vec: str, cents: list[list[float]]) -> Column:
+    """Index (int) of the squared-L2-nearest of ``cents`` to column ``vec``;
+    ties go to the lowest index (array_position finds the first minimum)."""
+    d = _dists_expr(vec, _centroids_sql(cents))
+    return (F.expr(f"array_position({d}, array_min({d}))") - 1).cast("int")
 
-    Map-only: the centroid set rides inside the expression (broadcast with
-    the plan), ties break to the lowest cluster index (array_position finds
-    the first minimum) — same tiebreak the oracle's ORDER BY dist, cluster
-    uses.
-    """
-    d = _dists_expr(vec_col, _centroids_sql(cents))
+
+def _assign(df: DataFrame, cents: list[list[float]], vec: str) -> DataFrame:
+    """``df`` plus an int ``cluster`` column: the argmin of the squared-L2
+    distances from column ``vec`` to ``cents``, computed once per row."""
+    d = _dists_expr(vec, _centroids_sql(cents))
     return (
-        emb.withColumn("_dists", F.expr(d))
+        df.withColumn("_dists", F.expr(d))
         .withColumn(
             "cluster",
             (F.expr("array_position(_dists, array_min(_dists))") - 1).cast("int"),
@@ -644,13 +640,18 @@ def assign_clusters(
     )
 
 
-def kmeans_fit(
-    emb: DataFrame,
-    k: int = 8,
-    n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[list[float]]:
+def assign_clusters(emb: DataFrame, cents: list[list[float]]) -> DataFrame:
+    """Add an int ``cluster`` column = argmin squared-L2 over ``cents``.
+
+    Map-only: the centroid set rides inside the expression (broadcast with
+    the plan), ties break to the lowest cluster index (array_position finds
+    the first minimum) — same tiebreak the oracle's ORDER BY dist, cluster
+    uses.
+    """
+    return _assign(emb, cents, "embedding")
+
+
+def kmeans_fit(emb: DataFrame, k: int = 8, n_iter: int = 2) -> list[list[float]]:
     """Lloyd's algorithm with deterministic init.
 
     Seeding: the k lowest-id vectors among a deterministic ~1/16 hash sample
@@ -678,16 +679,16 @@ def kmeans_fit(
     from . import fan_out
 
     emb = fan_out(emb).persist()
-    cand = emb.filter(hex_hash32(F.col(id_col)) % 16 == 0)
+    cand = emb.filter(hex_hash32(F.col("vec_id")) % 16 == 0)
     # degenerate-corpus guard: take(k) on the id column early-terminates as
     # soon as k gated rows exist — never a full count of the gated subset
-    enough = len(cand.select(id_col).take(k)) >= k
+    enough = len(cand.select("vec_id").take(k)) >= k
     src = cand if enough else emb
-    seeds = src.orderBy(id_col).limit(k).select(vec_col).collect()
+    seeds = src.orderBy("vec_id").limit(k).select("embedding").collect()
     cents = [[float(x) for x in row[0]] for row in seeds]
     dim = len(cents[0])
     for _ in range(n_iter):
-        assigned = assign_clusters(emb, cents, vec_col)
+        assigned = assign_clusters(emb, cents)
         # Scaled-bigint mean (x1e9): fl(v*1e9) is the same IEEE product and
         # round() the same half-away rounding on both engines; the integer
         # sum is exact at any parallelism, so the centroid update — and
@@ -695,7 +696,7 @@ def kmeans_fit(
         # oracle's replay. A plain avg(double) drifts in the last ulp with
         # partial-sum grouping, and the drift compounds across iterations.
         rows = (
-            assigned.select("cluster", F.posexplode(F.col(vec_col)).alias("pos", "val"))
+            assigned.select("cluster", F.posexplode("embedding").alias("pos", "val"))
             .groupBy("cluster", "pos")
             .agg(
                 (
@@ -725,8 +726,6 @@ def kmeans_ivf_topk(
     cents: list[list[float]],
     k: int = 3,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF search against trained centroids: rank cells per query, probe the
     ``nprobe`` nearest, exact cosine top-k inside the probed cells.
@@ -735,53 +734,26 @@ def kmeans_ivf_topk(
     key (queries broadcast; for big-to-big use the same shape shuffled).
     Scanned fraction ~= nprobe/k of the corpus per query.
     """
-    corpus = assign_clusters(
-        emb.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("vec"),
-            F.expr(NORM.format(a=vec_col)).alias("c_nrm"),
-        ),
-        cents,
-        "vec",
-    )
+    corpus = _assign(_corpus(emb), cents, "vec")
+    probes = _cell_probes(_queries(queries), cents, nprobe)
+    scored = _probe(corpus, probes, "cluster").withColumn("cos", F.expr(COS))
+    return _nearest(scored, k, F.desc("cos"), "cos")
+
+
+def _cell_probes(q: DataFrame, cents: list[list[float]], nprobe: int) -> DataFrame:
+    """Trained-cell probes: each row of the query side ``q`` once per cell
+    among its ``nprobe`` nearest centroids, ranked by ``(cdist, cluster)``.
+    Output: ``q``'s columns, ``cluster`` (int) and its rank ``prb``."""
     d = _dists_expr("q_vec", _centroids_sql(cents))
-    q = (
-        queries.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.expr(NORM.format(a=vec_col)).alias("q_nrm"),
-        )
-        .withColumn("_d", F.expr(d))
-        .select("q_id", "q_vec", "q_nrm", F.posexplode("_d").alias("cluster", "cdist"))
-    )
-    wp = Window.partitionBy("q_id").orderBy("cdist", "cluster")
-    probes = (
-        q.withColumn("prb", F.row_number().over(wp))
-        .filter(F.col("prb") <= nprobe)
-        .select(
-            "q_id", "q_vec", "q_nrm", F.col("cluster").cast("int").alias("cluster")
-        )
-    )
-    # norms once per row (the knn_join move) — per-pair cost is the dot only
-    scored = (
-        corpus.join(F.broadcast(probes), "cluster")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn(
-            "cos",
-            F.expr(f"cast({DOT.format(a='vec', b='q_vec')} / (c_nrm * q_nrm) as double)"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("q_id").cast("bigint"),
-            F.col("vec_id").cast("bigint"),
-            "cos",
-            F.col("rnk").cast("bigint"),
-        )
-    )
+    return _topk(
+        q.withColumn("_d", F.expr(d)).select(
+            *q.columns, F.posexplode("_d").alias("cluster", "cdist")
+        ),
+        nprobe,
+        "cdist",
+        "cluster",
+        rnk="prb",
+    ).select(*q.columns, F.col("cluster").cast("int").alias("cluster"), "prb")
 
 
 def _oracle_kmeans_ctes(
@@ -914,8 +886,6 @@ def pq_fit(
     m: int = 4,
     k: int = 8,
     n_iter: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
 ) -> list[list[list[float]]]:
     """Train PQ codebooks: split the vector into ``m`` contiguous subspaces
@@ -938,16 +908,16 @@ def pq_fit(
     N*dim, exactly what the m separate fits exploded in aggregate). Every
     per-cell mean is the same scaled-bigint fold over the same multiset, so
     the codebooks are bit-identical to the sequential fit (pinned by
-    tests/test_similarity_ops.py::test_pq_fit_joint_matches_sequential).
+    tests/test_operators.py::test_pq_fit_joint_matches_sequential).
     """
     from . import fan_out
     from ..functions import hex_hash32
 
     sub = dim // m
     slice_cols = [
-        F.slice(F.col(vec_col), s * sub + 1, sub).alias(f"_s{s}") for s in range(m)
+        F.slice("embedding", s * sub + 1, sub).alias(f"_s{s}") for s in range(m)
     ]
-    base = fan_out(emb).select(F.col(id_col).alias("vec_id"), *slice_cols).persist()
+    base = fan_out(emb).select(_vec_id(), *slice_cols).persist()
     cand = base.filter(hex_hash32(F.col("vec_id")) % 16 == 0)
     # degenerate-corpus guard, once for all subspaces (gate is id-only)
     enough = len(cand.select("vec_id").take(k)) >= k
@@ -957,14 +927,7 @@ def pq_fit(
     )
     books = [[[float(x) for x in row[s]] for row in seed_rows] for s in range(m)]
     for _ in range(n_iter):
-        assign_cols = []
-        for s in range(m):
-            d = _dists_expr(f"_s{s}", _centroids_sql(books[s]))
-            assign_cols.append(
-                F.expr(
-                    f"cast(array_position({d}, array_min({d})) - 1 as int)"
-                ).alias(f"_c{s}")
-            )
+        assign_cols = [_nearest_cell(f"_s{s}", books[s]).alias(f"_c{s}") for s in range(m)]
         assigned = base.select(
             *[F.col(f"_s{s}") for s in range(m)], *assign_cols
         )
@@ -1013,30 +976,47 @@ def pq_fit(
     return books
 
 
-def pq_encode(
-    emb: DataFrame,
-    books: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def _pq_codes(books: list[list[list[float]]]) -> Column:
+    """``codes``: per subspace, the index of the codeword nearest the
+    ``embedding`` slice (array<int>, one entry per codebook)."""
+    sub = len(books[0][0])
+    return F.array(
+        *[
+            _nearest_cell(f"slice(embedding, {s * sub + 1}, {sub})", book)
+            for s, book in enumerate(books)
+        ]
+    ).alias("codes")
+
+
+def _adc_tables(books: list[list[list[float]]]) -> list[Column]:
+    """A query's ADC lookup tables: per subspace ``s``, column ``t{s}``
+    holds the squared-L2 distances from the query's slice to every
+    codeword (m*k doubles per query, computed map-only)."""
+    sub = len(books[0][0])
+    return [
+        F.expr(
+            _dists_expr(f"slice(embedding, {s * sub + 1}, {sub})", _centroids_sql(book))
+        ).alias(f"t{s}")
+        for s, book in enumerate(books)
+    ]
+
+
+def _adc(m: int) -> Column:
+    """Asymmetric distance of a (query, coded row) pair: the sum over the
+    m subspaces of the query's table entry at the row's code."""
+    return sum(
+        F.element_at(F.col(f"t{s}"), F.element_at("codes", s + 1) + 1) for s in range(m)
+    ).cast("double")
+
+
+def pq_encode(emb: DataFrame, books: list[list[list[float]]]) -> DataFrame:
     """Encode every vector to its m subspace code ids (argmin squared-L2
     against the subspace codebook). Map-only: the codebooks ride in the plan
     as literals; output is (vec_id, codes array<int>) — at 100 TB this is
     the compressed representation you persist (m bytes per vector instead
     of dim floats, a 32x shrink at the defaults here).
     """
-    m = len(books)
-    sub = len(books[0][0])
-    code_cols = []
-    for s in range(m):
-        d = _dists_expr(f"slice({vec_col}, {s * sub + 1}, {sub})", _centroids_sql(books[s]))
-        code_cols.append(
-            (F.expr(f"array_position({d}, array_min({d}))") - 1).cast("int").alias(f"c{s}")
-        )
-    coded = emb.select(F.col(id_col).alias("vec_id"), *code_cols)
-    return coded.select(
-        "vec_id", F.array(*[F.col(f"c{s}") for s in range(m)]).alias("codes")
-    )
+    return emb.select(_vec_id(), _pq_codes(books))
 
 
 def pq_search_adc(
@@ -1044,8 +1024,6 @@ def pq_search_adc(
     queries: DataFrame,
     books: list[list[list[float]]],
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ADC search: exact query subvectors against the corpus's PQ codes.
 
@@ -1058,39 +1036,14 @@ def pq_search_adc(
     Output: (id_q, id_vec, score_adc, rnk) — integer ids lead the sorted
     column order so cross-engine float ulps can't flip canonical row order.
     """
-    m = len(books)
-    coded = pq_encode(emb, books, id_col, vec_col)
-    sub = len(books[0][0])
-    table_cols = [
-        F.expr(_dists_expr(f"slice(q_vec, {s * sub + 1}, {sub})", _centroids_sql(books[s])))
-        .alias(f"t{s}")
-        for s in range(m)
-    ]
-    q = queries.select(F.col(id_col).alias("id_q"), F.col(vec_col).alias("q_vec")).select(
-        "id_q", *table_cols
+    c = _corpus(emb, _pq_codes(books))
+    q = _queries(queries, *_adc_tables(books))
+    scored = _all_pairs(c, q).select(
+        F.col("q_id").alias("id_q"),
+        F.col("vec_id").alias("id_vec"),
+        _adc(len(books)).alias("score_adc"),
     )
-    scored = (
-        coded.join(F.broadcast(q), coded["vec_id"] != q["id_q"])
-        .withColumn(
-            "score_adc",
-            sum(
-                (F.element_at(F.col(f"t{s}"), F.element_at("codes", s + 1) + 1))
-                for s in range(m)
-            ).cast("double"),
-        )
-        .select("id_q", F.col("vec_id").alias("id_vec"), "score_adc")
-    )
-    w = Window.partitionBy("id_q").orderBy(F.asc("score_adc"), F.asc("id_vec"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("id_q").cast("bigint"),
-            F.col("id_vec").cast("bigint"),
-            "score_adc",
-            F.col("rnk").cast("bigint"),
-        )
-    )
+    return _nearest(scored, k, F.asc("score_adc"), "score_adc", ids=("id_q", "id_vec"))
 
 
 def semdedup(
@@ -1098,8 +1051,6 @@ def semdedup(
     k: int | None = None,
     n_iter: int = 2,
     threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023, public):
     cluster embeddings with k-means, then WITHIN each cluster drop every
@@ -1113,38 +1064,23 @@ def semdedup(
     from the corpus (``k = ceil(N / 250)``, :func:`derive_k`) so cluster
     sizes stay bounded as the data grows — the paper's design point and
     the reference's InputSampler discipline; a pinned k makes the pair
-    stage quadratic (measured ×11.9 at ×5 data, SCALE.md). The count is
+    stage quadratic (at sf0.1 → sf0.5, ×5 data, the query took ×11.9 the
+    time at k=8 and ×4.4 at k=40). The count is
     one metadata-cheap job; pass an explicit ``k`` to pin it. The fit is
     the deterministic scaled-bigint Lloyd loop (kmeans_fit); assignment
     is map-only with centroids as plan literals.
     """
     if k is None:
         k = derive_k(emb.count())
-    cents = kmeans_fit(emb, k=k, n_iter=n_iter, id_col=id_col, vec_col=vec_col)
-    assigned = assign_clusters(emb, cents, vec_col)
-    # norms ONCE per row, not per candidate pair (the knn_join/hubness
-    # move): the per-pair cosine then costs only the dot fold. The double
-    # norm value is the identical fold either way, so cos is IEEE-identical
-    # to the oracle's per-pair formulation.
-    a = assigned.select(
-        F.col(id_col).alias("id_a"),
-        F.col("cluster"),
-        F.col(vec_col).alias("va"),
-        F.expr(NORM.format(a=vec_col)).alias("na"),
-    )
-    b = assigned.select(
-        F.col(id_col).alias("id_b"),
-        F.col("cluster"),
-        F.col(vec_col).alias("vb"),
-        F.expr(NORM.format(a=vec_col)).alias("nb"),
-    )
-    dot = DOT.format(a="va", b="vb")
+    assigned = assign_clusters(emb, kmeans_fit(emb, k=k, n_iter=n_iter))
     dropped = (
-        a.join(b, "cluster")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cos", F.expr(f"cast({dot} / (na * nb) as double)"))
-        .filter(F.col("cos") >= threshold)
-        .select("cluster", "id_b")
+        _similar_pairs(
+            _queries(assigned, F.col("cluster")),
+            _corpus(assigned, F.col("cluster")),
+            "cluster",
+            threshold,
+        )
+        .select("cluster", "vec_id")
         .distinct()
         .groupBy("cluster")
         .agg(F.count("*").alias("n_dropped"))
@@ -1154,6 +1090,37 @@ def semdedup(
         F.col("cluster").cast("bigint"),
         F.col("n_total").cast("bigint"),
         F.coalesce(F.col("n_dropped"), F.lit(0)).cast("bigint").alias("n_dropped"),
+    )
+
+
+def _similar_pairs(q: DataFrame, c: DataFrame, key: str, threshold: float) -> DataFrame:
+    """Self-join range candidates: pairs sharing a ``key`` cell, each
+    unordered pair once (``q_id < vec_id``), with cosine >= ``threshold``.
+    The cosine is a bit-identical double on both engines, so ``>=`` is
+    portable."""
+    keep = F.col("q_id") < F.col("vec_id")
+    return (
+        _cell_pairs(q, c, key, keep)
+        .withColumn("cos", F.expr(COS))
+        .filter(F.col("cos") >= threshold)
+    )
+
+
+def _bucket_range_join(
+    emb: DataFrame, threshold: float, bucket_dims: int, flips: bool
+) -> DataFrame:
+    """Pairs ``(id_a, id_b, cos)``, ``id_a < id_b``, with cosine >=
+    ``threshold`` whose sign buckets match or, with ``flips``, lie within
+    Hamming distance 1 (one side probes its bucket and each 1-bit flip)."""
+    return _similar_pairs(
+        _queries(emb, _bucket(bucket_dims, flips)),
+        _corpus(emb, _bucket(bucket_dims)),
+        "bucket",
+        threshold,
+    ).select(
+        F.col("q_id").cast("bigint").alias("id_a"),
+        F.col("vec_id").cast("bigint").alias("id_b"),
+        "cos",
     )
 
 
@@ -1318,8 +1285,6 @@ def ann_recall(
     queries: DataFrame,
     k: int = 5,
     bucket_dims: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Recall@k of the sign-bucket IVF path against brute-force ground
     truth — the measure-don't-guess audit to run whenever k / bucket_dims /
@@ -1330,10 +1295,17 @@ def ann_recall(
     by the query count, not the corpus), so the audit costs one extra
     scored pass over the corpus — run it on a sampled query set.
     """
-    truth = cosine_topk(emb, queries, k, id_col, vec_col).select("q_id", "vec_id")
-    approx = ivf_topk(emb, queries, k, bucket_dims, id_col, vec_col).select(
-        "q_id", "vec_id"
+    return _recall(
+        cosine_topk(emb, queries, k).select("q_id", "vec_id"),
+        ivf_topk(emb, queries, k, bucket_dims).select("q_id", "vec_id"),
+        F.col("hits").cast("double") / F.col("possible"),
     )
+
+
+def _recall(truth: DataFrame, approx: DataFrame, recall: Column) -> DataFrame:
+    """One row (n_queries, hits, possible, recall): how many of the
+    ``truth`` (q_id, vec_id) pairs ``approx`` found; ``recall`` is computed
+    from ``hits`` and ``possible``."""
     hits = truth.join(approx, ["q_id", "vec_id"]).agg(
         F.count("*").cast("bigint").alias("hits")
     )
@@ -1342,10 +1314,7 @@ def ann_recall(
         F.count("*").cast("bigint").alias("possible"),
     )
     return totals.crossJoin(F.broadcast(hits)).select(
-        "n_queries",
-        "hits",
-        "possible",
-        (F.col("hits").cast("double") / F.col("possible")).alias("recall"),
+        "n_queries", "hits", "possible", recall.alias("recall")
     )
 
 
@@ -1417,8 +1386,6 @@ def retrieval_quality(
     bucket_dims: int | None = None,
     retriever: str = "multiprobe",
     rerank_budget: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Offline retrieval-quality eval: per-query recall@k and nDCG@k of the
     production retriever (:func:`knn_join` — sign-bucket + Hamming-1
@@ -1460,18 +1427,18 @@ def retrieval_quality(
     if queries is None:
         n_rows = emb.count()
         stride = derive_query_stride(n_rows)
-        queries = emb.filter(F.col(id_col) % stride == 0)
+        queries = emb.filter(F.col("vec_id") % stride == 0)
         if retriever == "multiprobe" and bucket_dims is None:
             bucket_dims = derive_bucket_dims(n_rows)
         if retriever == "simhash" and rerank_budget is None:
             rerank_budget = derive_rerank_budget(n_rows)
     gains = _ndcg_gain_literals(k)
     arr = "array(" + ", ".join(f"cast({g} as decimal(38,6))" for g in gains) + ")"
-    exact = cosine_topk(emb, queries, k, id_col, vec_col)
+    exact = cosine_topk(emb, queries, k)
     if retriever == "multiprobe":
-        approx = knn_join(queries, emb, k, bucket_dims, id_col, vec_col)
+        approx = knn_join(queries, emb, k, bucket_dims)
     elif retriever == "simhash":
-        approx = simhash_topk(emb, queries, k, rerank_budget, id_col, vec_col)
+        approx = simhash_topk(emb, queries, k, rerank_budget)
     else:
         raise ValueError(f"unknown retriever {retriever!r}")
     gain = f"element_at({arr}, cast(rnk as int))"
@@ -1557,26 +1524,8 @@ def oracle_retrieval_quality(
     """
 
 
-def _sign_bucket_flipped(vec_col: str, dims: int, flip: int) -> F.Column:
-    """Sign pattern with the sign test inverted at 1-based position
-    ``flip`` (0 = no flip) — the Hamming-1 probe patterns."""
-    parts = []
-    for i in range(dims):
-        cond = F.expr(f"element_at({vec_col}, {i + 1})") >= 0
-        if i + 1 == flip:
-            parts.append(F.when(cond, F.lit("-")).otherwise(F.lit("+")))
-        else:
-            parts.append(F.when(cond, F.lit("+")).otherwise(F.lit("-")))
-    return F.concat(*parts)
-
-
 def ivf_multiprobe_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    bucket_dims: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    emb: DataFrame, queries: DataFrame, k: int = 5, bucket_dims: int = 6
 ) -> DataFrame:
     """Multi-probe IVF: each query probes its own sign bucket plus every
     Hamming-1 neighbor (dims+1 probes), exact top-k over the union.
@@ -1588,41 +1537,10 @@ def ivf_multiprobe_topk(
     one sign. The probe fan-out lives on the (broadcast) query side; each
     candidate still sits in exactly one bucket, so no dedup is needed.
     """
-    c = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        F.expr(NORM.format(a=vec_col)).alias("c_nrm"),
-        sign_bucket(vec_col, bucket_dims).alias("bucket"),
-    )
-    probes = F.array(
-        *[_sign_bucket_flipped(vec_col, bucket_dims, j) for j in range(bucket_dims + 1)]
-    )
-    q = queries.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.expr(NORM.format(a=vec_col)).alias("q_nrm"),
-        F.explode(probes).alias("bucket"),
-    )
-    # norms once per row (the knn_join move) — per-pair cost is the dot only
-    scored = (
-        c.join(F.broadcast(q), "bucket")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn(
-            "cos",
-            F.expr(f"cast({DOT.format(a='vec', b='q_vec')} / (c_nrm * q_nrm) as double)"),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("q_id").cast("bigint"),
-            F.col("vec_id").cast("bigint"),
-            "cos",
-            F.col("rnk").cast("bigint"),
-        )
-    )
+    c = _corpus(emb, _bucket(bucket_dims))
+    q = _queries(queries, _bucket(bucket_dims, flips=True))
+    scored = _probe(c, q, "bucket").withColumn("cos", F.expr(COS))
+    return _nearest(scored, k, F.desc("cos"), "cos")
 
 
 def oracle_ivf_multiprobe_topk(
@@ -1664,12 +1582,7 @@ def oracle_ivf_multiprobe_topk(
 # Trained-quantizer recall curve (measure-then-tune on a clustered fixture)
 # ---------------------------------------------------------------------------
 
-def clustered_fixture(
-    emb: DataFrame,
-    n_anchors: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def clustered_fixture(emb: DataFrame, n_anchors: int = 8) -> DataFrame:
     """Deterministic clustered copy of an embedding table: vector i is
     pulled to anchor ``i % n_anchors`` (a ±2 sign pattern over the anchor
     id's bits, cycled across dimensions) plus 0.25× the original vector as
@@ -1684,10 +1597,10 @@ def clustered_fixture(
     """
     bits = max(1, (n_anchors - 1).bit_length())
     return emb.select(
-        F.col(id_col).alias("vec_id"),
+        _vec_id(),
         F.expr(
-            f"transform(cast({vec_col} as array<double>), (x, j) -> "
-            f"(case when (shiftright(cast({id_col} % {n_anchors} as int), j % {bits}) & 1) = 1 "
+            f"transform(cast(embedding as array<double>), (x, j) -> "
+            f"(case when (shiftright(cast(vec_id % {n_anchors} as int), j % {bits}) & 1) = 1 "
             f"then 2.0D else -2.0D end) + 0.25D * x)"
         ).alias("embedding"),
     )
@@ -1712,8 +1625,6 @@ def kmeans_recall_curve(
     cents: list[list[float]],
     k: int = 5,
     nprobes: tuple[int, ...] = (1, 2, 4),
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Recall@k vs scan-fraction of the TRAINED k-means IVF path, one row
     per ``nprobe`` operating point — the production tuning curve the
@@ -1721,96 +1632,49 @@ def kmeans_recall_curve(
     recall target; scan_frac is the cost you pay for it).
 
     One corpus-assignment pass and one probe join at ``max(nprobes)``
-    produce the scored candidate set with its probe rank attached; each
-    curve point is a filter (``prb <= n``) + per-query top-k over that set,
-    so levels share all the heavy work structurally. Ground truth is the
-    brute-force top-k over the (small, broadcast) query sample. scan_frac
-    denominates by the brute-force comparison count
-    ``n_queries * (n_corpus - 1)``.
+    produce the scored candidate set with its probe rank attached. Each
+    candidate is copied to every level ``n`` with ``prb <= n``, and one
+    ranking per (nprobe, q_id) gives every curve point in a single read of
+    the candidates; one left join to the ground truth then counts hits and
+    candidates per level. Ground truth is the brute-force top-k over the
+    (small, broadcast) query sample. scan_frac denominates by the
+    brute-force comparison count ``n_queries * (n_corpus - 1)``.
 
     Everything downstream of the counts is a ratio of exact integers, so
     the result hashes identically at any parallelism.
     """
-    max_np = max(nprobes)
-    corpus = assign_clusters(
-        emb.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("vec"),
-            F.expr(NORM.format(a=vec_col)).alias("c_nrm"),
-        ),
-        cents,
-        "vec",
+    level = F.explode(F.array(*[F.lit(n) for n in nprobes])).alias("nprobe")
+    corpus = _assign(_corpus(emb), cents, "vec")
+    probes = _cell_probes(_queries(queries), cents, max(nprobes))
+    ranked = (
+        _probe(corpus, probes, "cluster")
+        .select("q_id", "vec_id", "prb", F.expr(COS).alias("cos"), level)
+        .filter(F.col("prb") <= F.col("nprobe"))
+        .withColumn("rnk", _rank(F.desc("cos"), F.asc("vec_id"), by=("nprobe", "q_id")))
     )
-    d = _dists_expr("q_vec", _centroids_sql(cents))
-    q = (
-        queries.select(
-            F.col(id_col).alias("q_id"),
-            F.col(vec_col).alias("q_vec"),
-            F.expr(NORM.format(a=vec_col)).alias("q_nrm"),
+    truth = cosine_topk(emb, queries, k).select("q_id", "vec_id", F.lit(1).alias("hit"))
+    per_level = (
+        ranked.join(F.broadcast(truth), ["q_id", "vec_id"], "left")
+        .groupBy("nprobe")
+        .agg(
+            F.count(F.when(F.col("rnk") <= k, F.col("hit"))).alias("hits"),
+            F.count("*").alias("scanned"),
         )
-        .withColumn("_d", F.expr(d))
-        .select("q_id", "q_vec", "q_nrm", F.posexplode("_d").alias("cluster", "cdist"))
-    )
-    wp = Window.partitionBy("q_id").orderBy("cdist", "cluster")
-    probes = (
-        q.withColumn("prb", F.row_number().over(wp))
-        .filter(F.col("prb") <= max_np)
-        .select(
-            "q_id",
-            "q_vec",
-            "q_nrm",
-            F.col("cluster").cast("int").alias("cluster"),
-            "prb",
-        )
-    )
-    # norms once per row (the knn_join move) — per-pair cost is the dot only
-    scored = (
-        corpus.join(F.broadcast(probes), "cluster")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn(
-            "cos",
-            F.expr(f"cast({DOT.format(a='vec', b='q_vec')} / (c_nrm * q_nrm) as double)"),
-        )
-        .select("q_id", "vec_id", "prb", "cos")
-    )
-    # Three curve levels re-rank the same candidate set and re-join the
-    # same truth — materialize both once instead of three corpus passes.
-    # (Deliberately not unpersisted: the returned plan reads them lazily;
-    # both are sample-sized — probed candidates + k rows per query — and
-    # evict LRU.)
-    scored = scored.persist()
-    truth = (
-        cosine_topk(emb, queries, k, id_col, vec_col)
-        .select("q_id", "vec_id")
-        .persist()
     )
     tot = truth.agg(
         F.count_distinct("q_id").cast("bigint").alias("n_queries"),
         F.count("*").cast("bigint").alias("possible"),
     )
-    ncorp = emb.agg(F.count("*").cast("bigint").alias("n_corpus"))
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    curve = None
-    for n in nprobes:
-        lvl = scored.filter(F.col("prb") <= n)
-        topk = (
-            lvl.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("q_id", "vec_id")
-        )
-        hits = topk.join(truth, ["q_id", "vec_id"]).agg(
-            F.count("*").cast("bigint").alias("hits")
-        )
-        scanned = lvl.agg(F.count("*").cast("bigint").alias("scanned"))
-        point = hits.crossJoin(F.broadcast(scanned)).select(
-            F.lit(n).cast("bigint").alias("nprobe"), "hits", "scanned"
-        )
-        curve = point if curve is None else curve.unionByName(point)
+    # one row per level even where a level scans nothing
+    levels = emb.agg(F.count("*").cast("bigint").alias("n_corpus")).select("n_corpus", level)
     return (
-        curve.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(ncorp))
+        levels.join(per_level, "nprobe", "left")
+        .crossJoin(F.broadcast(tot))
+        .withColumns(
+            {c: F.coalesce(c, F.lit(0)).cast("bigint") for c in ("hits", "scanned")}
+        )
         .select(
-            "nprobe",
+            F.col("nprobe").cast("bigint"),
             "n_queries",
             "possible",
             "hits",
@@ -1913,38 +1777,19 @@ def oracle_kmeans_recall_curve(
 # PQ quantization-loss audit (recall of ADC search vs exact L2 truth)
 # ---------------------------------------------------------------------------
 
-L2 = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> (cast(x as double) - cast(y as double))"
-    " * (cast(x as double) - cast(y as double))), 0D, (acc, v) -> acc + v)"
-)
 ORACLE_L2 = (
     "list_sum(list_transform(list_zip(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[])), "
     "p -> (p[1] - p[2]) * (p[1] - p[2])))"
 )
 
 
-def l2_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def l2_topk(emb: DataFrame, queries: DataFrame, k: int = 5) -> DataFrame:
     """Exact squared-L2 top-k per query (brute force; queries broadcast) —
     the ground truth for the PQ family, which ranks by L2 not cosine."""
-    q = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-    c = emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"))
-    scored = (
-        c.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
-        .withColumn("d", F.expr(L2.format(a="vec", b="q_vec")))
-        .select("q_id", "vec_id", "d")
+    scored = _all_pairs(_corpus(emb), _queries(queries)).select(
+        "q_id", "vec_id", F.expr(L2.format(a="vec", b="q_vec")).alias("d")
     )
-    w = Window.partitionBy("q_id").orderBy(F.asc("d"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(F.col("q_id").cast("bigint"), F.col("vec_id").cast("bigint"))
-    )
+    return _nearest(scored, k, F.asc("d")).select("q_id", "vec_id")
 
 
 def pq_recall(
@@ -1952,8 +1797,6 @@ def pq_recall(
     queries: DataFrame,
     books: list[list[list[float]]],
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Recall@k of PQ-ADC search against exact squared-L2 ground truth —
     the quantization-loss audit for the compressed scan path (what you
@@ -1962,25 +1805,16 @@ def pq_recall(
     pass over the corpus for the sampled query set; the ADC side still
     touches only the m-byte codes.
     """
-    truth = l2_topk(emb, queries, k, id_col, vec_col)
-    approx = pq_search_adc(emb, queries, books, k, id_col, vec_col).select(
+    approx = pq_search_adc(emb, queries, books, k).select(
         F.col("id_q").alias("q_id"), F.col("id_vec").alias("vec_id")
     )
-    hits = truth.join(approx, ["q_id", "vec_id"]).agg(
-        F.count("*").cast("bigint").alias("hits")
-    )
-    totals = truth.agg(
-        F.count_distinct("q_id").cast("bigint").alias("n_queries"),
-        F.count("*").cast("bigint").alias("possible"),
-    )
-    return totals.crossJoin(F.broadcast(hits)).select(
-        "n_queries",
-        "hits",
-        "possible",
+    return _recall(
+        l2_topk(emb, queries, k),
+        approx,
         F.expr(
             "case when possible = 0 then cast(0 as double)"
             " else cast(hits as double) / possible end"
-        ).alias("recall"),
+        ),
     )
 
 
@@ -2031,8 +1865,6 @@ def ivf_pq_topk(
     books: list[list[list[float]]],
     k: int = 3,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ search: rank trained coarse cells per query, probe the
     ``nprobe`` nearest, score ONLY the probed cells' rows by PQ-ADC table
@@ -2048,71 +1880,14 @@ def ivf_pq_topk(
 
     Output: (id_q, id_vec, score_adc, rnk ascending by ADC distance).
     """
-    m = len(books)
-    sub = len(books[0][0])
-    corpus = assign_clusters(
-        emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")),
-        cents,
-        "vec",
+    indexed = _assign(_corpus(emb, _pq_codes(books)), cents, "vec")
+    probes = _cell_probes(_queries(queries, *_adc_tables(books)), cents, nprobe)
+    scored = _probe(indexed, probes, "cluster").select(
+        F.col("q_id").alias("id_q"),
+        F.col("vec_id").alias("id_vec"),
+        _adc(len(books)).alias("score_adc"),
     )
-    code_cols = []
-    for s in range(m):
-        d = _dists_expr(f"slice(vec, {s * sub + 1}, {sub})", _centroids_sql(books[s]))
-        code_cols.append(
-            (F.expr(f"array_position({d}, array_min({d}))") - 1)
-            .cast("int")
-            .alias(f"c{s}")
-        )
-    indexed = corpus.select(
-        "vec_id",
-        "cluster",
-        F.array(*code_cols).alias("codes"),
-    )
-
-    cd = _dists_expr("q_vec", _centroids_sql(cents))
-    adc_tables = [
-        F.expr(_dists_expr(f"slice(q_vec, {s * sub + 1}, {sub})", _centroids_sql(books[s])))
-        .alias(f"t{s}")
-        for s in range(m)
-    ]
-    q = (
-        queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-        .withColumn("_cd", F.expr(cd))
-        .select("q_id", "q_vec", F.posexplode("_cd").alias("cluster", "cdist"))
-    )
-    wp = Window.partitionBy("q_id").orderBy("cdist", "cluster")
-    probes = (
-        q.withColumn("prb", F.row_number().over(wp))
-        .filter(F.col("prb") <= nprobe)
-        .select(
-            "q_id",
-            F.col("cluster").cast("int").alias("cluster"),
-            *adc_tables,
-        )
-    )
-    scored = (
-        indexed.join(F.broadcast(probes), "cluster")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .withColumn(
-            "score_adc",
-            sum(
-                F.element_at(F.col(f"t{s}"), F.element_at("codes", s + 1) + 1)
-                for s in range(m)
-            ).cast("double"),
-        )
-        .select(F.col("q_id").alias("id_q"), F.col("vec_id").alias("id_vec"), "score_adc")
-    )
-    w = Window.partitionBy("id_q").orderBy(F.asc("score_adc"), F.asc("id_vec"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("id_q").cast("bigint"),
-            F.col("id_vec").cast("bigint"),
-            "score_adc",
-            F.col("rnk").cast("bigint"),
-        )
-    )
+    return _nearest(scored, k, F.asc("score_adc"), "score_adc", ids=("id_q", "id_vec"))
 
 
 def oracle_ivf_pq(
@@ -2198,9 +1973,7 @@ def oracle_ivf_pq(
 # ---------------------------------------------------------------------------
 
 
-def embedding_moments(
-    emb: DataFrame, vec_col: str = "embedding", dims: int = 16, scale: int = 10_000
-) -> DataFrame:
+def embedding_moments(emb: DataFrame, dims: int = 16, scale: int = 10_000) -> DataFrame:
     """EXACT second-moment matrix of the leading ``dims`` embedding
     coordinates, as scaled integers — the distributed half of PCA
     (covariance → :func:`pca_top_component` power-iterates the d×d result
@@ -2224,7 +1997,7 @@ def embedding_moments(
     """
     s_cols = [
         F.expr(
-            f"cast(round(cast(element_at({vec_col}, {i + 1}) as double) * {scale})"
+            f"cast(round(cast(element_at(embedding, {i + 1}) as double) * {scale})"
             f" as bigint)"
         ).alias(f"__s{i}")
         for i in range(dims)
@@ -2252,11 +2025,9 @@ def embedding_moments(
     )
 
 
-def oracle_embedding_moments(
-    table: str, vec_col: str = "embedding", dims: int = 16, scale: int = 10_000
-) -> str:
+def oracle_embedding_moments(table: str, dims: int = 16, scale: int = 10_000) -> str:
     def cell(i: int) -> str:
-        return f"CAST(round(CAST({vec_col}[{i + 1}] AS DOUBLE) * {scale}) AS BIGINT)"
+        return f"CAST(round(CAST(embedding[{i + 1}] AS DOUBLE) * {scale}) AS BIGINT)"
 
     sums = [f"CAST(count(*) AS BIGINT) AS n"]
     sums += [f"CAST(sum({cell(i)}) AS BIGINT) AS m_{i}" for i in range(dims)]
@@ -2325,15 +2096,13 @@ def pca_top_component(
     return v, eigval
 
 
-def project_onto(
-    emb: DataFrame, direction, vec_col: str = "embedding", out_col: str = "proj"
-) -> DataFrame:
+def project_onto(emb: DataFrame, direction, out_col: str = "proj") -> DataFrame:
     """Project each embedding onto a fixed direction (e.g. the top
     principal component) as a narrow JVM map — the direction is injected
     as repr'd double literals, so the fold is whole-stage-codegen with no
     Python in the path."""
     terms = " + ".join(
-        f"cast(element_at({vec_col}, {i + 1}) as double) * {float(x)!r}"
+        f"cast(element_at(embedding, {i + 1}) as double) * {float(x)!r}"
         for i, x in enumerate(direction)
     )
     return emb.withColumn(out_col, F.expr(terms))
@@ -2345,8 +2114,6 @@ def pq_rerank(
     books: list[list[list[float]]],
     k_short: int = 10,
     k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """PQ shortlist + EXACT re-rank — the production two-stage ANN serve
     path (FAISS's IndexIVFPQ + refine): ADC over the m-byte codes selects
@@ -2362,32 +2129,14 @@ def pq_rerank(
     (≡ DuckDB list_sum/list_zip, the proven cosine idiom). Output:
     (id_q, id_vec, score_adc, d_exact, rnk) ranked by exact distance.
     """
-    shortlist = pq_search_adc(emb, queries, books, k_short, id_col, vec_col)
-    q = queries.select(F.col(id_col).alias("id_q"), F.col(vec_col).alias("q_vec"))
-    c = emb.select(F.col(id_col).alias("id_vec"), F.col(vec_col).alias("c_vec"))
-    d_exact = F.expr(
-        "aggregate(zip_with(q_vec, c_vec,"
-        " (x, y) -> (cast(x as double) - cast(y as double))"
-        " * (cast(x as double) - cast(y as double))),"
-        " 0D, (acc, v) -> acc + v)"
-    )
     ex = (
-        shortlist.drop("rnk")
-        .join(F.broadcast(q), "id_q")
-        .join(c, "id_vec")
-        .withColumn("d_exact", d_exact.cast("double"))
+        pq_search_adc(emb, queries, books, k_short)
+        .join(F.broadcast(_queries(queries)), F.col("id_q") == F.col("q_id"))
+        .join(_corpus(emb), F.col("id_vec") == F.col("vec_id"))
+        .withColumn("d_exact", F.expr(L2.format(a="vec", b="q_vec")))
     )
-    w = Window.partitionBy("id_q").orderBy(F.asc("d_exact"), F.asc("id_vec"))
-    return (
-        ex.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("id_q").cast("bigint").alias("id_q"),
-            F.col("id_vec").cast("bigint").alias("id_vec"),
-            "score_adc",
-            "d_exact",
-            F.col("rnk").cast("bigint").alias("rnk"),
-        )
+    return _nearest(
+        ex, k, F.asc("d_exact"), "score_adc", "d_exact", ids=("id_q", "id_vec")
     )
 
 
@@ -2426,8 +2175,6 @@ def matryoshka_recall(
     queries: DataFrame,
     prefix_dims: list[int] = (8, 16, 32),
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Matryoshka prefix-dimension recall curve (Kusupati et al. 2022):
     recall@k of cosine search using only the FIRST d' coordinates, per
@@ -2438,46 +2185,55 @@ def matryoshka_recall(
     ann_recall over buckets, kmeans_recall_curve over nprobe, pq_recall
     over codebooks).
 
-    Each prefix run reuses :func:`cosine_topk` on sliced arrays (the
-    slice happens in the codegen'd fold — no array materialization
-    shuffle); ground truth is computed once and joined against every
-    prefix. Output: (dim_prefix, n_queries, hits, possible, recall).
+    Each prefix scores all pairs on sliced arrays (the slice happens in
+    the codegen'd fold — no array materialization shuffle); one ranking
+    per (dim_prefix, q_id) ranks every prefix at once, and one left join
+    of truth × prefixes counts the hits. Ground truth is the
+    full-dimension :func:`cosine_topk`. Output:
+    (dim_prefix, n_queries, hits, possible, recall).
     """
-    truth = (
-        cosine_topk(emb, queries, k, id_col, vec_col)
-        .select("q_id", "vec_id")
-        .localCheckpoint()
-    )
-    possible = truth.agg(
-        F.count_distinct("q_id").cast("bigint").alias("n_queries"),
-        F.count("*").cast("bigint").alias("possible"),
-    )
-    out = None
+    scored = None
     for d in prefix_dims:
-        sliced = emb.select(
-            F.col(id_col), F.expr(f"slice({vec_col}, 1, {d})").alias(vec_col)
+        prefix = F.slice("embedding", 1, d).alias("embedding")
+        part = _all_pairs(
+            _corpus(emb.select("vec_id", prefix)), _queries(queries.select("vec_id", prefix))
+        ).select(F.lit(d).alias("dim_prefix"), "q_id", "vec_id", F.expr(COS).alias("cos"))
+        scored = part if scored is None else scored.unionByName(part)
+    found = _topk(
+        scored, k, F.desc("cos"), F.asc("vec_id"), by=("dim_prefix", "q_id")
+    ).select("dim_prefix", "q_id", "vec_id", F.lit(1).alias("hit"))
+    level = F.explode(F.array(*[F.lit(d) for d in prefix_dims])).alias("dim_prefix")
+    per_level = (
+        cosine_topk(emb, queries, k)
+        .select("q_id", "vec_id", level)
+        .join(found, ["dim_prefix", "q_id", "vec_id"], "left")
+        .groupBy("dim_prefix")
+        .agg(
+            F.count_distinct("q_id").alias("n_queries"),
+            F.count("hit").alias("hits"),
+            F.count("*").alias("possible"),
         )
-        sq = queries.select(
-            F.col(id_col), F.expr(f"slice({vec_col}, 1, {d})").alias(vec_col)
+    )
+    # one row per prefix even when there are no queries
+    levels = emb.sparkSession.range(1).select(level)
+    return (
+        levels.join(per_level, "dim_prefix", "left")
+        .withColumns(
+            {
+                c: F.coalesce(c, F.lit(0)).cast("bigint")
+                for c in ("n_queries", "hits", "possible")
+            }
         )
-        approx = cosine_topk(sliced, sq, k, id_col, vec_col).select("q_id", "vec_id")
-        hits = truth.join(approx, ["q_id", "vec_id"]).agg(
-            F.count("*").cast("bigint").alias("hits")
+        .select(
+            F.col("dim_prefix").cast("int"),
+            "n_queries",
+            "hits",
+            "possible",
+            (F.col("hits").cast("double") / F.col("possible").cast("double")).alias(
+                "recall"
+            ),
         )
-        row = (
-            hits.crossJoin(F.broadcast(possible))
-            .select(
-                F.lit(d).cast("int").alias("dim_prefix"),
-                "n_queries",
-                "hits",
-                "possible",
-                (F.col("hits").cast("double") / F.col("possible").cast("double")).alias(
-                    "recall"
-                ),
-            )
-        )
-        out = row if out is None else out.union(row)
-    return out
+    )
 
 
 def oracle_matryoshka_recall(
@@ -2521,10 +2277,8 @@ def knn_hubness(
     emb: DataFrame,
     k: int = 5,
     bucket_dims: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Hubness audit of the ANN graph: the k-occurrence (in-degree)
+    """Hubness auditof the ANN graph: the k-occurrence (in-degree)
     distribution of :func:`knn_join` run corpus-to-corpus. Heavy right
     tails ("hub" vectors that appear in everyone's top-k) are the standard
     high-dimensionality pathology that silently degrades retrieval — this
@@ -2547,36 +2301,16 @@ def knn_hubness(
     cosine ONCE instead of twice; the mirrored cos is bit-identical
     (element-wise products and the norm product commute, the index-order
     sum is unchanged), so the declared output — and the oracle — are
-    untouched. A/B at sf0.5: 28.45s -> see BASELINE.md round-9.
+    untouched. Measured at sf0.5 (min-of-3, fresh process per side): 28.45 s
+    directed, 18.03 s mirrored, 15.87 s mirrored with the checkpoint pin
+    below (sf0.1: 4.16 → 3.02 → 2.68 s).
     Output: (k_occ, n_vectors).
     """
     if bucket_dims is None:
         bucket_dims = derive_bucket_dims(emb.count())
-    c = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        F.expr(NORM.format(a=vec_col)).alias("c_nrm"),
-        sign_bucket(vec_col, bucket_dims).alias("bucket"),
-    )
-    base = sign_bucket(vec_col, bucket_dims)
-    flips = [base]
-    for i in range(bucket_dims):
-        flips.append(
-            F.concat(
-                F.substring(base, 1, i),
-                F.when(F.substring(base, i + 1, 1) == "+", F.lit("-")).otherwise(
-                    F.lit("+")
-                ),
-                F.substring(base, i + 2, bucket_dims - i - 1),
-            )
-        )
-    q = emb.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.expr(NORM.format(a=vec_col)).alias("q_nrm"),
-        F.explode(F.array(*flips)).alias("bucket"),
-    )
-    dot = DOT.format(a="vec", b="q_vec")
+    c = _corpus(emb, _bucket(bucket_dims))
+    q = _queries(emb, _bucket(bucket_dims, flips=True))
+    keep = F.col("q_id") < F.col("vec_id")
     # localCheckpoint(eager=False): the frame feeds BOTH union
     # orientations — without it each branch recomputes the bucket join
     # (lineage duplication), the exact pattern the betweenness rework
@@ -2587,9 +2321,8 @@ def knn_hubness(
     # would instead pin the pre-AQE shuffle layout under the driver's plain
     # session.
     undirected = (
-        q.join(c, "bucket")
-        .filter(F.col("q_id") < F.col("vec_id"))
-        .withColumn("cos", F.expr(f"cast({dot} / (c_nrm * q_nrm) as double)"))
+        _cell_pairs(q, c, "bucket", keep)
+        .withColumn("cos", F.expr(COS))
         .select("q_id", "vec_id", "cos")
         .localCheckpoint(eager=False)
     )
@@ -2600,15 +2333,10 @@ def knn_hubness(
             "cos",
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    knn = (
-        knn_all.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("vec_id")
-    )
+    knn = _topk(knn_all, k, F.desc("cos"), F.asc("vec_id")).select("vec_id")
     indeg = knn.groupBy("vec_id").agg(F.count("*").cast("bigint").alias("k_occ"))
     allv = (
-        emb.select(F.col(id_col).alias("vec_id"))
+        emb.select(_vec_id())
         .join(indeg, "vec_id", "left")
         .select(F.coalesce(F.col("k_occ"), F.lit(0)).cast("bigint").alias("k_occ"))
     )
@@ -2635,8 +2363,6 @@ def mmr_topk(
     k: int = 5,
     pool: int = 50,
     lam: float = 0.7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Maximal Marginal Relevance: greedy diversified top-k —
     round r picks argmax λ·rel(d) − (1−λ)·max_{s∈selected} sim(d, s).
@@ -2655,28 +2381,8 @@ def mmr_topk(
 
     Output: (rnk, vec_id, relevance, mmr_score) — k rows.
     """
-    q = emb.filter(query_filter).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.expr(NORM.format(a=vec_col)).alias("q_nrm"),
-    )
-    cand = (
-        emb.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("vec"),
-            F.expr(NORM.format(a=vec_col)).alias("c_nrm"),
-        )
-        .join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
-        .withColumn(
-            "rel",
-            F.round(
-                F.expr(
-                    f"cast({DOT.format(a='vec', b='q_vec')} / (c_nrm * q_nrm) as double)"
-                ),
-                6,
-            ),
-        )
-        .select("vec_id", "vec", "rel")
+    cand = _all_pairs(_corpus(emb), _queries(emb.filter(query_filter))).select(
+        "vec_id", "vec", F.round(F.expr(COS), 6).alias("rel")
     )
     shortlist = (
         cand.orderBy(F.desc("rel"), F.asc("vec_id")).limit(pool).localCheckpoint()
@@ -2793,8 +2499,6 @@ def rrf_fusion(
     query_filter: str = "vec_id = 0",
     k: int = 20,
     kconst: int = 60,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Reciprocal Rank Fusion of two retrieval rankings for the same
     query — cosine top-k and squared-L2 top-k — the standard no-tuning
@@ -2806,21 +2510,9 @@ def rrf_fusion(
     pass; the fusion is a tiny full-outer join on the ≤2k shortlisted
     ids. Output: (vec_id, rank_cos, rank_l2, rrf).
     """
-    q = emb.filter(query_filter).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.expr(NORM.format(a=vec_col)).alias("q_nrm"),
-    )
-    c = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        F.expr(NORM.format(a=vec_col)).alias("c_nrm"),
-    )
-    scored = c.join(F.broadcast(q), F.col("vec_id") != F.col("q_id")).select(
+    scored = _all_pairs(_corpus(emb), _queries(emb.filter(query_filter))).select(
         "vec_id",
-        F.expr(
-            f"cast({DOT.format(a='vec', b='q_vec')} / (c_nrm * q_nrm) as double)"
-        ).alias("cos"),
+        F.expr(COS).alias("cos"),
         F.expr(L2.format(a="vec", b="q_vec")).alias("d2"),
     )
     w_cos = Window.orderBy(F.desc("cos"), F.asc("vec_id"))
@@ -2891,8 +2583,6 @@ def oracle_rrf_fusion(
 def label_centroid_drift(
     emb: DataFrame,
     label_col: str = "label",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Per-slice embedding drift: cosine between each label's centroid
     and the global centroid — the slice-skew detector (a label whose
@@ -2907,10 +2597,8 @@ def label_centroid_drift(
     scale). Output: (label, n_vecs, cos_to_global).
     """
     comp = emb.select(
-        F.col(label_col).alias("lbl"),
-        F.col(id_col).alias("id"),
-        F.posexplode(F.col(vec_col)).alias("pos", "x"),
-    ).select("lbl", "id", "pos", F.expr("cast(round(x * 1e9) as bigint)").alias("xq"))
+        F.col(label_col).alias("lbl"), F.posexplode("embedding").alias("pos", "x")
+    ).select("lbl", "pos", F.expr("cast(round(x * 1e9) as bigint)").alias("xq"))
     per_label = comp.groupBy("lbl", "pos").agg(F.sum("xq").cast("bigint").alias("sv"))
     global_ = per_label.groupBy("pos").agg(F.sum("sv").cast("bigint").alias("gv"))
     nvec = emb.groupBy(F.col(label_col).alias("lbl")).agg(
@@ -2971,8 +2659,6 @@ def kcenter_select(
     emb: DataFrame,
     k: int = 5,
     pool: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Greedy k-center (farthest-point-first) coreset selection: start
     from the deterministic anchor (lowest id in the pool), then each
@@ -2988,7 +2674,7 @@ def kcenter_select(
     by vec_id). Output: (rnk, vec_id, min_dist_to_prior).
     """
     shortlist = (
-        emb.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec"))
+        emb.select(_vec_id(), F.col("embedding").alias("vec"))
         .orderBy(F.asc("vec_id"))
         .limit(pool)
         .localCheckpoint()
@@ -3080,8 +2766,6 @@ def threshold_join(
     emb: DataFrame,
     threshold: float = 0.3,
     bucket_dims: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Similarity RANGE self-join: every pair with cosine >= threshold
     whose sign buckets are within Hamming distance 1 — the range-join
@@ -3095,8 +2779,9 @@ def threshold_join(
     ``bucket_dims`` defaults to the size-derived knob
     (:func:`derive_bucket_dims`: dims = ceil(log2(ceil(N/40)))) so the
     per-bucket row count — and with it the pair bill per row — stays
-    constant as the corpus grows; the pinned-dims variant was measured
-    ×15.7 at ×5 data (SCALE.md). A pair meets at exactly ONE probe (the
+    constant as the corpus grows; with dims pinned at 6 the query took
+    ×15.7 the time at ×5 data (sf0.1 → sf0.5), against ×4.9 at dims 8. A
+    pair meets at exactly ONE probe (the
     candidate side has one bucket), and the q_id < vec_id filter keeps
     each unordered pair once, so no dedup stage. The cosine filter runs on bit-identical
     doubles (fixed-order fold, both engines), so >= is portable — the
@@ -3108,45 +2793,7 @@ def threshold_join(
     """
     if bucket_dims is None:
         bucket_dims = derive_bucket_dims(emb.count())
-    c = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        F.expr(NORM.format(a=vec_col)).alias("c_nrm"),
-        sign_bucket(vec_col, bucket_dims).alias("bucket"),
-    )
-    base = sign_bucket(vec_col, bucket_dims)
-    flips = [base]
-    for i in range(bucket_dims):
-        flips.append(
-            F.concat(
-                F.substring(base, 1, i),
-                F.when(F.substring(base, i + 1, 1) == "+", F.lit("-")).otherwise(
-                    F.lit("+")
-                ),
-                F.substring(base, i + 2, bucket_dims - i - 1),
-            )
-        )
-    q = emb.select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.expr(NORM.format(a=vec_col)).alias("q_nrm"),
-        F.explode(F.array(*flips)).alias("bucket"),
-    )
-    # norms once per row (the knn_join move) — per-pair cost is the dot only
-    return (
-        q.join(c, "bucket")
-        .filter(F.col("q_id") < F.col("vec_id"))
-        .withColumn(
-            "cos",
-            F.expr(f"cast({DOT.format(a='vec', b='q_vec')} / (c_nrm * q_nrm) as double)"),
-        )
-        .filter(F.col("cos") >= threshold)
-        .select(
-            F.col("q_id").cast("bigint").alias("id_a"),
-            F.col("vec_id").cast("bigint").alias("id_b"),
-            "cos",
-        )
-    )
+    return _bucket_range_join(emb, threshold, bucket_dims, flips=True)
 
 
 def oracle_threshold_join(
@@ -3187,14 +2834,6 @@ def oracle_threshold_join(
 # like the rest of this module).
 # ---------------------------------------------------------------------------
 
-SQDIST = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> (cast(x as double) - cast(y as double))"
-    " * (cast(x as double) - cast(y as double))), 0D, (acc, v) -> acc + v)"
-)
-ORACLE_SQDIST = (
-    "list_sum(list_transform(list_zip(CAST({a} AS DOUBLE[]), CAST({b} AS DOUBLE[])), "
-    "p -> (p[1] - p[2]) * (p[1] - p[2])))"
-)
 _RERANK_LEAD_DIMS = 8  # truncated-dim dot: the matryoshka cheap feature
 
 
@@ -3205,8 +2844,6 @@ def rerank_linear(
     k: int = 5,
     n_iter: int = 6,
     label_top: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Retrieve -> learned rerank -> select.
 
@@ -3234,24 +2871,9 @@ def rerank_linear(
 
     Output: (q_id, vec_id, cos, score, rnk) — k rows per query.
     """
-    q = emb.filter(query_filter).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.expr(NORM.format(a=vec_col)).alias("q_nrm"),
-    )
-    c = emb.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("vec"),
-        F.expr(NORM.format(a=vec_col)).alias("c_nrm"),
-    )
-    dot = DOT.format(a="vec", b="q_vec")
-    pairs = (
-        c.join(F.broadcast(q), F.col("vec_id") != F.col("q_id"))
-        .withColumn("cos", F.expr(f"cast({dot} / (c_nrm * q_nrm) as double)"))
-    )
-    wr = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    cand = pairs.withColumn("crnk", F.row_number().over(wr)).filter(
-        F.col("crnk") <= pool
+    pairs = _all_pairs(_corpus(emb), _queries(emb.filter(query_filter)))
+    cand = _topk(
+        pairs.withColumn("cos", F.expr(COS)), pool, F.desc("cos"), F.asc("vec_id"), rnk="crnk"
     )
     lead_dot = DOT.format(
         a=f"slice(vec, 1, {_RERANK_LEAD_DIMS})",
@@ -3259,13 +2881,12 @@ def rerank_linear(
     )
     lead_na = NORM.format(a=f"slice(vec, 1, {_RERANK_LEAD_DIMS})")
     lead_nb = NORM.format(a=f"slice(q_vec, 1, {_RERANK_LEAD_DIMS})")
-    d2 = SQDIST.format(a="vec", b="q_vec")
-    wl = Window.partitionBy("q_id").orderBy(F.asc("_d2"), F.asc("vec_id"))
+    d2 = L2.format(a="vec", b="q_vec")
     feats = (
         cand.withColumn("_d2", F.round(F.expr(f"cast({d2} as double)"), 6))
         .withColumn(
             "y",
-            F.when(F.row_number().over(wl) <= label_top, F.lit(1.0)).otherwise(
+            F.when(_rank(F.asc("_d2"), F.asc("vec_id")) <= label_top, F.lit(1.0)).otherwise(
                 F.lit(0.0)
             ),
         )
@@ -3283,19 +2904,8 @@ def rerank_linear(
     from .textops import lr_z_expr, train_linear_weights
 
     w, _ = train_linear_weights(feats, n_iter)
-    ws = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("vec_id"))
-    return (
-        feats.withColumn("score", F.round(F.expr(lr_z_expr(w)), 6))
-        .withColumn("rnk", F.row_number().over(ws))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("q_id").cast("bigint"),
-            F.col("vec_id").cast("bigint"),
-            "cos",
-            "score",
-            F.col("rnk").cast("bigint"),
-        )
-    )
+    scored = feats.withColumn("score", F.round(F.expr(lr_z_expr(w)), 6))
+    return _nearest(scored, k, F.desc("score"), "cos", "score")
 
 
 def oracle_rerank_linear(
@@ -3317,7 +2927,7 @@ def oracle_rerank_linear(
     )
     lead_nc = ORACLE_NORM.format(a=f"c.embedding[1:{lead}]")
     lead_nq = ORACLE_NORM.format(a=f"q.embedding[1:{lead}]")
-    d2 = ORACLE_SQDIST.format(a="c.embedding", b="q.embedding")
+    d2 = ORACLE_L2.format(a="c.embedding", b="q.embedding")
     z = "(w.b + w.a1 * f.x1 + w.a2 * f.x2 + w.a3 * f.x3)"
     return f"""
     WITH qv AS MATERIALIZED (

@@ -4762,7 +4762,7 @@ def evt_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "sim_embedding_cov",
-    oracle_embedding_moments("embeddings", "embedding", dims=16, scale=10_000),
+    oracle_embedding_moments("embeddings", dims=16, scale=10_000),
     doc="EXACT second-moment matrix of the leading 16 embedding dims as "
         "scaled-integer sums (fixed-point 1e4): one wide map-side-combined "
         "aggregation (single ~150-cell row per partition shuffles, never "
@@ -4774,7 +4774,7 @@ def sim_embedding_cov(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import embedding_moments
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return embedding_moments(emb, "embedding", dims=16, scale=10_000)
+    return embedding_moments(emb, dims=16, scale=10_000)
 
 
 from ..functions import oracle_hash32

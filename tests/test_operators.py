@@ -2432,11 +2432,9 @@ def test_pq_fit_joint_matches_sequential(spark):
     sequential = []
     for s in range(m):
         sliced = emb.select(
-            F.col("vec_id"), F.slice(F.col("embedding"), s * sub + 1, sub).alias("sub")
+            F.col("vec_id"), F.slice(F.col("embedding"), s * sub + 1, sub).alias("embedding")
         )
-        sequential.append(
-            similarity.kmeans_fit(sliced, k=k, n_iter=n_iter, vec_col="sub")
-        )
+        sequential.append(similarity.kmeans_fit(sliced, k=k, n_iter=n_iter))
     joint = similarity.pq_fit(emb, m=m, k=k, n_iter=n_iter, dim=dim)
     assert joint == sequential  # exact float equality, not approx
 

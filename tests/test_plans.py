@@ -143,8 +143,7 @@ def test_registry_wide_plan_audit(spark):
         "q15_partitioned_write", "src_bucketed_join", "bench_terasort_big",
         "src_mapfile_lookup", "txt_bpe_merges", "grf_kcore", "dd_semdedup",
         "grf_hits", "grf_ppr", "smp_resample", "evt_markov_attribution",
-        "evt_concurrency", "grf_walks", "sim_matryoshka_recall",
-        "txt_fertility",
+        "evt_concurrency", "grf_walks", "txt_fertility",
         # fixture write / snapshot commits / cc label propagation at build
         "src_parquet_stats", "src_snapshot_compact", "evt_identity_stitch",
         "src_copybook",  # distributed fixture write action at build time
@@ -271,9 +270,9 @@ def test_semdedup_pairwise_is_cluster_equi_join(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
-    # the precomputed norms must be join INPUTS (na/nb attribute refs below
-    # the join), not recomputed inside the per-pair cosine expression
-    assert "na#" in plan and "nb#" in plan
+    # the precomputed norms must be join INPUTS (c_nrm/q_nrm attribute refs
+    # below the join), not recomputed inside the per-pair cosine expression
+    assert "c_nrm#" in plan and "q_nrm#" in plan
 
 
 def test_partitioned_write_prunes_partitions(spark, tmp_path):

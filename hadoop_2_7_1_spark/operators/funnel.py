@@ -1,8 +1,14 @@
-"""Event-sequence analytics: conversion funnels and cohort retention.
+"""Event-sequence analytics: conversion funnels, cohort retention, A/B
+readouts and journey models.
 
-Both are pure keyed-aggregate pipelines — every shuffle keys on user_id (or
+Most are pure keyed-aggregate pipelines — every shuffle keys on user_id (or
 the cohort pair), so partitions stay balanced whenever user cardinality
 exceeds core count, which is always true at corpus scale.
+
+Every operator reads the events table's own columns, ``event_id``,
+``user_id``, ``event_type``, ``ts`` and ``value``, and only those it uses.
+Values become exact cents through ``temporal._cents``; gap sessions come
+from :func:`_sessions`.
 """
 
 from __future__ import annotations
@@ -10,14 +16,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .temporal import _cents
+
+
+def _sessions(pts: DataFrame, gap_s: int) -> DataFrame:
+    """Adds ``sid``, the user's session number, to ``(u, x)`` rows with
+    ``x`` in epoch seconds: a session opens at a user's first event and
+    after every gap of more than ``gap_s`` seconds (lag, flag, running
+    sum over one user-keyed sort). Rows tied on ``x`` are 0 s apart, so
+    every row gets the same session whatever order the tie takes."""
+    w_u = Window.partitionBy("u").orderBy("x")
+    return pts.withColumn("prev", F.lag("x").over(w_u)).withColumn(
+        "sid",
+        F.sum(
+            F.when(
+                F.col("prev").isNull() | (F.col("x") - F.col("prev") > gap_s), 1
+            ).otherwise(0)
+        ).over(w_u.rowsBetween(Window.unboundedPreceding, 0)),
+    )
+
 
 def funnel(
-    events: DataFrame,
-    steps: list[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    within: str | None = None,
+    events: DataFrame, steps: list[str], within: str | None = None
 ) -> DataFrame:
     """Ordered conversion funnel: a user reaches step k at the earliest
     event of type steps[k] strictly after their step-(k-1) time — and,
@@ -28,15 +48,18 @@ def funnel(
     Output: (stage, step, n_users) — stage is 1-based. Each stage is one
     filter + user-keyed min + co-partitioned join; nothing is ever sorted
     per user, so there is no per-user state beyond two timestamps (entry
-    + previous step). Each stage's frontier is checkpointed so stage k's
-    count does not re-execute stages 1..k-1's scans (k scans total,
-    not k²/2).
+    + previous step). The frame is a plan: building it runs no job. Stage
+    k's count re-plans the joins of stages 2..k-1 but not their scans:
+    exchange reuse serves them. The executed plan of the 3-step funnel
+    scans ``events`` 4 times — once per step, plus once for the stage-1
+    count, which reads only ``user_id`` — and holds 2 ``ReusedExchange``
+    nodes (stage 3 reuses stage 2's step broadcast and stage-1 shuffle).
     """
     reached = None
     stage_counts = []
     for i, step in enumerate(steps):
-        sel = events.filter(F.col(type_col) == step).select(
-            F.col(user_col).alias("u"), F.col(ts_col).alias("t")
+        sel = events.filter(F.col("event_type") == step).select(
+            F.col("user_id").alias("u"), F.col("ts").alias("t")
         )
         if reached is None:
             reached = (
@@ -49,7 +72,6 @@ def funnel(
             if within is not None:
                 nxt = nxt.filter(F.expr(f"t <= t0 + INTERVAL {within}"))
             reached = nxt.groupBy("u", "t0").agg(F.min("t").alias("t_prev"))
-        reached = reached.localCheckpoint()
         stage_counts.append(
             reached.agg(
                 F.lit(i + 1).cast("bigint").alias("stage"),
@@ -93,12 +115,7 @@ def oracle_funnel(table: str, steps: list[str], within: str | None = None) -> st
     return f"WITH {', '.join(ctes)} {selects}"
 
 
-def retention(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    period: str = "month",
-) -> DataFrame:
+def retention(events: DataFrame, period: str = "month") -> DataFrame:
     """Cohort retention: users grouped by the period of their first event;
     for each (cohort, activity period), how many of them were active.
 
@@ -106,11 +123,11 @@ def retention(
     one (cohort, period)-keyed count — the cohort matrix itself is
     periods², metadata-sized.
     """
-    cohort = events.groupBy(F.col(user_col).alias("u")).agg(
-        F.date_trunc(period, F.min(ts_col)).alias("cohort_ts")
+    cohort = events.groupBy(F.col("user_id").alias("u")).agg(
+        F.date_trunc(period, F.min("ts")).alias("cohort_ts")
     )
     active = events.select(
-        F.col(user_col).alias("u"), F.date_trunc(period, F.col(ts_col)).alias("active_ts")
+        F.col("user_id").alias("u"), F.date_trunc(period, F.col("ts")).alias("active_ts")
     ).distinct()
     return (
         active.join(cohort, "u")
@@ -134,16 +151,9 @@ def oracle_retention(table: str, period: str = "month") -> str:
     """
 
 
-def ohlc_bars(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    width: str = "hour",
-    id_col: str = "event_id",
-) -> DataFrame:
+def ohlc_bars(events: DataFrame, width: str = "hour") -> DataFrame:
     """Time-series OHLC rollup: per (key, time bucket) the opening/closing
-    values (first/last by event time, ``id_col`` tie-break) plus high, low,
+    values (first/last by event time, ``event_id`` tie-break) plus high, low,
     count and a decimal-accumulated volume — the hypertable
     continuous-aggregate shape.
 
@@ -153,22 +163,22 @@ def ohlc_bars(
     sort. At 100 TB the bucket key is (key, hour) — naturally bounded
     cardinality, no skew salt needed.
     """
-    w_sort = Window.partitionBy("bucket", key_col).orderBy(ts_col, id_col)
-    w_all = Window.partitionBy("bucket", key_col)
+    w_sort = Window.partitionBy("bucket", "event_type").orderBy("ts", "event_id")
+    w_all = Window.partitionBy("bucket", "event_type")
     b = (
-        events.withColumn("bucket", F.date_trunc(width, F.col(ts_col)))
+        events.withColumn("bucket", F.date_trunc(width, F.col("ts")))
         .withColumn("ra", F.row_number().over(w_sort))
         .withColumn("nn", F.count("*").over(w_all))
     )
-    return b.groupBy("bucket", key_col).agg(
-        F.min(F.when(F.col("ra") == 1, F.col(value_col))).cast("double").alias("open"),
-        F.max(F.col(value_col)).cast("double").alias("high"),
-        F.min(F.col(value_col)).cast("double").alias("low"),
-        F.min(F.when(F.col("ra") == F.col("nn"), F.col(value_col)))
+    return b.groupBy("bucket", "event_type").agg(
+        F.min(F.when(F.col("ra") == 1, F.col("value"))).cast("double").alias("open"),
+        F.max(F.col("value")).cast("double").alias("high"),
+        F.min(F.col("value")).cast("double").alias("low"),
+        F.min(F.when(F.col("ra") == F.col("nn"), F.col("value")))
         .cast("double")
         .alias("close"),
         F.count("*").cast("bigint").alias("n"),
-        F.sum(F.col(value_col).cast("decimal(38,6)")).cast("double").alias("volume"),
+        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("volume"),
     )
 
 
@@ -200,12 +210,7 @@ def oracle_ohlc_bars(
     """
 
 
-def trend_ols(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def trend_ols(events: DataFrame) -> DataFrame:
     """Per-group ordinary-least-squares trend (slope per second + intercept)
     of value over time, from exact decimal sufficient statistics.
 
@@ -218,14 +223,14 @@ def trend_ols(
     itself costs nothing beyond the sums.
     """
     x0 = events.agg(
-        F.min(F.unix_timestamp(ts_col)).alias("x0")
+        F.min(F.unix_timestamp("ts")).alias("x0")
     )
     rows = events.crossJoin(F.broadcast(x0)).select(
-        F.col(key_col),
-        (F.unix_timestamp(ts_col) - F.col("x0")).alias("xr"),
-        F.col(value_col).alias("yr"),
+        F.col("event_type"),
+        (F.unix_timestamp("ts") - F.col("x0")).alias("xr"),
+        F.col("value").alias("yr"),
     )
-    g = rows.groupBy(key_col).agg(
+    g = rows.groupBy("event_type").agg(
         F.count("*").cast("decimal(10,0)").alias("n"),
         F.sum(F.col("xr").cast("decimal(18,0)")).cast("decimal(18,0)").alias("sx"),
         F.sum((F.col("xr") * F.col("xr")).cast("decimal(28,0)"))
@@ -248,7 +253,7 @@ def trend_ols(
     slope = F.round((n_d * sxy_d - sx_d * sy_d) / (n_d * sxx_d - sx_d * sx_d), 6)
     intercept = F.round((sy_d - slope * sx_d) / n_d, 6)
     return g.select(
-        key_col,
+        "event_type",
         F.col("n").cast("bigint").alias("n"),
         slope.alias("slope_per_sec"),
         intercept.alias("intercept"),
@@ -302,12 +307,7 @@ def oracle_trend_ols(
 # ---------------------------------------------------------------------------
 
 def ab_test(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    value_col: str = "value",
-    convert_type: str = "purchase",
-    min_count: int = 1,
+    events: DataFrame, convert_type: str = "purchase", min_count: int = 1
 ) -> DataFrame:
     """Experiment readout over an event stream: users split into variants by
     ``user_id % 2``, then per-metric significance tests.
@@ -327,11 +327,11 @@ def ab_test(
     rollup ever leaves the per-user aggregate.
     """
     per_user = (
-        events.groupBy(F.col(user_col).alias("uid"))
+        events.groupBy(F.col("user_id").alias("uid"))
         .agg(
             F.when(
                 F.sum(
-                    F.when(F.col(type_col) == convert_type, F.lit(1)).otherwise(
+                    F.when(F.col("event_type") == convert_type, F.lit(1)).otherwise(
                         F.lit(0)
                     )
                 )
@@ -341,10 +341,9 @@ def ab_test(
             .otherwise(F.lit(0))
             .alias("conv"),
             F.sum(
-                F.when(
-                    F.col(type_col) == convert_type,
-                    F.expr(f"cast(round({value_col} * 100) as bigint)"),
-                ).otherwise(F.lit(0).cast("bigint"))
+                F.when(F.col("event_type") == convert_type, _cents()).otherwise(
+                    F.lit(0).cast("bigint")
+                )
             ).alias("cents"),
         )
         .withColumn("variant", (F.col("uid") % 2).cast("int"))
@@ -496,12 +495,11 @@ def attribution_linear(
     one per-conversion rank and one channel rollup.
     Output: (channel, n_conversions, credited_cents).
     """
-    cents = F.expr("cast(round(value * 100) as bigint)")
     conv = events.filter(F.col("event_type") == convert_type).select(
         F.col("user_id").alias("uid"),
         F.col("ts").alias("ts_c"),
         F.col("event_id").alias("cid"),
-        cents.alias("cents"),
+        _cents().alias("cents"),
     )
     touch = events.filter(F.col("event_type").isin(*touch_types)).select(
         F.col("user_id").alias("t_uid"),
@@ -595,12 +593,7 @@ def oracle_attribution_linear(
     """
 
 
-def survival_km(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    censor_days: int = 7,
-) -> DataFrame:
+def survival_km(events: DataFrame, censor_days: int = 7) -> DataFrame:
     """Kaplan-Meier survival estimate of user lifetime — the standard
     right-censored retention curve (Kaplan & Meier, JASA 1958): users whose
     last activity is within ``censor_days`` of the corpus end are censored
@@ -622,7 +615,7 @@ def survival_km(
     log_s, survival).
     """
     days = events.select(
-        F.col(user_col).alias("u"), F.to_date(F.col(ts_col)).alias("d")
+        F.col("user_id").alias("u"), F.to_date(F.col("ts")).alias("d")
     )
     spans = days.groupBy("u").agg(
         F.min("d").alias("first_d"), F.max("d").alias("last_d")
@@ -744,11 +737,7 @@ def oracle_survival_km(
 
 
 def burst_flags(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    window_s: int = 60,
-    threshold: int = 5,
+    events: DataFrame, window_s: int = 60, threshold: int = 5
 ) -> DataFrame:
     """Burst / bot-rate screen: each user's PEAK event count inside any
     sliding ``window_s``-second window (anchored at each event — the exact
@@ -762,8 +751,8 @@ def burst_flags(
     (user_id, n_events, peak_rate, is_burst).
     """
     pts = events.select(
-        F.col(user_col).alias("u"),
-        F.expr(f"cast({ts_col} as bigint)").alias("x"),
+        F.col("user_id").alias("u"),
+        F.expr("cast(ts as bigint)").alias("x"),
     )
     w = Window.partitionBy("u").orderBy("x").rangeBetween(-(window_s - 1), 0)
     cnt = pts.withColumn("c", F.count("*").over(w))
@@ -771,7 +760,7 @@ def burst_flags(
         F.count("*").cast("bigint").alias("n_events"),
         F.max("c").cast("bigint").alias("peak_rate"),
     ).select(
-        F.col("u").alias(user_col),
+        F.col("u").alias("user_id"),
         "n_events",
         "peak_rate",
         (F.col("peak_rate") >= threshold).alias("is_burst"),
@@ -802,12 +791,7 @@ def oracle_burst_flags(
     """
 
 
-def peak_concurrency(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    gap_s: int = 1800,
-) -> DataFrame:
+def peak_concurrency(events: DataFrame, gap_s: int = 1800) -> DataFrame:
     """Peak number of SIMULTANEOUSLY active sessions — the capacity
     question ("how many seats were in use at the worst moment?") answered
     exactly by a sweep line over session boundaries: sessionize (gap
@@ -827,24 +811,11 @@ def peak_concurrency(
     from ..operators.partitioning import two_phase_prefix
 
     pts = events.select(
-        F.col(user_col).alias("u"),
-        F.expr(f"cast({ts_col} as bigint)").alias("x"),
+        F.col("user_id").alias("u"),
+        F.expr("cast(ts as bigint)").alias("x"),
     )
-    w_u = Window.partitionBy("u").orderBy("x")
     sess = (
-        pts.withColumn("prev", F.lag("x").over(w_u))
-        .withColumn(
-            "new_s",
-            F.when(
-                F.col("prev").isNull() | (F.col("x") - F.col("prev") > gap_s), 1
-            ).otherwise(0),
-        )
-        .withColumn(
-            "sid",
-            F.sum("new_s").over(
-                w_u.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-        )
+        _sessions(pts, gap_s)
         .groupBy("u", "sid")
         .agg(F.min("x").alias("s_start"), F.max("x").alias("s_end"))
     )
@@ -908,9 +879,7 @@ def oracle_peak_concurrency(
     """
 
 
-def new_vs_returning(
-    events: DataFrame, user_col: str = "user_id", ts_col: str = "ts"
-) -> DataFrame:
+def new_vs_returning(events: DataFrame) -> DataFrame:
     """Daily new-vs-returning growth report — the first dashboard every
     product ships: per day, active users, first-seen-today users,
     returning users, and the running total of distinct users ever seen
@@ -923,7 +892,7 @@ def new_vs_returning(
     integers. Output: (day, n_active, n_new, n_returning, cum_users).
     """
     ud = events.select(
-        F.col(user_col).alias("u"), F.date_trunc("day", F.col(ts_col)).alias("day")
+        F.col("user_id").alias("u"), F.date_trunc("day", F.col("ts")).alias("day")
     ).distinct()
     first = ud.groupBy("u").agg(F.min("day").alias("first_day"))
     active = ud.groupBy("day").agg(F.count("*").cast("bigint").alias("n_active"))
@@ -973,8 +942,6 @@ def markov_attribution(
     events: DataFrame,
     channels: list[str],
     conv_type: str = "purchase",
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     gap_s: int = 1800,
     steps: int = 8,
 ) -> DataFrame:
@@ -1005,20 +972,12 @@ def markov_attribution(
     (channel, p_base, p_removed, removal_effect, attribution_share).
     """
     pts = events.select(
-        F.col(user_col).alias("u"),
-        F.expr(f"cast({ts_col} as bigint)").alias("x"),
+        F.col("user_id").alias("u"),
+        F.expr("cast(ts as bigint)").alias("x"),
         F.col("event_id").alias("eid"),
         F.col("event_type").alias("t"),
     )
-    w_u = Window.partitionBy("u").orderBy("x", "eid")
-    sess = pts.withColumn("prev", F.lag("x").over(w_u)).withColumn(
-        "sid",
-        F.sum(
-            F.when(
-                F.col("prev").isNull() | (F.col("x") - F.col("prev") > gap_s), 1
-            ).otherwise(0)
-        ).over(w_u.rowsBetween(Window.unboundedPreceding, 0)),
-    )
+    sess = _sessions(pts, gap_s)
     w_s = Window.partitionBy("u", "sid").orderBy("x", "eid")
     w_sf = w_s.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     pos = sess.withColumn("pos", F.row_number().over(w_s)).withColumn(
@@ -1276,11 +1235,7 @@ def oracle_markov_attribution(
     return sql
 
 
-def pareto_tiers(
-    events: DataFrame,
-    user_col: str = "user_id",
-    tiers: list[int] = (1, 10, 50),
-) -> DataFrame:
+def pareto_tiers(events: DataFrame, tiers: list[int] = (1, 10, 50)) -> DataFrame:
     """Activity-concentration (Pareto) report: what share of all events
     comes from the top 1% / 10% / 50% most active users — the
     "80/20 rule" readout behind capacity planning, abuse review, and
@@ -1294,7 +1249,7 @@ def pareto_tiers(
     global_sort_with_rank). All outputs exact integers plus one rounded
     ratio. Output: (tier_pct, n_users_tier, n_events_tier, pct_events).
     """
-    per_user = events.groupBy(F.col(user_col).alias("u")).agg(
+    per_user = events.groupBy(F.col("user_id").alias("u")).agg(
         F.count("*").cast("bigint").alias("n")
     )
     w = Window.orderBy(F.col("n").desc(), F.col("u"))
@@ -1347,12 +1302,7 @@ def oracle_pareto_tiers(
     """
 
 
-def transition_entropy(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def transition_entropy(events: DataFrame) -> DataFrame:
     """Journey predictability: Shannon entropy of the next-event
     distribution per current state — low entropy = scripted/funnel-like
     behavior (or a bot), high entropy = exploratory. The sequence-level
@@ -1365,10 +1315,10 @@ def transition_entropy(
     reports the normalized entropy H / ln(k) over k observed successors.
     Output: (state, n_out, n_next, entropy, norm_entropy).
     """
-    w = Window.partitionBy(user_col).orderBy(ts_col, "event_id")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = events.select(
-        F.col(type_col).alias("cur"),
-        F.lead(type_col).over(w).alias("nxt"),
+        F.col("event_type").alias("cur"),
+        F.lead("event_type").over(w).alias("nxt"),
     ).filter(F.col("nxt").isNotNull())
     counts = seq.groupBy("cur", "nxt").agg(F.count("*").cast("bigint").alias("n"))
     tot = counts.groupBy("cur").agg(
@@ -1436,11 +1386,7 @@ def oracle_transition_entropy(
 
 
 def ab_chisq(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    convert_type: str = "purchase",
-    min_count: int = 1,
+    events: DataFrame, convert_type: str = "purchase", min_count: int = 1
 ) -> DataFrame:
     """Pearson chi-square independence test on the conversion 2×2 — the
     categorical sibling of :func:`ab_test`'s z-tests: variants split by
@@ -1452,9 +1398,9 @@ def ab_chisq(
 
     Output: (metric, n_users, conv_a, n_a, conv_b, n_b, chi2, significant).
     """
-    per_user = events.groupBy(F.col(user_col).alias("uid")).agg(
+    per_user = events.groupBy(F.col("user_id").alias("uid")).agg(
         F.when(
-            F.sum(F.when(F.col(type_col) == convert_type, 1).otherwise(0)) >= min_count,
+            F.sum(F.when(F.col("event_type") == convert_type, 1).otherwise(0)) >= min_count,
             F.lit(1),
         )
         .otherwise(F.lit(0))
@@ -1556,11 +1502,7 @@ _Z_BETA = 0.841621
 
 
 def ab_power(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    convert_type: str = "purchase",
-    min_count: int = 1,
+    events: DataFrame, convert_type: str = "purchase", min_count: int = 1
 ) -> DataFrame:
     """Experiment-design readout for the A/B harness: observed conversion
     rates per variant (user_id % 2, the evt_ab_test assignment), the
@@ -1576,9 +1518,9 @@ def ab_power(
 
     Output: (metric, n_a, p_a, n_b, p_b, delta, mde, required_n_per_arm).
     """
-    per_user = events.groupBy(F.col(user_col).alias("uid")).agg(
+    per_user = events.groupBy(F.col("user_id").alias("uid")).agg(
         F.when(
-            F.sum(F.when(F.col(type_col) == convert_type, 1).otherwise(0)) >= min_count,
+            F.sum(F.when(F.col("event_type") == convert_type, 1).otherwise(0)) >= min_count,
             F.lit(1),
         )
         .otherwise(F.lit(0))
@@ -1661,9 +1603,7 @@ def oracle_ab_power(
     """
 
 
-def srm_check(
-    events: DataFrame, user_col: str = "user_id"
-) -> DataFrame:
+def srm_check(events: DataFrame) -> DataFrame:
     """Sample Ratio Mismatch guardrail: chi-square goodness-of-fit of the
     observed variant split (user_id % 2) against the designed 50/50 —
     THE first check on any experiment readout; a significant SRM
@@ -1673,7 +1613,7 @@ def srm_check(
     X² = (n_a − n_b)² / (n_a + n_b): exact integers, one division,
     df=1 critical constant. Output: (metric, n_a, n_b, chi2, srm_detected).
     """
-    users = events.select(F.col(user_col).alias("uid")).distinct()
+    users = events.select(F.col("user_id").alias("uid")).distinct()
     cells = users.agg(
         F.sum(F.when(F.col("uid") % 2 == 0, 1).otherwise(0)).cast("bigint").alias("n_a"),
         F.sum(F.when(F.col("uid") % 2 == 1, 1).otherwise(0)).cast("bigint").alias("n_b"),
@@ -1707,9 +1647,7 @@ def oracle_srm_check(table: str, user_col: str = "user_id") -> str:
     """
 
 
-def stickiness(
-    events: DataFrame, user_col: str = "user_id", ts_col: str = "ts"
-) -> DataFrame:
+def stickiness(events: DataFrame) -> DataFrame:
     """DAU/MAU stickiness per calendar month — the canonical product-
     engagement ratio: average daily active users over monthly active
     users (1.0 = everyone active every day).
@@ -1719,9 +1657,9 @@ def stickiness(
     Output: (month, n_days, mau, avg_dau, stickiness).
     """
     base = events.select(
-        F.col(user_col).alias("uid"),
-        F.expr(f"date_trunc('day', {ts_col})").alias("d"),
-        F.expr(f"date_trunc('month', {ts_col})").alias("m"),
+        F.col("user_id").alias("uid"),
+        F.expr("date_trunc('day', ts)").alias("d"),
+        F.expr("date_trunc('month', ts)").alias("m"),
     )
     dau = base.groupBy("m", "d").agg(F.countDistinct("uid").cast("bigint").alias("dau"))
     per_month = dau.groupBy("m").agg(
@@ -1775,12 +1713,7 @@ def oracle_stickiness(
 
 
 def bot_flags(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    burst_threshold: int = 5,
-    rapid_ms: int = 1000,
+    events: DataFrame, burst_threshold: int = 5, rapid_ms: int = 1000
 ) -> DataFrame:
     """Bot/abuse screening per user: peak events-per-minute and the count
     of sub-second consecutive gaps — the two superhuman-rate signals a
@@ -1793,9 +1726,9 @@ def bot_flags(
     Output: (user_id, n_events, peak_per_minute, n_rapid, is_bot).
     """
     base = events.select(
-        F.col(user_col).alias("uid"),
-        F.expr(f"cast(unix_millis({ts_col}) as bigint)").alias("tms"),
-        F.col(id_col).alias("eid"),
+        F.col("user_id").alias("uid"),
+        F.expr("cast(unix_millis(ts) as bigint)").alias("tms"),
+        F.col("event_id").alias("eid"),
     )
     per_min = (
         base.withColumn("minute", F.expr("tms div 60000"))
@@ -1817,7 +1750,7 @@ def bot_flags(
     return (
         per_min.join(rapid, "uid", "left")
         .select(
-            F.col("uid").alias(user_col),
+            F.col("uid").alias("user_id"),
             "n_events",
             "peak_per_minute",
             F.coalesce(F.col("n_rapid"), F.lit(0)).cast("bigint").alias("n_rapid"),
@@ -1868,13 +1801,7 @@ def oracle_bot_flags(
     """
 
 
-def ratio_metric_ci(
-    events: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    value_col: str = "value",
-    numer_type: str = "purchase",
-) -> DataFrame:
+def ratio_metric_ci(events: DataFrame, numer_type: str = "purchase") -> DataFrame:
     """Delta-method confidence interval for a per-user ratio metric —
     revenue cents per event, θ = Σr/Σs — per variant (user_id % 2).
     Naive per-user-average CIs are wrong for ratio metrics because users
@@ -1887,13 +1814,8 @@ def ratio_metric_ci(
     repr-injected 97.5% normal quantile.
     Output: (variant, n_users, theta, se, ci_lo, ci_hi).
     """
-    per_user = events.groupBy(F.col(user_col).alias("uid")).agg(
-        F.sum(
-            F.when(
-                F.col(type_col) == numer_type,
-                F.expr(f"cast(round({value_col} * 100) as bigint)"),
-            ).otherwise(F.lit(0))
-        )
+    per_user = events.groupBy(F.col("user_id").alias("uid")).agg(
+        F.sum(F.when(F.col("event_type") == numer_type, _cents()).otherwise(F.lit(0)))
         .cast("bigint")
         .alias("r"),
         F.count("*").cast("bigint").alias("s"),
@@ -1971,15 +1893,7 @@ def oracle_ratio_metric_ci(
     """
 
 
-def match_pattern(
-    events: DataFrame,
-    pattern: str,
-    type_chars: dict,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
-) -> DataFrame:
+def match_pattern(events: DataFrame, pattern: str, type_chars: dict) -> DataFrame:
     """MATCH_RECOGNIZE-lite: regex pattern matching over each user's
     time-ordered event sequence — the CEP primitive ("a view that reaches
     a purchase with no error in between") that window functions can't
@@ -2003,10 +1917,10 @@ def match_pattern(
     )
     seq = (
         events.select(
-            F.col(user_col).alias("u"),
-            F.col(ts_col).alias("ts"),
-            F.col(id_col).alias("eid"),
-            mapping[F.col(type_col)].alias("ch"),
+            F.col("user_id").alias("u"),
+            F.col("ts").alias("ts"),
+            F.col("event_id").alias("eid"),
+            mapping[F.col("event_type")].alias("ch"),
         )
         .groupBy("u")
         .agg(
@@ -2019,7 +1933,7 @@ def match_pattern(
     )
     return (
         seq.select(
-            F.col("u").cast("bigint").alias(user_col),
+            F.col("u").cast("bigint").alias("user_id"),
             "n_events",
             F.expr(f"size(regexp_extract_all(hist, '{pattern}', 0))")
             .cast("bigint")
@@ -2057,12 +1971,7 @@ def oracle_match_pattern(
     """
 
 
-def time_weighted_avg(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def time_weighted_avg(events: DataFrame) -> DataFrame:
     """Time-weighted average (TWAP semantics): each observation holds
     until the next one (LOCF), so the mean weights each value by its holding
     interval — the correct average for irregularly sampled gauges, where
@@ -2077,10 +1986,10 @@ def time_weighted_avg(
     """
     w = Window.partitionBy("k").orderBy("ts", "eid")
     obs = events.select(
-        F.col(key_col).alias("k"),
-        F.expr(f"cast({ts_col} as bigint)").alias("ts"),
+        F.col("event_type").alias("k"),
+        F.expr("cast(ts as bigint)").alias("ts"),
         F.col("event_id").alias("eid"),
-        F.expr(f"cast(round({value_col} * 100) as bigint)").alias("v"),
+        _cents().alias("v"),
     ).withColumn("dt", (F.lead("ts").over(w) - F.col("ts")).cast("bigint"))
     return (
         obs.filter(F.col("dt").isNotNull())
@@ -2093,7 +2002,7 @@ def time_weighted_avg(
                 F.sum("vdt").cast("double") / F.sum("dt").cast("double"), 6
             ).alias("twap_cents"),
         )
-        .select(F.col("k").alias(key_col), "n_obs", "span_s", "twap_cents")
+        .select(F.col("k").alias("event_type"), "n_obs", "span_s", "twap_cents")
     )
 
 

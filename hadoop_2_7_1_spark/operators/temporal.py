@@ -12,12 +12,62 @@ Both operators avoid the naive O(|L|·|R|) comparison:
   row probes its own and its successor bucket via an *equi*-join on
   (key, bucket), then the exact inequality filters residually. Shuffle is by
   (key, bucket) — skew-bounded, broadcastable when one side is small.
+
+Every operator whose first argument is ``events`` reads the events table's
+own columns, ``event_id``, ``user_id``, ``event_type``, ``ts`` and
+``value``, and only those it uses; ``event_type`` is the series key. The
+operators are composed from a few parts: the exact cents of a value
+(:func:`_cents`), the per-key hourly or daily cents series
+(:func:`_series`) and a nearest-rank median (:func:`_median`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+_UNIT_SECONDS = {"hour": 3600, "day": 86400}
+
+
+def _cents() -> Column:
+    """``value`` in whole cents, an exact BIGINT: every sum, product and
+    series of values in this module and in ``funnel`` starts from it."""
+    return F.expr("cast(round(value * 100) as bigint)")
+
+
+def _series(events: DataFrame, unit: str) -> DataFrame:
+    """Per-``event_type`` cents series by ``unit`` ('hour' or 'day'):
+    ``(k, bucket, y, t)``, with ``y`` the exact BIGINT cent sum of the
+    bucket and ``t`` its index, epoch seconds div the unit's length. A
+    bucket with no event has no row. The data-scale work is this one keyed
+    aggregate; what callers build on it is calendar scale."""
+    return (
+        events.select(
+            F.col("event_type").alias("k"),
+            F.date_trunc(unit, F.col("ts")).alias("bucket"),
+            _cents().alias("y"),
+        )
+        .groupBy("k", "bucket")
+        .agg(F.sum("y").cast("bigint").alias("y"))
+        .withColumn("t", F.expr(f"cast(bucket as bigint) div {_UNIT_SECONDS[unit]}"))
+    )
+
+
+def _median(df: DataFrame, key: str, col: str) -> DataFrame:
+    """Nearest-rank median of ``col`` per ``key``: ``(key, col, n)`` from
+    the row at rank ``(n + 1) div 2`` of the key's ``n`` rows — an exact
+    order statistic, no interpolation, the same on any engine. ``div``,
+    not ``/``: Spark's ``/`` is double and never matches an even ``n``."""
+    return (
+        df.select(
+            key,
+            col,
+            F.row_number().over(Window.partitionBy(key).orderBy(col)).alias("rn"),
+            F.count("*").over(Window.partitionBy(key)).alias("n"),
+        )
+        .filter(F.expr("rn = (n + 1) div 2"))
+        .select(key, col, "n")
+    )
 
 
 def asof_join(
@@ -90,22 +140,21 @@ def asof_join(
 def range_self_join(
     df: DataFrame,
     by: list[str],
-    ts_col: str,
-    id_col: str,
     gap_seconds: int,
 ) -> DataFrame:
-    """Ordered pairs (a, b) in the same ``by`` group with
-    ``0 < b.ts - a.ts <= gap_seconds``.
+    """Ordered event pairs (a, b) in the same ``by`` group with
+    ``0 < b.ts - a.ts <= gap_seconds``, as ``(*by, id_a, id_b, gap_sec)``
+    with ids from ``event_id``.
 
     Bucketed equi-join: a row's successor within `gap` lives in its own or
     the next time bucket, so each left row probes exactly two buckets —
     never a full per-key cross product.
     """
     gap_us = gap_seconds * 1_000_000
-    ts = F.col(ts_col).cast("timestamp")  # tolerate TIMESTAMP_NTZ inputs
+    ts = F.col("ts").cast("timestamp")  # tolerate TIMESTAMP_NTZ inputs
     e = df.select(
         *by,
-        F.col(id_col).alias("_id"),
+        F.col("event_id").alias("_id"),
         F.unix_micros(ts).alias("_us"),
         F.floor(F.unix_micros(ts) / gap_us).alias("_bucket"),
     )
@@ -136,12 +185,7 @@ def range_self_join(
     )
 
 
-def gap_fill_locf(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    width: str = "hour",
-) -> DataFrame:
+def gap_fill_locf(events: DataFrame, width: str = "hour") -> DataFrame:
     """Regularize a sparse time series onto a dense bucket spine and fill
     gaps by carrying the last observation forward (LOCF) — the hypertable
     continuous-aggregate + locf() shape.
@@ -153,31 +197,31 @@ def gap_fill_locf(
     a broadcast cross join.
     """
     observed = (
-        events.withColumn("bucket", F.date_trunc(width, F.col(ts_col)))
-        .groupBy(key_col, "bucket")
+        events.withColumn("bucket", F.date_trunc(width, F.col("ts")))
+        .groupBy("event_type", "bucket")
         .agg(F.count("*").cast("bigint").alias("n_observed"))
     )
     bounds = observed.agg(
         F.min("bucket").alias("lo"), F.max("bucket").alias("hi")
     )
-    keys = observed.select(key_col).distinct()
+    keys = observed.select("event_type").distinct()
     spine = (
         keys.crossJoin(F.broadcast(bounds))
         .select(
-            key_col,
+            "event_type",
             F.explode(
                 F.sequence("lo", "hi", F.expr(f"interval 1 {width}"))
             ).alias("bucket"),
         )
     )
     w = (
-        Window.partitionBy(key_col)
+        Window.partitionBy("event_type")
         .orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    joined = spine.join(observed, [key_col, "bucket"], "left")
+    joined = spine.join(observed, ["event_type", "bucket"], "left")
     return joined.select(
-        key_col,
+        "event_type",
         "bucket",
         F.coalesce("n_observed", F.lit(0)).cast("bigint").alias("n_observed"),
         F.last("n_observed", ignorenulls=True).over(w).cast("bigint").alias("n_filled"),
@@ -212,19 +256,13 @@ def oracle_gap_fill_locf(
     """
 
 
-def gap_fill_interpolate(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    width: str = "hour",
-) -> DataFrame:
+def gap_fill_interpolate(events: DataFrame, width: str = "hour") -> DataFrame:
     """Dense-spine gap filling by LINEAR INTERPOLATION between the nearest
     observed buckets (the hypertable ``interpolate()`` twin of
     :func:`gap_fill_locf`).
 
     Per (key, bucket) the metric is the exact integer cent-sum of
-    ``value_col``; gaps get
+    ``value`` (any ``date_trunc`` width, so not :func:`_series`); gaps get
     ``prev + (next - prev) * (t - t_prev) / (t_next - t_prev)`` with
     bucket epoch-seconds as t — every input to the formula is an exact
     integer, so the interpolated double is the same IEEE value in both
@@ -233,24 +271,20 @@ def gap_fill_interpolate(
     window (two ignore-nulls folds each direction).
     """
     observed = (
-        events.withColumn("bucket", F.date_trunc(width, F.col(ts_col)))
-        .groupBy(key_col, "bucket")
-        .agg(
-            F.sum(F.expr(f"cast(round({value_col} * 100) as bigint)")).alias(
-                "cents"
-            )
-        )
+        events.withColumn("bucket", F.date_trunc(width, F.col("ts")))
+        .groupBy("event_type", "bucket")
+        .agg(F.sum(_cents()).alias("cents"))
     )
     bounds = observed.agg(F.min("bucket").alias("lo"), F.max("bucket").alias("hi"))
-    keys = observed.select(key_col).distinct()
+    keys = observed.select("event_type").distinct()
     spine = keys.crossJoin(F.broadcast(bounds)).select(
-        key_col,
+        "event_type",
         F.explode(F.sequence("lo", "hi", F.expr(f"interval 1 {width}"))).alias(
             "bucket"
         ),
     )
     joined = (
-        spine.join(observed, [key_col, "bucket"], "left")
+        spine.join(observed, ["event_type", "bucket"], "left")
         # Timestamp->bigint CAST is epoch seconds regardless of the session
         # timezone (unix_timestamp would re-interpret under a non-UTC
         # session tz and diverge from the oracle's epoch() across DST).
@@ -258,12 +292,12 @@ def gap_fill_interpolate(
         .withColumn("obs_pos", F.expr("case when cents is not null then pos end"))
     )
     back = (
-        Window.partitionBy(key_col)
+        Window.partitionBy("event_type")
         .orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     fwd = (
-        Window.partitionBy(key_col)
+        Window.partitionBy("event_type")
         .orderBy("bucket")
         .rowsBetween(0, Window.unboundedFollowing)
     )
@@ -274,7 +308,7 @@ def gap_fill_interpolate(
         .withColumn("next_pos", F.first("obs_pos", ignorenulls=True).over(fwd))
     )
     return prepared.select(
-        key_col,
+        "event_type",
         "bucket",
         F.col("cents").cast("bigint").alias("cents_observed"),
         F.expr(
@@ -352,13 +386,7 @@ def oracle_gap_fill_interpolate(
 # parallel prefix form
 # ---------------------------------------------------------------------------
 
-def cusum_alarms(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    h_cents: int = 50_000,
-) -> DataFrame:
+def cusum_alarms(events: DataFrame, h_cents: int = 50_000) -> DataFrame:
     """One-sided CUSUM change detection per key: the textbook recurrence
     ``S_t = max(0, S_{t-1} + (x_t − k))`` rewritten in its parallel prefix
     form — ``S_t = P_t − min(0, min_{j≤t} P_j)`` with ``P`` the prefix sum
@@ -371,12 +399,11 @@ def cusum_alarms(
     ``h_cents``. Output per key: (key, n_points, max_s, n_alarms,
     first_alarm_ts).
     """
-    cents = F.expr(f"cast(round({value_col} * 100) as bigint)")
     base = events.select(
-        F.col(key_col).alias("k"),
-        F.col(ts_col).alias("ts"),
+        F.col("event_type").alias("k"),
+        F.col("ts").alias("ts"),
         F.col("event_id").alias("eid"),
-        cents.alias("c"),
+        _cents().alias("c"),
     )
     ref = base.groupBy("k").agg(
         F.floor(F.sum("c") / F.count("*")).cast("bigint").alias("kref")
@@ -390,7 +417,7 @@ def cusum_alarms(
             w.rowsBetween(Window.unboundedPreceding, 0)))
         .withColumn("s", F.col("p") - F.col("pmin"))
     )
-    return run.groupBy(F.col("k").alias(key_col)).agg(
+    return run.groupBy(F.col("k").alias("event_type")).agg(
         F.count("*").cast("bigint").alias("n_points"),
         F.max("s").cast("bigint").alias("max_s"),
         F.sum(F.when(F.col("s") > h_cents, 1).otherwise(0))
@@ -448,13 +475,7 @@ def oracle_cusum_alarms(
 # LTTB downsampling (largest-triangle-three-buckets), bucket-average variant
 # ---------------------------------------------------------------------------
 
-def lttb_downsample(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    width: str = "day",
-) -> DataFrame:
+def lttb_downsample(events: DataFrame, width: str = "day") -> DataFrame:
     """Per-key time-series downsampling to one representative point per
     ``width`` bucket, keeping the point that forms the LARGEST TRIANGLE
     with its neighbor buckets' average points (Steinarsson's LTTB) — the
@@ -474,12 +495,12 @@ def lttb_downsample(
     order in the oracle. Output: (key, bucket, ts, cents, n_bucket).
     """
     pts = events.select(
-        F.col(key_col).alias("k"),
-        F.date_trunc(width, F.col(ts_col)).alias("bucket"),
-        F.col(ts_col).alias("ts"),
+        F.col("event_type").alias("k"),
+        F.date_trunc(width, F.col("ts")).alias("bucket"),
+        F.col("ts").alias("ts"),
         F.col("event_id").alias("eid"),
-        F.expr(f"cast({ts_col} as bigint)").alias("x"),
-        F.expr(f"cast(round({value_col} * 100) as bigint)").alias("y"),
+        F.expr("cast(ts as bigint)").alias("x"),
+        _cents().alias("y"),
     )
     bag = pts.groupBy("k", "bucket").agg(
         F.sum("x").alias("sx"), F.sum("y").alias("sy"), F.count("*").alias("n")
@@ -509,7 +530,7 @@ def lttb_downsample(
         joined.withColumn("rn", F.row_number().over(ws))
         .filter(F.col("rn") == 1)
         .select(
-            F.col("k").alias(key_col),
+            F.col("k").alias("event_type"),
             "bucket",
             "ts",
             F.col("y").cast("bigint").alias("cents"),
@@ -569,13 +590,7 @@ def oracle_lttb_downsample(
     """
 
 
-def m4_downsample(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    width: str = "hour",
-) -> DataFrame:
+def m4_downsample(events: DataFrame, width: str = "hour") -> DataFrame:
     """M4 downsampling (Jugel et al., VLDB 2014): per (key, time bucket)
     keep min, max, first and last — the four points that make a
     pixel-perfect line rendering of an arbitrarily long series, and the
@@ -592,10 +607,10 @@ def m4_downsample(
     x_last, y_last) with x = epoch seconds, y = value cents.
     """
     pts = events.select(
-        F.col(key_col).alias("k"),
-        F.date_trunc(width, F.col(ts_col)).alias("bucket"),
-        F.expr(f"cast({ts_col} as bigint)").alias("x"),
-        F.expr(f"cast(round({value_col} * 100) as bigint)").alias("y"),
+        F.col("event_type").alias("k"),
+        F.date_trunc(width, F.col("ts")).alias("bucket"),
+        F.expr("cast(ts as bigint)").alias("x"),
+        _cents().alias("y"),
     )
     return (
         pts.groupBy("k", "bucket")
@@ -607,7 +622,7 @@ def m4_downsample(
             F.max(F.struct("x", "y")).alias("l"),
         )
         .select(
-            F.col("k").alias(key_col),
+            F.col("k").alias("event_type"),
             "bucket",
             "n_bucket",
             "y_min",
@@ -646,12 +661,7 @@ def oracle_m4_downsample(
     """
 
 
-def seasonal_baseline(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def seasonal_baseline(events: DataFrame) -> DataFrame:
     """Seasonal (day-of-week × hour) baseline profile with dispersion and
     the peak deviation — the ops-monitoring primitive behind "is this
     Tuesday 9am normal for Tuesdays at 9am?": per (series, dow, hour)
@@ -667,10 +677,10 @@ def seasonal_baseline(
     Output: (key, dow, hour, n, avg_cents, sd_cents, peak_resid, peak_z).
     """
     cells = events.select(
-        F.col(key_col).alias("k"),
-        (F.dayofweek(F.col(ts_col)) - 1).cast("int").alias("dow"),
-        F.hour(F.col(ts_col)).cast("int").alias("hour"),
-        F.expr(f"cast(round({value_col} * 100) as bigint)").alias("y"),
+        F.col("event_type").alias("k"),
+        (F.dayofweek(F.col("ts")) - 1).cast("int").alias("dow"),
+        F.hour(F.col("ts")).cast("int").alias("hour"),
+        _cents().alias("y"),
     )
     agg = cells.groupBy("k", "dow", "hour").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -686,7 +696,7 @@ def seasonal_baseline(
     sd = F.sqrt(F.greatest(var, F.lit(0.0)))
     peak = F.greatest(F.col("mx").cast("double") - mean, mean - F.col("mn").cast("double"))
     return agg.select(
-        F.col("k").alias(key_col),
+        F.col("k").alias("event_type"),
         "dow",
         "hour",
         "n",
@@ -738,14 +748,7 @@ def oracle_seasonal_baseline(
     """
 
 
-def ewma_hourly(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    alpha: float = 0.3,
-    max_lag: int = 48,
-) -> DataFrame:
+def ewma_hourly(events: DataFrame, alpha: float = 0.3, max_lag: int = 48) -> DataFrame:
     """Exponentially weighted moving average over hourly bucket sums —
     the standard smoothing baseline for monitoring/forecast residuals,
     computed WITHOUT a sequential recurrence so both engines replay it
@@ -768,20 +771,11 @@ def ewma_hourly(
     """
     weights = [alpha * (1.0 - alpha) ** k for k in range(max_lag + 1)]
     w_arr = "array(" + ", ".join(repr(w) for w in weights) + ")"
-    hourly = (
-        events.select(
-            F.col(key_col).alias("k"),
-            F.date_trunc("hour", F.col(ts_col)).alias("bucket"),
-            F.expr(f"cast(round({value_col} * 100) as bigint)").alias("y"),
-        )
-        .groupBy("k", "bucket")
-        .agg(F.sum("y").cast("bigint").alias("y_cents"))
-        .withColumn("t", F.expr("cast(bucket as bigint) div 3600"))
-    )
+    hourly = _series(events, "hour")
     lags = hourly.select(
         "k",
         F.col("t").alias("t_src"),
-        F.col("y_cents").alias("y_lag"),
+        F.col("y").alias("y_lag"),
         F.explode(F.sequence(F.lit(0), F.lit(max_lag))).alias("lag"),
     ).select("k", (F.col("t_src") + F.col("lag")).alias("t"), "y_lag", "lag")
     terms = lags.withColumn(
@@ -793,9 +787,9 @@ def ewma_hourly(
     return (
         hourly.join(sm, ["k", "t"])
         .select(
-            F.col("k").alias(key_col),
+            F.col("k").alias("event_type"),
             "bucket",
-            "y_cents",
+            F.col("y").alias("y_cents"),
             F.round(F.col("s").cast("double"), 6).alias("ewma_cents"),
         )
     )
@@ -838,13 +832,7 @@ def oracle_ewma_hourly(
     """
 
 
-def acf_hourly(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    max_lag: int = 3,
-) -> DataFrame:
+def acf_hourly(events: DataFrame, max_lag: int = 3) -> DataFrame:
     """Autocorrelation function of the hourly bucket-sum series per key,
     lags 1..max_lag — the seasonality/persistence detector (a daily cycle
     shows as a peak at lag 24): ACF_l = Σ dev_t*dev_{t+l} / Σ dev_t²
@@ -857,15 +845,7 @@ def acf_hourly(
     The lag join runs on the BUCKET frame (calendar scale), not events.
     Output: (key, lag, n_pairs, acf).
     """
-    hourly = (
-        events.select(
-            F.col(key_col).alias("k"),
-            F.expr(f"cast(date_trunc('hour', {ts_col}) as bigint) div 3600").alias("t"),
-            F.expr(f"cast(round({value_col} * 100) as bigint)").alias("y"),
-        )
-        .groupBy("k", "t")
-        .agg(F.sum("y").cast("bigint").alias("y"))
-    )
+    hourly = _series(events, "hour")
     stats = hourly.groupBy("k").agg(
         F.count("*").cast("bigint").alias("n"), F.sum("y").cast("bigint").alias("s")
     )
@@ -891,7 +871,7 @@ def acf_hourly(
         F.count("*").cast("bigint").alias("n_pairs"), F.sum("num1").alias("num")
     )
     return num.join(den, "k").select(
-        F.col("k").alias(key_col),
+        F.col("k").alias("event_type"),
         F.col("lag").cast("int").alias("lag"),
         "n_pairs",
         F.round(F.col("num").cast("double") / F.col("den").cast("double"), 6).alias(
@@ -943,13 +923,7 @@ def oracle_acf_hourly(
 
 
 def ccf_hourly(
-    events: DataFrame,
-    type_a: str,
-    type_b: str,
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    max_lag: int = 3,
+    events: DataFrame, type_a: str, type_b: str, max_lag: int = 3
 ) -> DataFrame:
     """Cross-correlation between two event types' hourly bucket-sum
     series at lags −max_lag..+max_lag — the lead/lag detector (a positive
@@ -963,16 +937,7 @@ def ccf_hourly(
     calendar-scale bucket frames, never on events.
     Output: (lag, n_pairs, ccf).
     """
-    hourly = (
-        events.filter(F.col(type_col).isin([type_a, type_b]))
-        .select(
-            F.col(type_col).alias("k"),
-            F.expr(f"cast(date_trunc('hour', {ts_col}) as bigint) div 3600").alias("t"),
-            F.expr(f"cast(round({value_col} * 100) as bigint)").alias("y"),
-        )
-        .groupBy("k", "t")
-        .agg(F.sum("y").cast("bigint").alias("y"))
-    )
+    hourly = _series(events.filter(F.col("event_type").isin([type_a, type_b])), "hour")
     stats = hourly.groupBy("k").agg(
         F.count("*").cast("bigint").alias("n"), F.sum("y").cast("bigint").alias("s")
     )
@@ -1059,12 +1024,7 @@ def oracle_ccf_hourly(
     """
 
 
-def interarrival_stats(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
+def interarrival_stats(events: DataFrame) -> DataFrame:
     """Inter-arrival gap moments per key — mean gap, dispersion, skew —
     the Poisson-ness check (CV ≈ 1 means memoryless arrivals; CV ≫ 1
     means bursts) that sizes streaming state and retry budgets.
@@ -1081,9 +1041,9 @@ def interarrival_stats(
 
     gaps = (
         events.select(
-            F.col(key_col).alias("k"),
-            F.expr(f"cast(unix_timestamp({ts_col}) as bigint)").alias("t"),
-            F.col(id_col).alias("i"),
+            F.col("event_type").alias("k"),
+            F.expr("cast(unix_timestamp(ts) as bigint)").alias("t"),
+            F.col("event_id").alias("i"),
         )
         .select("k", (F.col("t") - F.lag("t").over(
             W.partitionBy("k").orderBy("t", "i")
@@ -1092,7 +1052,7 @@ def interarrival_stats(
     )
     m = group_moments(gaps, "k", "gap_s")
     return m.select(
-        F.col("k").alias(key_col),
+        F.col("k").alias("event_type"),
         "n",
         "mean_val",
         "stddev",
@@ -1131,11 +1091,7 @@ def oracle_interarrival_stats(
     """
 
 
-def sla_report(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+def sla_report(events: DataFrame) -> DataFrame:
     """Availability/SLA readout per key: over the key's own observed
     span, how many calendar hours had at least one event, the
     availability percentage, and the largest silent gap in seconds —
@@ -1149,9 +1105,9 @@ def sla_report(
     from pyspark.sql import Window as W
 
     hours = events.select(
-        F.col(key_col).alias("k"),
-        F.expr(f"cast(date_trunc('hour', {ts_col}) as bigint) div 3600").alias("h"),
-        F.expr(f"cast(unix_timestamp({ts_col}) as bigint)").alias("t"),
+        F.col("event_type").alias("k"),
+        F.expr("cast(date_trunc('hour', ts) as bigint) div 3600").alias("h"),
+        F.expr("cast(unix_timestamp(ts) as bigint)").alias("t"),
     )
     per_key = hours.groupBy("k").agg(
         (F.max("h") - F.min("h") + 1).cast("bigint").alias("span_hours"),
@@ -1165,7 +1121,7 @@ def sla_report(
     return (
         per_key.join(mg, "k", "left")
         .select(
-            F.col("k").alias(key_col),
+            F.col("k").alias("event_type"),
             "span_hours",
             "active_hours",
             F.round(
@@ -1209,12 +1165,7 @@ def oracle_sla_report(
     """
 
 
-def theil_sen_hourly(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def theil_sen_hourly(events: DataFrame) -> DataFrame:
     """Theil–Sen robust trend: the median of all pairwise slopes of the
     hourly bucket-sum series per key — the outlier-immune alternative to
     the OLS trend (one corrupt hour cannot move it).
@@ -1225,15 +1176,7 @@ def theil_sen_hourly(
     rounded to 6dp; the median is nearest-rank selection over a keyed
     window on the pair frame. Output: (key, n_pairs, slope_cents_per_hour).
     """
-    hourly = (
-        events.select(
-            F.col(key_col).alias("k"),
-            F.expr(f"cast(date_trunc('hour', {ts_col}) as bigint) div 3600").alias("t"),
-            F.expr(f"cast(round({value_col} * 100) as bigint)").alias("y"),
-        )
-        .groupBy("k", "t")
-        .agg(F.sum("y").cast("bigint").alias("y"))
-    )
+    hourly = _series(events, "hour")
     a = hourly.select("k", F.col("t").alias("t1"), F.col("y").alias("y1"))
     b = hourly.select("k", F.col("t").alias("t2"), F.col("y").alias("y2"))
     pairs = (
@@ -1248,19 +1191,11 @@ def theil_sen_hourly(
             ).alias("slope"),
         )
     )
-    w = Window.partitionBy("k").orderBy("slope")
-    ranked = pairs.select(
-        "k",
-        "slope",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(Window.partitionBy("k")).alias("np"),
+    return _median(pairs, "k", "slope").select(
+        F.col("k").alias("event_type"),
+        F.col("n").alias("n_pairs"),
+        F.col("slope").alias("slope_cents_per_hour"),
     )
-    return ranked.groupBy("k").agg(
-        F.max("np").cast("bigint").alias("n_pairs"),
-        F.max(F.when(F.col("rn") == F.expr("(np + 1) div 2"), F.col("slope"))).alias(
-            "slope_cents_per_hour"
-        ),
-    ).select(F.col("k").alias(key_col), "n_pairs", "slope_cents_per_hour")
 
 
 def oracle_theil_sen_hourly(
@@ -1293,12 +1228,7 @@ def oracle_theil_sen_hourly(
     """
 
 
-def backtest_wape(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def backtest_wape(events: DataFrame) -> DataFrame:
     """Forecast backtest: hold out each key's LAST observed day, predict
     its hourly totals with the hour-of-day means from all earlier days
     (the seasonal-naive baseline), and score WAPE = Σ|err| / Σ|actual| —
@@ -1313,15 +1243,9 @@ def backtest_wape(
     total_actual_cents, total_abs_err_cents, wape).
     """
     hourly = (
-        events.select(
-            F.col(key_col).alias("k"),
-            F.expr(f"cast(date_trunc('hour', {ts_col}) as bigint) div 3600").alias("h"),
-            F.expr(f"cast(round({value_col} * 100) as bigint)").alias("y"),
-        )
-        .groupBy("k", "h")
-        .agg(F.sum("y").cast("bigint").alias("y"))
-        .withColumn("day", F.expr("h div 24"))
-        .withColumn("hod", F.expr("h % 24"))
+        _series(events, "hour")
+        .withColumn("day", F.expr("t div 24"))
+        .withColumn("hod", F.expr("t % 24"))
     )
     last_day = hourly.groupBy("k").agg(F.max("day").cast("bigint").alias("test_day"))
     tagged = hourly.join(F.broadcast(last_day), "k")
@@ -1346,7 +1270,7 @@ def backtest_wape(
             ),
         ).alias("wape"),
     ).select(
-        F.col("k").alias(key_col),
+        F.col("k").alias("event_type"),
         "n_test_hours",
         "total_actual_cents",
         "total_abs_err_cents",
@@ -1392,11 +1316,7 @@ def oracle_backtest_wape(
     """
 
 
-def p_chart(
-    events: DataFrame,
-    match_expr: str,
-    ts_col: str = "ts",
-) -> DataFrame:
+def p_chart(events: DataFrame, match_expr: str) -> DataFrame:
     """Shewhart p-chart over hourly buckets: the share of matching events
     (e.g. errors) per hour against 3σ binomial control limits derived
     from the overall rate — the classic SPC monitor that complements the
@@ -1410,7 +1330,7 @@ def p_chart(
     """
     hourly = (
         events.select(
-            F.expr(f"cast(date_trunc('hour', {ts_col}) as bigint) div 3600").alias("h"),
+            F.expr("cast(date_trunc('hour', ts) as bigint) div 3600").alias("h"),
             F.expr(match_expr).cast("boolean").alias("m"),
         )
         .groupBy("h")
@@ -1463,13 +1383,7 @@ def oracle_p_chart(table: str, match_expr: str, ts_col: str = "ts") -> str:
     """
 
 
-def holt_linear(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    scale: int = 10_000,
-) -> DataFrame:
+def holt_linear(events: DataFrame, scale: int = 10_000) -> DataFrame:
     """Holt double exponential smoothing (level + trend) over the daily
     bucket-sum series per key — the forecasting step up from
     [[tmp_ewma]] (which has no trend term) and the model-based sibling
@@ -1491,15 +1405,6 @@ def holt_linear(
     per key: (key, n_days, level_s, trend_s, forecast_next_s, mae_s),
     all exact scaled BIGINTs.
     """
-    daily = (
-        events.select(
-            F.col(key_col).alias("k"),
-            F.expr(f"cast(date_trunc('day', {ts_col}) as bigint) div 86400").alias("d"),
-            F.expr(f"cast(round({value_col} * 100) as bigint)").alias("y"),
-        )
-        .groupBy("k", "d")
-        .agg(F.sum("y").cast("bigint").alias("y"))
-    )
     fold = f"""
     aggregate(
       transform(array_sort(series), s -> s.y),
@@ -1515,14 +1420,14 @@ def holt_linear(
                 + 9 * acc.b) div 10,
           'sae', acc.sae + abs(y * {scale} - (acc.l + acc.b)))))
     """
-    per_key = daily.groupBy("k").agg(
-        F.expr("collect_list(struct(d, y))").alias("series")
+    per_key = _series(events, "day").groupBy("k").agg(
+        F.expr("collect_list(struct(t, y))").alias("series")
     )
     return per_key.select(
-        F.col("k").alias(key_col),
+        F.col("k").alias("event_type"),
         F.expr(fold).alias("st"),
     ).select(
-        key_col,
+        "event_type",
         F.col("st.i").cast("bigint").alias("n_days"),
         F.col("st.l").cast("bigint").alias("level_s"),
         F.col("st.b").cast("bigint").alias("trend_s"),
@@ -1572,12 +1477,7 @@ def oracle_holt_linear(
     """
 
 
-def changepoint_sse(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-) -> DataFrame:
+def changepoint_sse(events: DataFrame) -> DataFrame:
     """Offline single change-point per key: the split of the daily
     bucket-sum series that minimizes total within-segment SSE — one
     binary-segmentation step (Scott & Knott / CROPS family), the
@@ -1606,15 +1506,7 @@ def changepoint_sse(
     split_t, split_day, mean_left_cents, mean_right_cents, gain_num,
     gain_den); means are truncating integer divisions.
     """
-    daily = (
-        events.select(
-            F.col(key_col).alias("k"),
-            F.expr(f"cast(date_trunc('day', {ts_col}) as bigint) div 86400").alias("d"),
-            F.expr(f"cast(round({value_col} * 100) as bigint)").alias("y"),
-        )
-        .groupBy("k", "d")
-        .agg(F.sum("y").cast("bigint").alias("y"))
-    )
+    daily = _series(events, "day").select("k", F.col("t").alias("d"), "y")
     w = Window.partitionBy("k").orderBy("d")
     wk = Window.partitionBy("k")
     pref = daily.select(
@@ -1638,7 +1530,7 @@ def changepoint_sse(
         scored.withColumn("rn", F.row_number().over(pick))
         .filter(F.col("rn") == 1)
         .select(
-            F.col("k").alias(key_col),
+            F.col("k").alias("event_type"),
             F.col("n").alias("n_days"),
             F.col("t").alias("split_t"),
             F.col("d").cast("bigint").alias("split_day"),
@@ -1697,13 +1589,7 @@ def oracle_changepoint_sse(
     """
 
 
-def rolling_features(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    window_days: int = 7,
-) -> DataFrame:
+def rolling_features(events: DataFrame, window_days: int = 7) -> DataFrame:
     """Rolling feature matrix over the daily series per key: trailing
     {window}-day sum/min/max/count (RANGE frame on the day index, so
     calendar gaps shrink the window rather than stretching it) plus
@@ -1717,24 +1603,15 @@ def rolling_features(
     gotcha). One keyed shuffle for the daily sums; every window runs on
     the calendar-scale bucket frame.
     """
-    daily = (
-        events.select(
-            F.col(key_col).alias("k"),
-            F.expr(f"cast(date_trunc('day', {ts_col}) as bigint) div 86400").alias("d"),
-            F.expr(f"cast(round({value_col} * 100) as bigint)").alias("y"),
-        )
-        .groupBy("k", "d")
-        .agg(F.sum("y").cast("bigint").alias("y"))
-    )
     wr = (
         Window.partitionBy("k")
-        .orderBy("d")
+        .orderBy("t")
         .rangeBetween(-(window_days - 1), 0)
     )
-    wl = Window.partitionBy("k").orderBy("d")
-    return daily.select(
-        F.col("k").alias(key_col),
-        F.col("d").cast("bigint").alias("day"),
+    wl = Window.partitionBy("k").orderBy("t")
+    return _series(events, "day").select(
+        F.col("k").alias("event_type"),
+        F.col("t").cast("bigint").alias("day"),
         F.col("y").alias("y_cents"),
         F.sum("y").over(wr).cast("bigint").alias("roll_sum"),
         F.min("y").over(wr).cast("bigint").alias("roll_min"),
@@ -1773,13 +1650,7 @@ def oracle_rolling_features(
     """
 
 
-def decompose_hourly(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    half_window: int = 12,
-) -> DataFrame:
+def decompose_hourly(events: DataFrame, half_window: int = 12) -> DataFrame:
     """Classical seasonal decomposition of the hourly series per key:
     trend = centered ±{half_window}h moving average (RANGE frame),
     seasonal = hour-of-day mean of the detrended series, residual = the
@@ -1798,17 +1669,7 @@ def decompose_hourly(
     aggregate). Output: (key, bucket, y_cents, trend, seasonal,
     residual).
     """
-    hourly = (
-        events.select(
-            F.col(key_col).alias("k"),
-            F.date_trunc("hour", F.col(ts_col)).alias("bucket"),
-            F.expr(f"cast(round({value_col} * 100) as bigint)").alias("y"),
-        )
-        .groupBy("k", "bucket")
-        .agg(F.sum("y").cast("bigint").alias("y"))
-        .withColumn("t", F.expr("cast(bucket as bigint) div 3600"))
-        .withColumn("hod", F.expr("cast(bucket as bigint) div 3600 % 24"))
-    )
+    hourly = _series(events, "hour").withColumn("hod", F.expr("t % 24"))
     wt = Window.partitionBy("k").orderBy("t").rangeBetween(-half_window, half_window)
     detr = hourly.select(
         "k",
@@ -1832,7 +1693,7 @@ def decompose_hourly(
     # is the same IEEE op chain in both engines.
     r6 = lambda c: (F.floor(c * F.lit(1000000.0) + F.lit(0.5)) / F.lit(1000000.0))
     return detr.join(seas, ["k", "hod"]).select(
-        F.col("k").alias(key_col),
+        F.col("k").alias("event_type"),
         "bucket",
         F.col("y").alias("y_cents"),
         r6(F.col("trend")).alias("trend"),
@@ -1883,13 +1744,7 @@ def oracle_decompose_hourly(
     """
 
 
-def periodogram(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    periods: tuple = (24, 168),
-) -> DataFrame:
+def periodogram(events: DataFrame, periods: tuple = (24, 168)) -> DataFrame:
     """Seasonality-strength detector: the DFT power of the hourly series
     at candidate periods (daily=24h, weekly=168h), reported as the
     fitted sinusoid amplitude amp = 2*sqrt(cs²+ss²)/n — the quantitative
@@ -1909,15 +1764,7 @@ def periodogram(
     """
     import math
 
-    hourly = (
-        events.select(
-            F.col(key_col).alias("k"),
-            F.expr(f"cast(date_trunc('hour', {ts_col}) as bigint) div 3600").alias("t"),
-            F.expr(f"cast(round({value_col} * 100) as bigint)").alias("y"),
-        )
-        .groupBy("k", "t")
-        .agg(F.sum("y").cast("bigint").alias("y"))
-    )
+    hourly = _series(events, "hour")
     branches = []
     for p in periods:
         cos_arr = "array(" + ", ".join(
@@ -1951,7 +1798,7 @@ def periodogram(
     # x*x, not pow(x, 2): integer-exponent pow is not guaranteed to be the
     # plain product on every libm (sqrt IS correctly rounded everywhere)
     return agg.select(
-        F.col("k").alias(key_col),
+        F.col("k").alias("event_type"),
         "period",
         "n_buckets",
         F.round(
@@ -2018,12 +1865,7 @@ def oracle_periodogram(
 
 
 def seasonal_anomaly(
-    events: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    half_window: int = 12,
-    n_mads: int = 3,
+    events: DataFrame, half_window: int = 12, n_mads: int = 3
 ) -> DataFrame:
     """Seasonality-aware anomaly detection: decompose the hourly series
     ([[tmp_decompose]]), then flag buckets whose RESIDUAL sits more than
@@ -2038,22 +1880,12 @@ def seasonal_anomaly(
     compare runs on 1.4826·MAD with the constant repr-injected. Output:
     only the anomalous rows (key, bucket, y_cents, residual, med, mad).
     """
-    dec = decompose_hourly(events, key_col, ts_col, value_col, half_window)
-    w = Window.partitionBy(key_col).orderBy("residual")
-    wk = Window.partitionBy(key_col)
-    ranked = dec.select(
-        key_col,
-        "bucket",
-        "y_cents",
-        "residual",
-        F.row_number().over(w).alias("rn"),
-        F.count("*").over(wk).alias("n"),
+    dec = decompose_hourly(events, half_window)
+    med = _median(dec, "event_type", "residual").select(
+        "event_type", F.col("residual").alias("med")
     )
-    med = ranked.filter(F.expr("rn = (n + 1) div 2")).select(
-        key_col, F.col("residual").alias("med")
-    )
-    dev = dec.join(med, key_col).select(
-        key_col,
+    dev = dec.join(med, "event_type").select(
+        "event_type",
         "bucket",
         "y_cents",
         "residual",
@@ -2061,24 +1893,17 @@ def seasonal_anomaly(
         (F.floor(F.abs(F.col("residual") - F.col("med")) * F.lit(1000000.0)
                  + F.lit(0.5)) / F.lit(1000000.0)).alias("ad"),
     )
-    wd = Window.partitionBy(key_col).orderBy("ad")
-    mad = (
-        dev.select(
-            key_col, "ad",
-            F.row_number().over(wd).alias("rn"),
-            F.count("*").over(Window.partitionBy(key_col)).alias("n"),
-        )
-        .filter(F.expr("rn = (n + 1) div 2"))
-        .select(key_col, F.col("ad").alias("mad"))
+    mad = _median(dev, "event_type", "ad").select(
+        "event_type", F.col("ad").alias("mad")
     )
     k_sigma = 1.4826 * n_mads
     return (
-        dev.join(mad, key_col)
+        dev.join(mad, "event_type")
         .filter(
             F.abs(F.col("residual") - F.col("med"))
             > F.lit(float(k_sigma)) * F.col("mad")
         )
-        .select(key_col, "bucket", "y_cents", "residual", "med", "mad")
+        .select("event_type", "bucket", "y_cents", "residual", "med", "mad")
     )
 
 

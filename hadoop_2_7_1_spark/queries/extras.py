@@ -1119,12 +1119,12 @@ def evt_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dd_embedding_neardup",
-    dedup.oracle_embedding_neardup("embeddings", threshold=0.8, bucket_dims=4),
-    doc="embedding-cosine near-dup pairs (sign-bucket LSH candidates, cos >= 0.8)",
+    dedup.oracle_embedding_neardup("embeddings", threshold=0.4, bucket_dims=4),
+    doc="embedding-cosine near-dup pairs (sign-bucket LSH candidates, cos >= 0.4)",
 )
 def dd_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    return dedup.embedding_neardup_pairs(emb, threshold=0.8, bucket_dims=4)
+    return dedup.embedding_neardup_pairs(emb, threshold=0.4, bucket_dims=4)
 
 
 # ---------------------------------------------------------------------------
@@ -1239,6 +1239,27 @@ def src_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Temporal joins + grouping-set aggregates (engine extras beyond the reference)
 # ---------------------------------------------------------------------------
 
+def _asof_sides(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The two sides of the as-of queries: clicks, and purchases made
+    unique per (user_id, ts) as ``asof_join`` requires."""
+    ev = load_table(spark, sf_dir, "events")
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        F.col("event_id").cast("bigint").alias("event_id"),
+        F.col("user_id").cast("bigint").alias("user_id"),
+        "ts",
+    )
+    purchases = (
+        ev.filter(F.col("event_type") == "purchase")
+        .groupBy("user_id", "ts")
+        .agg(
+            F.max("value").cast("double").alias("value"),
+            F.max("event_id").cast("bigint").alias("event_id"),
+        )
+        .select(F.col("user_id").cast("bigint").alias("user_id"), "ts", "value", "event_id")
+    )
+    return clicks, purchases
+
+
 @register(
     "tmp_asof_join",
     """
@@ -1259,22 +1280,7 @@ def src_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tmp_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import temporal
 
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").cast("bigint").alias("event_id"),
-        F.col("user_id").cast("bigint").alias("user_id"),
-        "ts",
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(
-            F.max("value").cast("double").alias("value"),
-            F.max("event_id").cast("bigint").alias("event_id"),
-        )
-        .select(F.col("user_id").cast("bigint").alias("user_id"), "ts", "value", "event_id")
-    )
-    return temporal.asof_join(clicks, purchases, ["user_id"], "ts", "ts")
+    return temporal.asof_join(*_asof_sides(spark, sf_dir), ["user_id"], "ts", "ts")
 
 
 @register(
@@ -1307,7 +1313,7 @@ def evt_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.temporal import cusum_alarms
 
     ev = load_table(spark, sf_dir, "events")
-    return cusum_alarms(ev, "event_type", "ts", "value", h_cents=50_000)
+    return cusum_alarms(ev, h_cents=50_000)
 
 
 @register(
@@ -1339,7 +1345,7 @@ def tmp_lttb(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.temporal import lttb_downsample
 
     ev = load_table(spark, sf_dir, "events")
-    return lttb_downsample(ev, "event_type", "ts", "value", width="day")
+    return lttb_downsample(ev, width="day")
 
 
 @register(
@@ -1409,7 +1415,7 @@ def tmp_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         F.col("user_id").cast("bigint").alias("user_id"), "event_id", "ts"
     )
-    return temporal.range_self_join(ev, ["user_id"], "ts", "event_id", 600)
+    return temporal.range_self_join(ev, ["user_id"], 600)
 
 
 @register(
@@ -3083,23 +3089,8 @@ def evt_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 def tmp_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import temporal
 
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("event_id").cast("bigint").alias("event_id"),
-        F.col("user_id").cast("bigint").alias("user_id"),
-        "ts",
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(
-            F.max("value").cast("double").alias("value"),
-            F.max("event_id").cast("bigint").alias("event_id"),
-        )
-        .select(F.col("user_id").cast("bigint").alias("user_id"), "ts", "value", "event_id")
-    )
     return temporal.asof_join(
-        clicks, purchases, ["user_id"], "ts", "ts", tolerance_seconds=3600
+        *_asof_sides(spark, sf_dir), ["user_id"], "ts", "ts", tolerance_seconds=3600
     )
 
 
@@ -4757,7 +4748,7 @@ def evt_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.funnel import survival_km
 
     ev = load_table(spark, sf_dir, "events")
-    return survival_km(ev, "user_id", "ts", censor_days=7)
+    return survival_km(ev, censor_days=7)
 
 
 @register(
@@ -4834,7 +4825,7 @@ def evt_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.funnel import burst_flags
 
     ev = load_table(spark, sf_dir, "events")
-    return burst_flags(ev, "user_id", "ts", window_s=60, threshold=3)
+    return burst_flags(ev, window_s=60, threshold=3)
 
 
 _SNAP_H = oracle_hash32("CAST(doc_id AS VARCHAR)")

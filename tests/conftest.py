@@ -52,9 +52,10 @@ def assert_frames_match(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: s
         av, bv = a[col], b[col]
         if av.dtype.kind == "f" or bv.dtype.kind == "f":
             # EXACT, like the driver's value hash: every float aggregate in
-            # the registry is order-independent by construction (decimal /
-            # scaled-int accumulation, see SCALE.md round-4 section), so ulp
-            # drift is a real defect, not noise.
+            # the registry is order-independent by construction (money sums
+            # accumulate as DECIMAL, ln()-based scores round each row to
+            # DECIMAL(38,6) before the sum, iterative float state accumulates
+            # as scaled BIGINT), so ulp drift is a real defect, not noise.
             af = av.astype(float).to_numpy()
             bf = bv.astype(float).to_numpy()
             ok = (af == bf) | (np.isnan(af) & np.isnan(bf))

@@ -380,8 +380,9 @@ def test_connected_components_shapes(spark):
 
 
 def test_bucketed_join_avoids_shuffle(spark, tmp_path):
-    """SCALE.md's bucketing claim, proven on the plan: two tables bucketed on
-    the join key sort-merge-join with NO shuffle exchange (the reference's
+    """Bucketing makes a repeated fact-fact join shuffle-free, proven on the
+    plan: two tables bucketed on the join key sort-merge-join with NO
+    shuffle exchange (the reference's
     CompositeInputFormat precondition — identical partitioning + sort —
     made durable via bucketBy)."""
     from pyspark.sql import functions as F
@@ -1520,25 +1521,20 @@ def test_hll_sketch_accuracy_and_parallel_determinism(spark):
 
 
 def test_ohlc_bars_custom_id_column(spark):
-    """ohlc_bars must work on tables without an event_id column — the
-    tie-break column is a parameter (round-4 advisor finding)."""
+    """ohlc_bars on a hand-built events frame: same-second rows take
+    open/close order from the event_id tie-break, not from row order."""
     from hadoop_2_7_1_spark.operators.funnel import ohlc_bars
 
     df = spark.createDataFrame(
         [
             ("A", "2024-01-01 10:00:05", 3.0, 2),
-            ("A", "2024-01-01 10:00:05", 9.0, 1),  # same ts: seq breaks tie
+            ("A", "2024-01-01 10:00:05", 9.0, 1),  # same ts: event_id breaks tie
             ("A", "2024-01-01 10:59:59", 4.0, 3),
             ("B", "2024-01-01 10:30:00", 7.0, 4),
         ],
-        "sym string, t string, px double, seq int",
-    ).withColumn("t", F.to_timestamp("t"))
-    out = {
-        r.sym: r
-        for r in ohlc_bars(
-            df, key_col="sym", ts_col="t", value_col="px", id_col="seq"
-        ).collect()
-    }
+        "event_type string, ts string, value double, event_id int",
+    ).withColumn("ts", F.to_timestamp("ts"))
+    out = {r.event_type: r for r in ohlc_bars(df).collect()}
     a = out["A"]
     assert (a.open, a.high, a.low, a.close, a.n) == (9.0, 9.0, 3.0, 4.0, 3)
     b = out["B"]
@@ -1854,7 +1850,7 @@ def test_cusum_prefix_form_matches_sequential(spark):
         rows, "event_id bigint, ts timestamp, event_type string, value double"
     )
     h = 700
-    out = cusum_alarms(ev, "event_type", "ts", "value", h_cents=h).collect()[0]
+    out = cusum_alarms(ev, h_cents=h).collect()[0]
     cents = [round(v * 100) for v in vals]
     kref = int(sum(cents) / len(cents))  # floor of the double ratio
     s = 0
@@ -1895,7 +1891,7 @@ def test_lttb_picks_largest_triangle_and_pins_endpoints(spark):
     )
     picked = {
         r.bucket.day: r.ts
-        for r in lttb_downsample(ev, "event_type", "ts", "value", "day").collect()
+        for r in lttb_downsample(ev, "day").collect()
     }
     assert picked[1] == at(1, 1)    # first bucket: first point
     assert picked[2] == at(2, 12)   # spike wins the triangle

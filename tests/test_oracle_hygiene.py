@@ -95,7 +95,7 @@ def test_graph_oracles_have_no_multi_ref_plain_ctes():
 # ---------------------------------------------------------------------------
 # Size-derived knob parity (round 9): the pair-bill operators derive their
 # cluster/bucket knob from the corpus count on BOTH engines. These tests pin
-# (a) the validated operating points from the SCALE.md knob-rule experiment,
+# (a) the operating points a sf0.1 -> sf0.5 scaling run validated as linear,
 # (b) exact Python <-> DuckDB agreement of the derivation over a size sweep,
 # (c) that the auto-knob oracles keep the knob CTE MATERIALIZED (it is
 #     referenced once per bucket expression — a plain CTE would re-execute).
@@ -103,8 +103,10 @@ def test_graph_oracles_have_no_multi_ref_plain_ctes():
 
 
 def test_derived_knobs_reproduce_validated_operating_points():
-    # SCALE.md knob-rule table: k 8->40 and dims 6->8 for N 2000->10000 are
-    # the measured-linear points; N=500 is the sf0.01 driver-gate corpus
+    # k 8->40 and dims 6->8 for N 2000->10000 are the measured-linear points
+    # (x5 data: dd_semdedup x5.0, sim_hubness x5.6, sim_threshold_join x5.8
+    # wall-clock, against x11.9-x24.8 at pinned knobs); N=500 is the sf0.01
+    # embeddings corpus
     assert similarity.derive_k(500) == 2
     assert similarity.derive_k(2000) == 8
     assert similarity.derive_k(10000) == 40

@@ -1,6 +1,8 @@
-"""Plan-property regression guards: the scale behaviors documented in
-SCALE.md, asserted on the real executed plans so a future edit that silently
-adds a shuffle, drops a pushdown, or un-broadcasts a dimension fails CI."""
+"""Plan-property regression guards: scale behaviors (pushed-down filters,
+map-side combine, broadcast dimensions, one shuffle per secondary sort, no
+cartesian products, JVM-only hot paths) asserted on the real executed plans
+so a future edit that silently adds a shuffle, drops a pushdown, or
+un-broadcasts a dimension fails CI."""
 
 from __future__ import annotations
 
@@ -128,7 +130,9 @@ def test_registry_wide_plan_audit(spark):
     """Every lazily-built registry query must be free of CartesianProduct,
     and Python eval nodes may appear only in the documented whitelist
     (subprocess pipes, multimodal decode, compute generators) — the
-    SCALE.md Python-boundary policy, enforced.
+    Python-boundary policy, enforced: hot paths stay JVM expressions inside
+    whole-stage codegen, and a Python node appears only where an external
+    process, a codec or a per-partition compute generator is the point.
     """
     from hadoop_2_7_1_spark.queries import REGISTRY
 
@@ -138,7 +142,7 @@ def test_registry_wide_plan_audit(spark):
     build_time_actions = {
         "sim_kmeans_sizes", "sim_kmeans_ivf", "grf_pagerank",
         "cur_global_shuffle", "cur_pack_sequences", "cur_length_buckets",
-        "dd_dup_clusters", "evt_funnel", "smp_temperature",
+        "dd_dup_clusters", "smp_temperature",
         "q26_pentomino", "q27_sudoku", "q21_db_pageview",
         "q15_partitioned_write", "src_bucketed_join", "bench_terasort_big",
         "src_mapfile_lookup", "txt_bpe_merges", "grf_kcore", "dd_semdedup",

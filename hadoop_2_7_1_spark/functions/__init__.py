@@ -25,6 +25,13 @@ WS = r"\s+"
 WS_SQL = r"\\s+"
 
 
+def ws_tokens_sql(col: str) -> str:
+    """Spark SQL fragment: the whitespace tokens of string column ``col``
+    as an array with no empty strings (StringTokenizer semantics). Unlike
+    :func:`tokenize`, an empty or blank text yields an empty array."""
+    return f"filter(split(trim({col}), '{WS_SQL}'), t -> t <> '')"
+
+
 def sql_regex(pattern: str) -> str:
     """Escape a regex for embedding in a Spark SQL string literal."""
     return pattern.replace("\\", "\\\\")

@@ -28,6 +28,7 @@ from ..functions import (
     hex_hash32,
     oracle_hash32,
     word_shingles,
+    ws_tokens_sql,
 )
 
 
@@ -656,7 +657,7 @@ def doc_chunks(
     of the whitespace token stream (shared by chunk_dedup and the
     incremental-ingest index)."""
     w = chunk_tokens
-    toks = f"filter(split(trim({text_col}), '{WS_SQL}'), t -> t <> '')"
+    toks = ws_tokens_sql(text_col)
     return docs.select(
         F.col(id_col).alias("doc_id"),
         F.posexplode(
@@ -1225,7 +1226,7 @@ def dup_span_stats(
     """
     from . import fan_out
 
-    toks = f"filter(split(trim({text_col}), '{WS_SQL}'), t -> t <> '')"
+    toks = ws_tokens_sql(text_col)
     # EXPLODE THE POSITION SEQUENCE, not a prebuilt gram-string array:
     # generating array<string> per doc and exploding it costs ~6x this
     # stage in UnsafeArray construction/copies, while exploding the int
@@ -1475,7 +1476,7 @@ def remove_dup_spans(
     """
     from . import fan_out
 
-    toks_expr = f"filter(split(trim({text_col}), '{WS_SQL}'), t -> t <> '')"
+    toks_expr = ws_tokens_sql(text_col)
     base = fan_out(df).select(
         F.col(id_col).cast("bigint").alias("doc"), F.expr(toks_expr).alias("tk")
     )

@@ -89,10 +89,10 @@ def split_long_docs(
     slice the token array per chunk. Map-side only — zero shuffles; at
     100 TB this is embarrassingly parallel.
     """
-    from ..functions import WS_SQL
+    from ..functions import ws_tokens_sql
 
     stride = max_tokens - overlap
-    toks = f"filter(split(trim({text_col}), '{WS_SQL}'), t -> t <> '')"
+    toks = ws_tokens_sql(text_col)
     n = f"size({toks})"
     n_chunks = f"1 + CAST(ceil(greatest({n} - {max_tokens}, 0) / {stride}.0) AS INT)"
     return (

@@ -206,13 +206,12 @@ def dsir_importance(
     bucket products stay < 2^53 up to ~10^13 tokens per side; beyond that
     compute the ratio as ``ln(t_f+1) - ln(T+B) - ...`` termwise.
     """
-    from ..functions import hex_hash32 as _h  # noqa: F401  (already imported)
-    from .textops import _tok_array
+    from ..functions import ws_tokens_sql
 
     toks = df.select(
         F.col(id_col).cast("bigint").alias("id"),
         target.cast("boolean").alias("is_t"),
-        F.explode(F.expr(_tok_array(text_col))).alias("tok"),
+        F.explode(F.expr(ws_tokens_sql(text_col))).alias("tok"),
     )
     doc_bucket = (
         toks.select(
@@ -552,13 +551,9 @@ def categorical_draws(
     """
     from .sketches import _hash60
 
-    from ..functions import WS_SQL
+    from ..functions import ws_tokens_sql
 
-    toks = df.select(
-        F.explode(
-            F.expr(f"filter(split(trim({text_col}), '{WS_SQL}'), t -> t != '')")
-        ).alias("token")
-    )
+    toks = df.select(F.explode(F.expr(ws_tokens_sql(text_col))).alias("token"))
     vocab = (
         toks.groupBy("token")
         .agg(F.count("*").alias("cnt"))

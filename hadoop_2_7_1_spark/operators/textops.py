@@ -3,6 +3,12 @@
 All pure Column expressions — language ID, quality scoring, token counting
 and fingerprinting run inside whole-stage codegen at full scan speed; there
 is no Python in the hot path.
+
+Every operator over a documents frame reads the table's own columns:
+``doc_id`` and ``text``, plus ``lang`` or ``source`` where it uses them, and
+only those. A hand-built frame names its columns that way. Whitespace
+tokens come from :func:`_tokens`, subtokens from :func:`_subtokens` and
+adjacent token pairs from :func:`_bigrams`.
 """
 
 from __future__ import annotations
@@ -10,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import WS, WS_SQL, oracle_hash32, sql_regex
+from ..functions import WS, WS_SQL, oracle_hash32, sql_regex, ws_tokens_sql
 
 # BPE-ish pre-tokenizer: letter runs | digit runs | single non-space symbol.
 SUBTOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
@@ -23,22 +29,53 @@ STOPWORDS = {
 }
 _LANG_PRIORITY = ["en", "de", "fr", "es"]  # deterministic tie-break order
 
+# Spark SQL arrays of the text column: whitespace tokens and subtokens.
+_TOKS = ws_tokens_sql("text")
+_SUBTOKS = f"regexp_extract_all(text, '{sql_regex(SUBTOKEN_RE)}', 0)"
+# A token's BPE symbols before any merge: its characters. '' is the merge
+# fold's no-carry sentinel (_bpe_apply_expr), so it never becomes a symbol.
+_SYMS = "filter(split(tok, ''), s -> s <> '')"
 
-def _tok_array(text_col: str) -> str:
-    # Spark SQL fragment: note WS_SQL (backslashes doubled for SQL literals).
-    return f"filter(split(trim({text_col}), '{WS_SQL}'), t -> t <> '')"
+
+def _id():
+    """The ``id`` output column: ``doc_id`` as BIGINT."""
+    return F.col("doc_id").cast("bigint").alias("id")
 
 
-def token_stats(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def _tokens(docs: DataFrame, *keep) -> DataFrame:
+    """(*keep, tok): one row per whitespace token of ``text``."""
+    return docs.select(*keep, F.explode(F.expr(_TOKS)).alias("tok"))
+
+
+def _subtokens(docs: DataFrame, *keep, pos: bool = False) -> DataFrame:
+    """(*keep, [pos,] tok): one row per :data:`SUBTOKEN_RE` match of
+    ``text``, with its 0-based position ``pos`` when asked for."""
+    arr = F.expr(_SUBTOKS)
+    gen = F.posexplode(arr).alias("pos", "tok") if pos else F.explode(arr).alias("tok")
+    return docs.select(*keep, gen)
+
+
+def _bigrams(docs: DataFrame) -> DataFrame:
+    """(id, w1, w2): one row per adjacent whitespace-token pair of
+    ``text``; a text with fewer than two tokens has none."""
+    pairs = (
+        f"CASE WHEN size({_TOKS}) >= 2 THEN "
+        f"transform(sequence(1, size({_TOKS}) - 1), i -> "
+        f"struct(element_at({_TOKS}, i) AS w1, element_at({_TOKS}, i + 1) AS w2))"
+        f" ELSE cast(array() as array<struct<w1:string,w2:string>>) END"
+    )
+    return docs.select(_id(), F.explode(F.expr(pairs)).alias("bg")).select(
+        "id", "bg.w1", "bg.w2"
+    )
+
+
+def token_stats(docs: DataFrame) -> DataFrame:
     """(id, n_chars, n_tokens, n_subtokens): whitespace + BPE-ish counts."""
-    toks = _tok_array(text_col)
-    return df.select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.length(text_col).cast("bigint").alias("n_chars"),
-        F.expr(f"cast(size({toks}) as bigint)").alias("n_tokens"),
-        F.expr(
-            f"cast(size(regexp_extract_all({text_col}, '{sql_regex(SUBTOKEN_RE)}', 0)) as bigint)"
-        ).alias("n_subtokens"),
+    return docs.select(
+        _id(),
+        F.length("text").cast("bigint").alias("n_chars"),
+        F.expr(f"cast(size({_TOKS}) as bigint)").alias("n_tokens"),
+        F.expr(f"cast(size({_SUBTOKS}) as bigint)").alias("n_subtokens"),
     )
 
 
@@ -53,32 +90,31 @@ def oracle_token_stats(table: str, id_col: str, text_col: str) -> str:
     """
 
 
-def quality_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def quality_score(docs: DataFrame) -> DataFrame:
     """Heuristic doc quality: alpha/punct/stopword ratios + mean token length.
 
     score = alpha_ratio * (1 - punct_ratio) * min(1, n_tokens/20) —
     the standard cheap pre-filter shape (length-normalized, symbol-penalized)
     used before expensive model-based scoring.
     """
-    toks = _tok_array(text_col)
     en = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
-    return df.select(
-        F.col(id_col).cast("bigint").alias("id"),
+    return docs.select(
+        _id(),
         F.expr(
-            f"cast(length(regexp_replace({text_col}, '[^A-Za-z]', '')) as double)"
-            f" / greatest(length({text_col}), 1)"
+            "cast(length(regexp_replace(text, '[^A-Za-z]', '')) as double)"
+            " / greatest(length(text), 1)"
         ).alias("alpha_ratio"),
         F.expr(
-            f"cast(length(regexp_replace({text_col}, '[A-Za-z0-9\\\\s]', '')) as double)"
-            f" / greatest(length({text_col}), 1)"
+            "cast(length(regexp_replace(text, '[A-Za-z0-9\\\\s]', '')) as double)"
+            " / greatest(length(text), 1)"
         ).alias("punct_ratio"),
         F.expr(
-            f"cast(size(filter({toks}, t -> t in ({en}))) as double)"
-            f" / greatest(size({toks}), 1)"
+            f"cast(size(filter({_TOKS}, t -> t in ({en}))) as double)"
+            f" / greatest(size({_TOKS}), 1)"
         ).alias("stopword_ratio"),
         F.expr(
-            f"cast(aggregate({toks}, 0L, (acc, t) -> acc + length(t)) as double)"
-            f" / greatest(size({toks}), 1)"
+            f"cast(aggregate({_TOKS}, 0L, (acc, t) -> acc + length(t)) as double)"
+            f" / greatest(size({_TOKS}), 1)"
         ).alias("mean_tok_len"),
     ).withColumn(
         "quality",
@@ -114,13 +150,12 @@ def oracle_quality_score(table: str, id_col: str, text_col: str) -> str:
     """
 
 
-def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def lang_id(docs: DataFrame) -> DataFrame:
     """Stopword-vote language ID: argmax over per-language hit counts,
     priority order breaks ties, zero hits → 'unknown'."""
-    toks = _tok_array(text_col)
     scores = {
         lang: F.expr(
-            f"size(filter({toks}, t -> t in ({', '.join(repr(w) for w in ws)})))"
+            f"size(filter({_TOKS}, t -> t in ({', '.join(repr(w) for w in ws)})))"
         )
         for lang, ws in STOPWORDS.items()
     }
@@ -128,9 +163,7 @@ def lang_id(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     pred = F.lit("unknown")
     for lang in reversed(_LANG_PRIORITY):
         pred = F.when((scores[lang] == best) & (best > 0), F.lit(lang)).otherwise(pred)
-    return df.select(
-        F.col(id_col).cast("bigint").alias("id"), pred.alias("pred_lang")
-    )
+    return docs.select(_id(), pred.alias("pred_lang"))
 
 
 def oracle_lang_id(table: str, id_col: str, text_col: str) -> str:
@@ -150,7 +183,7 @@ def oracle_lang_id(table: str, id_col: str, text_col: str) -> str:
     return f"SELECT CAST({id_col} AS BIGINT) AS id, {chain} AS pred_lang FROM {table}"
 
 
-def fingerprint(df: DataFrame, id_col: str, text_col: str, ngram: int = 8, keep: int = 4) -> DataFrame:
+def fingerprint(docs: DataFrame, ngram: int = 8, keep: int = 4) -> DataFrame:
     """Document fingerprint: the ``keep`` smallest 32-bit hashes of the doc's
     character n-grams (a min-k sketch ≈ winnowing), joined as a stable string.
 
@@ -158,15 +191,15 @@ def fingerprint(df: DataFrame, id_col: str, text_col: str, ngram: int = 8, keep:
     join-friendly at corpus scale.
     """
     grams = (
-        f"CASE WHEN length({text_col}) >= {ngram} THEN "
-        f"transform(sequence(1, length({text_col}) - {ngram - 1}),"
-        f" i -> substring({text_col}, i, {ngram})) ELSE array() END"
+        f"CASE WHEN length(text) >= {ngram} THEN "
+        f"transform(sequence(1, length(text) - {ngram - 1}),"
+        f" i -> substring(text, i, {ngram})) ELSE array() END"
     )
     hashes = (
         f"transform({grams}, g -> cast(conv(substring(md5(g), 1, 8), 16, 10) as bigint))"
     )
-    return df.select(
-        F.col(id_col).cast("bigint").alias("id"),
+    return docs.select(
+        _id(),
         F.expr(
             f"array_join(transform(slice(array_sort(array_distinct({hashes})), 1, {keep}),"
             f" x -> cast(x as string)), ',')"
@@ -200,18 +233,18 @@ REDACT_PATTERNS: dict[str, str] = {
 }
 
 
-def redact(df: DataFrame, text_col: str, out_col: str | None = None) -> DataFrame:
-    """Replace common PII shapes with ``[TAG]`` placeholders.
+def redact(col):
+    """Column expression: a string column with common PII shapes replaced
+    by ``[TAG]`` placeholders.
 
     Chained ``regexp_replace`` — stays in codegen, one pass over the string
     per pattern. The pattern registry is deliberately conservative (high
     precision); recall-oriented NER belongs in a Pandas-UDF stage.
     """
-    out_col = out_col or text_col
-    expr = F.col(text_col)
+    c = F.col(col) if isinstance(col, str) else col
     for tag, pat in REDACT_PATTERNS.items():
-        expr = F.regexp_replace(expr, pat, f"[{tag}]")
-    return df.withColumn(out_col, expr)
+        c = F.regexp_replace(c, pat, f"[{tag}]")
+    return c
 
 
 def oracle_redact(text_expr: str) -> str:
@@ -227,9 +260,7 @@ def oracle_redact(text_expr: str) -> str:
 # Repetition filters (Gopher/C4-style corpus hygiene)
 # ---------------------------------------------------------------------------
 
-def repetition_stats(
-    df: DataFrame, id_col: str, text_col: str, top_n: int = 2, dup_n: int = 3
-) -> DataFrame:
+def repetition_stats(docs: DataFrame, top_n: int = 2, dup_n: int = 3) -> DataFrame:
     """Per-document repetition measures used by the standard LLM-corpus
     quality rules (drop docs whose most-frequent 2-gram covers >20% of the
     text, or whose duplicated 3-grams cover >X%):
@@ -247,18 +278,15 @@ def repetition_stats(
     """
     from ..functions import exploded_word_shingles
 
-    toks = _tok_array(text_col)
-    base = df.select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.expr(f"cast(size({toks}) as bigint)").alias("n_tokens"),
-        F.expr(f"cast(size(array_distinct({toks})) as bigint)").alias("n_distinct"),
-        F.col(text_col).alias("__text"),
+    base = docs.select(
+        _id(),
+        F.expr(f"cast(size({_TOKS}) as bigint)").alias("n_tokens"),
+        F.expr(f"cast(size(array_distinct({_TOKS})) as bigint)").alias("n_distinct"),
+        "text",
     )
 
     def gram_stats(n: int, out: str, dup: bool) -> DataFrame:
-        grams = exploded_word_shingles(
-            base.select("id", "__text"), "__text", n, "gram"
-        )
+        grams = exploded_word_shingles(base.select("id", "text"), "text", n, "gram")
         counts = grams.groupBy("id", "gram").agg(F.count("*").alias("cnt"))
         if dup:
             agg = F.sum(F.when(F.col("cnt") > 1, F.col("cnt")).otherwise(0))
@@ -269,7 +297,7 @@ def repetition_stats(
     top = gram_stats(top_n, "top_tok", dup=False)
     dup = gram_stats(dup_n, "dup_tok", dup=True)
     return (
-        base.drop("__text")
+        base.drop("text")
         .join(top, "id", "left_outer")
         .join(dup, "id", "left_outer")
         .select(
@@ -331,8 +359,6 @@ def oracle_repetition_stats(
 def contamination(
     docs: DataFrame,
     benchmark: DataFrame,
-    id_col: str,
-    text_col: str,
     ngram: int = 5,
     broadcast_benchmark: bool = True,
 ) -> DataFrame:
@@ -349,12 +375,9 @@ def contamination(
     from ..functions import exploded_word_shingles
 
     d = exploded_word_shingles(
-        docs.select(F.col(id_col).cast("bigint").alias("id"), text_col),
-        text_col, ngram, "gram",
+        docs.select(_id(), "text"), "text", ngram, "gram"
     ).distinct()
-    b = exploded_word_shingles(
-        benchmark.select(text_col), text_col, ngram, "gram"
-    ).distinct()
+    b = exploded_word_shingles(benchmark.select("text"), "text", ngram, "gram").distinct()
     if broadcast_benchmark:
         b = F.broadcast(b)
     return (
@@ -388,16 +411,7 @@ def oracle_contamination(
 # ---------------------------------------------------------------------------
 
 
-def _terms(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    toks = _tok_array(text_col)
-    return df.select(
-        F.col(id_col).alias("doc_id"), F.explode(F.expr(toks)).alias("term")
-    )
-
-
-def tfidf_top_terms(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 5
-) -> DataFrame:
+def tfidf_top_terms(docs: DataFrame, k: int = 5) -> DataFrame:
     """Top-k TF-IDF terms per document (idf = ln(N/df), ties by term).
 
     Scale shape: tf is a (doc, term) partial+final aggregate over the token
@@ -407,12 +421,11 @@ def tfidf_top_terms(
     practice; here it stays a plain equi-join so the plan is the same at any
     vocabulary size.
     """
-    terms = _terms(df, id_col, text_col)
-    tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    n_docs = df.agg(F.count("*").alias("n_docs"))
+    tf = _tokens(docs, "doc_id").groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
+    dfreq = tf.groupBy("tok").agg(F.count("*").alias("df"))
+    n_docs = docs.agg(F.count("*").alias("n_docs"))
     scored = (
-        tf.join(dfreq, "term")
+        tf.join(dfreq, "tok")
         .join(F.broadcast(n_docs))
         .withColumn(
             # rounded to 6 decimals: ln() can differ across engines in the
@@ -425,13 +438,13 @@ def tfidf_top_terms(
             .cast("double"),
         )
     )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.desc("tfidf"), F.asc("tok"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select(
             F.col("doc_id").cast("bigint"),
-            "term",
+            F.col("tok").alias("term"),
             F.col("tf").cast("bigint"),
             F.col("df").cast("bigint"),
             "tfidf",
@@ -467,10 +480,8 @@ def oracle_tfidf_top_terms(table: str, id_col: str, text_col: str, k: int = 5) -
 
 
 def bm25_scores(
-    df: DataFrame,
+    docs: DataFrame,
     query_terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k1: float = 1.2,
     b: float = 0.75,
 ) -> DataFrame:
@@ -486,11 +497,10 @@ def bm25_scores(
     comparator's alphabetical column sort: ln() can differ at the last ulp
     across engines, and a float-led row sort would flip neighbors.
     """
-    terms = _terms(df, id_col, text_col)
-    per_doc = terms.groupBy("doc_id").agg(
+    per_doc = _tokens(docs, "doc_id").groupBy("doc_id").agg(
         F.count("*").alias("dl"),
         *[
-            F.sum(F.when(F.col("term") == t, 1).otherwise(0)).alias(f"__tf{i}")
+            F.sum(F.when(F.col("tok") == t, 1).otherwise(0)).alias(f"__tf{i}")
             for i, t in enumerate(query_terms)
         ],
     )
@@ -565,20 +575,7 @@ def oracle_bm25_scores(
 # ---------------------------------------------------------------------------
 
 
-def _subtokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.expr(
-                f"regexp_extract_all({text_col}, '{sql_regex(SUBTOKEN_RE)}', 0)"
-            )
-        ).alias("tok"),
-    )
-
-
-def induce_vocab(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", size: int = 256
-) -> DataFrame:
+def induce_vocab(docs: DataFrame, size: int = 256) -> DataFrame:
     """Top-``size`` subtokens by corpus frequency with deterministic ids
     (rank by count desc, token asc — id 0 is the most frequent).
 
@@ -586,9 +583,7 @@ def induce_vocab(
     top-V selection is a distributed sort + limit; the id-assigning window
     runs over the V selected rows only (vocabulary scale, not data scale).
     """
-    counts = _subtokens(df, id_col, text_col).groupBy("tok").agg(
-        F.count("*").alias("n")
-    )
+    counts = _subtokens(docs).groupBy("tok").agg(F.count("*").alias("n"))
     top = counts.orderBy(F.desc("n"), F.asc("tok")).limit(size)
     w = Window.orderBy(F.desc("n"), F.asc("tok"))
     return top.withColumn("token_id", (F.row_number().over(w) - 1).cast("bigint")).select(
@@ -596,16 +591,10 @@ def induce_vocab(
     )
 
 
-def oov_stats(
-    df: DataFrame,
-    vocab: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def oov_stats(docs: DataFrame, vocab: DataFrame) -> DataFrame:
     """Per-doc subtoken count, OOV count, and OOV rate against ``vocab``
     (broadcast — a vocabulary fits in memory by definition)."""
-    toks = _subtokens(df, id_col, text_col)
-    marked = toks.join(
+    marked = _subtokens(docs, "doc_id").join(
         F.broadcast(vocab.select(F.col("token").alias("tok"), F.lit(True).alias("__in"))),
         "tok",
         "left",
@@ -653,12 +642,7 @@ def oracle_oov_stats(table: str, text_col: str = "text", size: int = 256) -> str
     """
 
 
-def encode_ids(
-    df: DataFrame,
-    vocab: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def encode_ids(docs: DataFrame, vocab: DataFrame) -> DataFrame:
     """Encode every doc's subtoken stream to vocabulary ids (OOV = -1),
     preserving order; emits the id-sequence digest rather than the raw
     array so the output stays row-sized regardless of document length.
@@ -668,13 +652,7 @@ def encode_ids(
     bounded by the doc's own length — the same memory envelope as holding
     the document.
     """
-    toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.posexplode(
-            F.expr(f"regexp_extract_all({text_col}, '{sql_regex(SUBTOKEN_RE)}', 0)")
-        ).alias("pos", "tok"),
-    )
-    joined = toks.join(
+    joined = _subtokens(docs, "doc_id", pos=True).join(
         F.broadcast(vocab.select(F.col("token").alias("tok"), "token_id")),
         "tok",
         "left",
@@ -717,9 +695,7 @@ def oracle_encode_ids(table: str, text_col: str = "text", size: int = 256) -> st
 # Winnowing (positional fingerprint selection, Schleimer-Wilkerson-Aiken)
 # ---------------------------------------------------------------------------
 
-def winnow_fingerprints(
-    df: DataFrame, id_col: str, text_col: str, ngram: int = 8, window: int = 16
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame, ngram: int = 8, window: int = 16) -> DataFrame:
     """Winnowed fingerprint set per document: hash every character
     ``ngram``, then keep the minimum hash of every sliding window of
     ``window`` consecutive hashes.
@@ -741,10 +717,9 @@ def winnow_fingerprints(
     of the expression tree re-expanding multiplicatively (the naive single
     expression is ~50x slower).
     """
-    t = "__t"
     grams = (
-        f"CASE WHEN length({t}) >= {ngram} THEN "
-        f"transform(sequence(1, length({t}) - {ngram - 1}), i -> substring({t}, i, {ngram})) "
+        f"CASE WHEN length(text) >= {ngram} THEN "
+        f"transform(sequence(1, length(text) - {ngram - 1}), i -> substring(text, i, {ngram})) "
         f"ELSE array() END"
     )
     hashes = "transform(__grams, g -> cast(conv(substring(md5(g), 1, 8), 16, 10) as bigint))"
@@ -755,8 +730,7 @@ def winnow_fingerprints(
         f"ELSE array_distinct(array(array_min(__hs))) END"
     )
     return (
-        df.select(F.col(id_col).cast("bigint").alias("id"), F.col(text_col).alias("__t"))
-        .select("id", F.expr(grams).alias("__grams"))
+        docs.select(_id(), F.expr(grams).alias("__grams"))
         .select("id", F.expr(hashes).alias("__hs"))
         .select("id", F.expr(mins).alias("__mins"))
         .select("id", F.expr("array_sort(__mins)").alias("__sel"))
@@ -802,7 +776,7 @@ def oracle_winnow_fingerprints(
 # No reference analogue (north-star text analysis).
 # ---------------------------------------------------------------------------
 
-def unigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def unigram_logprob(docs: DataFrame) -> DataFrame:
     """(id, n_tokens, avg_logprob): mean ln p(tok) per doc under the
     corpus-wide unigram MLE.
 
@@ -812,10 +786,7 @@ def unigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     final per-doc aggregation. The corpus is never collected; the only
     driver-sized object is the plan itself.
     """
-    toks = df.select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.explode(F.expr(_tok_array(text_col))).alias("tok"),
-    )
+    toks = _tokens(docs, _id())
     counts = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
     total = counts.agg(F.sum("cnt").alias("tot"))
     # ln() differs across engines in the last ulp, and a per-doc double mean
@@ -860,12 +831,7 @@ def oracle_unigram_logprob(table: str, id_col: str, text_col: str) -> str:
 # corpus-scale algorithm in the same family as pagerank/dup-clusters.
 # ---------------------------------------------------------------------------
 
-def bpe_merges(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_merges: int = 6,
-) -> DataFrame:
+def bpe_merges(docs: DataFrame, n_merges: int = 6) -> DataFrame:
     """Learn ``n_merges`` BPE merges over the corpus; returns (rank, left,
     right, pair_count) — the ordered merge table a tokenizer would ship.
 
@@ -876,50 +842,76 @@ def bpe_merges(
     - Each round: explode adjacent symbol pairs weighted by word count →
       map-side-combined count → global top-1 (count desc, pair asc for
       determinism) — a k-element reduce, not a sort.
-    - The merge is applied with a JVM-side aggregate expression
-      (no Python in the loop); ``localCheckpoint`` keeps lineage flat.
+    - The merges found so far are applied with JVM-side aggregate
+      expressions (no Python in the loop).
 
-    Only the merge table (n_merges rows) ever reaches the driver.
+    Only the merge table (n_merges rows) ever reaches the driver; the
+    returned frame is built from it and reads nothing the loop persisted.
+    """
+    rows = [(rank, l, r, cnt) for rank, (l, r, cnt) in enumerate(_bpe_train(docs, n_merges))]
+    return docs.sparkSession.createDataFrame(
+        rows, "rank bigint, left string, right string, pair_count bigint"
+    )
+
+
+def _bpe_train(docs: DataFrame, n_merges: int) -> list[tuple[str, str, int]]:
+    """The BPE training loop of :func:`bpe_merges`: the ordered merges
+    ``(left, right, pair_count)``, at most ``n_merges`` of them.
+
+    The word-frequency table is checkpointed once and released before
+    returning. Each round re-derives the segmentation from it by applying
+    every merge found so far — a narrow map over a vocabulary-scale table —
+    so no round's frame is checkpointed and the plan stays one fold deep
+    per merge. A local checkpoint keeps the partitioning AQE chose for the
+    table; persist() would pin the 32 pre-AQE shuffle partitions and every
+    round would run 32 tasks (measured at sf0.01 on 4 cores: 3.7–4.1 s against
+    1.5–1.9 s for the six rounds).
     """
     words = (
-        df.select(F.explode(F.expr(_tok_array(text_col))).alias("w"))
-        .groupBy("w")
+        _tokens(docs)
+        .groupBy("tok")
         .agg(F.count("*").alias("wc"))
-        # '' is the scanner's no-carry sentinel below; keep it out of syms
-        .select(F.expr("filter(split(w, ''), s -> s <> '')").alias("syms"), "wc")
+        .select(F.expr(_SYMS).alias("syms"), "wc")
         .localCheckpoint()
     )
-    merges = []
-    for rank in range(n_merges):
-        pairs = words.select(
-            F.explode(
-                F.expr(
-                    "transform(slice(syms, 1, size(syms) - 1),"
-                    " (s, i) -> struct(s AS l, syms[i + 1] AS r))"
-                )
-            ).alias("p"),
-            "wc",
-        ).where(F.col("p.l").isNotNull() & F.col("p.r").isNotNull())
-        top = (
-            pairs.groupBy("p")
-            .agg(F.sum("wc").alias("cnt"))
-            .orderBy(F.col("cnt").desc(), F.col("p.l"), F.col("p.r"))
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        l, r, cnt = top[0].p.l, top[0].p.r, top[0].cnt
-        merges.append((rank, l, r, int(cnt)))
-        if rank == n_merges - 1:
-            # the re-merged word table of the FINAL round is never read —
-            # only the merge tuple above is; skip building it (r11)
-            break
-        # apply the merge JVM-side: left-to-right greedy pair join, the
-        # standard BPE application order
-        merged = f"""
+    merges: list[tuple[str, str, int]] = []
+    try:
+        for _ in range(n_merges):
+            syms = F.expr(_bpe_apply_expr("syms", merges)).alias("syms")
+            pairs = words.select(syms, "wc").select(
+                F.explode(
+                    F.expr(
+                        "transform(slice(syms, 1, size(syms) - 1),"
+                        " (s, i) -> struct(s AS l, syms[i + 1] AS r))"
+                    )
+                ).alias("p"),
+                "wc",
+            ).where(F.col("p.l").isNotNull() & F.col("p.r").isNotNull())
+            top = (
+                pairs.groupBy("p")
+                .agg(F.sum("wc").alias("cnt"))
+                .orderBy(F.col("cnt").desc(), F.col("p.l"), F.col("p.r"))
+                .limit(1)
+                .collect()
+            )
+            if not top:
+                break
+            merges.append((top[0].p.l, top[0].p.r, int(top[0].cnt)))
+    finally:
+        # DataFrame.unpersist() does not release a local checkpoint: its
+        # blocks belong to the RDD under the frame's LogicalRDD
+        words._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    return merges
+
+
+def _bpe_apply_expr(col: str, merges) -> str:
+    """JVM folds applying ``merges`` ((left, right, count) in rank order) to
+    a symbol array expression: the standard left-to-right greedy pair join
+    of BPE application, one fold per merge."""
+    for l, r, _cnt in merges:
+        col = f"""
         aggregate(
-          syms,
+          {col},
           struct(CAST(array() AS ARRAY<STRING>) AS acc, CAST('' AS STRING) AS carry),
           (st, s) -> CASE
             WHEN st.carry = '' THEN struct(st.acc AS acc, s AS carry)
@@ -931,38 +923,32 @@ def bpe_merges(
                      ELSE array_append(st.acc, st.carry) END
         )
         """
-        # r11: eager=False checkpoint — the per-round word-table update is a
-        # NARROW map over the (checkpointed) vocab-scale base, so the call
-        # has no shuffle stage to run (under AQE it would run any it had)
-        # and the eager variant's per-round job only re-wrote vocab-scale
-        # blocks nobody needed yet. The persistent RDD is registered at once;
-        # its blocks fill when the next round's top-1 collect first computes
-        # them, and lineage still truncates per round.
-        words = words.select(
-            F.expr(merged).alias("syms"), "wc"
-        ).localCheckpoint(eager=False)
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, pair_count bigint"
-    ).select(
-        F.col("rank").cast("bigint"),
-        "left",
-        "right",
-        F.col("pair_count").cast("bigint"),
-    )
+    return col
 
 
 def _sq(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
-def linear_score(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_buckets: int = 1024,
-    w_range: int = 1000,
-) -> DataFrame:
+def _bpe_encoded(docs: DataFrame, n_merges: int, *keep) -> DataFrame:
+    """(*keep, tok, w_syms): every whitespace token of ``docs`` with its
+    symbol count under the corpus's first ``n_merges`` BPE merges.
+
+    Word-level memoization (the production tokenizer-application trick):
+    the merge folds are a pure function of the word, and Zipf makes the
+    vocabulary tiny relative to the token stream — encode each DISTINCT
+    word once, then join the per-word symbol count back onto the
+    occurrences (vocabulary-sized side, broadcastable).
+    """
+    syms = _bpe_apply_expr(_SYMS, _bpe_train(docs, n_merges))
+    words = _tokens(docs, *keep)
+    vocab = words.select("tok").distinct().select(
+        "tok", F.size(F.expr(syms)).alias("w_syms")
+    )
+    return words.join(F.broadcast(vocab), "tok")
+
+
+def linear_score(docs: DataFrame, n_buckets: int = 1024, w_range: int = 1000) -> DataFrame:
     """fastText-style hashed-linear quality scoring, applied map-only:
     token -> hashed bucket -> weight, per-doc mean activation through a
     sigmoid. The weight table here is a deterministic hash-derived stand-in
@@ -978,10 +964,7 @@ def linear_score(
     """
     from ..functions import hex_hash32
 
-    toks = df.select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.explode(F.expr(_tok_array(text_col))).alias("tok"),
-    )
+    toks = _tokens(docs, _id())
     bucket = hex_hash32(F.col("tok")) % n_buckets
     milli_w = (
         hex_hash32(bucket.cast("string"), salt="w") % (2 * w_range + 1) - w_range
@@ -1142,11 +1125,7 @@ GOPHER_STOPS = ["the", "be", "to", "of", "and", "that", "have", "with"]
 
 
 def gopher_rules(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_words: int = 50,
-    max_words: int = 100_000,
+    docs: DataFrame, min_words: int = 50, max_words: int = 100_000
 ) -> DataFrame:
     """Composite document-quality rule filter (Gopher / MassiveText style).
 
@@ -1163,28 +1142,27 @@ def gopher_rules(
     the scan (reference analogue: a chained filter Mapper, cf.
     MRC/mapreduce/lib/map/RegexMapper.java used as a gate).
     """
-    toks = _tok_array(text_col)
-    lines = f"split({text_col}, '\\n')"
+    lines = "split(text, '\\n')"
     stops = ", ".join(f"'{w}'" for w in GOPHER_STOPS)
-    out = df.select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.expr(f"cast(size({toks}) as bigint)").alias("n_words"),
+    out = docs.select(
+        _id(),
+        F.expr(f"cast(size({_TOKS}) as bigint)").alias("n_words"),
         F.expr(
-            f"cast(aggregate({toks}, 0L, (acc, t) -> acc + length(t)) as double)"
-            f" / greatest(size({toks}), 1)"
+            f"cast(aggregate({_TOKS}, 0L, (acc, t) -> acc + length(t)) as double)"
+            f" / greatest(size({_TOKS}), 1)"
         ).alias("mean_word_len"),
         F.expr(
-            f"cast(size(split({text_col}, '#', -1)) - 1"
-            f" + size(split({text_col}, '\\\\.\\\\.\\\\.', -1)) - 1 as double)"
-            f" / greatest(size({toks}), 1)"
+            "cast(size(split(text, '#', -1)) - 1"
+            " + size(split(text, '\\\\.\\\\.\\\\.', -1)) - 1 as double)"
+            f" / greatest(size({_TOKS}), 1)"
         ).alias("symbol_word_ratio"),
         F.expr(
-            f"cast(size(filter({toks}, t -> t rlike '[A-Za-z]')) as double)"
-            f" / greatest(size({toks}), 1)"
+            f"cast(size(filter({_TOKS}, t -> t rlike '[A-Za-z]')) as double)"
+            f" / greatest(size({_TOKS}), 1)"
         ).alias("alpha_word_ratio"),
         F.expr(
             f"cast(size(filter(array({stops}),"
-            f" s -> exists({toks}, t -> lower(t) = s))) as bigint)"
+            f" s -> exists({_TOKS}, t -> lower(t) = s))) as bigint)"
         ).alias("stop_hits"),
         F.expr(
             f"cast(size(filter({lines}, l -> trim(l) rlike '^[-*•]'))"
@@ -1272,7 +1250,7 @@ def _luhn_spark(cand: str) -> str:
     )
 
 
-def pii_luhn(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def pii_luhn(docs: DataFrame) -> DataFrame:
     """Count card-number-shaped digit runs and how many pass the Luhn
     checksum — the high-precision step that separates real card numbers
     from phone numbers/ids sharing the digit-run shape.
@@ -1282,9 +1260,9 @@ def pii_luhn(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     runs at scan speed with no Python; the redaction twin would substitute
     only validated spans.
     """
-    cands = f"regexp_extract_all({text_col}, '{_CARD_CAND_RE}', 0)"
-    return df.select(
-        F.col(id_col).cast("bigint").alias("id"),
+    cands = f"regexp_extract_all(text, '{_CARD_CAND_RE}', 0)"
+    return docs.select(
+        _id(),
         F.expr(f"cast(size({cands}) as bigint)").alias("n_candidates"),
         F.expr(
             f"cast(size(filter({cands}, c -> {_luhn_spark('c')})) as bigint)"
@@ -1320,7 +1298,7 @@ def oracle_pii_luhn(table: str, id_col: str, text_col: str) -> str:
 BIGRAM_LAMBDA = 0.7  # interpolation weight on the bigram term
 
 
-def bigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def bigram_logprob(docs: DataFrame) -> DataFrame:
     """(id, n_bigrams, avg_logprob): mean ln of the interpolated bigram
     probability λ·c(w1 w2)/c(w1) + (1−λ)·c(w2)/N under corpus-wide MLE
     counts — the Jelinek-Mercer-smoothed LM used for perplexity-style
@@ -1336,19 +1314,8 @@ def bigram_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     Docs with < 2 tokens have no bigrams and drop out (match in oracle).
     """
     lam = float(BIGRAM_LAMBDA)
-    toks_arr = _tok_array(text_col)
-    bi_expr = (
-        f"CASE WHEN size({toks_arr}) >= 2 THEN "
-        f"transform(sequence(1, size({toks_arr}) - 1), i -> "
-        f"struct(element_at({toks_arr}, i) AS w1, element_at({toks_arr}, i + 1) AS w2))"
-        f" ELSE cast(array() as array<struct<w1:string,w2:string>>) END"
-    )
-    bis = df.select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.explode(F.expr(bi_expr)).alias("bg"),
-    ).select("id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    toks = df.select(F.explode(F.expr(toks_arr)).alias("tok"))
-    uni = toks.groupBy("tok").agg(F.count("*").alias("cu"))
+    bis = _bigrams(docs)
+    uni = _tokens(docs).groupBy("tok").agg(F.count("*").alias("cu"))
     total = uni.agg(F.sum("cu").alias("tot"))
     bi_counts = bis.groupBy("w1", "w2").agg(F.count("*").alias("cb"))
     scored = (
@@ -1406,7 +1373,7 @@ def oracle_bigram_logprob(table: str, id_col: str, text_col: str) -> str:
 KN_DISCOUNT = 0.75  # absolute discount D (Kneser-Ney standard default)
 
 
-def kneser_ney_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def kneser_ney_logprob(docs: DataFrame) -> DataFrame:
     """(id, n_bigrams, avg_logprob) under interpolated Kneser-Ney bigram
     smoothing — the LM behind KenLM-style perplexity filters, upgraded from
     :func:`bigram_logprob`'s Jelinek-Mercer mix:
@@ -1424,40 +1391,28 @@ def kneser_ney_logprob(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     per-bigram ln rounds to DECIMAL(38,6) before the per-doc mean (the same
     summation-order discipline as the other LM scorers).
 
-    Plan shape (r10 rework): the model is scored once per bigram TYPE —
-    ``cb`` (vocab-sized) joins ``ctx``/``cont``/``types``, all vocab-scale —
-    and the document stream is pre-aggregated to (id, w1, w2, cnt) before
-    its single equi-join with the scored type table. The per-doc sum is then
+    Plan shape: the model is scored once per bigram TYPE — ``cb``
+    (vocab-sized) joins ``ctx``/``cont``/``types``, all vocab-scale — and
+    the document stream is pre-aggregated to (id, w1, w2, cnt) before its
+    single equi-join with the scored type table. The per-doc sum is then
     the exact weighted sum ``Σ cnt · lp`` (DECIMAL × BIGINT is exact, and
     decimal addition is order-free), bit-identical to summing ``lp`` per
-    occurrence. This replaces the r6 shape that joined the FULL occurrence
-    stream three times (on (w1,w2), w1, w2 = four full-stream shuffles);
-    measured ×5.94 at ×5 data on the old shape — the rework shuffles the
-    occurrence stream once (the (id,w1,w2) combine) and everything after is
-    vocab- or doc-type-scale.
+    occurrence. So the occurrence stream is shuffled once (the (id,w1,w2)
+    combine) and everything after is vocab- or doc-type-scale; joining the
+    full occurrence stream on (w1,w2), w1 and w2 instead costs four
+    full-stream shuffles (measured ×5.94 at ×5 data).
     """
     d = float(KN_DISCOUNT)
-    toks_arr = _tok_array(text_col)
-    bi_expr = (
-        f"CASE WHEN size({toks_arr}) >= 2 THEN "
-        f"transform(sequence(1, size({toks_arr}) - 1), i -> "
-        f"struct(element_at({toks_arr}, i) AS w1, element_at({toks_arr}, i + 1) AS w2))"
-        f" ELSE cast(array() as array<struct<w1:string,w2:string>>) END"
-    )
     from . import fan_out
 
-    bis = fan_out(df).select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.explode(F.expr(bi_expr)).alias("bg"),
-    ).select("id", F.col("bg.w1").alias("w1"), F.col("bg.w2").alias("w2"))
-    # one shuffle of the occurrence stream: combine to per-doc bigram types.
-    # r11: materialize it — doc_bis feeds the model chain (cb/ctx/cont/
+    # one shuffle of the occurrence stream: combine to per-doc bigram types,
+    # and materialize it — doc_bis feeds the model chain (cb/ctx/cont/
     # types) AND the scoring join, and AQE's runtime broadcast conversions
     # re-compute non-materialized subtrees (observed: the tokenize + bigram
     # explode executed ~6x in the final plan). The checkpoint is the same
     # doc-type-scale frame the shuffle already moves once.
     doc_bis = (
-        bis.groupBy("id", "w1", "w2").agg(F.count("*").alias("cnt")).localCheckpoint()
+        _bigrams(fan_out(docs)).groupBy("id", "w1", "w2").agg(F.count("*").alias("cnt")).localCheckpoint()
     )
     cb = doc_bis.groupBy("w1", "w2").agg(F.sum("cnt").alias("cb"))
     ctx = cb.groupBy("w1").agg(
@@ -1546,9 +1501,7 @@ def oracle_kneser_ney_logprob(table: str, id_col: str, text_col: str) -> str:
 _LR_LR = 2.0  #: learning rate (power of two: exact in both engines)
 
 
-def _lr_feature_df(
-    df: DataFrame, id_col: str, text_col: str, min_words: int
-) -> DataFrame:
+def _lr_feature_df(docs: DataFrame, min_words: int) -> DataFrame:
     """(id, y, x1, x2, x3): weak rule label + scaled continuous features.
 
     y = 1 when the doc passes [n_words >= min_words AND >=1 Gopher stopword]
@@ -1556,24 +1509,23 @@ def _lr_feature_df(
     x1 = n_tokens/100, x2 = stopword_ratio*10, x3 = mean_token_len/5.
     Integer-derived divisions only: identical IEEE doubles in both engines.
     """
-    toks = _tok_array(text_col)
     stops = ", ".join(f"'{w}'" for w in GOPHER_STOPS)
     en = ", ".join(f"'{w}'" for w in STOPWORDS["en"])
-    return df.select(
-        F.col(id_col).cast("bigint").alias("id"),
+    return docs.select(
+        _id(),
         F.expr(
-            f"case when size({toks}) >= {min_words} and "
-            f"size(filter(array({stops}), s -> exists({toks}, t -> lower(t) = s))) >= 1 "
+            f"case when size({_TOKS}) >= {min_words} and "
+            f"size(filter(array({stops}), s -> exists({_TOKS}, t -> lower(t) = s))) >= 1 "
             f"then 1.0D else 0.0D end"
         ).alias("y"),
-        F.expr(f"cast(size({toks}) as double) / 100").alias("x1"),
+        F.expr(f"cast(size({_TOKS}) as double) / 100").alias("x1"),
         F.expr(
-            f"cast(size(filter({toks}, t -> t in ({en}))) as double)"
-            f" / greatest(size({toks}), 1) * 10"
+            f"cast(size(filter({_TOKS}, t -> t in ({en}))) as double)"
+            f" / greatest(size({_TOKS}), 1) * 10"
         ).alias("x2"),
         F.expr(
-            f"cast(aggregate({toks}, 0L, (acc, t) -> acc + length(t)) as double)"
-            f" / greatest(size({toks}), 1) / 5"
+            f"cast(aggregate({_TOKS}, 0L, (acc, t) -> acc + length(t)) as double)"
+            f" / greatest(size({_TOKS}), 1) / 5"
         ).alias("x3"),
     )
 
@@ -1621,13 +1573,7 @@ def lr_z_expr(w: list[float]) -> str:
     )
 
 
-def train_linear_filter(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_iter: int = 8,
-    min_words: int = 50,
-) -> DataFrame:
+def train_linear_filter(docs: DataFrame, n_iter: int = 8, min_words: int = 50) -> DataFrame:
     """Train the linear quality filter and report weights + confusion matrix.
 
     Output (one row): n, n_pos, w_bias, w_len, w_stop, w_mwl, tp, fp, fn,
@@ -1635,7 +1581,7 @@ def train_linear_filter(
     to the driver; the feature pass is map-only, so at 100 TB each step is
     a scan + partial aggregate (no shuffle beyond the 4-cell fold).
     """
-    feats = _lr_feature_df(df, id_col, text_col, min_words)
+    feats = _lr_feature_df(docs, min_words)
     w, n = train_linear_weights(feats, n_iter)
     z = lr_z_expr(w)
     pred = f"({z} >= 0)"  # s(z) >= 0.5  <=>  z >= 0
@@ -1767,28 +1713,7 @@ def oracle_train_linear_filter(
 # BPE application (encode with the trained merge table)
 # ---------------------------------------------------------------------------
 
-def _bpe_apply_expr(col: str, l: str, r: str) -> str:
-    """JVM fold applying merge (l, r) to a symbol array column — the same
-    greedy left-to-right carry scan bpe_merges trains with."""
-    return f"""
-        aggregate(
-          {col},
-          struct(CAST(array() AS ARRAY<STRING>) AS acc, CAST('' AS STRING) AS carry),
-          (st, s) -> CASE
-            WHEN st.carry = '' THEN struct(st.acc AS acc, s AS carry)
-            WHEN st.carry = {_sq(l)} AND s = {_sq(r)}
-              THEN struct(st.acc AS acc, {_sq(l + r)} AS carry)
-            ELSE struct(array_append(st.acc, st.carry) AS acc, s AS carry)
-          END,
-          st -> CASE WHEN st.carry = '' THEN st.acc
-                     ELSE array_append(st.acc, st.carry) END
-        )
-        """
-
-
-def bpe_encode(
-    df: DataFrame, id_col: str, text_col: str, n_merges: int = 6
-) -> DataFrame:
+def bpe_encode(docs: DataFrame, n_merges: int = 6) -> DataFrame:
     """Train ``n_merges`` BPE merges on the corpus, then ENCODE it: the
     full tokenizer loop (train -> ship merge table -> apply), per-doc
     output (id, n_words, n_chars, n_syms, compression).
@@ -1800,30 +1725,12 @@ def bpe_encode(
     aggregate). compression = encoded symbols / raw chars, a ratio of
     exact integers.
     """
-    table = bpe_merges(df, id_col, text_col, n_merges).orderBy("rank").collect()
-    words = df.select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.explode(F.expr(_tok_array(text_col))).alias("w"),
-    )
-    # Word-level memoization (the production tokenizer-application trick):
-    # the merge folds are a pure function of the word, and Zipf makes the
-    # vocabulary tiny relative to the token stream — encode each DISTINCT
-    # word once, then join the per-word symbol count back onto the
-    # occurrences (vocabulary-sized side, broadcastable).
-    vocab = words.select("w").distinct().withColumn(
-        "syms", F.expr("filter(split(w, ''), s -> s <> '')")
-    )
-    for row in table:
-        vocab = vocab.withColumn(
-            "syms", F.expr(_bpe_apply_expr("syms", row.left, row.right))
-        )
-    encoded = vocab.select("w", F.size("syms").alias("w_syms"))
     return (
-        words.join(F.broadcast(encoded), "w")
+        _bpe_encoded(docs, n_merges, _id())
         .groupBy("id")
         .agg(
             F.count("*").cast("bigint").alias("n_words"),
-            F.sum(F.length("w")).cast("bigint").alias("n_chars"),
+            F.sum(F.length("tok")).cast("bigint").alias("n_chars"),
             F.sum("w_syms").cast("bigint").alias("n_syms"),
         )
         .select(
@@ -1878,12 +1785,7 @@ def oracle_bpe_encode(table: str, id_col: str, text_col: str, n_merges: int = 6)
 # C4-style cross-corpus line dedup
 # ---------------------------------------------------------------------------
 
-def line_dedup(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    min_words: int = 4,
-) -> DataFrame:
+def line_dedup(docs: DataFrame, min_words: int = 4) -> DataFrame:
     """Corpus-wide exact LINE dedup (the C4 preprocessing rule): any line of
     ``min_words``+ words that occurs anywhere else in the corpus is kept
     ONLY at its first occurrence (smallest doc id, then position) and
@@ -1896,13 +1798,10 @@ def line_dedup(
     hot keys the window's partial sort handles), one per-doc rebuild.
     Output: (id, n_lines, n_kept, n_dropped, kept_text).
     """
-    lines = df.select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+    lines = docs.select(
+        _id(), F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line")
     )
-    eligible = F.expr(
-        f"size(filter(split(trim(line), '{WS_SQL}'), t -> t != '')) >= {min_words}"
-    )
+    eligible = F.expr(f"size({ws_tokens_sql('line')}) >= {min_words}")
     w = Window.partitionBy("line").orderBy("id", "pos")
     flagged = (
         lines.withColumn("elig", eligible)
@@ -1952,13 +1851,7 @@ def oracle_line_dedup(
     """
 
 
-def ppmi_cooccurrence(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    window: int = 2,
-    min_count: int = 5,
-) -> DataFrame:
+def ppmi_cooccurrence(docs: DataFrame, window: int = 2, min_count: int = 5) -> DataFrame:
     """Skip-gram co-occurrence counts with positive PMI scoring — the
     classic count-based embedding prep (word2vec's sampling target /
     GloVe's input matrix): for every token, every context token within
@@ -1973,15 +1866,14 @@ def ppmi_cooccurrence(
     Pairs below ``min_count`` are dropped (standard PMI noise floor).
     Output: (w, c, n_wc, ppmi) with ppmi rounded to 6 dp.
     """
-    toks_arr = _tok_array(text_col)
     pairs_expr = (
-        f"flatten(transform(sequence(1, size({toks_arr})), i -> "
+        f"flatten(transform(sequence(1, size({_TOKS})), i -> "
         f"transform(filter(sequence(greatest(1, i - {window}),"
-        f" least(size({toks_arr}), i + {window})), j -> j != i), j -> "
-        f"struct(element_at({toks_arr}, i) AS w, element_at({toks_arr}, j) AS c))))"
+        f" least(size({_TOKS}), i + {window})), j -> j != i), j -> "
+        f"struct(element_at({_TOKS}, i) AS w, element_at({_TOKS}, j) AS c))))"
     )
     guarded = (
-        f"CASE WHEN size({toks_arr}) >= 2 THEN {pairs_expr}"
+        f"CASE WHEN size({_TOKS}) >= 2 THEN {pairs_expr}"
         f" ELSE cast(array() as array<struct<w:string,c:string>>) END"
     )
     # CPU-bound narrow pair generation: fan_out so a single-split small
@@ -1989,7 +1881,7 @@ def ppmi_cooccurrence(
     # 34s -> ~4s at sf0.1, measured.
     from . import fan_out
 
-    pairs = fan_out(df).select(F.explode(F.expr(guarded)).alias("p")).select(
+    pairs = fan_out(docs).select(F.explode(F.expr(guarded)).alias("p")).select(
         F.col("p.w").alias("w"), F.col("p.c").alias("c")
     )
     counts = pairs.groupBy("w", "c").agg(F.count("*").alias("n_wc"))
@@ -2040,9 +1932,7 @@ def oracle_ppmi_cooccurrence(
     """
 
 
-def inverted_index(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", min_df: int = 2
-) -> DataFrame:
+def inverted_index(docs: DataFrame, min_df: int = 2) -> DataFrame:
     """Positional inverted index — the search-engine primitive: per term,
     document frequency, total term frequency, and an md5 digest of the
     full ordered posting list ``doc:pos|pos .. doc:pos|pos`` (1-based
@@ -2058,10 +1948,9 @@ def inverted_index(
     ``min_df`` drops hapax terms (the long tail that doubles index size
     for no retrieval value).
     """
-    toks = _tok_array(text_col)
-    tp = df.select(
-        F.col(id_col).cast("bigint").alias("doc_id"),
-        F.posexplode(F.expr(toks)).alias("pos0", "term"),
+    tp = docs.select(
+        F.col("doc_id").cast("bigint"),
+        F.posexplode(F.expr(_TOKS)).alias("pos0", "term"),
     ).select("doc_id", "term", (F.col("pos0") + 1).alias("pos"))
     per_doc = tp.groupBy("term", "doc_id").agg(
         F.count("*").cast("bigint").alias("tf"),
@@ -2111,10 +2000,7 @@ def oracle_inverted_index(
     """
 
 
-def lang_confusion(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-    label_col: str = "lang",
-) -> DataFrame:
+def lang_confusion(docs: DataFrame) -> DataFrame:
     """Confusion matrix of the stopword-vote language identifier against
     the labeled language column — the eval loop for :func:`lang_id`
     (never ship a classifier without its confusion matrix): per
@@ -2126,10 +2012,8 @@ def lang_confusion(
     exact integers plus one rounded ratio.
     Output: (lang, pred_lang, n, share_of_lang).
     """
-    preds = lang_id(df, id_col, text_col)
-    labeled = df.select(
-        F.col(id_col).cast("bigint").alias("id"), F.col(label_col).alias("lang")
-    )
+    preds = lang_id(docs)
+    labeled = docs.select(_id(), "lang")
     cells = (
         labeled.join(preds, "id")
         .groupBy("lang", "pred_lang")
@@ -2165,9 +2049,7 @@ def oracle_lang_confusion(
     """
 
 
-def readability(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def readability(docs: DataFrame) -> DataFrame:
     """Flesch-style readability features per document — the classic
     quality-filter complement to gopher_rules: words, sentences, syllable
     estimate (vowel-group count, the standard dictionary-free heuristic),
@@ -2181,15 +2063,14 @@ def readability(
     literal coefficients, rounded to 4dp.
     Output: (id, n_words, n_sentences, n_syllables, flesch).
     """
-    toks = _tok_array(text_col)
-    words = F.expr(f"cast(size({toks}) as bigint)")
+    words = F.expr(f"cast(size({_TOKS}) as bigint)")
     sents = F.expr(
-        f"cast(greatest(size(filter(split({text_col}, '[.!?]+'), s -> trim(s) <> '')),"
-        f" 1) as bigint)"
+        "cast(greatest(size(filter(split(text, '[.!?]+'), s -> trim(s) <> '')),"
+        " 1) as bigint)"
     )
     sylls = F.expr(
-        f"cast(size(filter(split({text_col}, '[aeiouyAEIOUY]+'), s -> true)) - 1"
-        f" as bigint)"
+        "cast(size(filter(split(text, '[aeiouyAEIOUY]+'), s -> true)) - 1"
+        " as bigint)"
     )
     w, s, y = F.col("n_words"), F.col("n_sentences"), F.col("n_syllables")
     flesch = (
@@ -2198,8 +2079,8 @@ def readability(
         - F.lit(84.6) * (y.cast("double") / w.cast("double"))
     )
     return (
-        df.select(
-            F.col(id_col).cast("bigint").alias("id"),
+        docs.select(
+            _id(),
             words.alias("n_words"),
             sents.alias("n_sentences"),
             sylls.alias("n_syllables"),
@@ -2235,13 +2116,7 @@ def oracle_readability(
     """
 
 
-def tokenizer_fertility(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    lang_col: str = "lang",
-    n_merges: int = 6,
-) -> DataFrame:
+def tokenizer_fertility(docs: DataFrame, n_merges: int = 6) -> DataFrame:
     """Tokenizer fertility report: subword tokens per whitespace word,
     per language — THE standard tokenizer-quality metric (a BPE trained
     on the corpus majority language shows low fertility there and 2-4x
@@ -2249,28 +2124,13 @@ def tokenizer_fertility(
     and slower training for that language).
 
     Reuses the full BPE loop: train ``n_merges`` merges on the corpus
-    (:func:`bpe_merges`), apply them via the memoized distinct-vocabulary
-    path (encode each word ONCE, broadcast the vocabulary-sized result
-    back — the production tokenizer-application trick from bpe_encode),
-    then roll up per language. Exact integer counts, one division.
+    and apply them through the memoized distinct-vocabulary path of
+    :func:`bpe_encode`, then roll up per language. Exact integer counts,
+    one division.
     Output: (lang, n_docs, n_words, n_subwords, fertility).
     """
-    table = bpe_merges(df, id_col, text_col, n_merges).orderBy("rank").collect()
-    words = df.select(
-        F.col(lang_col).alias("lang"),
-        F.col(id_col).cast("bigint").alias("id"),
-        F.explode(F.expr(_tok_array(text_col))).alias("w"),
-    )
-    vocab = words.select("w").distinct().withColumn(
-        "syms", F.expr("filter(split(w, ''), s -> s <> '')")
-    )
-    for row in table:
-        vocab = vocab.withColumn(
-            "syms", F.expr(_bpe_apply_expr("syms", row.left, row.right))
-        )
-    encoded = vocab.select("w", F.size("syms").cast("bigint").alias("w_syms"))
     return (
-        words.join(F.broadcast(encoded), "w")
+        _bpe_encoded(docs, n_merges, "lang", _id())
         .groupBy("lang")
         .agg(
             F.count_distinct("id").cast("bigint").alias("n_docs"),
@@ -2334,13 +2194,7 @@ def oracle_tokenizer_fertility(
 # ---------------------------------------------------------------------------
 
 
-def keyness_g2(
-    df: DataFrame,
-    lang_col: str = "lang",
-    text_col: str = "text",
-    top_k: int = 5,
-    min_count: int = 5,
-) -> DataFrame:
+def keyness_g2(docs: DataFrame, top_k: int = 5, min_count: int = 5) -> DataFrame:
     """Top-``top_k`` overrepresented tokens per language by Dunning G²
     over the exact 2×2 contingency (a = token-in-lang, b = token-elsewhere,
     c = lang-other-tokens, d = rest): G² = 2·Σ O·ln(O·N / (rowΣ·colΣ)).
@@ -2354,13 +2208,7 @@ def keyness_g2(
     per-lang (keyed), over only the min_count-filtered candidates.
     Output: (lang, token, n_in_lang, n_elsewhere, g2, rnk).
     """
-    toks = df.select(
-        F.col(lang_col).alias("lang"),
-        F.explode(
-            F.expr(f"regexp_extract_all({text_col}, '{sql_regex(SUBTOKEN_RE)}', 0)")
-        ).alias("tok"),
-    )
-    lt = toks.groupBy("lang", "tok").agg(F.count("*").cast("bigint").alias("a"))
+    lt = _subtokens(docs, "lang").groupBy("lang", "tok").agg(F.count("*").cast("bigint").alias("a"))
     lang_tot = lt.groupBy("lang").agg(F.sum("a").cast("bigint").alias("lt_n"))
     tok_tot = lt.groupBy("tok").agg(F.sum("a").cast("bigint").alias("tk_n"))
     n_tot = lt.agg(F.sum("a").cast("bigint").alias("nn"))
@@ -2475,7 +2323,7 @@ def oracle_keyness_g2(
 # ---------------------------------------------------------------------------
 
 
-def zipf_fit(df: DataFrame, text_col: str = "text", size: int = 1000) -> DataFrame:
+def zipf_fit(docs: DataFrame, size: int = 1000) -> DataFrame:
     """OLS fit of ln(freq) against ln(rank) over the top-``size`` tokens
     of :func:`induce_vocab` (ranked deterministically by count desc,
     token asc).
@@ -2487,7 +2335,7 @@ def zipf_fit(df: DataFrame, text_col: str = "text", size: int = 1000) -> DataFra
     scale (``size`` rows), never the corpus.
     Output: (n_points, slope, intercept) — one row.
     """
-    vocab = induce_vocab(df, text_col=text_col, size=size)
+    vocab = induce_vocab(docs, size=size)
     pts = vocab.select(
         F.expr("cast(round(ln(token_id + 1), 6) as decimal(18,6))").alias("x"),
         F.expr("cast(round(ln(n), 6) as decimal(18,6))").alias("y"),
@@ -2542,9 +2390,7 @@ def oracle_zipf_fit(table: str, text_col: str = "text", size: int = 1000) -> str
     """
 
 
-def char_entropy_rate(
-    df: DataFrame, lang_col: str = "lang", text_col: str = "text"
-) -> DataFrame:
+def char_entropy_rate(docs: DataFrame) -> DataFrame:
     """Character-bigram conditional entropy per language,
     H(c₂|c₁) = −Σ p(c₁c₂) · ln(p(c₁c₂)/p(c₁)), in nats — the language-
     model-free entropy-rate estimate: anomalously low means boilerplate/
@@ -2559,16 +2405,16 @@ def char_entropy_rate(
     accumulation order cannot move the result.
     Output: (lang, n_bigrams_distinct, n_bigrams_total, entropy_nats).
     """
-    big = df.select(
-        F.col(lang_col).alias("lang"),
+    big = docs.select(
+        "lang",
         F.explode(
             F.expr(
                 # sequence(1, 0) is DESCENDING in Spark, not empty — guard
                 # single-char/empty texts explicitly.
-                f"case when length({text_col}) >= 2 then "
-                f"transform(sequence(1, length({text_col}) - 1),"
-                f" i_ -> substring({text_col}, i_, 2))"
-                f" else cast(array() as array<string>) end"
+                "case when length(text) >= 2 then "
+                "transform(sequence(1, length(text) - 1),"
+                " i_ -> substring(text, i_, 2))"
+                " else cast(array() as array<string>) end"
             )
         ).alias("bg"),
     )
@@ -2634,9 +2480,7 @@ def oracle_char_entropy_rate(
     """
 
 
-def lexical_diversity(
-    df: DataFrame, lang_col: str = "lang", text_col: str = "text"
-) -> DataFrame:
+def lexical_diversity(docs: DataFrame) -> DataFrame:
     """Per-language lexical diversity rollup: mean type-token ratio,
     root-TTR (Guiraud), and Maas a² = (ln n − ln t)/(ln n)² over
     documents — the vocabulary-richness quality band (templated text
@@ -2649,14 +2493,7 @@ def lexical_diversity(
     both engines (ln 1 = 0 denominators). Output: (lang, n_docs,
     mean_ttr, mean_root_ttr, mean_maas).
     """
-    toks = df.select(
-        F.col(lang_col).alias("lang"),
-        F.col("doc_id").alias("id"),
-        F.explode(
-            F.expr(f"regexp_extract_all({text_col}, '{sql_regex(SUBTOKEN_RE)}', 0)")
-        ).alias("tok"),
-    )
-    per_doc = toks.groupBy("lang", "id").agg(
+    per_doc = _subtokens(docs, "lang", F.col("doc_id").alias("id")).groupBy("lang", "id").agg(
         F.count("*").cast("bigint").alias("n"),
         F.countDistinct("tok").cast("bigint").alias("t"),
     ).filter(F.col("n") >= 2)
@@ -2717,12 +2554,7 @@ def oracle_lexical_diversity(
 
 
 def boilerplate_prefixes(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    group_col: str = "source",
-    prefix_tokens: int = 3,
-    min_share_pct: int = 2,
+    docs: DataFrame, prefix_tokens: int = 3, min_share_pct: int = 2
 ) -> DataFrame:
     """Boilerplate-prefix mining per source: the token prefixes that open
     a disproportionate share of a source's documents — the
@@ -2736,25 +2568,25 @@ def boilerplate_prefixes(
     is a keyed window over the surviving candidates only.
     Output: (source, prefix, n_docs_with, n_docs, share_pct, rnk).
     """
-    pre = df.select(
-        F.col(group_col).alias("src"),
+    pre = docs.select(
+        "source",
         F.expr(
-            f"array_join(slice(split(trim({text_col}), '{WS_SQL}'), 1, {prefix_tokens}), ' ')"
+            f"array_join(slice(split(trim(text), '{WS_SQL}'), 1, {prefix_tokens}), ' ')"
         ).alias("prefix"),
     )
-    totals = pre.groupBy("src").agg(F.count("*").cast("bigint").alias("n_docs"))
-    counts = pre.groupBy("src", "prefix").agg(
+    totals = pre.groupBy("source").agg(F.count("*").cast("bigint").alias("n_docs"))
+    counts = pre.groupBy("source", "prefix").agg(
         F.count("*").cast("bigint").alias("n_with")
     )
-    cand = counts.join(F.broadcast(totals), "src").filter(
+    cand = counts.join(F.broadcast(totals), "source").filter(
         F.col("n_with") * 100 >= F.lit(min_share_pct) * F.col("n_docs")
     )
-    w = Window.partitionBy("src").orderBy(F.desc("n_with"), F.asc("prefix"))
+    w = Window.partitionBy("source").orderBy(F.desc("n_with"), F.asc("prefix"))
     return (
         cand.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= 3)
         .select(
-            F.col("src").alias(group_col),
+            "source",
             "prefix",
             F.col("n_with").alias("n_docs_with"),
             "n_docs",
@@ -2805,9 +2637,7 @@ def oracle_boilerplate_prefixes(
 _LN2 = 0.6931471805599453
 
 
-def js_divergence_by_source(
-    df: DataFrame, group_col: str = "source", text_col: str = "text"
-) -> DataFrame:
+def js_divergence_by_source(docs: DataFrame) -> DataFrame:
     """Jensen–Shannon divergence between each source's unigram
     distribution and the rest of the corpus — the bounded, symmetric
     vocabulary-drift readout (0 = same distribution, ln 2 = disjoint):
@@ -2821,19 +2651,13 @@ def js_divergence_by_source(
     (the summands are O(p·ln p) — 6dp would flush them) before the exact
     decimal sum. Output: (source, n_tokens, jsd_to_rest).
     """
-    toks = df.select(
-        F.col(group_col).alias("src"),
-        F.explode(
-            F.expr(f"regexp_extract_all({text_col}, '{sql_regex(SUBTOKEN_RE)}', 0)")
-        ).alias("tok"),
-    )
-    per = toks.groupBy("src", "tok").agg(F.count("*").cast("bigint").alias("c"))
+    per = _subtokens(docs, "source").groupBy("source", "tok").agg(F.count("*").cast("bigint").alias("c"))
     glob = per.groupBy("tok").agg(F.sum("c").cast("bigint").alias("g"))
-    np_ = per.groupBy("src").agg(F.sum("c").cast("bigint").alias("n_src"))
+    np_ = per.groupBy("source").agg(F.sum("c").cast("bigint").alias("n_src"))
     ntot = per.agg(F.sum("c").cast("bigint").alias("n_tot"))
     j = (
         per.join(glob, "tok")
-        .join(F.broadcast(np_), "src")
+        .join(F.broadcast(np_), "source")
         .join(F.broadcast(ntot), how="cross")
         .withColumn("r", (F.col("g") - F.col("c")).cast("bigint"))
         .withColumn("n_rest", (F.col("n_tot") - F.col("n_src")).cast("bigint"))
@@ -2853,14 +2677,14 @@ def js_divergence_by_source(
         " as decimal(38,12)) else cast(0 as decimal(38,12)) end"
     )
     qmass = F.expr("cast(round(cast(r as double) / cast(n_rest as double), 12) as decimal(38,12))")
-    agg = j.groupBy("src").agg(
+    agg = j.groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_tokens"),
         F.sum(pterm).alias("sp"),
         F.sum(qterm).alias("sq"),
         F.sum(qmass).alias("smass"),
     )
     return agg.select(
-        F.col("src").alias(group_col),
+        "source",
         "n_tokens",
         F.round(
             F.lit(0.5)
@@ -2914,13 +2738,7 @@ def oracle_js_divergence_by_source(
     """
 
 
-def feature_hashing(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    dim: int = 1024,
-    doc_mod: int = 37,
-) -> DataFrame:
+def feature_hashing(docs: DataFrame, dim: int = 1024, doc_mod: int = 37) -> DataFrame:
     """Hashing-trick featurizer: whitespace tokens hashed into a fixed
     ``dim``-dimensional count vector (Weinberger et al. 2009) — the
     production featurizer for linear text models at corpus scale, where
@@ -2939,11 +2757,8 @@ def feature_hashing(
     from ..functions import hex_hash32, tokenize
 
     return (
-        docs.filter(F.col(id_col) % doc_mod == 0)
-        .select(
-            F.col(id_col).alias("doc_id"),
-            F.explode(tokenize(text_col)).alias("tok"),
-        )
+        docs.filter(F.col("doc_id") % doc_mod == 0)
+        .select("doc_id", F.explode(tokenize("text")).alias("tok"))
         .filter(F.col("tok") != "")
         .select(
             "doc_id", (hex_hash32("tok") % dim).cast("bigint").alias("feat")

@@ -424,7 +424,7 @@ def test_redact_pii(spark):
         ],
         ["text"],
     )
-    out = [r.clean for r in redact(df, "text", "clean").collect()]
+    out = [r.clean for r in df.select(redact("text").alias("clean")).collect()]
     assert out[0] == "contact me at [EMAIL] thanks"
     assert "[PHONE]" in out[1] and "5309" not in out[1] and "4567" not in out[1]
     assert out[2] == "ssn [SSN] inline"
@@ -626,7 +626,7 @@ def test_repetition_stats_flags_repeats(spark):
         ],
         ["doc_id", "text"],
     )
-    rows = {r.id: r for r in repetition_stats(df, "doc_id", "text").collect()}
+    rows = {r.id: r for r in repetition_stats(df).collect()}
     assert rows[1].top_ngram_frac > 0.8  # "spam ham" covers almost everything
     assert rows[2].dup_ngram_frac == 0.0
     assert rows[2].distinct_word_frac == 1.0
@@ -647,7 +647,7 @@ def test_contamination_inverted_index(spark):
         [(99, "we ask about the quick brown fox jumps over questions")],
         ["doc_id", "text"],
     )
-    hits = {r.id: r.n_hits for r in contamination(train, bench, "doc_id", "text").collect()}
+    hits = {r.id: r.n_hits for r in contamination(train, bench).collect()}
     assert 1 in hits and 2 not in hits  # doc 1 shares "the quick brown fox jumps"
 
 
@@ -1169,7 +1169,7 @@ def test_bpe_merges_match_reference_impl(spark):
     docs = load_table(spark, SF_DIR, "documents")
     got = [
         (r.rank, r.left, r.right, r.pair_count)
-        for r in textops.bpe_merges(docs, "doc_id", "text", n_merges=6)
+        for r in textops.bpe_merges(docs, n_merges=6)
         .orderBy("rank")
         .collect()
     ]
@@ -1584,14 +1584,12 @@ def test_train_linear_filter_deterministic(spark):
     from hadoop_2_7_1_spark.operators import textops
 
     docs = load_table(spark, SF_DIR, "documents")
-    r1 = textops.train_linear_filter(docs, "doc_id", "text", n_iter=4).collect()[0]
-    r2 = textops.train_linear_filter(
-        docs.repartition(7), "doc_id", "text", n_iter=4
-    ).collect()[0]
+    r1 = textops.train_linear_filter(docs, n_iter=4).collect()[0]
+    r2 = textops.train_linear_filter(docs.repartition(7), n_iter=4).collect()[0]
     assert r1 == r2  # bit-identical weights + counts at any parallelism
     assert r1.tp + r1.fp + r1.fn + r1.tn == r1.n
     majority = max(r1.n_pos, r1.n - r1.n_pos) / r1.n
-    full = textops.train_linear_filter(docs, "doc_id", "text", n_iter=8).collect()[0]
+    full = textops.train_linear_filter(docs, n_iter=8).collect()[0]
     assert full.accuracy > majority
 
 
@@ -1954,7 +1952,7 @@ def test_ppmi_hand_checked(spark):
     docs = spark.createDataFrame([(1, text)], "doc_id bigint, text string")
     rows = {
         (r.w, r.c): (r.n_wc, r.ppmi)
-        for r in ppmi_cooccurrence(docs, "doc_id", "text", window=1, min_count=1).collect()
+        for r in ppmi_cooccurrence(docs, window=1, min_count=1).collect()
     }
     toks = text.split()
     expect = {}

@@ -145,9 +145,9 @@ def test_registry_wide_plan_audit(spark):
         "dd_dup_clusters", "smp_temperature",
         "q26_pentomino", "q27_sudoku", "q21_db_pageview",
         "q15_partitioned_write", "src_bucketed_join", "bench_terasort_big",
-        "src_mapfile_lookup", "txt_bpe_merges", "grf_kcore", "dd_semdedup",
+        "src_mapfile_lookup", "grf_kcore", "dd_semdedup",
         "grf_hits", "grf_ppr", "smp_resample", "evt_markov_attribution",
-        "evt_concurrency", "grf_walks", "txt_fertility",
+        "evt_concurrency", "grf_walks",
         # fixture write / snapshot commits / cc label propagation at build
         "src_parquet_stats", "src_snapshot_compact", "evt_identity_stitch",
         "src_copybook",  # distributed fixture write action at build time

@@ -62,27 +62,16 @@ def oracle_hash32(expr: str, salt: str | None = None) -> str:
     return f"CAST(('0x' || substr(md5({e}), 1, 8)) AS BIGINT)"
 
 
-def word_shingles(col_name: str, n: int) -> Column:
-    """Array of word n-gram shingles (space-joined) from a text column name."""
-    toks = f"split(trim({col_name}), '{WS_SQL}')"
-    return F.expr(
-        f"CASE WHEN size({toks}) >= {n} THEN "
-        f"transform(sequence(1, size({toks}) - {n - 1}), "
-        f"i -> array_join(slice({toks}, i, {n}), ' ')) "
-        f"ELSE array() END"
-    )
-
-
-def exploded_word_shingles(
-    df, text_col: str, n: int, alias: str, drop_text: bool = True
-):
+def exploded_word_shingles(df, text_col: str, n: int, alias: str):
     """Rows of word n-gram shingles: every non-`text_col` column of ``df``
-    preserved, plus one `alias` row per shingle. Row-identical to
-    ``F.explode(word_shingles(...))`` but explodes the POSITION SEQUENCE
-    and builds each shingle string per OUTPUT ROW — constructing the
-    array<string> first costs ~6-9x in UnsafeArray element copies
-    (measured 3.3s -> 0.36s on the sf0.1 documents 3-shingles), while the
-    per-row array_join(slice(...)) stays inside whole-stage codegen."""
+    preserved, plus one `alias` row per shingle (the space-joined run of
+    ``n`` whitespace tokens; a text with fewer than ``n`` tokens has none).
+    The same rows as the DuckDB fragment :func:`oracle_word_shingles`
+    unnests. It explodes the POSITION SEQUENCE and builds each shingle
+    string per OUTPUT ROW — constructing an array<string> of shingles first
+    costs ~6-9x in UnsafeArray element copies (measured 3.3s -> 0.36s on
+    the sf0.1 documents 3-shingles), while the per-row
+    array_join(slice(...)) stays inside whole-stage codegen."""
     if "__ws_tk" in df.columns or "__ws_i" in df.columns:
         # withColumn silently REPLACES an existing column of the same name
         # and the original would be dropped below — refuse loudly instead
@@ -91,16 +80,15 @@ def exploded_word_shingles(
             "column; rename it before calling"
         )
     toks = f"split(trim({text_col}), '{WS_SQL}')"
-    out = (
+    return (
         df.withColumn("__ws_tk", F.expr(toks))
         .filter(F.expr(f"size(__ws_tk) >= {n}"))
         .withColumn(
             "__ws_i", F.explode(F.expr(f"sequence(1, size(__ws_tk) - {n - 1})"))
         )
         .withColumn(alias, F.expr(f"array_join(slice(__ws_tk, __ws_i, {n}), ' ')"))
-        .drop("__ws_tk", "__ws_i")
+        .drop("__ws_tk", "__ws_i", text_col)
     )
-    return out.drop(text_col) if drop_text else out
 
 
 def oracle_word_shingles(col_expr: str, n: int) -> str:

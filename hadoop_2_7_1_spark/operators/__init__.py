@@ -37,3 +37,11 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def release_checkpoint(ckpt: DataFrame) -> None:
+    """Drop the blocks of the local checkpoint ``ckpt`` (a frame returned by
+    ``localCheckpoint()``) and its persistent-RDD entry. DataFrame.unpersist()
+    does not release them: they belong to the RDD under the frame's
+    LogicalRDD. Nothing may read ``ckpt`` afterwards."""
+    ckpt._jdf.queryExecution().analyzed().rdd().unpersist(False)

@@ -15,6 +15,11 @@ for 100 TB corpora:
 
 Cross-engine determinism: every hash derives from md5 hex strings, so the
 DuckDB oracle reproduces signatures bit-for-bit (see functions.hex_hash32).
+
+Every engine function over a documents frame reads the table's own columns:
+``doc_id`` and ``text``, plus ``source`` or ``url`` where it uses them.
+``exact_dup_groups`` and ``fuzzy_key_pairs`` name their columns (their
+callers pass other tables), and ``canonical_url`` is a column function.
 """
 
 from __future__ import annotations
@@ -24,12 +29,26 @@ from pyspark.sql import functions as F
 
 from ..functions import (
     WS,
-    WS_SQL,
+    exploded_word_shingles,
     hex_hash32,
     oracle_hash32,
-    word_shingles,
     ws_tokens_sql,
 )
+from . import fan_out, release_checkpoint
+
+
+# ---------------------------------------------------------------------------
+# shared parts
+# ---------------------------------------------------------------------------
+
+def _shingles(docs: DataFrame, n: int, *keep) -> DataFrame:
+    """(*keep, shingle): one row per word ``n``-gram of each document's
+    ``text``; a document with fewer than ``n`` tokens has none. ``keep``
+    are the columns (names or expressions) every row carries. ``fan_out``
+    keeps the shingling and hashing off a single input split."""
+    return exploded_word_shingles(
+        fan_out(docs).select(*keep, "text"), "text", n, "shingle"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -49,38 +68,20 @@ def exact_dup_groups(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
     )
 
 
-def exact_dedup(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
-    """Keep exactly one row (min id) per distinct content value."""
-    w_min = (
-        df.groupBy(F.md5(F.col(content_col)).alias("fp"))
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col)
-    )
-    return df.join(w_min, id_col, "left_semi")
-
-
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, num_hashes: int = 16, shingle_n: int = 3
-) -> DataFrame:
-    """(id, h0..h{K-1}): per-permutation minimum of md5(k|shingle).
+def _minhash_signatures(docs: DataFrame, num_hashes: int, shingle_n: int) -> DataFrame:
+    """(id, h0..h{K-1}): per-permutation minimum over each document's
+    shingles, a classic MinHash signature. One explode + one groupBy
+    (map-side combine).
 
-    The "permutations" are salted md5s; the min over a doc's shingle set is a
-    classic MinHash signature. One explode + one groupBy (map-side combine).
+    Double hashing (Kirsch-Mitzenmacher): two md5-derived 32-bit ints per
+    shingle, K permutations h_k = (h1 + k*h2) mod p. 2 digests per shingle
+    instead of K — the digest is the hot cost at corpus scale.
     """
-    from . import fan_out
-
-    sh = fan_out(df).select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(text_col, shingle_n)).alias("shingle"),
-    )
-    # Double hashing (Kirsch-Mitzenmacher): two md5-derived 32-bit ints per
-    # shingle, K permutations h_k = (h1 + k*h2) mod p. 2 digests per shingle
-    # instead of K — the digest is the hot cost at corpus scale.
-    hashed = sh.select(
+    hashed = _shingles(docs, shingle_n, F.col("doc_id").alias("id")).select(
         "id",
         hex_hash32("shingle").alias("h1"),
         hex_hash32("shingle", salt="s").alias("h2"),
@@ -93,41 +94,30 @@ def minhash_signatures(
     return hashed.groupBy("id").agg(*aggs)
 
 
-def band_keys(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+def _band_keys(sig: DataFrame, bands: int) -> DataFrame:
     """(id, band, key) — one row per LSH band of each signature row: the
     band key is the '_'-joined run of rows_per_band consecutive minhash
-    values. Shared by the pair-mining path (:func:`lsh_candidate_pairs`)
-    and the incremental collision-detection path (:func:`incremental_lsh`)."""
-    rows_per_band = num_hashes // bands
-    band_cols = []
-    for b in range(bands):
-        hs = [f"h{b * rows_per_band + r}" for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.concat_ws("_", *hs).alias("key")).alias(f"b{b}")
+    values."""
+    hs = sig.columns[1:]
+    rows_per_band = len(hs) // bands
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat_ws("_", *hs[b * rows_per_band:(b + 1) * rows_per_band]).alias("key"),
         )
+        for b in range(bands)
+    ]
     return sig.select("id", F.explode(F.array(*band_cols)).alias("bk")).select(
         "id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
 
 
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_n: int = 3,
-    max_bucket: int = 500,
-    sig: DataFrame | None = None,
-) -> DataFrame:
-    """Near-duplicate candidate pairs (id_a < id_b) sharing ≥1 LSH band.
-
-    ``sig`` lets callers supply precomputed :func:`minhash_signatures`
-    (the sweep reuses ONE signature pass across band configs — the
-    signatures depend only on K, not on the banding).
+def _lsh_pairs(sig: DataFrame, bands: int, max_bucket: int) -> DataFrame:
+    """(id_a, id_b), id_a < id_b: the documents of ``sig`` that share at
+    least one band bucket of at most ``max_bucket`` members.
 
     Docs agreeing on all rows of any band collide in a bucket; the join is on
-    (band_idx, band_key) so work is proportional to bucket sizes, never |D|².
+    (band, key) so work is proportional to bucket sizes, never |D|².
 
     Degenerate-band cap (the 100 TB skew guard): a bucket of n docs emits
     n(n-1)/2 pairs, so one pathological bucket — all-empty docs, a boilerplate
@@ -135,25 +125,13 @@ def lsh_candidate_pairs(
     larger than ``max_bucket`` are dropped *before* the self-join via a
     pre-count (one extra aggregation on the same (band, key) shuffle key).
     Dropping is semantically safe for the dedup pipeline: byte-identical docs
-    belong to ``exact_dedup`` (run first), and a >max_bucket LSH bucket of
-    non-identical docs is hash degeneracy, not signal. The same pre-count also
-    removes singleton buckets, which shrinks the join input by the ~long tail
-    of unique docs. Deterministic, so the DuckDB oracle replicates it exactly.
+    belong to ``exact_dup_groups`` (run first), and a >max_bucket LSH bucket
+    of non-identical docs is hash degeneracy, not signal. The same pre-count
+    also removes singleton buckets, which shrinks the join input by the long
+    tail of unique docs. Deterministic, so the DuckDB oracle replicates it
+    exactly.
     """
-    rows_per_band = num_hashes // bands
-    if sig is None:
-        # r11: materialize the signatures — the banded frame is referenced
-        # three times (bucket pre-count + both self-join sides), and AQE's
-        # runtime broadcast conversions RE-COMPUTE a non-materialized
-        # subtree instead of reusing its shuffle (observed: the
-        # shingle-explode + double-md5 pass, the hot cost of this operator,
-        # executed 3x in the final plan). One row of K ints per doc, so the
-        # checkpoint is narrow at any corpus size while the digest pass it
-        # saves is corpus-text-scale.
-        sig = minhash_signatures(
-            df, id_col, text_col, num_hashes, shingle_n
-        ).localCheckpoint()
-    banded = band_keys(sig, num_hashes, bands)
+    banded = _band_keys(sig, bands)
     ok_buckets = (
         banded.groupBy("band", "key")
         .agg(F.count("*").alias("_n"))
@@ -172,6 +150,45 @@ def lsh_candidate_pairs(
         )
         .distinct()
     )
+
+
+def _agreement(cands: DataFrame, sig: DataFrame, k: int) -> DataFrame:
+    """(id_a, id_b, agree): for each candidate pair, the number of the
+    ``k`` MinHash permutations on which the two signatures agree."""
+    sa = sig.select(
+        F.col("id").alias("id_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(k)]
+    )
+    sb = sig.select(
+        F.col("id").alias("id_b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(k)]
+    )
+    agree = sum(
+        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0) for i in range(k)
+    )
+    return cands.join(sa, "id_a").join(sb, "id_b").select(
+        "id_a", "id_b", agree.alias("agree")
+    )
+
+
+def lsh_candidate_pairs(
+    docs: DataFrame,
+    num_hashes: int = 16,
+    bands: int = 4,
+    shingle_n: int = 3,
+    max_bucket: int = 500,
+) -> DataFrame:
+    """Near-duplicate candidate pairs (id_a < id_b) sharing ≥1 LSH band
+    bucket of at most ``max_bucket`` documents (see :func:`_lsh_pairs`).
+
+    The signatures are materialized: the banded frame is referenced three
+    times (bucket pre-count + both self-join sides), and AQE's runtime
+    broadcast conversions re-compute a non-materialized subtree instead of
+    reusing its shuffle (the shingle-explode + double-md5 pass, the hot
+    cost of this operator, ran 3x in the final plan). One row of K ints per
+    doc, so the checkpoint is narrow at any corpus size while the digest
+    pass it saves is corpus-text-scale. The returned frame keeps it.
+    """
+    sig = _minhash_signatures(docs, num_hashes, shingle_n).localCheckpoint()
+    return _lsh_pairs(sig, bands, max_bucket)
 
 
 def oracle_lsh_candidate_pairs(
@@ -217,9 +234,7 @@ def oracle_lsh_candidate_pairs(
 
 
 def minhash_accuracy(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
+    docs: DataFrame,
     num_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
@@ -236,31 +251,11 @@ def minhash_accuracy(
     sharing a shingle — never all-pairs. The error values are rounded to
     9 decimals before the mean so the summary is order-independent.
     """
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n).persist()
-    cands = lsh_candidate_pairs(
-        df, id_col, text_col, num_hashes, bands, shingle_n, max_bucket, sig=sig
+    sig = _minhash_signatures(docs, num_hashes, shingle_n)
+    est = _agreement(_lsh_pairs(sig, bands, max_bucket), sig, num_hashes).select(
+        "id_a", "id_b", (F.col("agree").cast("double") / F.lit(num_hashes)).alias("est")
     )
-    sa = sig.select(
-        F.col("id").alias("id_a"),
-        *[F.col(f"h{k}").alias(f"a{k}") for k in range(num_hashes)],
-    )
-    sb = sig.select(
-        F.col("id").alias("id_b"),
-        *[F.col(f"h{k}").alias(f"b{k}") for k in range(num_hashes)],
-    )
-    matches = sum(
-        F.when(F.col(f"a{k}") == F.col(f"b{k}"), 1).otherwise(0)
-        for k in range(num_hashes)
-    )
-    est = (
-        cands.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a", "id_b",
-            (matches.cast("double") / F.lit(num_hashes)).alias("est"),
-        )
-    )
-    exact = ngram_jaccard_pairs(df, id_col, text_col, shingle_n, threshold=0.0)
+    exact = ngram_jaccard_pairs(docs, shingle_n, threshold=0.0)
     joined = est.join(
         exact.select("id_a", "id_b", "jaccard"), ["id_a", "id_b"], "left"
     ).select(
@@ -327,29 +322,35 @@ def oracle_minhash_accuracy(
 # n-gram Jaccard (exact pairwise over inverted index)
 # ---------------------------------------------------------------------------
 
-def ngram_jaccard_pairs(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3, threshold: float = 0.5
-) -> DataFrame:
-    """Pairs (id_a < id_b) with Jaccard(shingle sets) ≥ threshold.
-
-    Inverted-index join: |pairs sharing a shingle| dominates cost; at 100 TB
-    run it on LSH candidates only (this operator IS the verify stage).
-    """
-    from . import fan_out
-
-    sh = fan_out(df).select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(text_col, shingle_n)).alias("shingle"),
-    ).distinct()
+def _overlaps(sh: DataFrame, ordered: bool) -> tuple[DataFrame, DataFrame]:
+    """The inverted-index intersection of the distinct (id, shingle) frame
+    ``sh``: (id_a, id_b, inter), the number of shingles each pair of
+    documents shares — id_a < id_b if ``ordered``, else both orientations —
+    and (id, sz), each document's shingle count. |pairs sharing a shingle|
+    dominates the cost."""
     sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
     a = sh.alias("a")
     b = sh.alias("b")
+    pair = F.col("a.id") < F.col("b.id") if ordered else F.col("a.id") != F.col("b.id")
     inter = (
         a.join(b, "shingle")
-        .filter(F.col("a.id") < F.col("b.id"))
+        .filter(pair)
         .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
         .agg(F.count("*").alias("inter"))
     )
+    return inter, sizes
+
+
+def ngram_jaccard_pairs(
+    docs: DataFrame, shingle_n: int = 3, threshold: float = 0.5
+) -> DataFrame:
+    """Pairs (id_a < id_b) with Jaccard(shingle sets) ≥ threshold.
+
+    Inverted-index join (:func:`_overlaps`); at 100 TB run it on LSH
+    candidates only (this operator IS the verify stage).
+    """
+    sh = _shingles(docs, shingle_n, F.col("doc_id").alias("id")).distinct()
+    inter, sizes = _overlaps(sh, ordered=True)
     sa = sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a"))
     sb = sizes.select(F.col("id").alias("id_b"), F.col("sz").alias("sz_b"))
     return (
@@ -397,16 +398,16 @@ def oracle_ngram_jaccard_pairs(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFrame:
+def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     """(id, simhash): per-bit majority vote over token hash bits.
 
     One explode + one groupBy; the 32 bit-sums are plain conditional sums so
     the whole signature is a single hash-aggregate pass.
     """
-    toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.trim(F.col(text_col)), WS)).alias("tok"),
-    ).filter(F.col("tok") != "")
+    toks = docs.select(
+        F.col("doc_id").alias("id"),
+        F.explode(F.expr(ws_tokens_sql("text"))).alias("tok"),
+    )
     h = hex_hash32("tok")
     bit_terms = [
         F.sum(
@@ -488,11 +489,7 @@ def oracle_embedding_neardup(
 
 
 def simhash_neardup_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    bits: int = 32,
+    docs: DataFrame, max_hamming: int = 3, bits: int = 32
 ) -> DataFrame:
     """Near-duplicate pairs by SimHash Hamming distance <= max_hamming.
 
@@ -501,7 +498,7 @@ def simhash_neardup_pairs(
     (pigeonhole), so candidates come from 4 equi-joins on (band_idx, byte)
     — never an all-pairs scan. The exact popcount filter runs on candidates.
     """
-    sig = simhash(df, id_col, text_col, bits)  # (id, simhash)
+    sig = simhash(docs, bits)  # (id, simhash)
     n_bands = 4
     band_w = bits // n_bands
     bands = sig.select(
@@ -559,61 +556,62 @@ def oracle_simhash_neardup(table: str, id_col: str, text_col: str, max_hamming: 
 # Duplicate clusters: connected components over near-dup pairs
 # ---------------------------------------------------------------------------
 
-def connected_components(
-    pairs: DataFrame, a_col: str = "id_a", b_col: str = "id_b", max_iter: int = 25
-) -> DataFrame:
-    """(node, component) for the undirected graph of near-dup pairs;
-    component = min node id reachable (the canonical survivor's id).
+def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
+    """(node, component) for the undirected graph of the (id_a, id_b)
+    near-dup pairs; component = min node id reachable (the canonical
+    survivor's id).
 
     Iterative min-label propagation: each round every node takes the min of
     its own and its neighbors' labels; converged when nothing changes. Rounds
     needed = graph diameter — tiny for dup clusters. Per round: one join +
     one aggregate (both on the node key); localCheckpoint truncates lineage
-    so plans don't grow with iterations.
+    so plans don't grow with iterations. Each round's checkpoint is released
+    once the next one is materialized, and the edge table after the last
+    round: the returned frame keeps only its own final checkpoint.
     """
     edges = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
         # every round joins edges; without this the whole upstream pipeline
         # (e.g. MinHash+LSH candidate generation) re-executes per iteration
         .localCheckpoint()
     )
     nodes = edges.select(F.col("src").alias("node")).distinct()
-    labels = nodes.withColumn("component", F.col("node")).localCheckpoint()
-
-    changed = 1
-    for _ in range(max_iter):
-        neighbor_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.node == neighbor_min.src, "left_outer")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
-                ).alias("component"),
-                (F.col("nbr_min") < F.col("component")).alias("_changed"),
+    try:
+        labels = nodes.withColumn("component", F.col("node")).localCheckpoint()
+        for _ in range(max_iter):
+            neighbor_min = (
+                edges.join(labels, edges.dst == labels.node)
+                .groupBy("src")
+                .agg(F.min("component").alias("nbr_min"))
             )
-            .localCheckpoint()
-        )
-        changed = new_labels.filter(F.col("_changed")).limit(1).count()
-        # superseded rounds' checkpoint blocks: reclaimed by ContextCleaner
-        # when the reassignment below drops the last reference
-        labels = new_labels.drop("_changed")
-        if changed == 0:
-            break
-    if changed != 0:
-        # Partially-propagated labels would silently split one cluster into
-        # several; fail loudly instead (caller raises max_iter — rounds
-        # needed = component diameter).
-        raise RuntimeError(
-            f"connected_components did not converge within max_iter={max_iter}; "
-            "labels would be wrong — raise max_iter (rounds needed = diameter)"
-        )
+            new_labels = (
+                labels.join(neighbor_min, labels.node == neighbor_min.src, "left_outer")
+                .select(
+                    "node",
+                    F.least(
+                        F.col("component"), F.coalesce(F.col("nbr_min"), F.col("component"))
+                    ).alias("component"),
+                    (F.col("nbr_min") < F.col("component")).alias("_changed"),
+                )
+                .localCheckpoint()
+            )
+            release_checkpoint(labels)
+            labels = new_labels
+            if labels.filter(F.col("_changed")).limit(1).count() == 0:
+                break
+        else:
+            # Partially-propagated labels would silently split one cluster
+            # into several; fail loudly instead (caller raises max_iter —
+            # rounds needed = component diameter).
+            release_checkpoint(labels)
+            raise RuntimeError(
+                f"connected_components did not converge within max_iter={max_iter}; "
+                "labels would be wrong — raise max_iter (rounds needed = diameter)"
+            )
+    finally:
+        release_checkpoint(edges)
     return labels.select(
         F.col("node").cast("bigint"), F.col("component").cast("bigint")
     )
@@ -647,19 +645,14 @@ def oracle_connected_components(pairs_sql: str) -> str:
 # ---------------------------------------------------------------------------
 
 
-def doc_chunks(
-    docs: DataFrame,
-    chunk_tokens: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def _doc_chunks(docs: DataFrame, chunk_tokens: int) -> DataFrame:
     """(doc_id, chunk_idx, chunk): consecutive ``chunk_tokens``-token spans
     of the whitespace token stream (shared by chunk_dedup and the
     incremental-ingest index)."""
     w = chunk_tokens
-    toks = ws_tokens_sql(text_col)
+    toks = ws_tokens_sql("text")
     return docs.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.posexplode(
             F.expr(
                 f"transform(sequence(0, cast(ceil(size({toks}) / {w}.0) as int) - 1), "
@@ -669,12 +662,7 @@ def doc_chunks(
     ).filter(F.col("chunk") != "")
 
 
-def chunk_dedup(
-    docs: DataFrame,
-    chunk_tokens: int = 20,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def chunk_dedup(docs: DataFrame, chunk_tokens: int = 20) -> DataFrame:
     """Split each doc's whitespace token stream into consecutive
     ``chunk_tokens``-token chunks, dedupe chunks globally (first occurrence
     by (doc_id, chunk_idx) wins), report per-doc survival stats.
@@ -685,12 +673,12 @@ def chunk_dedup(
     the single shuffle keys on the chunk md5 — uniform by construction, so
     no hot reducers. Same plan at 100 TB, just more partitions.
     """
-    chunks = doc_chunks(docs, chunk_tokens, id_col, text_col)
+    chunks = _doc_chunks(docs, chunk_tokens)
     win = Window.partitionBy(F.md5("chunk")).orderBy("doc_id", "chunk_idx")
     ranked = chunks.select(
         "doc_id",
         "chunk_idx",
-        F.expr(f"size(filter(split(chunk, '{WS_SQL}'), t -> t <> ''))").alias("chunk_toks"),
+        F.expr(f"size({ws_tokens_sql('chunk')})").alias("chunk_toks"),
         F.row_number().over(win).alias("rn"),
     )
     return ranked.groupBy("doc_id").agg(
@@ -737,8 +725,6 @@ def incremental_ingest(
     corpus: DataFrame,
     chunk_tokens: int = 20,
     max_known_frac: float = 0.5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Dedupe an incoming batch against the existing corpus — the daily-
     ingest shape: a delta is admitted unless its exact hash is already
@@ -752,13 +738,11 @@ def incremental_ingest(
     equi-join against the (much smaller) delta side. In production the
     indexes are materialized once and appended per ingest, not recomputed.
     """
-    fp_index = corpus.select(F.md5(F.col(text_col)).alias("fp")).distinct()
+    fp_index = corpus.select(F.md5("text").alias("fp")).distinct()
     chunk_index = (
-        doc_chunks(corpus, chunk_tokens, id_col, text_col)
-        .select(F.md5("chunk").alias("ch"))
-        .distinct()
+        _doc_chunks(corpus, chunk_tokens).select(F.md5("chunk").alias("ch")).distinct()
     )
-    delta_chunks = doc_chunks(delta, chunk_tokens, id_col, text_col).select(
+    delta_chunks = _doc_chunks(delta, chunk_tokens).select(
         "doc_id", F.md5("chunk").alias("ch")
     )
     known = (
@@ -771,9 +755,9 @@ def incremental_ingest(
             F.sum(F.when(F.col("__hit"), 1).otherwise(0)).cast("bigint").alias("n_known"),
         )
     )
-    exact = delta.select(
-        F.col(id_col).alias("doc_id"), F.md5(F.col(text_col)).alias("fp")
-    ).join(fp_index.withColumn("__dup", F.lit(True)), "fp", "left")
+    exact = delta.select("doc_id", F.md5("text").alias("fp")).join(
+        fp_index.withColumn("__dup", F.lit(True)), "fp", "left"
+    )
     return (
         known.join(exact.select("doc_id", "__dup"), "doc_id")
         .select(
@@ -844,15 +828,13 @@ def incremental_lsh(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """LSH-grade NEAR-dup admission of an incoming shard against the corpus
     — the continuously-ingesting companion to :func:`incremental_ingest`
-    (which is exact-hash/known-span only; VERDICT r10 growth item): a delta
-    doc is rejected when any of its MinHash band keys collides with the
-    corpus's banded index, or with a smaller-id doc in the same delta
-    (first-writer-wins within the shard).
+    (which is exact-hash/known-span only): a delta doc is rejected when
+    any of its MinHash band keys collides with the corpus's banded index,
+    or with a smaller-id doc in the same delta (first-writer-wins within
+    the shard).
 
     Output per delta doc: (doc_id, n_bands, n_corpus_hits, delta_dup, kept)
     with kept = n_corpus_hits = 0 AND NOT delta_dup.
@@ -870,24 +852,18 @@ def incremental_lsh(
     is the potential keeper and every later colliding id drops, which is
     deterministic and replayable in SQL without iteration (a
     component-wise rep choice would need the connected-components loop —
-    that is the BATCH keep-list's job, :func:`dup_keep_list`).
+    that is the BATCH keep-list's job, :func:`dedup_keeplist`).
     """
-    # r11: materialize the delta's banded keys — they feed the corpus
-    # left join AND the bucket-min aggregation, and AQE's runtime broadcast
+    # materialize the delta's banded keys — they feed the corpus left join
+    # AND the bucket-min aggregation, and AQE's runtime broadcast
     # conversions re-compute non-materialized subtrees (the delta's
     # shingle + double-md5 signature pass ran twice). The delta shard is
     # the small side by definition, so the checkpoint is bounded.
-    d_banded = band_keys(
-        minhash_signatures(delta, id_col, text_col, num_hashes, shingle_n),
-        num_hashes,
-        bands,
+    d_banded = _band_keys(
+        _minhash_signatures(delta, num_hashes, shingle_n), bands
     ).localCheckpoint()
     c_keys = (
-        band_keys(
-            minhash_signatures(corpus, id_col, text_col, num_hashes, shingle_n),
-            num_hashes,
-            bands,
-        )
+        _band_keys(_minhash_signatures(corpus, num_hashes, shingle_n), bands)
         .select("band", "key")
         .distinct()
     )
@@ -972,30 +948,18 @@ def oracle_incremental_lsh(
 
 
 def ngram_containment_pairs(
-    df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3, threshold: float = 0.8
+    docs: DataFrame, shingle_n: int = 3, threshold: float = 0.8
 ) -> DataFrame:
     """Asymmetric near-dup: ordered pairs (id_a, id_b) where
     containment(A in B) = |A∩B| / |A| ≥ threshold — catches a document
     swallowed whole by a larger one, which symmetric Jaccard dilutes away.
 
-    Same inverted-index join as ngram_jaccard_pairs; only the normalizer
-    and the pair orientation differ (both directions are emitted).
+    Same inverted-index join as ngram_jaccard_pairs (:func:`_overlaps`);
+    only the normalizer and the pair orientation differ (both directions
+    are emitted).
     """
-    from . import fan_out
-
-    sh = fan_out(df).select(
-        F.col(id_col).alias("id"),
-        F.explode(word_shingles(text_col, shingle_n)).alias("shingle"),
-    ).distinct()
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a.id") != F.col("b.id"))
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
-    )
+    sh = _shingles(docs, shingle_n, F.col("doc_id").alias("id")).distinct()
+    inter, sizes = _overlaps(sh, ordered=False)
     return (
         inter.join(sizes.select(F.col("id").alias("id_a"), F.col("sz").alias("sz_a")), "id_a")
         .withColumn("containment", (F.col("inter") / F.col("sz_a")).cast("double"))
@@ -1036,9 +1000,7 @@ def oracle_ngram_containment_pairs(
 # ---------------------------------------------------------------------------
 
 def sorted_neighborhood_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
+    docs: DataFrame,
     block_chars: int = 8,
     window: int = 3,
     prefix_chars: int = 40,
@@ -1057,10 +1019,10 @@ def sorted_neighborhood_pairs(
     row; the levenshtein verify runs only on candidate pairs, codegen-side.
     Output: (id_a, id_b, dist) with id_a < id_b order within the block sort.
     """
-    base = df.select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.substring(F.col(text_col), 1, prefix_chars).alias("pfx"),
-        F.substring(F.col(text_col), 1, block_chars).alias("blk"),
+    base = docs.select(
+        F.col("doc_id").cast("bigint").alias("id"),
+        F.substring("text", 1, prefix_chars).alias("pfx"),
+        F.substring("text", 1, block_chars).alias("blk"),
     )
     w = Window.partitionBy("blk").orderBy("pfx", "id")
     leads = base.select(
@@ -1190,12 +1152,12 @@ def oracle_canonical_url(url_expr: str) -> str:
     )
 
 
-def url_dedup(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
+def url_dedup(docs: DataFrame) -> DataFrame:
     """(canonical_url, n_variants, keep_id): collapse URL variants; one
     hash-groupBy shuffle on the canonical form (uniform md5-like key mix at
     corpus scale — hosts are high-cardinality)."""
     return (
-        df.select(F.col(id_col).alias("id"), canonical_url(url_col).alias("curl"))
+        docs.select(F.col("doc_id").alias("id"), canonical_url("url").alias("curl"))
         .groupBy("curl")
         .agg(
             F.count("*").cast("bigint").alias("n_variants"),
@@ -1205,9 +1167,42 @@ def url_dedup(df: DataFrame, id_col: str, url_col: str) -> DataFrame:
     )
 
 
-def dup_span_stats(
-    df: DataFrame, id_col: str, text_col: str, n: int = 8
-) -> DataFrame:
+def _gram_hashes(docs: DataFrame, n: int) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The word ``n``-gram hash stream of each document:
+
+    - (doc, tk): the document's whitespace tokens;
+    - (doc, pos, gh): the md5 of the n-gram starting at token ``pos``
+      (1-based), for every document with at least ``n`` tokens;
+    - (gh, owner): the grams that occur in more than one document, with the
+      smallest such doc id. The cross-doc test is min <> max — map-side
+      combinable partial aggregates, no count-distinct key expansion on the
+      gram shuffle.
+
+    It explodes the POSITION SEQUENCE, not a prebuilt gram-string array:
+    generating array<string> per doc and exploding it costs ~6x this stage
+    in UnsafeArray construction/copies, while exploding the int sequence
+    keeps the md5(concat_ws(slice)) per OUTPUT ROW inside whole-stage
+    codegen (measured 6.1s -> 0.8s at sf0.1). fan_out keeps the hashing off
+    a single input split when the source arrives as one small file.
+    """
+    tk = fan_out(docs).select(
+        F.col("doc_id").cast("bigint").alias("doc"), F.expr(ws_tokens_sql("text")).alias("tk")
+    )
+    grams = (
+        tk.filter(F.expr(f"size(tk) >= {n}"))
+        .select("doc", "tk", F.explode(F.expr(f"sequence(1, size(tk) - {n} + 1)")).alias("pos"))
+        .select("doc", "pos", F.expr(f"md5(concat_ws(' ', slice(tk, pos, {n})))").alias("gh"))
+    )
+    owners = (
+        grams.groupBy("gh")
+        .agg(F.min("doc").alias("owner"), F.max("doc").alias("_hi"))
+        .filter(F.col("owner") != F.col("_hi"))
+        .select("gh", "owner")
+    )
+    return tk, grams, owners
+
+
+def dup_span_stats(docs: DataFrame, n: int = 8) -> DataFrame:
     """Exact duplicated-substring detection at n-gram granularity
     (the scalable form of suffix-array substring dedup, Lee et al. 2021,
     "Deduplicating Training Data Makes Language Models Better").
@@ -1224,40 +1219,8 @@ def dup_span_stats(
     global sort. At 100 TB the gram index is the dominant shuffle — salt is
     unnecessary because gram hashes are uniform md5.
     """
-    from . import fan_out
-
-    toks = ws_tokens_sql(text_col)
-    # EXPLODE THE POSITION SEQUENCE, not a prebuilt gram-string array:
-    # generating array<string> per doc and exploding it costs ~6x this
-    # stage in UnsafeArray construction/copies, while exploding the int
-    # sequence keeps the md5(concat_ws(slice)) per OUTPUT ROW inside
-    # whole-stage codegen (measured 6.1s -> 0.8s at sf0.1). Same
-    # (pos, gh) rows: pos = i = 1..n_grams. fan_out keeps the hashing off
-    # a single input split when the source arrives as one small file.
-    grams = (
-        fan_out(df)
-        .select(F.col(id_col).cast("bigint").alias("doc"), F.expr(toks).alias("__tk"))
-        .filter(F.expr(f"size(__tk) >= {n}"))
-        .select(
-            "doc",
-            "__tk",
-            F.explode(F.expr(f"sequence(1, size(__tk) - {n} + 1)")).alias("pos"),
-        )
-        .select(
-            "doc",
-            "pos",
-            F.expr(f"md5(concat_ws(' ', slice(__tk, pos, {n})))").alias("gh"),
-        )
-    )
-    # cross-doc duplication test as min<>max — map-side combinable partial
-    # aggregates, no count-distinct key expansion on the gram shuffle
-    dup_grams = (
-        grams.groupBy("gh")
-        .agg(F.min("doc").alias("_lo"), F.max("doc").alias("_hi"))
-        .filter(F.col("_lo") != F.col("_hi"))
-        .select("gh")
-    )
-    marked = grams.join(dup_grams, "gh").select("doc", "pos")
+    tk, grams, owners = _gram_hashes(docs, n)
+    marked = grams.join(owners, "gh").select("doc", "pos")
     w = Window.partitionBy("doc").orderBy("pos")
     spans = (
         marked.withColumn("prev", F.lag("pos").over(w))
@@ -1268,9 +1231,8 @@ def dup_span_stats(
             F.sum("new_run").cast("bigint").alias("n_dup_spans"),
         )
     )
-    totals = df.select(
-        F.col(id_col).cast("bigint").alias("doc"),
-        F.expr(f"cast(greatest(size({toks}) - {n} + 1, 0) as bigint)").alias("n_grams"),
+    totals = tk.select(
+        "doc", F.expr(f"cast(greatest(size(tk) - {n} + 1, 0) as bigint)").alias("n_grams")
     )
     return (
         totals.join(spans, "doc", "left")
@@ -1379,7 +1341,7 @@ def oracle_fuzzy_key_pairs(table: str, id_col: str, key_col: str) -> str:
     """
 
 
-def dedup_keeplist(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+def dedup_keeplist(docs: DataFrame) -> DataFrame:
     """The full dedup DECISION for every document — the artifact a curation
     run actually ships: (doc_id, keep, reason, canonical_id).
 
@@ -1394,14 +1356,17 @@ def dedup_keeplist(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     doc_id. Nothing here is new data movement — it composes the audited
     stages into the shippable keep-list.
     """
-    ids = df.select(
-        F.col(id_col).cast("bigint").alias("doc_id"),
-        F.md5(F.col(text_col)).alias("fp"),
-    )
+    ids = docs.select(F.col("doc_id").cast("bigint").alias("doc_id"), F.md5("text").alias("fp"))
     exact_keep = ids.groupBy("fp").agg(F.min("doc_id").alias("exact_canon"))
     with_exact = ids.join(exact_keep, "fp").select("doc_id", "exact_canon")
-    pairs = lsh_candidate_pairs(df, id_col, text_col)
-    comp = connected_components(pairs)
+    # lsh_candidate_pairs with its defaults, but the signature checkpoint is
+    # this function's own: once the components have read the pairs, nothing
+    # does, so it is released
+    sig = _minhash_signatures(docs, 16, 3).localCheckpoint()
+    try:
+        comp = connected_components(_lsh_pairs(sig, 4, 500))
+    finally:
+        release_checkpoint(sig)
     out = with_exact.join(
         comp, with_exact.doc_id == comp.node, "left"
     ).select(
@@ -1456,9 +1421,7 @@ def oracle_dedup_keeplist(table: str, id_col: str, text_col: str) -> str:
     """
 
 
-def remove_dup_spans(
-    df: DataFrame, id_col: str, text_col: str, n: int = 8
-) -> DataFrame:
+def remove_dup_spans(docs: DataFrame, n: int = 8) -> DataFrame:
     """Exact duplicated-substring REMOVAL (the cleaning step of
     suffix-array dedup): any token covered by a cross-doc duplicated
     n-gram is cut from every doc except the gram's owner (min doc id),
@@ -1474,44 +1437,17 @@ def remove_dup_spans(
     in-group ordering comes from array_sort over (pos, tok) structs —
     deterministic at any parallelism, no global sort anywhere.
     """
-    from . import fan_out
-
-    toks_expr = ws_tokens_sql(text_col)
-    base = fan_out(df).select(
-        F.col(id_col).cast("bigint").alias("doc"), F.expr(toks_expr).alias("tk")
-    )
-    toks = base.select(
+    tk, grams, owners = _gram_hashes(docs, n)
+    toks = tk.select(
         "doc", F.posexplode("tk").alias("pos", "tok")
     ).withColumn("pos", F.col("pos") + 1)
-    # explode the POSITION sequence and hash per output row (never a
-    # prebuilt gram-string array — UnsafeArray construction costs ~6x,
-    # see dup_span_stats)
-    grams = (
-        base.filter(F.expr(f"size(tk) >= {n}"))
-        .select(
-            "doc",
-            "tk",
-            F.explode(F.expr(f"sequence(1, size(tk) - {n} + 1)")).alias("gpos"),
-        )
-        .select(
-            "doc",
-            "gpos",
-            F.expr(f"md5(concat_ws(' ', slice(tk, gpos, {n})))").alias("gh"),
-        )
-    )
-    owners = (
-        grams.groupBy("gh")
-        .agg(F.min("doc").alias("owner"), F.max("doc").alias("_hi"))
-        .filter(F.col("owner") != F.col("_hi"))
-        .select("gh", "owner")
-    )
     marked = (
         grams.join(owners, "gh")
         .filter(F.col("doc") != F.col("owner"))
-        .select("doc", "gpos")
+        .select("doc", "pos")
     )
     removed = marked.select(
-        "doc", F.explode(F.expr(f"sequence(gpos, gpos + {n} - 1)")).alias("pos")
+        "doc", F.explode(F.expr(f"sequence(pos, pos + {n} - 1)")).alias("pos")
     ).distinct()
     kept = toks.join(removed, ["doc", "pos"], "left_anti")
     rebuilt = kept.groupBy("doc").agg(
@@ -1523,7 +1459,7 @@ def remove_dup_spans(
             )
         ).alias("cleaned_md5"),
     )
-    totals = base.select("doc", F.expr("cast(size(tk) as bigint)").alias("n_before"))
+    totals = tk.select("doc", F.expr("cast(size(tk) as bigint)").alias("n_before"))
     return totals.join(rebuilt, "doc", "left").select(
         F.col("doc").alias("doc_id"),
         "n_before",
@@ -1570,9 +1506,7 @@ def oracle_remove_dup_spans(table: str, id_col: str, text_col: str, n: int = 8) 
 
 
 def lsh_band_sweep(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
+    docs: DataFrame,
     num_hashes: int = 16,
     bands_list: tuple[int, ...] = (2, 4, 8),
     shingle_n: int = 3,
@@ -1591,20 +1525,14 @@ def lsh_band_sweep(
     candidate count is the Σ bucket² bill you pay for it. All outputs are
     ratios of exact integers.
     """
-    truth = (
-        ngram_jaccard_pairs(df, id_col, text_col, shingle_n, threshold)
-        .select("id_a", "id_b")
-        .persist()
-    )
+    truth = ngram_jaccard_pairs(docs, shingle_n, threshold).select("id_a", "id_b")
     t_tot = truth.agg(F.count("*").cast("bigint").alias("n_truth"))
-    # One signature pass serves every band config (the md5-per-shingle
-    # explode is the expensive part; banding is just a re-grouping).
-    sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n).persist()
+    # One signature frame serves every band config (the signatures depend
+    # only on K; banding is just a re-grouping).
+    sig = _minhash_signatures(docs, num_hashes, shingle_n)
     curve = None
     for bands in bands_list:
-        cands = lsh_candidate_pairs(
-            df, id_col, text_col, num_hashes, bands, shingle_n, max_bucket, sig=sig
-        )
+        cands = _lsh_pairs(sig, bands, max_bucket)
         n_c = cands.agg(F.count("*").cast("bigint").alias("n_candidates"))
         n_f = truth.join(cands, ["id_a", "id_b"]).agg(
             F.count("*").cast("bigint").alias("n_found")
@@ -1679,35 +1607,22 @@ def oracle_lsh_band_sweep(
 
 
 def contamination_report(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    eval_filter: str,
-    shingle_n: int = 3,
+    docs: DataFrame, eval_filter: str, shingle_n: int = 3
 ) -> DataFrame:
     """Per-eval-document shingle containment against the train split.
 
-    ONE shingle explosion over the whole corpus (fan_out for the
-    single-split local case), split into eval and train sides by the
-    boolean ``eval_filter``; the train side collapses to DISTINCT
-    shingles (the inverted-index key set); eval shingles left-join it and
-    count hits — a pure equi-join on the shingle hash space, never
+    ONE shingle explosion over the whole corpus, split into eval and train
+    sides by the boolean ``eval_filter``; the train side collapses to
+    DISTINCT shingles (the inverted-index key set); eval shingles left-join
+    it and count hits — a pure equi-join on the shingle hash space, never
     doc×doc. Documents shorter than ``shingle_n`` words have no shingles
     and emit no row (identical in both engines).
 
     Output: (doc_id, n_shingles, n_contaminated, contamination).
     """
-    from . import fan_out
-
-    sh = (
-        fan_out(df)
-        .select(
-            F.col(id_col).alias("id"),
-            F.expr(eval_filter).alias("is_eval"),
-            F.explode(word_shingles(text_col, shingle_n)).alias("shingle"),
-        )
-        .distinct()
-    )
+    sh = _shingles(
+        docs, shingle_n, F.col("doc_id").alias("id"), F.expr(eval_filter).alias("is_eval")
+    ).distinct()
     train = sh.filter(~F.col("is_eval")).select("shingle").distinct().withColumn(
         "__hit", F.lit(True)
     )
@@ -1749,45 +1664,32 @@ def oracle_contamination_report(
     """
 
 
-def shingle_profile(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    group_col: str = "source",
-    shingle_n: int = 3,
-) -> DataFrame:
+def shingle_profile(docs: DataFrame, shingle_n: int = 3) -> DataFrame:
     """Shingle-repetitiveness profile per source: total vs distinct
     shingle counts, the repetition ratio 1 − distinct/total, and the
     single most duplicated shingle — the quick corpus-health readout that
     says WHERE near-dup pressure concentrates before running the full
     dedup passes.
 
-    One shingle explosion (fan_out for the single-split local case), one
-    (source, shingle) count shuffle, a per-source rollup, and a keyed
-    top-1 window. Output: (source, n_shingles, n_distinct, repetition,
-    top_shingle, top_count).
+    One shingle explosion, one (source, shingle) count shuffle, a
+    per-source rollup, and a keyed top-1 window. Output: (source,
+    n_shingles, n_distinct, repetition, top_shingle, top_count).
     """
-    from . import fan_out
-
-    sh = fan_out(df).select(
-        F.col(group_col).alias("src"),
-        F.explode(word_shingles(text_col, shingle_n)).alias("shingle"),
-    )
-    counts = sh.groupBy("src", "shingle").agg(
+    counts = _shingles(docs, shingle_n, "source").groupBy("source", "shingle").agg(
         F.count("*").cast("bigint").alias("c")
     )
-    roll = counts.groupBy("src").agg(
+    roll = counts.groupBy("source").agg(
         F.sum("c").cast("bigint").alias("n_shingles"),
         F.count("*").cast("bigint").alias("n_distinct"),
     )
-    w = Window.partitionBy("src").orderBy(F.desc("c"), F.asc("shingle"))
+    w = Window.partitionBy("source").orderBy(F.desc("c"), F.asc("shingle"))
     top = (
         counts.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
-        .select("src", F.col("shingle").alias("top_shingle"), F.col("c").alias("top_count"))
+        .select("source", F.col("shingle").alias("top_shingle"), F.col("c").alias("top_count"))
     )
-    return roll.join(top, "src").select(
-        F.col("src").alias(group_col),
+    return roll.join(top, "source").select(
+        "source",
         "n_shingles",
         "n_distinct",
         F.round(
@@ -1838,13 +1740,7 @@ def oracle_shingle_profile(
 
 
 def decontaminate_train(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    eval_filter: str,
-    group_col: str = "source",
-    shingle_n: int = 3,
-    max_hits: int = 2,
+    docs: DataFrame, eval_filter: str, shingle_n: int = 3, max_hits: int = 2
 ) -> DataFrame:
     """Decontamination pass (the flip side of :func:`contamination_report`):
     DROP training documents that share more than ``max_hits`` distinct
@@ -1856,36 +1752,28 @@ def decontaminate_train(
     doc. No doc×doc comparison, no thresholds on floats. Output:
     (source, n_train, n_dropped, drop_pct).
     """
-    from . import fan_out
-
-    sh = (
-        fan_out(df)
-        .select(
-            F.col(group_col).alias("src"),
-            F.col(id_col).alias("id"),
-            F.expr(eval_filter).alias("is_eval"),
-            F.explode(word_shingles(text_col, shingle_n)).alias("shingle"),
-        )
-        .distinct()
-    )
+    sh = _shingles(
+        docs, shingle_n, "source", F.col("doc_id").alias("id"),
+        F.expr(eval_filter).alias("is_eval"),
+    ).distinct()
     eval_keys = sh.filter(F.col("is_eval")).select("shingle").distinct()
     hits = (
         sh.filter(~F.col("is_eval"))
         .join(eval_keys.withColumn("__hit", F.lit(True)), "shingle", "left")
-        .groupBy("src", "id")
+        .groupBy("source", "id")
         .agg(
             F.sum(F.when(F.col("__hit"), 1).otherwise(0)).cast("bigint").alias("n_hits")
         )
     )
     # docs with no shingles at all never contaminate; count them from the base
-    train_docs = df.filter(~F.expr(eval_filter)).groupBy(
-        F.col(group_col).alias("src")
-    ).agg(F.count("*").cast("bigint").alias("n_train"))
-    dropped = hits.filter(F.col("n_hits") > max_hits).groupBy("src").agg(
+    train_docs = docs.filter(~F.expr(eval_filter)).groupBy("source").agg(
+        F.count("*").cast("bigint").alias("n_train")
+    )
+    dropped = hits.filter(F.col("n_hits") > max_hits).groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_dropped")
     )
-    return train_docs.join(dropped, "src", "left").select(
-        F.col("src").alias(group_col),
+    return train_docs.join(dropped, "source", "left").select(
+        "source",
         "n_train",
         F.coalesce(F.col("n_dropped"), F.lit(0)).cast("bigint").alias("n_dropped"),
         F.round(
@@ -1941,8 +1829,6 @@ def oracle_decontaminate_train(
 
 def tfidf_cosine_pairs(
     docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     shingle_n: int = 3,
     df_min: int = 2,
     df_max: int = 20,
@@ -1963,18 +1849,18 @@ def tfidf_cosine_pairs(
     oracle).
 
     Cross-engine float discipline: idf = ln(N/df) rounded through
-    DECIMAL(38,6) per TERM (the [[txt_tfidf_topterms]] move — ln differs
+    DECIMAL(38,6) per TERM (as ``txt_tfidf_topterms`` does — ln differs
     in the last ulp across engines); every pair contribution wgt_a*wgt_b
     and every norm term wgt² is rounded to DECIMAL(38,6) before the EXACT
     decimal sum, so join/aggregation order cannot move the result.
 
     Output: (id_a, id_b, cos) with id_a < id_b and cos >= threshold.
     """
-    from ..functions import exploded_word_shingles as _ews
-
-    terms = _ews(
-        docs.select(F.col(id_col).alias("doc_id"), text_col),
-        text_col, shingle_n, "term",
+    # the shingle generator without _shingles' fan_out: the term table
+    # feeds four branches, and a repartition under each made the query
+    # slower (0.94 -> 1.12 s at sf0.01, slower in 10 of 10 pairs)
+    terms = exploded_word_shingles(
+        docs.select("doc_id", "text"), "text", shingle_n, "term"
     ).filter(F.col("term") != "")
     tf = terms.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     dfreq = (
@@ -2085,11 +1971,7 @@ def oracle_tfidf_cosine_pairs(
 
 
 def contrastive_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    min_agree: int = 8,
+    docs: DataFrame, num_hashes: int = 16, min_agree: int = 8
 ) -> DataFrame:
     """Contrastive training pairs from the dedup index: LSH candidate
     pairs labeled POSITIVE when their MinHash signatures agree on
@@ -2098,33 +1980,16 @@ def contrastive_pairs(
     considered similar but that aren't, exactly the negatives a
     contrastive embedding loss needs (random negatives are too easy).
 
-    Reuses ONE signature pass for both candidate generation and
-    labeling (the [[dd_lsh_sweep]] sharing move). Output:
-    (id_a, id_b, agree, label).
+    ONE signature frame serves both candidate generation and labeling,
+    as in :func:`lsh_band_sweep`. Output: (id_a, id_b, agree, label).
     """
-    sig = minhash_signatures(docs, id_col, text_col, num_hashes)
-    cand = lsh_candidate_pairs(docs, id_col, text_col, num_hashes, sig=sig)
-    a = sig.select(
-        F.col("id").alias("id_a"),
-        *[F.col(f"h{k}").alias(f"a{k}") for k in range(num_hashes)],
-    )
-    b = sig.select(
-        F.col("id").alias("id_b"),
-        *[F.col(f"h{k}").alias(f"b{k}") for k in range(num_hashes)],
-    )
-    agree = sum(
-        F.when(F.col(f"a{k}") == F.col(f"b{k}"), 1).otherwise(0)
-        for k in range(num_hashes)
-    )
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            F.col("id_a").cast("bigint"),
-            F.col("id_b").cast("bigint"),
-            agree.cast("bigint").alias("agree"),
-            (agree >= min_agree).cast("bigint").alias("label"),
-        )
+    sig = _minhash_signatures(docs, num_hashes, 3)
+    agree = _agreement(_lsh_pairs(sig, 4, 500), sig, num_hashes)
+    return agree.select(
+        "id_a",
+        "id_b",
+        F.col("agree").cast("bigint").alias("agree"),
+        (F.col("agree") >= min_agree).cast("bigint").alias("label"),
     )
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions import WS, WS_SQL, oracle_hash32, sql_regex, ws_tokens_sql
+from . import release_checkpoint
 
 # BPE-ish pre-tokenizer: letter runs | digit runs | single non-space symbol.
 SUBTOKEN_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
@@ -898,9 +899,7 @@ def _bpe_train(docs: DataFrame, n_merges: int) -> list[tuple[str, str, int]]:
                 break
             merges.append((top[0].p.l, top[0].p.r, int(top[0].cnt)))
     finally:
-        # DataFrame.unpersist() does not release a local checkpoint: its
-        # blocks belong to the RDD under the frame's LogicalRDD
-        words._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        release_checkpoint(words)
     return merges
 
 

@@ -109,7 +109,7 @@ def dd_exact_dup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dd_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.lsh_candidate_pairs(docs, "doc_id", "text")
+    return dedup.lsh_candidate_pairs(docs)
 
 
 @register(
@@ -121,7 +121,7 @@ def dd_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    return dedup.ngram_jaccard_pairs(docs, "doc_id", "text", 3, 0.5)
+    return dedup.ngram_jaccard_pairs(docs, 3, 0.5)
 
 
 @register(
@@ -131,7 +131,7 @@ def dd_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dd_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.simhash(docs, "doc_id", "text")
+    return dedup.simhash(docs)
 
 
 # ---------------------------------------------------------------------------
@@ -1541,7 +1541,7 @@ def agg_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dd_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.simhash_neardup_pairs(docs, "doc_id", "text", max_hamming=3)
+    return dedup.simhash_neardup_pairs(docs, max_hamming=3)
 
 
 @register(
@@ -1578,7 +1578,7 @@ def evt_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dd_keeplist(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.dedup_keeplist(docs, "doc_id", "text")
+    return dedup.dedup_keeplist(docs)
 
 
 @register(
@@ -1592,7 +1592,7 @@ def dd_keeplist(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dd_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    pairs = dedup.lsh_candidate_pairs(docs, "doc_id", "text")
+    pairs = dedup.lsh_candidate_pairs(docs)
     return dedup.connected_components(pairs)
 
 
@@ -3192,7 +3192,7 @@ def evt_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dd_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    return dedup.ngram_containment_pairs(docs, "doc_id", "text", 3, 0.8)
+    return dedup.ngram_containment_pairs(docs, 3, 0.8)
 
 
 @register(
@@ -3352,7 +3352,7 @@ def grf_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dd_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.sorted_neighborhood_pairs(docs, "doc_id", "text")
+    return dedup.sorted_neighborhood_pairs(docs)
 
 
 @register(
@@ -4049,7 +4049,7 @@ def src_arrayfile_get(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dd_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.dup_span_stats(docs, "doc_id", "text", n=8)
+    return dedup.dup_span_stats(docs, n=8)
 
 
 @register(
@@ -4076,7 +4076,7 @@ def dd_fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dd_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.remove_dup_spans(docs, "doc_id", "text", n=8)
+    return dedup.remove_dup_spans(docs, n=8)
 
 
 @register(
@@ -4090,7 +4090,7 @@ def dd_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dd_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.minhash_accuracy(docs, "doc_id", "text")
+    return dedup.minhash_accuracy(docs)
 
 
 @register(
@@ -4104,7 +4104,7 @@ def dd_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dd_lsh_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return dedup.lsh_band_sweep(docs, "doc_id", "text")
+    return dedup.lsh_band_sweep(docs)
 
 
 @register(
@@ -4451,7 +4451,7 @@ def dd_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.expr(_URL_VARIANTS_SPARK).alias("url")
     )
-    return dedup.url_dedup(docs, "doc_id", "url")
+    return dedup.url_dedup(docs)
 
 
 @register(
@@ -5586,7 +5586,7 @@ def cur_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import contamination_report
 
     docs = load_table(spark, sf_dir, "documents")
-    return contamination_report(docs, "doc_id", "text", "source = 'src0'")
+    return contamination_report(docs, "source = 'src0'")
 
 
 @register(
@@ -5932,7 +5932,7 @@ def dd_shingle_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import shingle_profile
 
     docs = load_table(spark, sf_dir, "documents")
-    return shingle_profile(docs, "doc_id", "text")
+    return shingle_profile(docs)
 
 
 from ..operators.dedup import oracle_decontaminate_train
@@ -5953,7 +5953,7 @@ def cur_decontam_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import decontaminate_train
 
     docs = load_table(spark, sf_dir, "documents")
-    return decontaminate_train(docs, "doc_id", "text", "source = 'src0'")
+    return decontaminate_train(docs, "source = 'src0'")
 
 
 @register(

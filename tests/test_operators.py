@@ -1144,7 +1144,7 @@ def test_lsh_degenerate_band_cap(spark):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    pairs = dedup.lsh_candidate_pairs(docs, "doc_id", "text", max_bucket=500)
+    pairs = dedup.lsh_candidate_pairs(docs, max_bucket=500)
     got = pairs.collect()
     # without the cap the identical block alone emits ~2M pairs
     assert len(got) < 10, f"cap failed: {len(got)} candidate pairs"
@@ -1154,7 +1154,7 @@ def test_lsh_degenerate_band_cap(spark):
     small = spark.createDataFrame(
         [(i, "identical small group") for i in range(5)], "doc_id long, text string"
     )
-    got_small = dedup.lsh_candidate_pairs(small, "doc_id", "text", max_bucket=500).collect()
+    got_small = dedup.lsh_candidate_pairs(small, max_bucket=500).collect()
     assert len(got_small) == 10  # C(5,2)
 
 
@@ -1349,7 +1349,7 @@ def test_url_dedup_collapses_variants(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, url string")
     out = {r.canonical_url: (r.n_variants, r.keep_id)
-           for r in dedup.url_dedup(df, "doc_id", "url").collect()}
+           for r in dedup.url_dedup(df).collect()}
     assert out == {
         "http://a.com/x?a=1&b=2": (3, 0),
         "https://b.org/y": (1, 3),
@@ -1711,7 +1711,7 @@ def test_lsh_band_sweep_monotone(spark):
 
     docs = load_table(spark, SF_DIR, "documents")
     rows = sorted(
-        dedup.lsh_band_sweep(docs, "doc_id", "text").collect(),
+        dedup.lsh_band_sweep(docs).collect(),
         key=lambda r: r.bands,
     )
     for a, b in zip(rows, rows[1:]):
@@ -2976,9 +2976,7 @@ def test_contamination_hand(spark):
     )
     out = {
         r.doc_id: r
-        for r in contamination_report(
-            docs, "doc_id", "text", "split = 'eval'"
-        ).collect()
+        for r in contamination_report(docs, "split = 'eval'").collect()
     }
     # doc 1: shingles {the quick brown, quick brown fox, brown fox jumps};
     # only the first appears in train
@@ -3336,7 +3334,7 @@ def test_shingle_profile_hand(spark):
         ],
         "doc_id long, text string, source string",
     )
-    out = {r.source: r for r in shingle_profile(docs, "doc_id", "text").collect()}
+    out = {r.source: r for r in shingle_profile(docs).collect()}
     # s1: 2 docs x 4 shingles = 8 total; 'the cat sat'/'cat sat on'/
     # 'sat on the' duplicated -> 5 distinct
     assert out["s1"].n_shingles == 8 and out["s1"].n_distinct == 5
@@ -3363,9 +3361,7 @@ def test_decontaminate_plan_hand(spark):
     # treat the 'eval' source value as the held-out marker
     out = {
         r.source: r
-        for r in decontaminate_train(
-            docs, "doc_id", "text", "source = 'eval'", group_col="source"
-        ).collect()
+        for r in decontaminate_train(docs, "source = 'eval'").collect()
     }
     assert out["train"].n_train == 2 and out["train"].n_dropped == 1
     assert out["train"].drop_pct == 50.0
@@ -3982,11 +3978,14 @@ def test_corr_matrix_hand(spark):
 
 
 def test_exploded_word_shingles_row_parity(spark):
-    """The position-sequence shingle generator must be ROW-IDENTICAL to
-    exploding the prebuilt shingle array (functions.word_shingles) for
-    every edge shape: short docs (< n tokens -> no rows), exact-n docs,
+    """The position-sequence shingle generator must produce the same rows
+    as the DuckDB oracle's shingle list (functions.oracle_word_shingles)
+    for every edge shape: short docs (< n tokens -> no rows), exact-n docs,
     leading/trailing/multiple whitespace, and empty strings."""
-    from hadoop_2_7_1_spark.functions import exploded_word_shingles, word_shingles
+    import duckdb
+    import pandas as pd
+
+    from hadoop_2_7_1_spark.functions import exploded_word_shingles, oracle_word_shingles
 
     rows = [
         (1, "a b c d e"),
@@ -3997,13 +3996,16 @@ def test_exploded_word_shingles_row_parity(spark):
         (6, "solo"),
     ]
     df = spark.createDataFrame(rows, "id int, text string")
-    old = df.select(
-        "id", F.explode(word_shingles("text", 3)).alias("shingle")
-    )
     new = exploded_word_shingles(df.select("id", "text"), "text", 3, "shingle")
-    got_old = sorted((r.id, r.shingle) for r in old.collect())
+    con = duckdb.connect()
+    con.register("docs", pd.DataFrame(rows, columns=["id", "text"]))
+    ref = con.sql(
+        f"SELECT id, unnest({oracle_word_shingles('text', 3)}) AS shingle FROM docs"
+    ).fetchall()
+    con.close()
+    got_ref = sorted((int(i), sh) for i, sh in ref)
     got_new = sorted((r.id, r.shingle) for r in new.collect())
-    assert got_old == got_new
+    assert got_ref == got_new
     assert (1, "a b c") in got_new and (3, "x y z") in got_new
     assert not any(i in (2, 5, 6) for i, _ in got_new)
 

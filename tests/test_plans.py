@@ -142,14 +142,14 @@ def test_registry_wide_plan_audit(spark):
     build_time_actions = {
         "sim_kmeans_sizes", "sim_kmeans_ivf", "grf_pagerank",
         "cur_global_shuffle", "cur_pack_sequences", "cur_length_buckets",
-        "dd_dup_clusters", "smp_temperature",
+        "smp_temperature",
         "q26_pentomino", "q27_sudoku", "q21_db_pageview",
         "q15_partitioned_write", "src_bucketed_join", "bench_terasort_big",
         "src_mapfile_lookup", "grf_kcore", "dd_semdedup",
         "grf_hits", "grf_ppr", "smp_resample", "evt_markov_attribution",
         "evt_concurrency", "grf_walks",
-        # fixture write / snapshot commits / cc label propagation at build
-        "src_parquet_stats", "src_snapshot_compact", "evt_identity_stitch",
+        # fixture write / snapshot commits at build
+        "src_parquet_stats", "src_snapshot_compact",
         "src_copybook",  # distributed fixture write action at build time
     }
     python_ok = {
@@ -217,7 +217,7 @@ def test_lsh_cap_single_extra_shuffle(spark):
     from hadoop_2_7_1_spark.operators import dedup
 
     docs = load_table(spark, SF_DIR, "documents")
-    pairs = dedup.lsh_candidate_pairs(docs, "doc_id", "text")
+    pairs = dedup.lsh_candidate_pairs(docs)
     plan = pairs._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     # all hash exchanges partition on band+key (the distinct at the end adds

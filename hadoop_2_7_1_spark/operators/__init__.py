@@ -43,5 +43,8 @@ def release_checkpoint(ckpt: DataFrame) -> None:
     """Drop the blocks of the local checkpoint ``ckpt`` (a frame returned by
     ``localCheckpoint()``) and its persistent-RDD entry. DataFrame.unpersist()
     does not release them: they belong to the RDD under the frame's
-    LogicalRDD. Nothing may read ``ckpt`` afterwards."""
-    ckpt._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    LogicalRDD. Nothing may read ``ckpt`` afterwards. The release goes
+    through ``SparkContext.unpersistRDD``: ``RDD.unpersist`` does the same
+    but logs a driver WARN for every locally checkpointed RDD."""
+    rdd = ckpt._jdf.queryExecution().analyzed().rdd()
+    ckpt.sparkSession.sparkContext._jsc.sc().unpersistRDD(rdd.id(), False)

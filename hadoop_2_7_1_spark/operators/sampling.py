@@ -8,94 +8,99 @@ agree row-for-row. All operators here threshold the md5-derived 32-bit hash
 from :mod:`..functions` — the same trick as the reference's MD5-based
 `SequenceFileInputFilter` (SequenceFileInputFilter.java:202), generalized.
 
-Everything is a filter/withColumn — pushes into the scan, no shuffle.
+Every operator reads its table's own columns: ``doc_id``, ``text``,
+``lang``, ``source`` and ``n_chars`` of the documents table, or ``user_id``
+and ``ts`` of the events table (:func:`group_split`,
+:func:`time_split_purged`), only those it uses. A hand-built frame names its
+columns that way.
 """
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import hex_hash32, oracle_hash32
+from ..functions import hex_hash32, oracle_hash32, ws_tokens_sql
 
 HASH_SPACE = 1 << 32
 
 
-def deterministic_sample(df: DataFrame, key_col: str, fraction: float) -> DataFrame:
-    """Keep ~fraction of rows, decided by hash(key) alone."""
-    return df.filter(hex_hash32(key_col) < int(fraction * HASH_SPACE))
+def _case(col: str, values: dict, default: Column) -> Column:
+    """The literal ``values[v]`` on rows whose ``col`` is ``v``, else
+    ``default``."""
+    expr = default
+    for value, out in values.items():
+        expr = F.when(F.col(col) == value, F.lit(out)).otherwise(expr)
+    return expr
 
 
-def stratified_sample(
-    df: DataFrame, key_col: str, strata_col: str, fractions: dict[str, float]
-) -> DataFrame:
-    """Per-stratum deterministic sampling (e.g. per-language doc quotas).
+def _kept(bound, salt: str | None = None) -> Column:
+    """The content-stable keep-test: the md5-derived 32-bit hash of
+    ``doc_id`` is under ``bound``, a fraction of HASH_SPACE. Each caller
+    rounds its bound as its oracle does (``int(...)``, ``F.floor(...)`` or
+    not at all); the rounding decides the rows at the boundary."""
+    return hex_hash32("doc_id", salt=salt) < bound
 
-    Strata absent from ``fractions`` are dropped (matching `sampleBy`).
+
+def stratified_sample(docs: DataFrame, fractions: dict[str, float]) -> DataFrame:
+    """Per-language deterministic sampling (e.g. per-language doc quotas).
+
+    Languages absent from ``fractions`` are dropped (matching `sampleBy`).
     """
-    thresh = F.lit(None).cast("bigint")
-    expr: Column = thresh
-    for value, frac in fractions.items():
-        expr = F.when(F.col(strata_col) == value, int(frac * HASH_SPACE)).otherwise(expr)
-    return df.withColumn("_t", expr).filter(hex_hash32(key_col) < F.col("_t")).drop("_t")
+    bounds = {lang: int(frac * HASH_SPACE) for lang, frac in fractions.items()}
+    return docs.filter(_kept(_case("lang", bounds, F.lit(None).cast("bigint"))))
 
 
-def train_test_split(
-    df: DataFrame, key_col: str, test_fraction: float = 0.1, split_col: str = "split"
-) -> DataFrame:
-    """Adds 'train'/'test' label; assignment is stable under reruns and
-    unaffected by row order or partitioning."""
-    return df.withColumn(
-        split_col,
-        F.when(hex_hash32(key_col) < int(test_fraction * HASH_SPACE), "test").otherwise(
-            "train"
-        ),
+def train_test_split(docs: DataFrame) -> DataFrame:
+    """Adds a ``split`` label, 'test' for 10% of the documents and 'train'
+    for the rest; assignment is stable under reruns and unaffected by row
+    order or partitioning."""
+    return docs.withColumn(
+        "split", F.when(_kept(int(0.1 * HASH_SPACE)), "test").otherwise("train")
     )
 
 
 def oracle_hash_threshold(key_expr: str, fraction: float) -> str:
-    """DuckDB predicate matching deterministic_sample."""
+    """DuckDB predicate matching :func:`_kept` under an ``int(...)`` bound."""
     return (
         f"CAST(('0x' || substr(md5(CAST({key_expr} AS VARCHAR)), 1, 8)) AS BIGINT)"
         f" < {int(fraction * HASH_SPACE)}"
     )
 
 
-def sample_mixture(
-    df: DataFrame, key_col: str, source_col: str, weights: dict[str, float]
-) -> DataFrame:
+def sample_mixture(docs: DataFrame, weights: dict[str, float]) -> DataFrame:
     """Down-sample per-source so the surviving corpus matches a target
     mixture (the domain-mixing step of a training-data pipeline), keeping as
     much data as possible: the most over-asked source is kept whole and
     every other source is hash-thresholded to its proportional share.
 
-    Deterministic (content-stable md5 on ``key_col``), so reruns and other
+    Deterministic (content-stable md5 on ``doc_id``), so reruns and other
     engines select identical rows. Sources absent from ``weights`` are
     dropped. The per-source scaling factors live on a sources-sized
     aggregate that broadcasts; the data pass is one scan + filter.
     """
-    import itertools
-
     w = F.create_map(
         *itertools.chain.from_iterable(
             (F.lit(s), F.lit(wt)) for s, wt in weights.items()
         )
     )
     counts = (
-        df.filter(F.col(source_col).isin(*weights))
-        .groupBy(source_col)
+        docs.filter(F.col("source").isin(*weights))
+        .groupBy("source")
         .agg(F.count("*").alias("__cnt"))
-        .withColumn("__wt", w[F.col(source_col)])
+        .withColumn("__wt", w[F.col("source")])
     )
     # T = min over sources of count/weight; target_s = T * w_s
     t = counts.agg(F.min(F.col("__cnt") / F.col("__wt")).alias("__T"))
     fracs = counts.crossJoin(F.broadcast(t)).select(
-        source_col,
+        "source",
         (F.col("__T") * F.col("__wt") / F.col("__cnt")).alias("__frac"),
     )
     return (
-        df.join(F.broadcast(fracs), source_col)
-        .filter(hex_hash32(key_col) < F.col("__frac") * HASH_SPACE)
+        docs.join(F.broadcast(fracs), "source")
+        .filter(_kept(F.col("__frac") * HASH_SPACE))
         .drop("__frac")
     )
 
@@ -122,45 +127,39 @@ def oracle_sample_mixture(
     """
 
 
-def temperature_resample(
-    df: DataFrame,
-    key_col: str,
-    source_col: str,
-    alpha: float = 0.5,
-    total: int | None = None,
-) -> DataFrame:
+def temperature_resample(docs: DataFrame) -> DataFrame:
     """Temperature-scaled domain resampling WITH replacement — the standard
     multilingual/multi-domain pre-training mix: source s is drawn with
-    probability ∝ n_s^alpha (alpha < 1 upweights rare domains), so a doc of
-    source s appears on average rate_s = target_s / n_s times. Whole copies
+    probability ∝ n_s^0.5 (an exponent below 1 upweights rare domains), so
+    a doc of source s appears on average rate_s = target_s / n_s times,
+    for a total of the corpus size (a pure re-mix). Whole copies
     replicate deterministically; the fractional copy is kept by the same
     content-stable hash threshold as every sampler here — reruns and other
     engines agree row-for-row.
 
     Output rows carry a ``copy`` index (0-based) alongside the original
-    columns. ``total`` defaults to the corpus size (pure re-mix).
+    columns.
 
     Scale shape: source stats are a tiny aggregate joined back by
     broadcast; replication is a JVM-side explode of `ceil(rate)` ints; no
     shuffle beyond the stats aggregate.
     """
-    stats = df.groupBy(F.col(source_col).alias("__s")).agg(F.count("*").alias("__n"))
+    stats = docs.groupBy(F.col("source").alias("__s")).agg(F.count("*").alias("__n"))
     rows = stats.collect()  # one row per domain — model-scale
-    n_total = sum(r["__n"] for r in rows) if total is None else total
-    wsum = sum(r["__n"] ** alpha for r in rows)
-    rates = {r["__s"]: (r["__n"] ** alpha / wsum) * n_total / r["__n"] for r in rows}
-    rate_expr = F.lit(None).cast("double")
-    for s, rate in rates.items():
-        rate_expr = F.when(F.col(source_col) == s, F.lit(rate)).otherwise(rate_expr)
-    with_rate = df.withColumn("__rate", rate_expr)
+    n_total = sum(r["__n"] for r in rows)
+    wsum = sum(r["__n"] ** 0.5 for r in rows)
+    rates = {r["__s"]: (r["__n"] ** 0.5 / wsum) * n_total / r["__n"] for r in rows}
+    with_rate = docs.withColumn(
+        "__rate", _case("source", rates, F.lit(None).cast("double"))
+    )
     # copies 0..floor(rate)-1 always kept; copy floor(rate) kept when the
     # content hash falls under the fractional part
     # floor() before the bigint comparison on BOTH engines: Spark's cast
     # truncates but DuckDB's rounds, so the explicit floor keeps thresholds
     # identical
-    frac_keep = hex_hash32(key_col) < F.floor(
-        (F.col("__rate") - F.floor("__rate")) * HASH_SPACE
-    ).cast("bigint")
+    frac_keep = _kept(
+        F.floor((F.col("__rate") - F.floor("__rate")) * HASH_SPACE).cast("bigint")
+    )
     return (
         with_rate.withColumn(
             "copy",
@@ -174,23 +173,16 @@ def temperature_resample(
     )
 
 
-def dsir_importance(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    target: Column,
-    n_buckets: int = 256,
-    top_k: int = 100,
-) -> DataFrame:
+def dsir_importance(docs: DataFrame, target: Column) -> DataFrame:
     """Data Selection via Importance Resampling (DSIR, Xie et al. 2023):
     score every document by how much more likely its hashed n-gram features
     are under a target domain than under the raw corpus, then keep the
-    top-k. ``target`` is a boolean Column marking the in-domain subset
+    top 100. ``target`` is a boolean Column marking the in-domain subset
     (e.g. ``F.col("lang") == "en"``); features are hashed unigram buckets
     (the paper's hashed n-grams with n=1 — the bucket hash is the shared
     md5-derived :func:`~..functions.hex_hash32`, so the oracle replays it).
 
-    Per-bucket log ratio (add-1 smoothing over ``n_buckets``):
+    Per-bucket log ratio (add-1 smoothing over B = 256 buckets):
     ``ln(((t_f+1)/(T+B)) / ((r_f+1)/(R+B)))``; a doc's log importance
     weight is the count-weighted sum of its buckets' ratios.
 
@@ -198,7 +190,7 @@ def dsir_importance(
     integer MICRO-units (scaled bigint, absorbing JVM-vs-libm ln ulp
     drift), so the per-doc weight accumulates as a pure integer sum —
     exact at any parallelism — and the only float op is one final
-    division. Ties at the top-k boundary break on doc id.
+    division. Ties at the top-100 boundary break on doc id.
 
     Scale shape: one (doc, bucket) aggregation on the exploded tokens, a
     B-row bucket table (map-side combined, then broadcast back), one
@@ -206,12 +198,11 @@ def dsir_importance(
     bucket products stay < 2^53 up to ~10^13 tokens per side; beyond that
     compute the ratio as ``ln(t_f+1) - ln(T+B) - ...`` termwise.
     """
-    from ..functions import ws_tokens_sql
-
-    toks = df.select(
-        F.col(id_col).cast("bigint").alias("id"),
+    n_buckets = 256
+    toks = docs.select(
+        F.col("doc_id").cast("bigint").alias("id"),
         target.cast("boolean").alias("is_t"),
-        F.explode(F.expr(ws_tokens_sql(text_col))).alias("tok"),
+        F.explode(F.expr(ws_tokens_sql("text"))).alias("tok"),
     )
     doc_bucket = (
         toks.select(
@@ -254,7 +245,7 @@ def dsir_importance(
             ),
         )
         .orderBy(F.col("dsir_logweight").desc(), "id")
-        .limit(top_k)
+        .limit(100)
     )
 
 
@@ -330,11 +321,9 @@ def oracle_temperature_counts(
     """
 
 
-def domain_quota(
-    df: DataFrame, key_col: str, domain_col: str, cap: int
-) -> DataFrame:
-    """Keep at most ``cap`` rows per domain, chosen by content-stable
-    priority (hash of the key), not arrival order.
+def domain_quota(docs: DataFrame, cap: int) -> DataFrame:
+    """Keep at most ``cap`` documents per source, chosen by content-stable
+    priority (hash of ``doc_id``), not arrival order.
 
     The standard crawl-curation balancer: no single domain may contribute
     more than its quota to the training mix, and reruns/backfills pick the
@@ -344,16 +333,14 @@ def domain_quota(
     ships at most ``cap`` rows per input partition rather than its whole
     crawl (the skew story at 100 TB).
     """
-    from pyspark.sql import Window
-
-    pri = hex_hash32(key_col)
-    w = Window.partitionBy(domain_col).orderBy(pri.asc(), F.col(key_col).asc())
+    pri = hex_hash32("doc_id")
+    w = Window.partitionBy("source").orderBy(pri.asc(), F.col("doc_id").asc())
     return (
-        df.withColumn("quota_rank", F.row_number().over(w).cast("bigint"))
+        docs.withColumn("quota_rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("quota_rank") <= cap)
         .select(
-            F.col(domain_col).alias("domain"),
-            F.col(key_col).cast("bigint").alias("id"),
+            F.col("source").alias("domain"),
+            F.col("doc_id").cast("bigint").alias("id"),
             "quota_rank",
         )
     )
@@ -372,9 +359,7 @@ def oracle_domain_quota(table: str, key_col: str, domain_col: str, cap: int) -> 
     """
 
 
-def epoch_mixture(
-    df: DataFrame, key_col: str, domain_col: str, weights: dict[str, float]
-) -> DataFrame:
+def epoch_mixture(docs: DataFrame, weights: dict[str, float]) -> DataFrame:
     """Epoch-aware mixture upsampling: each row is emitted
     floor(w(domain)) times plus one extra copy with probability frac(w),
     decided by a content-stable hash — so a 2.5x domain weight yields
@@ -387,12 +372,8 @@ def epoch_mixture(
     the shuffle belongs to the consumer's sort/partition by shuffle_key.
     Domains absent from ``weights`` default to 1.0 (one epoch).
     """
-    w_expr = F.lit(1.0)
-    for dom, w in weights.items():
-        w_expr = F.when(F.col(domain_col) == dom, F.lit(float(w))).otherwise(w_expr)
-    frac_bonus = (
-        hex_hash32(F.col(key_col), salt="ep") < (w_expr % 1.0) * HASH_SPACE
-    ).cast("int")
+    w_expr = _case("source", {d: float(w) for d, w in weights.items()}, F.lit(1.0))
+    frac_bonus = _kept((w_expr % 1.0) * HASH_SPACE, salt="ep").cast("int")
     n_copies = F.floor(w_expr).cast("int") + frac_bonus
     # sequence(1, 0) in Spark yields a DESCENDING [1, 0], not empty — rows
     # with zero copies (w < 1, hash above the fraction) need an explicit
@@ -400,9 +381,9 @@ def epoch_mixture(
     epochs = F.when(n_copies >= 1, F.sequence(F.lit(1), n_copies)).otherwise(
         F.expr("cast(array() as array<int>)")
     )
-    out = df.select(
-        F.col(key_col).cast("bigint").alias("id"),
-        F.col(domain_col).alias("domain"),
+    out = docs.select(
+        F.col("doc_id").cast("bigint").alias("id"),
+        F.col("source").alias("domain"),
         F.explode(epochs).alias("epoch"),
     )
     return out.select(
@@ -438,27 +419,22 @@ def oracle_epoch_mixture(
     """
 
 
-def interleave_sources(
-    df: DataFrame,
-    id_col: str,
-    domain_col: str,
-    key_salt: str = "interleave",
-) -> DataFrame:
+def interleave_sources(docs: DataFrame) -> DataFrame:
     """Deterministic balanced interleaving: order documents so sources
     alternate (round-robin by within-source rank) — the training-order
     curriculum that prevents long single-source runs after per-source
     concatenation.
 
     Within-source rank comes from a content-stable md5 order (no RNG, same
-    [[cur_global_shuffle]] trick), so the interleave is reproducible and
-    shuffle-free to CHANGE (re-salt to get a new epoch order). The
-    interleave position is pure integer arithmetic:
+    [[cur_global_shuffle]] trick, salted "interleave"), so the interleave
+    is reproducible and shuffle-free to CHANGE (re-salt to get a new epoch
+    order). The interleave position is pure integer arithmetic:
     ``pos = rank * n_sources + source_idx`` — a total order with sources
     cycling every n_sources positions. One domain-keyed window (balanced
     while domains are) + a broadcast source-index table.
     """
     src_idx = (
-        df.select(F.col(domain_col).alias("d"))
+        docs.select(F.col("source").alias("d"))
         .distinct()
         .withColumn(
             "source_idx",
@@ -470,10 +446,12 @@ def interleave_sources(
     # would funnel the whole dataset through one task.
     n_src_row = src_idx.agg(F.count("*").cast("bigint").alias("__n_src"))
     ranked = (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.col(domain_col).alias("d"),
-            hex_hash32(F.concat_ws(":", F.lit(key_salt), F.col(id_col).cast("string"))).alias("__h"),
+        docs.select(
+            F.col("doc_id").alias("id"),
+            F.col("source").alias("d"),
+            hex_hash32(
+                F.concat_ws(":", F.lit("interleave"), F.col("doc_id").cast("string"))
+            ).alias("__h"),
         )
         .withColumn(
             "rank_in_source",
@@ -485,8 +463,8 @@ def interleave_sources(
         F.broadcast(n_src_row)
     )
     return joined.select(
-        F.col("id").cast("bigint").alias(id_col),
-        F.col("d").alias(domain_col),
+        F.col("id").cast("bigint").alias("doc_id"),
+        F.col("d").alias("source"),
         F.col("rank_in_source").cast("bigint"),
         F.col("source_idx").cast("bigint"),
         (F.col("rank_in_source") * F.col("__n_src") + F.col("source_idx"))
@@ -522,45 +500,35 @@ def oracle_interleave_sources(
     """
 
 
-def categorical_draws(
-    df: DataFrame,
-    text_col: str = "text",
-    n_draws: int = 10_000,
-    power: float = 0.75,
-    min_count: int = 10,
-    n_buckets: int = 256,
-    salt: str = "neg",
-) -> DataFrame:
+def categorical_draws(docs: DataFrame) -> DataFrame:
     """Deterministic inverse-CDF sampling from a LEARNED categorical
     distribution — word2vec's negative-sampling table (unigram^0.75) as a
     distributed primitive: build integer cumulative weight ranges over the
-    vocabulary, then resolve ``n_draws`` md5-derived uniforms to tokens via
-    a BUCKETED range join (each range row covers its bucket span, each
-    draw probes exactly one bucket) — never a per-draw binary search on the
-    driver and never a draws × vocab cross join.
+    vocabulary of the ``text`` tokens, then resolve 10,000 md5-derived
+    uniforms to tokens via a BUCKETED range join over 256 buckets (each
+    range row covers its bucket span, each draw probes exactly one
+    bucket) — never a per-draw binary search on the driver and never a
+    draws × vocab cross join.
 
-    Weights: ``wt = round(count^power · 1e6)`` (one documented
+    Weights: ``wt = round(count^0.75 · 1e6)`` (one documented
     round-after-pow, the same ulp discipline as the ln() scorers);
     cumulative ranges come from ONE vocab-sized ordered window (metadata
-    scale, the BPE-merge-table precedent); draw u_i = md5(salt:i) low 60
-    bits mod Σwt. Join fan-out is O(vocab + n_buckets + n_draws).
+    scale, the BPE-merge-table precedent); draw u_i = md5("neg":i) low 60
+    bits mod Σwt. Join fan-out is O(vocab + buckets + draws).
 
     Output: (token, wt, n_drawn) for every vocab token with
-    ``count >= min_count`` — the draw histogram IS the check that the
+    ``count >= 10`` — the draw histogram IS the check that the
     sampler follows the table.
     """
     from .sketches import _hash60
 
-    from ..functions import ws_tokens_sql
-
-    toks = df.select(F.explode(F.expr(ws_tokens_sql(text_col))).alias("token"))
+    toks = docs.select(F.explode(F.expr(ws_tokens_sql("text"))).alias("token"))
     vocab = (
         toks.groupBy("token")
         .agg(F.count("*").alias("cnt"))
-        .filter(F.col("cnt") >= min_count)
+        .filter(F.col("cnt") >= 10)
         .withColumn(
-            "wt",
-            F.expr(f"cast(round(pow(cast(cnt as double), {power!r}) * 1e6) as bigint)"),
+            "wt", F.expr("cast(round(pow(cast(cnt as double), 0.75) * 1e6) as bigint)")
         )
     )
     # vocab-scale ordered window (single partition over the vocabulary —
@@ -570,7 +538,7 @@ def categorical_draws(
         "cum_lo", F.col("cum_hi") - F.col("wt")
     )
     total = ranges.agg(F.max("cum_hi").alias("w_total"))
-    width_expr = "cast((w_total + {b} - 1) div {b} as bigint)".format(b=n_buckets)
+    width_expr = "cast((w_total + 256 - 1) div 256 as bigint)"
     r_bucketed = (
         ranges.crossJoin(F.broadcast(total))
         .withColumn("width", F.expr(width_expr))
@@ -585,12 +553,12 @@ def categorical_draws(
         )
     )
     draws = (
-        df.sparkSession.range(n_draws)
+        docs.sparkSession.range(10_000)
         .crossJoin(F.broadcast(total))
         .withColumn("width", F.expr(width_expr))
         .select(
             (
-                _hash60(F.concat_ws(":", F.lit(salt), F.col("id").cast("string")))
+                _hash60(F.concat_ws(":", F.lit("neg"), F.col("id").cast("string")))
                 % F.col("w_total")
             ).alias("v"),
             "width",
@@ -673,17 +641,15 @@ def oracle_categorical_draws(
     """
 
 
-def kfold_assign(
-    df: DataFrame, key_col: str, k: int = 5, fold_col: str = "fold"
-) -> DataFrame:
-    """K-fold cross-validation assignment: fold = md5(key) mod k — stable
-    under reruns, row order, partitioning, and engine (the same
-    content-stable hashing contract as :func:`train_test_split`, so a
-    later ingest assigns old keys to their old folds). Narrow map, no
+def kfold_assign(docs: DataFrame) -> DataFrame:
+    """5-fold cross-validation assignment: a ``fold`` column, md5(doc_id)
+    mod 5 — stable under reruns, row order, partitioning, and engine (the
+    same content-stable hashing contract as :func:`train_test_split`, so
+    a later ingest assigns old keys to their old folds). Narrow map, no
     shuffle; fold i's train set is ``fold != i`` — no materialization of
     k copies.
     """
-    return df.withColumn(fold_col, (hex_hash32(key_col) % k).cast("int"))
+    return docs.withColumn("fold", (hex_hash32("doc_id") % 5).cast("int"))
 
 
 def oracle_kfold(key_expr: str, k: int) -> str:
@@ -694,17 +660,16 @@ def oracle_kfold(key_expr: str, k: int) -> str:
     )
 
 
-def systematic_resample(
-    df: DataFrame, key_col: str, weight_col: str, n_out: int
-) -> DataFrame:
+def systematic_resample(docs: DataFrame, n_out: int) -> DataFrame:
     """Deterministic weighted SYSTEMATIC resampling: exactly ``n_out``
-    draws (with multiplicity) proportional to integer weights, no RNG —
-    the stride sampler from particle filtering / survey sampling, and the
+    draws (with multiplicity) proportional to the integer ``n_chars``
+    weights, no RNG — the stride sampler from particle filtering / survey
+    sampling, and the
     zero-variance way to materialize DSIR-style importance weights into an
     actual training subset.
 
     Lay all weights on a line (cumulative sum in content-stable order:
-    md5(key), key), then take strides at positions (i + 1/2) * W / n_out.
+    md5(doc_id), doc_id), then take strides at positions (i + 1/2) * W / n_out.
     A record owning interval (cum - w, cum] is drawn
     f(cum) - f(cum - w) times where f(c) = (2*n_out*c + W) div (2W) —
     pure integer arithmetic (numerators kept positive so truncating and
@@ -718,14 +683,14 @@ def systematic_resample(
     1-row aggregate. Headroom: needs 2 * n_out * W < 2^63 — at larger
     products, run the same formula in decimal(38,0) on both engines.
 
-    Output: (key, weight, n_picked) for records drawn at least once.
+    Output: (doc_id, weight, n_picked) for records drawn at least once.
     """
     from .partitioning import two_phase_prefix
 
-    base = df.select(
-        F.col(key_col).alias("k"),
-        F.col(weight_col).cast("bigint").alias("__w"),
-        hex_hash32(key_col).alias("__h"),
+    base = docs.select(
+        F.col("doc_id").alias("k"),
+        F.col("n_chars").cast("bigint").alias("__w"),
+        hex_hash32("doc_id").alias("__h"),
     ).filter(F.col("__w") > 0)
     cum = two_phase_prefix(base, [F.col("__h"), F.col("k")], F.col("__w"), "cum")
     tot = base.agg(F.sum("__w").cast("bigint").alias("__wtot"))
@@ -742,7 +707,7 @@ def systematic_resample(
         .filter(F.col("n_picked") >= 1)
     )
     return picked.select(
-        F.col("k").alias(key_col),
+        F.col("k").alias("doc_id"),
         F.col("__w").alias("weight"),
         "n_picked",
     )
@@ -772,21 +737,19 @@ def oracle_systematic_resample(
     """
 
 
-def class_balance(
-    df: DataFrame, class_col: str, key_col: str
-) -> DataFrame:
-    """Deterministic class rebalancing report: downsample every class to
-    the MINORITY class size by content-stable hash thresholding — the
-    standard prep step before training on skewed labels, with zero RNG
+def class_balance(docs: DataFrame) -> DataFrame:
+    """Deterministic class rebalancing report: downsample every language
+    to the MINORITY language's size by content-stable hash thresholding —
+    the standard prep step before training on skewed labels, with zero RNG
     (same rows survive any rerun/partitioning/engine).
 
-    keep(class c) = md5-fraction(key) < n_min / n_c. Expected kept ≈
+    keep(class c) = md5-fraction(doc_id) < n_min / n_c. Expected kept ≈
     n_min per class; exact counts of what actually survived ride along
     (the hash is uniform, not stratified-exact — report, don't assume).
     Two passes: one keyed count (broadcast back), one narrow filter.
-    Output: (class, n_before, n_after, target_rate).
+    Output: (lang, n_before, n_after, target_rate).
     """
-    counts = df.groupBy(F.col(class_col).alias("cls")).agg(
+    counts = docs.groupBy(F.col("lang").alias("cls")).agg(
         F.count("*").cast("bigint").alias("n_before")
     )
     n_min = counts.agg(F.min("n_before").cast("bigint").alias("n_min"))
@@ -795,14 +758,14 @@ def class_balance(
     )
     frac = (
         F.conv(
-            F.substring(F.md5(F.col(key_col).cast("string").cast("binary")), 1, 15),
+            F.substring(F.md5(F.col("doc_id").cast("string").cast("binary")), 1, 15),
             16,
             10,
         ).cast("bigint")
         / F.lit(float(1 << 60))
     )
     kept = (
-        df.select(F.col(class_col).alias("cls"), frac.alias("f"))
+        docs.select(F.col("lang").alias("cls"), frac.alias("f"))
         .join(F.broadcast(rates), "cls")
         .filter(F.col("f") < F.col("rate"))
         .groupBy("cls")
@@ -811,7 +774,7 @@ def class_balance(
     return (
         rates.join(kept, "cls", "left")
         .select(
-            F.col("cls").alias(class_col),
+            F.col("cls").alias("lang"),
             "n_before",
             F.coalesce("n_after", F.lit(0)).cast("bigint").alias("n_after"),
             F.round("rate", 6).alias("target_rate"),
@@ -848,29 +811,25 @@ def oracle_class_balance(table: str, class_col: str, key_col: str) -> str:
     """
 
 
-def rebalance_classes(
-    df: DataFrame, class_col: str, id_col: str
-) -> DataFrame:
-    """Deterministic class-rebalance plan: downsample every class to the
-    minority class size by keeping the rows with the smallest
-    (content-stable hash, id) per class — exact target counts (a
+def rebalance_classes(docs: DataFrame) -> DataFrame:
+    """Deterministic class-rebalance plan: downsample every language to
+    the minority language's size by keeping the rows with the smallest
+    (content-stable hash, doc_id) per language — exact target counts (a
     probability threshold only hits the target in expectation), no RNG,
     same selection on every engine and every run.
 
     One keyed rank window per class (balanced when classes are) plus a
     broadcast minimum. Output proves the selection, not just the counts:
-    (class, n_before, n_after, kept_id_sum).
+    (lang, n_before, n_after, kept_id_sum).
     """
-    from pyspark.sql import Window as W
-
-    base = df.select(
-        F.col(class_col).alias("cls"),
-        F.col(id_col).cast("bigint").alias("id"),
-        hex_hash32(id_col).alias("h"),
+    base = docs.select(
+        F.col("lang").alias("cls"),
+        F.col("doc_id").cast("bigint").alias("id"),
+        hex_hash32("doc_id").alias("h"),
     )
     sizes = base.groupBy("cls").agg(F.count("*").cast("bigint").alias("n_before"))
     min_n = sizes.agg(F.min("n_before").cast("bigint").alias("target"))
-    w = W.partitionBy("cls").orderBy("h", "id")
+    w = Window.partitionBy("cls").orderBy("h", "id")
     kept = (
         base.withColumn("rn", F.row_number().over(w))
         .join(F.broadcast(min_n), how="cross")
@@ -881,7 +840,7 @@ def rebalance_classes(
         F.sum("id").cast("bigint").alias("kept_id_sum"),
     )
     return sizes.join(after, "cls").select(
-        F.col("cls").alias(class_col), "n_before", "n_after", "kept_id_sum"
+        F.col("cls").alias("lang"), "n_before", "n_after", "kept_id_sum"
     )
 
 
@@ -910,27 +869,21 @@ def oracle_rebalance_classes(table: str, class_col: str, id_col: str) -> str:
     """
 
 
-def uncertainty_sample(
-    df: DataFrame,
-    id_col: str,
-    score_col: str,
-    pivot: int,
-    k: int = 20,
-) -> DataFrame:
-    """Uncertainty sampling for an annotation queue: the k rows whose
-    integer score sits closest to the decision ``pivot`` — for a
-    monotone scorer (e.g. the logistic length gate), |score − pivot|
-    orders exactly like |p − 0.5|, so the selection is PURE INTEGER
-    (no probability floats anywhere near the boundary).
+def uncertainty_sample(docs: DataFrame, pivot: int) -> DataFrame:
+    """Uncertainty sampling for an annotation queue: the 20 documents
+    whose integer score (``n_chars``) sits closest to the decision
+    ``pivot`` — for a monotone scorer (e.g. the logistic length gate),
+    |score − pivot| orders exactly like |p − 0.5|, so the selection is
+    PURE INTEGER (no probability floats anywhere near the boundary).
 
     TakeOrderedAndProject on (|score−pivot|, id) — never a global sort.
     Output: (id, score, dist).
     """
-    t = df.select(
-        F.col(id_col).cast("bigint").alias("id"),
-        F.expr(score_col).cast("bigint").alias("score"),
+    t = docs.select(
+        F.col("doc_id").cast("bigint").alias("id"),
+        F.col("n_chars").cast("bigint").alias("score"),
     ).withColumn("dist", F.abs(F.col("score") - F.lit(pivot)).cast("bigint"))
-    return t.orderBy(F.asc("dist"), F.asc("id")).limit(k)
+    return t.orderBy(F.asc("dist"), F.asc("id")).limit(20)
 
 
 def oracle_uncertainty_sample(
@@ -945,16 +898,11 @@ def oracle_uncertainty_sample(
     """
 
 
-def group_split(
-    df: DataFrame,
-    group_col: str,
-    n_folds: int = 5,
-    salt: str = "groupsplit",
-) -> DataFrame:
-    """Leakage-safe k-fold assignment at the GROUP level: every row of a
-    group (user, session, document family) lands in the same fold,
-    because fold = content-stable hash of the group key — the split
-    discipline that keeps a user's history out of both train and test.
+def group_split(events: DataFrame) -> DataFrame:
+    """Leakage-safe 5-fold assignment at the USER level: every event of a
+    user lands in the same fold, because fold = content-stable hash of
+    ``user_id`` (salted "groupsplit") — the split discipline that keeps a
+    user's history out of both train and test.
     (Row-hash splits — smp_kfold — leak whenever rows within a group are
     correlated.)
 
@@ -962,9 +910,9 @@ def group_split(
     so the split replays identically anywhere. Output per fold:
     (fold, n_groups, n_rows).
     """
-    base = df.select(
-        F.col(group_col).alias("g"),
-        (hex_hash32(group_col, salt=salt) % n_folds).cast("int").alias("fold"),
+    base = events.select(
+        F.col("user_id").alias("g"),
+        (hex_hash32("user_id", salt="groupsplit") % 5).cast("int").alias("fold"),
     )
     return base.groupBy("fold").agg(
         F.countDistinct("g").cast("bigint").alias("n_groups"),
@@ -987,21 +935,19 @@ def oracle_group_split(
     """
 
 
-def sequential_poisson_sample(
-    df: DataFrame, id_col: str, weight_col: str, k: int
-) -> DataFrame:
+def sequential_poisson_sample(docs: DataFrame, k: int) -> DataFrame:
     """Weighted sampling without replacement, content-stable: sequential
     Poisson sampling (Ohlsson 1998, the survey-statistics standard for
     probability-proportional-to-size samples) — priority = u / w with
-    u = (hash32(id)+1)/2^32, keep the k SMALLEST priorities. Heavier
-    rows draw proportionally smaller priorities, so inclusion
-    probability approaches w_i/Σw without any sequential pass or RNG
-    stream.
+    u = (hash32(doc_id)+1)/2^32 and w = ``n_chars``, keep the k SMALLEST
+    priorities. Heavier rows draw proportionally smaller priorities, so
+    inclusion probability approaches w_i/Σw without any sequential pass or
+    RNG stream.
 
     Unlike exponential-key weighted reservoirs (-ln(u)/w), the priority
     here is two divisions of exact integers — bit-identical IEEE doubles
     on every engine, no transcendental portability tax. The same
-    content-stable-hash trick as [[smp_deterministic_sample]]: reruns
+    content-stable-hash trick as :func:`_kept`: reruns
     and other engines agree row-for-row.
 
     Non-positive weights are EXCLUDED up front: weight 0 would yield
@@ -1013,13 +959,13 @@ def sequential_poisson_sample(
     full sort). Output: (id, weight, priority), ties broken by id.
     """
     pri = (
-        (hex_hash32(id_col) + F.lit(1)).cast("double") / F.lit(float(HASH_SPACE))
-    ) / F.col(weight_col).cast("double")
+        (hex_hash32("doc_id") + F.lit(1)).cast("double") / F.lit(float(HASH_SPACE))
+    ) / F.col("n_chars").cast("double")
     return (
-        df.filter(F.col(weight_col).cast("double") > 0)
+        docs.filter(F.col("n_chars").cast("double") > 0)
         .select(
-            F.col(id_col).cast("bigint").alias("id"),
-            F.col(weight_col).cast("bigint").alias("weight"),
+            F.col("doc_id").cast("bigint").alias("id"),
+            F.col("n_chars").cast("bigint").alias("weight"),
             pri.alias("priority"),
         )
         .orderBy(F.asc("priority"), F.asc("id"))
@@ -1042,17 +988,11 @@ def oracle_sequential_poisson(
     """
 
 
-def time_split_purged(
-    df: DataFrame,
-    ts_col: str,
-    test_start: str,
-    test_end: str,
-    embargo_days: int = 1,
-) -> DataFrame:
-    """Leakage-safe TEMPORAL split with an embargo gap (the purged
-    time-series split of Lopez de Prado 2018): train = strictly before
-    test_start - embargo, embargo = the gap rows (excluded entirely),
-    test = [test_start, test_end). [[smp_group_split]] kills ENTITY
+def time_split_purged(events: DataFrame, test_start: str, test_end: str) -> DataFrame:
+    """Leakage-safe TEMPORAL split of the events' ``ts`` with a one-day
+    embargo gap (the purged time-series split of Lopez de Prado 2018):
+    train = strictly before test_start - 1 day, embargo = the gap rows
+    (excluded entirely), test = [test_start, test_end). [[smp_group_split]] kills ENTITY
     leakage; this kills TEMPORAL leakage — rolling features computed
     near the boundary would otherwise smuggle test-window information
     into train ([[tmp_rolling_features]]'s 7-day lookback is exactly
@@ -1064,14 +1004,15 @@ def time_split_purged(
     """
     t0 = F.to_timestamp(F.lit(test_start))
     t1 = F.to_timestamp(F.lit(test_end))
-    emb = t0 - F.expr(f"INTERVAL {embargo_days} DAYS")
-    tagged = df.select(
-        F.when(F.col(ts_col) < emb, "train")
-        .when((F.col(ts_col) >= t0) & (F.col(ts_col) < t1), "test")
-        .when((F.col(ts_col) >= emb) & (F.col(ts_col) < t0), "embargo")
+    emb = t0 - F.expr("INTERVAL 1 DAYS")
+    ts = F.col("ts")
+    tagged = events.select(
+        F.when(ts < emb, "train")
+        .when((ts >= t0) & (ts < t1), "test")
+        .when((ts >= emb) & (ts < t0), "embargo")
         .otherwise("future")
         .alias("split"),
-        F.expr(f"cast({ts_col} as bigint)").alias("t"),
+        ts.cast("bigint").alias("t"),
     )
     return tagged.groupBy("split").agg(
         F.count("*").cast("bigint").alias("n_rows"),

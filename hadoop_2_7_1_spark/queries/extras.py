@@ -1615,7 +1615,7 @@ def smp_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import sampling
 
     docs = load_table(spark, sf_dir, "documents")
-    out = sampling.stratified_sample(docs, "doc_id", "lang", {"en": 0.25, "fr": 0.5})
+    out = sampling.stratified_sample(docs, {"en": 0.25, "fr": 0.5})
     return out.select(F.col("doc_id").cast("bigint").alias("doc_id"), "lang")
 
 
@@ -1635,7 +1635,7 @@ def smp_epoch_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import sampling
 
     docs = load_table(spark, sf_dir, "documents")
-    return sampling.epoch_mixture(docs, "doc_id", "source", _EPOCH_WEIGHTS)
+    return sampling.epoch_mixture(docs, _EPOCH_WEIGHTS)
 
 
 @register(
@@ -1730,7 +1730,7 @@ def cur_domain_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import sampling
 
     docs = load_table(spark, sf_dir, "documents")
-    return sampling.domain_quota(docs, "doc_id", "source", cap=150)
+    return sampling.domain_quota(docs, cap=150)
 
 
 @register(
@@ -1753,7 +1753,7 @@ def smp_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return (
-        kfold_assign(docs, "doc_id", k=5)
+        kfold_assign(docs)
         .groupBy("fold")
         .agg(
             F.count("*").cast("bigint").alias("n"),
@@ -1781,7 +1781,7 @@ def smp_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     return (
-        sampling.train_test_split(docs, "doc_id", 0.1)
+        sampling.train_test_split(docs)
         .groupBy("split")
         .agg(F.count("*").cast("bigint").alias("n"))
     )
@@ -2039,7 +2039,7 @@ def cur_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality = deduped.filter(
         (F.length("text") >= 100) & (F.size(F.split(F.trim(F.col("text")), r"\s+")) >= 20)
     )
-    split = sampling.train_test_split(quality, "doc_id", 0.1)
+    split = sampling.train_test_split(quality)
     return split.groupBy("lang", "split").agg(
         F.count("*").cast("bigint").alias("n"),
         F.min("doc_id").cast("bigint").alias("first_doc"),
@@ -2182,7 +2182,7 @@ def smp_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import sample_mixture
 
     docs = load_table(spark, sf_dir, "documents")
-    kept = sample_mixture(docs, "doc_id", "source", _MIX_WEIGHTS)
+    kept = sample_mixture(docs, _MIX_WEIGHTS)
     return kept.groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_kept"),
         F.sum("n_chars").cast("bigint").alias("chars_kept"),
@@ -2205,7 +2205,7 @@ def smp_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import categorical_draws
 
     docs = load_table(spark, sf_dir, "documents")
-    return categorical_draws(docs, "text", 10_000, 0.75, 10, 256)
+    return categorical_draws(docs)
 
 
 @register(
@@ -2223,7 +2223,7 @@ def smp_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import dsir_importance
 
     docs = load_table(spark, sf_dir, "documents")
-    return dsir_importance(docs, "doc_id", "text", F.col("lang") == "en")
+    return dsir_importance(docs, F.col("lang") == "en")
 
 
 @register(
@@ -3106,7 +3106,7 @@ def smp_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import temperature_resample
 
     docs = load_table(spark, sf_dir, "documents")
-    out = temperature_resample(docs, "doc_id", "source", alpha=0.5)
+    out = temperature_resample(docs)
     # left join from the stats side: a source whose every row is dropped
     # must still appear with n_sampled = 0 (the oracle emits it)
     return (
@@ -4256,7 +4256,7 @@ def cur_interleave_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import interleave_sources
 
     docs = load_table(spark, sf_dir, "documents")
-    return interleave_sources(docs, "doc_id", "source")
+    return interleave_sources(docs)
 
 
 @register(
@@ -4886,7 +4886,7 @@ def smp_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import systematic_resample
 
     docs = load_table(spark, sf_dir, "documents")
-    return systematic_resample(docs, "doc_id", "n_chars", n_out=100)
+    return systematic_resample(docs, n_out=100)
 
 
 @register(
@@ -5195,7 +5195,7 @@ def smp_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import class_balance
 
     docs = load_table(spark, sf_dir, "documents")
-    return class_balance(docs, "lang", "doc_id")
+    return class_balance(docs)
 
 
 @register(
@@ -5882,7 +5882,7 @@ def smp_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import rebalance_classes
 
     docs = load_table(spark, sf_dir, "documents")
-    return rebalance_classes(docs, "lang", "doc_id")
+    return rebalance_classes(docs)
 
 
 @register(
@@ -6019,7 +6019,7 @@ def cur_uncertainty_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import uncertainty_sample
 
     docs = load_table(spark, sf_dir, "documents")
-    return uncertainty_sample(docs, "doc_id", "n_chars", 2500, k=20)
+    return uncertainty_sample(docs, 2500)
 
 
 from ..operators.sampling import oracle_group_split
@@ -6038,7 +6038,7 @@ def smp_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import group_split
 
     ev = load_table(spark, sf_dir, "events")
-    return group_split(ev, "user_id", n_folds=5)
+    return group_split(ev)
 
 
 @register(
@@ -6243,7 +6243,7 @@ def smp_sequential_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import sequential_poisson_sample
 
     docs = load_table(spark, sf_dir, "documents")
-    return sequential_poisson_sample(docs, "doc_id", "n_chars", k=25)
+    return sequential_poisson_sample(docs, k=25)
 
 
 @register(
@@ -6696,9 +6696,7 @@ def smp_time_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import time_split_purged
 
     ev = load_table(spark, sf_dir, "events")
-    return time_split_purged(
-        ev, "ts", "2024-01-25 00:00:00", "2024-01-29 00:00:00", embargo_days=1
-    )
+    return time_split_purged(ev, "2024-01-25 00:00:00", "2024-01-29 00:00:00")
 
 
 from ..operators.profile import oracle_corr_matrix

@@ -655,9 +655,9 @@ def test_sample_mixture_proportions(spark):
     from hadoop_2_7_1_spark.operators.sampling import sample_mixture
 
     df = spark.range(3000).selectExpr(
-        "id", "concat('s', CAST(id % 3 AS STRING)) AS source"
+        "id AS doc_id", "concat('s', CAST(id % 3 AS STRING)) AS source"
     )  # 1000 rows per source
-    kept = sample_mixture(df, "id", "source", {"s0": 0.6, "s1": 0.3, "s2": 0.1})
+    kept = sample_mixture(df, {"s0": 0.6, "s1": 0.3, "s2": 0.1})
     counts = {r.source: r.n for r in kept.groupBy("source").agg(F.count("*").alias("n")).collect()}
     # T = min(1000/0.6, ...) = 1666.7 -> targets 1000 / 500 / 166.7: the
     # most-constrained source (s0) survives whole, others hash-sample to share
@@ -665,8 +665,8 @@ def test_sample_mixture_proportions(spark):
     assert abs(counts["s1"] - 500) < 80
     assert abs(counts["s2"] - 167) < 50
     # deterministic: rerun selects identical rows
-    again = sample_mixture(df, "id", "source", {"s0": 0.6, "s1": 0.3, "s2": 0.1})
-    assert {r.id for r in kept.collect()} == {r.id for r in again.collect()}
+    again = sample_mixture(df, {"s0": 0.6, "s1": 0.3, "s2": 0.1})
+    assert {r.doc_id for r in kept.collect()} == {r.doc_id for r in again.collect()}
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -1003,17 +1003,18 @@ def test_temperature_resample_rates(spark):
 
     # 900 'big' vs 100 'small': alpha=0.5 upweights the rare domain 3:1
     df = spark.range(1000).selectExpr(
-        "id", "CASE WHEN id < 900 THEN 'big' ELSE 'small' END AS src"
+        "id AS doc_id", "CASE WHEN id < 900 THEN 'big' ELSE 'small' END AS source"
     )
-    out = temperature_resample(df, "id", "src", alpha=0.5)
-    counts = {r.src: r.cnt for r in out.groupBy("src").agg(F.count("*").alias("cnt")).collect()}
+    out = temperature_resample(df)
+    counts = {r.source: r.cnt
+              for r in out.groupBy("source").agg(F.count("*").alias("cnt")).collect()}
     # expected rates: w_big = 30/(30+10)=0.75 -> 750 rows; w_small = 0.25 -> 250
     assert abs(counts["big"] - 750) < 40
     assert abs(counts["small"] - 250) < 40
     # rare domain replicated with replacement: copies beyond 0 exist
-    assert out.filter((F.col("src") == "small") & (F.col("copy") > 0)).count() > 0
+    assert out.filter((F.col("source") == "small") & (F.col("copy") > 0)).count() > 0
     # deterministic: identical on rerun
-    again = temperature_resample(df, "id", "src", alpha=0.5)
+    again = temperature_resample(df)
     assert sorted(map(tuple, out.collect())) == sorted(map(tuple, again.collect()))
 
 
@@ -1028,14 +1029,14 @@ def test_dsir_importance_ranks_target_vocabulary_first(spark):
         + [(200, "alpha alpha alpha", False), (201, "omega omega omega", False)]
     )
     df = spark.createDataFrame(rows, "doc_id long, text string, is_t boolean")
-    out = dsir_importance(df, "doc_id", "text", F.col("is_t"), top_k=100)
+    out = dsir_importance(df, F.col("is_t"))
     w = {r.id: r.dsir_logweight for r in out.collect()}
     assert w[200] > 0 > w[201]
     # weight scales with token count, tie-broken deterministically
     assert w[0] > w[200]
     # rerun is bit-identical (integer micro-unit accumulation)
     again = {r.id: r.dsir_logweight for r in
-             dsir_importance(df, "doc_id", "text", F.col("is_t"), top_k=100).collect()}
+             dsir_importance(df, F.col("is_t")).collect()}
     assert w == again
 
 
@@ -1747,7 +1748,7 @@ def test_interleave_sources_cycle(spark):
     from hadoop_2_7_1_spark.operators.sampling import interleave_sources
 
     docs = load_table(spark, SF_DIR, "documents")
-    out = interleave_sources(docs, "doc_id", "source").collect()
+    out = interleave_sources(docs).collect()
     n_src = len({r.source for r in out})
     assert len({r.interleave_pos for r in out}) == len(out)
     by_cycle = {}
@@ -2064,14 +2065,14 @@ def test_m4_tie_break_deterministic(spark):
 def test_kfold_stable_and_total(spark):
     from hadoop_2_7_1_spark.operators.sampling import kfold_assign
 
-    df = spark.range(500).withColumnRenamed("id", "k")
-    a = kfold_assign(df, "k", k=5).groupBy("fold").count().collect()
+    df = spark.range(500).withColumnRenamed("id", "doc_id")
+    a = kfold_assign(df).groupBy("fold").count().collect()
     assert {r.fold for r in a} == {0, 1, 2, 3, 4}
     assert sum(r["count"] for r in a) == 500
     # repartitioned rerun assigns identically
-    b = kfold_assign(df.repartition(7), "k", k=5)
-    joined = kfold_assign(df, "k", k=5).alias("x").join(
-        b.alias("y"), "k"
+    b = kfold_assign(df.repartition(7))
+    joined = kfold_assign(df).alias("x").join(
+        b.alias("y"), "doc_id"
     ).filter("x.fold <> y.fold")
     assert joined.count() == 0
 
@@ -2278,20 +2279,20 @@ def test_systematic_resample_invariants(spark):
 
     from hadoop_2_7_1_spark.operators.sampling import systematic_resample
 
-    df = spark.range(1, 201).selectExpr("id as k", "(id % 7 + 1) * 10 as w")
-    out = systematic_resample(df, "k", "w", n_out=50)
+    df = spark.range(1, 201).selectExpr("id as doc_id", "(id % 7 + 1) * 10 as n_chars")
+    out = systematic_resample(df, n_out=50)
     rows = out.collect()
     # the systematic guarantee: the draw count is EXACTLY n_out
     assert sum(r.n_picked for r in rows) == 50
     # each drawn record gets floor or ceil of its expectation
-    W = df.agg(F.sum("w")).collect()[0][0]
+    W = df.agg(F.sum("n_chars")).collect()[0][0]
     for r in rows:
         exp = r.weight * 50 / W
         assert exp - 1 < r.n_picked < exp + 1
     # partitioning-independent
-    again = systematic_resample(df.repartition(13), "k", "w", n_out=50)
-    assert sorted((r.k, r.n_picked) for r in again.collect()) == sorted(
-        (r.k, r.n_picked) for r in rows
+    again = systematic_resample(df.repartition(13), n_out=50)
+    assert sorted((r.doc_id, r.n_picked) for r in again.collect()) == sorted(
+        (r.doc_id, r.n_picked) for r in rows
     )
 
 
@@ -2571,8 +2572,8 @@ def test_class_balance_counts(spark):
     from hadoop_2_7_1_spark.operators.sampling import class_balance
 
     rows = [(i, "big") for i in range(400)] + [(1000 + i, "small") for i in range(50)]
-    df = spark.createDataFrame(rows, "k bigint, cls string")
-    out = {r.cls: r for r in class_balance(df, "cls", "k").collect()}
+    df = spark.createDataFrame(rows, "doc_id bigint, lang string")
+    out = {r.lang: r for r in class_balance(df).collect()}
     assert out["small"].n_before == 50 and out["small"].n_after == 50
     assert out["small"].target_rate == 1.0
     assert out["big"].n_before == 400
@@ -3278,14 +3279,14 @@ def test_rebalance_classes_exact_counts(spark):
     from hadoop_2_7_1_spark.operators.sampling import rebalance_classes
 
     rows = [(i, "big") for i in range(20)] + [(100 + i, "small") for i in range(3)]
-    df = spark.createDataFrame(rows, "id long, cls string")
-    out = {r.cls: r for r in rebalance_classes(df, "cls", "id").collect()}
+    df = spark.createDataFrame(rows, "doc_id long, lang string")
+    out = {r.lang: r for r in rebalance_classes(df).collect()}
     assert out["big"].n_before == 20 and out["big"].n_after == 3
     assert out["small"].n_after == 3
     # small class keeps everything -> id sum is exact
     assert out["small"].kept_id_sum == 100 + 101 + 102
     # determinism: second run selects the identical ids
-    out2 = {r.cls: r for r in rebalance_classes(df, "cls", "id").collect()}
+    out2 = {r.lang: r for r in rebalance_classes(df).collect()}
     assert out2["big"].kept_id_sum == out["big"].kept_id_sum
 
 
@@ -3436,10 +3437,10 @@ def test_uncertainty_sample_hand(spark):
 
     df = spark.createDataFrame(
         [(i, s) for i, s in enumerate([100, 2499, 2500, 2502, 9000])],
-        "id long, s long",
+        "doc_id long, n_chars long",
     )
-    out = uncertainty_sample(df, "id", "s", 2500, k=3).collect()
-    assert [r.id for r in out] == [2, 1, 3]  # dist 0, 1, 2
+    out = uncertainty_sample(df, 2500).collect()
+    assert [r.id for r in out] == [2, 1, 3, 0, 4]  # dist 0, 1, 2, 2400, 6500
     assert out[0].dist == 0 and out[2].dist == 2
 
 
@@ -3449,7 +3450,7 @@ def test_group_split_no_leakage(spark):
     # every user appears many times; total rows and groups conserved
     rows = [(u, i) for u in range(50) for i in range(4)]
     df = spark.createDataFrame(rows, "user_id long, x int")
-    out = group_split(df, "user_id", n_folds=5).collect()
+    out = group_split(df).collect()
     assert sum(r.n_groups for r in out) == 50      # each user in ONE fold
     assert sum(r.n_rows for r in out) == 200
     for r in out:
@@ -3662,9 +3663,9 @@ def test_sequential_poisson_weights_bias(spark):
     # 200 light rows (w=1) vs 200 heavy rows (w=100): the k=40 sample
     # must skew heavily toward the heavy stratum (pps property)
     df = spark.range(400).selectExpr(
-        "id", "case when id < 200 then 1 else 100 end as w"
+        "id AS doc_id", "case when id < 200 then 1 else 100 end as n_chars"
     )
-    picked = sequential_poisson_sample(df, "id", "w", k=40).collect()
+    picked = sequential_poisson_sample(df, k=40).collect()
     assert len(picked) == 40
     heavy = sum(1 for r in picked if r.id >= 200)
     assert heavy >= 30  # E[heavy] ~ 40 * 100/101
@@ -3957,7 +3958,7 @@ def test_time_split_purged_boundaries(spark):
         "cast(ts_s as timestamp) as ts"
     )
     out = {r.split: r.n_rows for r in time_split_purged(
-        ev, "ts", "2024-01-25 00:00:00", "2024-01-29 00:00:00").collect()}
+        ev, "2024-01-25 00:00:00", "2024-01-29 00:00:00").collect()}
     assert out == {"train": 2, "embargo": 1, "test": 2, "future": 1}
 
 
